@@ -296,6 +296,15 @@ class Stage(_Base):
             raise ValueError(
                 f"stage '{self.name}': exactly one of 'query' or 'operator' required"
             )
+        if self.operator is not None:
+            # unknown type, misspelt or missing options fail at load,
+            # not when the stage first runs
+            from ..operators.registry import OperatorError, bind
+
+            try:
+                bind(self.operator)
+            except OperatorError as exc:
+                raise ValueError(f"stage '{self.name}': {exc}") from None
         return self
 
     def search_text(self) -> str:
@@ -902,7 +911,7 @@ class Pipeline(_Base):
                 # everything else needs the Python streaming API
                 # (streaming/ops.py) where watermarks/state are explicit
                 if st.operator is not None:
-                    op = str(st.operator.get("type", "")).strip().lower()
+                    op = st.operator["type"]
                     if op not in STREAM_SAFE_OPERATORS:
                         raise ValueError(
                             f"stage '{st.name}': operator '{op}' is not "

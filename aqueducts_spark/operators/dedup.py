@@ -26,7 +26,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import math
-from typing import Optional
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -361,7 +361,10 @@ def drop_common_lines(
 
 
 def exact_dedup(
-    df: DataFrame, id_col: str, cols: list[str], hash_fn: str = "md5"
+    df: DataFrame,
+    id_col: str = "doc_id",
+    cols: Sequence[str] = ("text",),
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """Keep exactly one row (the min ``id_col``, NULL ids last) per
     distinct ``cols``.
@@ -387,7 +390,7 @@ def exact_dedup(
 
 def dup_weights(
     df: DataFrame,
-    cols: list[str],
+    cols: Sequence[str] = ("text",),
     alpha: float = 1.0,
     weight_col: str = "dup_weight",
     count_col: str | None = "dup_count",
@@ -440,7 +443,7 @@ def dup_weights(
 def dedup_against(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    cols: list[str],
+    cols: Sequence[str] = ("text",),
     broadcast_corpus: bool = False,
     hash_fn: str = "md5",
 ) -> DataFrame:

@@ -193,8 +193,8 @@ def temperature_weights(
 
 def temperature_mix(
     df: DataFrame,
-    group_col: str,
-    id_col: str,
+    group_col: str = "source",
+    id_col: str = "doc_id",
     alpha: float = 0.3,
     target_total: float | None = None,
     copy_col: str = "mix_copy",
@@ -477,7 +477,7 @@ def shuffle_corpus(
 
 def corpus_offsets(
     df: DataFrame,
-    order_cols: Sequence[str],
+    order_cols: Sequence[str] = ("shuffle_key", "doc_id"),
     shard_col: str | None = None,
     token_col: str | None = None,
     pos_col: str = "global_pos",
@@ -626,7 +626,7 @@ def corpus_offsets(
 def sequence_spans(
     df: DataFrame,
     seq_len: int,
-    order_cols: Sequence[str],
+    order_cols: Sequence[str] = ("shuffle_key", "doc_id"),
     token_col: str = "n_tokens",
     shard_col: str | None = None,
     max_shards: int = 1_000_000,

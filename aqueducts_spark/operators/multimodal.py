@@ -83,7 +83,9 @@ def attach_binary_payload(
     return df.withColumn("media_meta", meta)
 
 
-def byte_stats(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
+def byte_stats(
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
+) -> DataFrame:
     """Cheap JVM-side payload stats: size + md5 (content addressing)."""
     return df.select(
         F.col(id_col),
@@ -111,7 +113,7 @@ def _feature_schema(id_type: T.DataType) -> T.StructType:
 
 
 def byte_histogram_features(
-    df: DataFrame, payload_col: str, id_col: str
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """Real byte-level feature extraction over Arrow batches:
     16-bucket normalized byte histogram + Shannon entropy per payload.
@@ -312,8 +314,8 @@ def _phash_schema(id_type: T.DataType) -> T.StructType:
 
 def perceptual_hash(
     df: DataFrame,
-    payload_col: str,
-    id_col: str,
+    payload_col: str = "payload",
+    id_col: str = "doc_id",
     codec=None,
     grid: tuple[int, int] = (7, 8),
     on_undecodable: str = "fail",

@@ -1,7 +1,5 @@
-"""Declarative operator stages: YAML-usable wrappers over the
-operator library, so training-data pipelines don't need Python.
-
-A stage may declare ``operator:`` instead of ``query:``:
+"""Declarative operator stages: a stage may declare ``operator:``
+instead of ``query:`` and run a function of the operator library.
 
     stages:
       - name: near_dups
@@ -10,15 +8,51 @@ A stage may declare ``operator:`` instead of ``query:``:
           input: documents
           options: {num_hashes: 16, bands: 4, shingle_n: 3}
 
-``input`` (and ``queries`` for top-k) name previously-registered tables
-(sources or earlier stages); the result registers under the stage name
-exactly like a SQL stage.
+The result registers under the stage name exactly like a SQL stage.
+
+Adding an operator = an annotated function + one line in
+:data:`OPERATORS` mapping the stage ``type`` to ``"module:function"``
+(imported on first use).  The function's signature is the stage's
+interface, read with ``inspect.signature`` and
+``typing.get_type_hints``:
+
+* every parameter is an option, converted by its annotation:
+  ``bool`` takes ``true/false/yes/no/on/off/1/0`` (strings too);
+  ``int``, ``float`` and ``str`` convert directly; ``Optional[...]``
+  also takes ``none``/``null``/``""``; a union tries its members in
+  order (``int | str`` takes ``"auto"``); a list, sequence or tuple
+  takes a list or a comma/space-separated string; a dict or mapping
+  takes a mapping; an unannotated parameter takes the value as given;
+* a parameter typed ``DataFrame``, ``Optional[DataFrame]`` or
+  ``list[DataFrame]`` takes table names: the first such parameter is
+  the stage ``input``, the others are the options
+  :func:`referenced_tables` reports (stage TTLs keep those views);
+* the function's defaults are the stage's defaults, a parameter
+  without one is required, and an option naming no parameter is
+  rejected — all checked when the pipeline loads (:func:`bind`).
+
+An :class:`Op` entry, or an adapter function in this module, is
+warranted only where an option is more than a parameter: a YAML key
+that differs from the parameter (``aliases``), a stage input that is
+not the first table parameter (``input``), a YAML default Python
+cannot express because a required parameter follows it
+(``defaults``), or a stage that composes several functions or must
+reject an option combination before running.  An adapter is bound
+like any operator function; with ``forward`` its ``**kwargs`` go to
+that function, whose parameters after the first are options too.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+import collections.abc as cabc
+import importlib
+import inspect
+import types
+import typing
+from functools import lru_cache
+from typing import Any, Callable, NamedTuple, Optional, Sequence, Union
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,2096 +61,186 @@ class OperatorError(ValueError):
     pass
 
 
-def _bool_opt(options: dict[str, Any], key: str, default: bool) -> bool:
+class Op(NamedTuple):
+    """A registry entry that is more than ``"module:function"``."""
+
+    fn: Union[str, Callable[..., DataFrame]]
+    # parameter the stage input binds (default: the first table parameter)
+    input: Optional[str] = None
+    # YAML option key -> parameter name (the parameter name works too)
+    aliases: dict = {}
+    # defaults for parameters Python must require (a required one follows)
+    defaults: dict = {}
+    # "module:function" an adapter's **kwargs are passed to
+    forward: Optional[str] = None
+
+
+def _load(fn: Union[str, Callable]) -> Callable:
+    if callable(fn):
+        return fn
+    module, name = fn.split(":")
+    return getattr(importlib.import_module(f"{__package__}.{module}"), name)
+
+
+# ---------------------------------------------------------------------------
+# Option conversion
+# ---------------------------------------------------------------------------
+
+
+def _to_bool(v: Any) -> bool:
     """Boolean option tolerant of string forms: YAML-templated or
     string-typed specs send 'false'/'no'/'0', and bool('false') is
     True — the silently-opposite-policy trap."""
-    v = options.get(key, default)
-    if isinstance(v, bool):
-        return v
     if isinstance(v, str):
         low = v.strip().lower()
         if low in ("true", "yes", "on", "1"):
             return True
         if low in ("false", "no", "off", "0"):
             return False
-        raise OperatorError(
-            f"option {key!r}: cannot parse {v!r} as a boolean"
-        )
-    return bool(v)
-
-
-def _docs_args(options: dict[str, Any]) -> dict[str, Any]:
-    out = {}
-    if "id_col" in options:
-        out["id_col"] = options["id_col"]
-    if "text_col" in options:
-        out["text_col"] = options["text_col"]
-    return out
-
-
-def _op_exact_dedup(spark, inp, options):
-    from .dedup import exact_dedup
-
-    return exact_dedup(
-        inp,
-        options.get("id_col", "doc_id"),
-        options.get("columns", ["text"]),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_dup_weights(spark, inp, options):
-    from .dedup import dup_weights
-
-    count_col = options.get("count_col", "dup_count")
-    return dup_weights(
-        inp,
-        options.get("columns", ["text"]),
-        alpha=float(options.get("alpha", 1.0)),
-        weight_col=options.get("weight_col", "dup_weight"),
-        count_col=count_col if count_col not in (None, "") else None,
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_minhash_bands(spark, inp, options):
-    from .dedup import minhash_bands
-
-    return minhash_bands(
-        inp,
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-        **_docs_args(options),
-    )
-
-
-def _op_minhash_pairs(spark, inp, options):
-    from .dedup import minhash_candidate_pairs
-
-    return minhash_candidate_pairs(
-        inp,
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-        **_docs_args(options),
-    )
-
-
-def _op_fuzzy_dedup(spark, inp, options):
-    from .dedup import fuzzy_dedup
-
-    return fuzzy_dedup(
-        inp,
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-        keep_by=options.get("keep_by"),
-        descending=_bool_opt(options, "descending", True),
-        **_docs_args(options),
-    )
-
-
-def _op_jaccard_pairs(spark, inp, options):
-    from .dedup import jaccard_pairs
-
-    return jaccard_pairs(
-        inp,
-        threshold=float(options.get("threshold", 0.5)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        **_docs_args(options),
-    )
-
-
-def _op_simhash(spark, inp, options):
-    from .dedup import simhash
-
-    return simhash(
-        inp, hash_fn=options.get("hash_fn", "md5"), **_docs_args(options)
-    )
-
-
-def _op_simhash_wide(spark, inp, options):
-    from .dedup import simhash_wide
-
-    return simhash_wide(
-        inp,
-        bits=int(options.get("bits", 120)),
-        hash_fn=options.get("hash_fn", "md5"),
-        **_docs_args(options),
-    )
-
-
-def _op_hamming_pairs_wide(spark, inp, options):
-    from .dedup import hamming_pairs_wide
-
-    mbs = options.get("max_bucket_size", 10_000)
-    bands = options.get("bands")
-    return hamming_pairs_wide(
-        inp,
-        sig_col=options.get("sig_col", "simhash"),
-        id_col=options.get("id_col", "doc_id"),
-        max_hamming=int(options.get("max_hamming", 3)),
-        bands=None if bands is None else int(bands),
-        sig_bits=int(options.get("sig_bits", 120)),
-        max_bucket_size=None if mbs is None else int(mbs),
-    )
-
-
-def _op_hamming_filter_wide(spark, inp, options):
-    from .dedup import hamming_filter_wide
-
-    index_table = options.get("index")
-    if not index_table:
-        raise OperatorError(
-            "hamming_filter_wide operator requires options.index (a table "
-            "of wide signatures, e.g. a simhash_wide stage)"
-        )
-    return hamming_filter_wide(
-        inp,
-        spark.table(index_table),
-        sig_col=options.get("sig_col", "simhash"),
-        index_sig_col=options.get("index_sig_col"),
-        max_hamming=int(options.get("max_hamming", 3)),
-        sig_bits=int(options.get("sig_bits", 120)),
-    )
-
-
-def _op_hamming_pairs(spark, inp, options):
-    from .dedup import hamming_pairs
-
-    mbs = options.get("max_bucket_size", 10_000)
-    bands = options.get("bands")
-    return hamming_pairs(
-        inp,
-        sig_col=options.get("sig_col", "simhash"),
-        id_col=options.get("id_col", "doc_id"),
-        max_hamming=int(options.get("max_hamming", 3)),
-        bands=None if bands is None else int(bands),
-        sig_bits=int(options.get("sig_bits", 60)),
-        max_bucket_size=None if mbs is None else int(mbs),
-    )
-
-
-def _op_minhash_signatures(spark, inp, options):
-    from .dedup import minhash_signatures
-
-    return minhash_signatures(
-        inp,
-        id_col=options.get("id_col", "doc_id"),
-        text_col=options.get("text_col", "text"),
-        num_hashes=int(options.get("num_hashes", 16)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_fuzzy_filter_against(spark, inp, options):
-    from .dedup import fuzzy_filter_against
-
-    index_table = options.get("index")
-    if not index_table:
-        raise OperatorError(
-            "fuzzy_filter_against operator requires options.index (a "
-            "(id, minhash) signature table, e.g. a minhash_signatures "
-            "stage or one read back from disk)"
-        )
-    return fuzzy_filter_against(
-        inp,
-        spark.table(index_table),
-        threshold=float(options.get("threshold", 0.5)),
-        id_col=options.get("id_col", "doc_id"),
-        text_col=options.get("text_col", "text"),
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-        index_sig_col=options.get("index_sig_col", "minhash"),
-    )
-
-
-def _op_nb_fit(spark, inp, options):
-    from .selection import nb_fit
-
-    return nb_fit(
-        inp,
-        label_col=options.get("label_col", "label"),
-        text_col=options.get("text_col", "text"),
-        buckets=int(options.get("buckets", 10_000)),
-    )
-
-
-def _op_nb_classify(spark, inp, options):
-    from .selection import nb_classify
-
-    model_table = options.get("model")
-    if not model_table:
-        raise OperatorError(
-            "nb_classify operator requires options.model (a (label, "
-            "bucket, c) table, e.g. an nb_fit stage)"
-        )
-    bkts = options.get("buckets")
-    return nb_classify(
-        inp,
-        spark.table(model_table),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        smoothing=float(options.get("smoothing", 1.0)),
-        # None (the default) reads the model's own metadata row
-        buckets=None if bkts is None else int(bkts),
-        all_scores=bool(options.get("all_scores", False)),
-        cache_model=bool(options.get("cache_model", True)),
-    )
-
-
-def _op_corpus_overlap(spark, inp, options):
-    from .sketch import corpus_overlap
-
-    other = options.get("other")
-    if not other:
-        raise OperatorError(
-            "corpus_overlap operator requires options.other (the second "
-            "corpus table to estimate overlap against)"
-        )
-    return corpus_overlap(
-        inp,
-        spark.table(other),
-        value_col=options.get("value_col", "doc_id"),
-        value_col_b=options.get("value_col_b"),
-        k=int(options.get("k", 256)),
-        buckets=int(options.get("buckets", 64)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_hamming_filter(spark, inp, options):
-    from .dedup import hamming_filter
-
-    index_table = options.get("index")
-    if not index_table:
-        raise OperatorError(
-            "hamming_filter operator requires options.index (a table of "
-            "signatures to reject near-duplicates of)"
-        )
-    return hamming_filter(
-        inp,
-        spark.table(index_table),
-        sig_col=options.get("sig_col", "simhash"),
-        index_sig_col=options.get("index_sig_col"),
-        max_hamming=int(options.get("max_hamming", 3)),
-        sig_bits=int(options.get("sig_bits", 60)),
-    )
-
-
-def _op_perceptual_hash(spark, inp, options):
-    from .multimodal import perceptual_hash
-
-    grid = options.get("grid")
-    return perceptual_hash(
-        inp,
-        payload_col=options.get("payload_col", "payload"),
-        id_col=options.get("id_col", "doc_id"),
-        codec=options.get("codec"),
-        grid=tuple(int(x) for x in grid) if grid else (7, 8),
-        on_undecodable=options.get("on_undecodable", "fail"),
-    )
-
-
-def _op_embed_neardup(spark, inp, options):
-    from .dedup import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        inp,
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        threshold=float(options.get("threshold", 0.8)),
-    )
-
-
-def _op_embed_neardup_lsh(spark, inp, options):
-    from .dedup import embedding_near_duplicates_lsh
-
-    return embedding_near_duplicates_lsh(
-        inp,
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        threshold=float(options.get("threshold", 0.8)),
-        # "auto" passes through: bits/tables then solve from the corpus
-        # count (solve_lsh_params) instead of fixed widths
-        num_tables=(
-            "auto"
-            if options.get("num_tables") == "auto"
-            else int(options.get("num_tables", 64))
-        ),
-        bits_per_table=(
-            "auto"
-            if options.get("bits_per_table") == "auto"
-            else int(options.get("bits_per_table", 10))
-        ),
-        seed=int(options.get("seed", 42)),
-        max_bucket_size=(
-            int(options["max_bucket_size"])
-            if options.get("max_bucket_size") is not None
-            else 10_000
-        ),
-        target_miss=float(options.get("target_miss", 1e-3)),
-        candidates_per_row=int(options.get("candidates_per_row", 128)),
-        max_tables=int(options.get("max_tables", 512)),
-    )
-
-
-def _op_quality_score(spark, inp, options):
-    from .text import quality_score
-
-    return quality_score(
-        inp, options.get("text_col", "text"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_text_features(spark, inp, options):
-    from .text import text_features
-
-    return text_features(
-        inp, options.get("text_col", "text"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_langid(spark, inp, options):
-    from .text import detect_language
-
-    return detect_language(
-        inp, options.get("text_col", "text"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_fingerprint(spark, inp, options):
-    from .text import fingerprint
-
-    id_col = options.get("id_col", "doc_id")
-    text_col = options.get("text_col", "text")
-    return inp.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
-
-
-def _op_token_count(spark, inp, options):
-    from .text import token_count
-
-    id_col = options.get("id_col", "doc_id")
-    text_col = options.get("text_col", "text")
-    return inp.select(
-        F.col(id_col), token_count(F.col(text_col)).cast("bigint").alias("n_tokens")
-    )
-
-
-def _op_topk(spark, inp, options):
-    from .similarity import brute_force_topk
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError("topk operator requires options.queries (a table name)")
-    return brute_force_topk(
-        inp,
-        spark.table(queries_table),
-        k=int(options.get("k", 10)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        query_id_col=options.get("query_id_col", "query_id"),
-    )
-
-
-def _op_quantized_topk(spark, inp, options):
-    from .similarity import quantized_topk
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError(
-            "quantized_topk operator requires options.queries (a table name)"
-        )
-    return quantized_topk(
-        inp,
-        spark.table(queries_table),
-        k=int(options.get("k", 10)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        query_id_col=options.get("query_id_col", "query_id"),
-    )
-
-
-def _op_pq_topk(spark, inp, options):
-    from .similarity import pq_topk, train_pq
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError(
-            "pq_topk operator requires options.queries (a table name)"
-        )
-    vec_col = options.get("vec_col", "embedding")
-    codebooks = options.get("codebooks")
-    if codebooks is None:
-        codebooks = train_pq(
-            inp,
-            vec_col=vec_col,
-            n_subspaces=int(options.get("n_subspaces", 8)),
-            n_centroids=int(options.get("n_centroids", 16)),
-            sample_size=int(options.get("sample_size", 4096)),
-            seed=int(options.get("seed", 42)),
-        )
-    rerank = options.get("rerank")
-    return pq_topk(
-        inp,
-        spark.table(queries_table),
-        codebooks,
-        k=int(options.get("k", 10)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=vec_col,
-        query_id_col=options.get("query_id_col", "query_id"),
-        code_col=options.get("code_col"),
-        # "auto" passes through: rerank then scales with the corpus
-        # count (a fixed depth thins out as density grows)
-        rerank=(
-            None if rerank is None
-            else "auto" if rerank == "auto"
-            else int(rerank)
-        ),
-        rerank_frac=float(options.get("rerank_frac", 0.05)),
-        max_rerank=int(options.get("max_rerank", 10_000)),
-    )
-
-
-def _op_ivfpq_topk(spark, inp, options):
-    from .similarity import ivfpq_topk
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError(
-            "ivfpq_topk operator requires options.queries (a table name)"
-        )
-    rerank = options.get("rerank")
-    return ivfpq_topk(
-        inp,
-        spark.table(queries_table),
-        k=int(options.get("k", 10)),
-        # "auto" passes through: sqrt(n) coarse-quantizer sizing
-        n_centroids=(
-            "auto"
-            if options.get("n_centroids") == "auto"
-            else int(options.get("n_centroids", 16))
-        ),
-        nprobe=(
-            "auto"
-            if options.get("nprobe") == "auto"
-            else int(options.get("nprobe", 4))
-        ),
-        n_subspaces=int(options.get("n_subspaces", 8)),
-        n_pq_centroids=int(options.get("n_pq_centroids", 16)),
-        rerank=None if rerank is None else int(rerank),
-        seed=int(options.get("seed", 42)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        query_id_col=options.get("query_id_col", "query_id"),
-        by_residual=bool(options.get("by_residual", False)),
-    )
-
-
-def _op_pq_encode(spark, inp, options):
-    from .similarity import pq_encode, train_pq
-
-    vec_col = options.get("vec_col", "embedding")
-    codebooks = options.get("codebooks")
-    if codebooks is None:
-        codebooks = train_pq(
-            inp,
-            vec_col=vec_col,
-            n_subspaces=int(options.get("n_subspaces", 8)),
-            n_centroids=int(options.get("n_centroids", 16)),
-            sample_size=int(options.get("sample_size", 4096)),
-            seed=int(options.get("seed", 42)),
-        )
-    return pq_encode(
-        inp, codebooks, vec_col=vec_col, out_col=options.get("out_col", "pq_code")
-    )
-
-
-def _op_oov_rate(spark, inp, options):
-    from .text import oov_rate
-
-    vocab_table = options.get("vocab")
-    if not vocab_table:
-        raise OperatorError(
-            "oov_rate operator requires options.vocab (a table name)"
-        )
-    return oov_rate(
-        inp,
-        spark.table(vocab_table),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        vocab_col=options.get("vocab_col", "token"),
-    )
-
-
-def _op_normalize_text(spark, inp, options):
-    from .text import normalize_text
-
-    return normalize_text(
-        inp,
-        text_col=options.get("text_col", "text"),
-        out_col=options.get("out_col", "norm_text"),
-        lower=_bool_opt(options, "lower", True),
-        fold_diacritics=_bool_opt(options, "fold_diacritics", True),
-        strip_punct=_bool_opt(options, "strip_punct", False),
-        collapse_whitespace=_bool_opt(options, "collapse_whitespace", True),
-    )
-
-
-def _op_lsh_topk(spark, inp, options):
-    from .similarity import lsh_topk
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError("lsh_topk operator requires options.queries (a table name)")
-    return lsh_topk(
-        inp,
-        spark.table(queries_table),
-        k=int(options.get("k", 10)),
-        num_planes=int(options.get("num_planes", 8)),
-        seed=int(options.get("seed", 42)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        query_id_col=options.get("query_id_col", "query_id"),
-        multiprobe=int(options.get("multiprobe", 0)),
-    )
-
-
-def _op_ivf_topk(spark, inp, options):
-    from .similarity import ivf_topk
-
-    queries_table = options.get("queries")
-    if not queries_table:
-        raise OperatorError("ivf_topk operator requires options.queries (a table name)")
-    return ivf_topk(
-        inp,
-        spark.table(queries_table),
-        k=int(options.get("k", 10)),
-        # "auto" passes through: sqrt(n) coarse-quantizer sizing
-        n_centroids=(
-            "auto"
-            if options.get("n_centroids") == "auto"
-            else int(options.get("n_centroids", 16))
-        ),
-        nprobe=(
-            "auto"
-            if options.get("nprobe") == "auto"
-            else int(options.get("nprobe", 4))
-        ),
-        seed=int(options.get("seed", 42)),
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        query_id_col=options.get("query_id_col", "query_id"),
-    )
-
-
-def _op_hash_sample(spark, inp, options):
-    from .sampling import hash_sample
-
-    return hash_sample(
-        inp,
-        options.get("id_col", "doc_id"),
-        float(options["rate"]),
-        salt=options.get("salt", ""),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_weighted_sample(spark, inp, options):
-    from .sampling import weighted_sample
-
-    return weighted_sample(
-        inp,
-        options.get("id_col", "doc_id"),
-        options.get("weight_col", "dup_weight"),
-        salt=options.get("salt", ""),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_stratified_sample(spark, inp, options):
-    from .sampling import stratified_sample
-
-    return stratified_sample(
-        inp,
-        options.get("id_col", "doc_id"),
-        options["stratum_col"],
-        {str(k): float(v) for k, v in options.get("rates", {}).items()},
-        default_rate=float(options.get("default_rate", 0.0)),
-        salt=options.get("salt", ""),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_split(spark, inp, options):
-    from .sampling import deterministic_split
-
-    return deterministic_split(
-        inp,
-        options.get("id_col", "doc_id"),
-        {str(k): float(v) for k, v in options["weights"].items()},
-        out_col=options.get("out_col", "split"),
-        salt=options.get("salt", "split"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_connected_components(spark, inp, options):
-    from .cluster import connected_components
-
-    return connected_components(
-        inp,
-        src=options.get("src", "id_a"),
-        dst=options.get("dst", "id_b"),
-        max_iter=int(options.get("max_iter", 50)),
-        driver_edges=int(options.get("driver_edges", 1_000_000)),
-    )
-
-
-def _op_cluster_dedup(spark, inp, options):
-    from .cluster import cluster_dedup
-
-    pairs_table = options.get("pairs")
-    if not pairs_table:
-        raise OperatorError("cluster_dedup operator requires options.pairs (a table name)")
-    return cluster_dedup(
-        inp,
-        spark.table(pairs_table),
-        id_col=options.get("id_col", "doc_id"),
-        src=options.get("src", "id_a"),
-        dst=options.get("dst", "id_b"),
-        keep_by=options.get("keep_by"),
-        descending=_bool_opt(options, "descending", True),
-    )
-
-
-def _op_vocabulary(spark, inp, options):
-    from .text import vocabulary
-
-    return vocabulary(
-        inp,
-        text_col=options.get("text_col", "text"),
-        top_n=int(options.get("top_n", 1000)),
-    )
-
-
-def _op_tfidf(spark, inp, options):
-    from .text import tfidf_top_terms
-
-    return tfidf_top_terms(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        top_n=int(options.get("top_n", 5)),
-    )
-
-
-def _op_rrf_fuse(spark, inp, options):
-    from .similarity import rrf_fuse
-
-    others = options.get("others")
-    if not others:
-        raise OperatorError(
-            "rrf_fuse operator requires options.others (table names of the "
-            "additional ranked lists to fuse with the stage input)"
-        )
-    if isinstance(others, str):
-        others = [others]
-    return rrf_fuse(
-        [inp] + [spark.table(t) for t in others],
-        id_col=options.get("id_col", "vec_id"),
-        rank_col=options.get("rank_col", "rank"),
-        k=int(options.get("k", 60)),
-        query_col=options.get("query_col"),
-    )
-
-
-def _op_gopher_rules(spark, inp, options):
-    from .text import gopher_rules
-
-    kw = {}
-    for opt, conv in (
-        ("min_words", int), ("max_words", int),
-        ("min_mean_word_len", float), ("max_mean_word_len", float),
-        ("max_symbol_word_ratio", float),
-        ("max_bullet_line_frac", float), ("max_ellipsis_line_frac", float),
-        ("min_alpha_word_frac", float), ("min_stop_hits", int),
-    ):
-        if opt in options:
-            kw[opt] = conv(options[opt])
-    return gopher_rules(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        **kw,
-    )
-
-
-def _op_fineweb_rules(spark, inp, options):
-    from .text import fineweb_rules
-
-    kw = {}
-    for opt, conv in (
-        ("min_line_punct_frac", float), ("max_short_line_frac", float),
-        ("short_line_chars", int), ("max_dup_line_char_frac", float),
-        ("max_newline_word_ratio", float),
-    ):
-        if opt in options:
-            kw[opt] = conv(options[opt])
-    return fineweb_rules(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        **kw,
-    )
-
-
-def _op_c4_rules(spark, inp, options):
-    from .text import c4_rules
-
-    kw = {}
-    for opt, conv in (
-        ("min_line_words", int), ("min_sentences", int),
-    ):
-        if opt in options:
-            kw[opt] = conv(options[opt])
-    if "bad_words" in options:
-        kw["bad_words"] = [str(w) for w in options["bad_words"]]
-    return c4_rules(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        require_line_terminal_punct=_bool_opt(
-            options, "require_line_terminal_punct", True
-        ),
-        **kw,
-    )
-
-
-def _op_hybrid_topk(spark, inp, options):
-    from .similarity import hybrid_topk
-
-    vectors = options.get("vectors")
-    if not vectors:
-        raise OperatorError(
-            "hybrid_topk operator requires options.vectors (the embedding "
-            "table name; the stage input is the TEXT corpus)"
-        )
-    terms = options.get("query_terms")
-    if not terms or not isinstance(terms, list):
-        raise OperatorError(
-            "hybrid_topk operator requires options.query_terms "
-            "(a list of terms)"
-        )
-    qvec = options.get("query_vec")
-    if not qvec or not isinstance(qvec, list):
-        raise OperatorError(
-            "hybrid_topk operator requires options.query_vec "
-            "(the query embedding as a list of floats)"
-        )
-    return hybrid_topk(
-        inp,
-        spark.table(vectors),
-        [str(t) for t in terms],
-        [float(x) for x in qvec],
-        k=int(options.get("k", 10)),
-        lexical_k=int(options.get("lexical_k", 100)),
-        vector_k=int(options.get("vector_k", 100)),
-        rrf_k=int(options.get("rrf_k", 60)),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        vec_id_col=options.get("vec_id_col", "vec_id"),
-        k1=float(options.get("k1", 1.2)),
-        b=float(options.get("b", 0.75)),
-    )
-
-
-def _op_bm25(spark, inp, options):
-    from .text import bm25_scores
-
-    terms = options.get("query_terms")
-    if not terms:
-        raise OperatorError(
-            "bm25 operator requires options.query_terms (a list of terms)"
-        )
-    if isinstance(terms, str):
-        terms = terms.split()
-    return bm25_scores(
-        inp,
-        list(terms),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        k1=float(options.get("k1", 1.2)),
-        b=float(options.get("b", 0.75)),
-    )
-
-
-def _op_salted_join(spark, inp, options):
-    from .skew import salted_join
-
-    right_table = options.get("right")
-    if not right_table:
-        raise OperatorError("salted_join operator requires options.right (a table name)")
-    # YAML 1.1 parses a bare `on:` mapping key as boolean True — accept
-    # `key` (canonical), `on`, or that parsed-boolean form
-    join_key = options.get("key") or options.get("on") or options.get(True)
-    if not join_key:
-        raise OperatorError("salted_join operator requires options.key (join column)")
-    return salted_join(
-        inp,
-        spark.table(right_table),
-        on=join_key,
-        how=options.get("how", "inner"),
-        salt_buckets=int(options.get("salt_buckets", 16)),
-        seed_col=options.get("seed_col"),
-        # hot-key-only salting: profile the big side, salt only keys
-        # above this row share (small-side replication bounded)
-        hot_share=(
-            float(options["hot_share"])
-            if options.get("hot_share") is not None
-            else None
-        ),
-        max_hot_keys=int(options.get("max_hot_keys", 1000)),
-    )
-
-
-def _op_asof_join(spark, inp, options):
-    from .temporal import asof_join
-
-    right_table = options.get("right")
-    if not right_table:
-        raise OperatorError("asof_join operator requires options.right (a table name)")
-    keys = options.get("key") or options.get("on") or options.get(True)
-    if not keys:
-        raise OperatorError("asof_join operator requires options.key (join column(s))")
-    if isinstance(keys, str):
-        keys = [keys]
-    value_cols = options.get("value_cols")
-    if not value_cols:
-        raise OperatorError("asof_join operator requires options.value_cols")
-    tol = options.get("tolerance_seconds")
-    return asof_join(
-        inp,
-        spark.table(right_table),
-        on=keys,
-        left_ts=options.get("left_ts", "ts"),
-        right_ts=options.get("right_ts", "ts"),
-        value_cols=value_cols,
-        tolerance_seconds=float(tol) if tol is not None else None,
-        direction=options.get("direction", "backward"),
-    )
-
-
-def _op_range_join(spark, inp, options):
-    from .temporal import range_join
-
-    right_table = options.get("right")
-    if not right_table:
-        raise OperatorError("range_join operator requires options.right (a table name)")
-    if "lower_seconds" not in options or "upper_seconds" not in options:
-        raise OperatorError(
-            "range_join operator requires options.lower_seconds and options.upper_seconds"
-        )
-    keys = options.get("key") or options.get("on") or options.get(True) or []
-    if isinstance(keys, str):
-        keys = [keys]
-    return range_join(
-        inp,
-        spark.table(right_table),
-        left_ts=options.get("left_ts", "ts"),
-        right_ts=options.get("right_ts", "ts"),
-        lower_seconds=float(options["lower_seconds"]),
-        upper_seconds=float(options["upper_seconds"]),
-        on=keys,
-    )
-
-
-def _op_time_rollup(spark, inp, options):
-    from .temporal import time_rollup
-
-    if "value_col" not in options:
-        raise OperatorError("time_rollup operator requires options.value_col")
-    return time_rollup(
-        inp,
-        ts_col=options.get("ts_col", "ts"),
-        value_col=options["value_col"],
-        granularities=options.get("granularities", ["hour", "day", "month"]),
-        group_cols=options.get("group_cols", []),
-        value_decimal=options.get("value_decimal", "decimal(38,9)"),
-    )
-
-
-def _op_dd_sketch(spark, inp, options):
-    from .sketch import dd_sketch
-
-    if "value_col" not in options:
-        raise OperatorError("dd_sketch operator requires options.value_col")
-    return dd_sketch(
-        inp,
-        group_cols=options.get("group_cols", []),
-        value_col=options["value_col"],
-        gamma=float(options.get("gamma", 1.02)),
-    )
-
-
-def _op_dd_quantiles(spark, inp, options):
-    from .sketch import dd_quantile, dd_sketch
-
-    if "value_col" not in options:
-        raise OperatorError("dd_quantiles operator requires options.value_col")
-    grp = options.get("group_cols", [])
-    gamma = float(options.get("gamma", 1.02))
-    sk = dd_sketch(inp, grp, options["value_col"], gamma=gamma)
-    return dd_quantile(
-        sk,
-        grp,
-        [float(q) for q in options.get("quantiles", [0.5, 0.95, 0.99])],
-        gamma=gamma,
-    )
-
-
-def _op_kmv_distinct(spark, inp, options):
-    from .sketch import kmv_distinct
-
-    if "value_col" not in options:
-        raise OperatorError("kmv_distinct operator requires options.value_col")
-    return kmv_distinct(
-        inp,
-        group_cols=options.get("group_cols", []),
-        value_col=options["value_col"],
-        k=int(options.get("k", 64)),
-        buckets=int(options.get("buckets", 64)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_hll_distinct(spark, inp, options):
-    from .sketch import hll_distinct
-
-    if "value_col" not in options:
-        raise OperatorError("hll_distinct operator requires options.value_col")
-    return hll_distinct(
-        inp,
-        group_cols=options.get("group_cols", []),
-        value_col=options["value_col"],
-        m=int(options.get("m", 64)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_weighted_mix(spark, inp, options):
-    from .mixing import weighted_mix
-
-    for req in ("group_col", "id_col", "weights"):
-        if req not in options:
-            raise OperatorError(f"weighted_mix operator requires options.{req}")
-    return weighted_mix(
-        inp,
-        group_col=options["group_col"],
-        id_col=options["id_col"],
-        weights={str(k): float(v) for k, v in dict(options["weights"]).items()},
-        default_weight=float(options.get("default_weight", 1.0)),
-        copy_col=options.get("copy_col", "mix_copy"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_temperature_mix(spark, inp, options):
-    from .mixing import temperature_mix
-
-    return temperature_mix(
-        inp,
-        group_col=options.get("group_col", "source"),
-        id_col=options.get("id_col", "doc_id"),
-        alpha=float(options.get("alpha", 0.3)),
-        target_total=(
-            float(options["target_total"])
-            if options.get("target_total") is not None
-            else None
-        ),
-        copy_col=options.get("copy_col", "mix_copy"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_token_budget_mix(spark, inp, options):
-    from .mixing import token_budget_mix
-
-    for req in ("group_col", "id_col", "token_col", "budget", "shares"):
-        if req not in options:
-            raise OperatorError(
-                f"token_budget_mix operator requires options.{req}"
-            )
-    return token_budget_mix(
-        inp,
-        group_col=options["group_col"],
-        id_col=options["id_col"],
-        token_col=options["token_col"],
-        budget=float(options["budget"]),
-        shares={str(k): float(v) for k, v in dict(options["shares"]).items()},
-        copy_col=options.get("copy_col", "mix_copy"),
-        max_groups=int(options.get("max_groups", 1000)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_corpus_diff(spark, inp, options):
-    from .profile import corpus_diff
-
-    if "old_table" not in options:
-        raise OperatorError(
-            "corpus_diff operator requires options.old_table (the "
-            "registered name of the previous corpus version; the stage "
-            "input is the NEW version)"
-        )
-    return corpus_diff(
-        spark.table(options["old_table"]),
-        inp,
-        id_col=options.get("id_col", "doc_id"),
-        content_cols=options.get("content_cols"),
-        summary=_bool_opt(options, "summary", False),
-    )
-
-
-def _op_pack_shards(spark, inp, options):
-    from .mixing import pack_shards
-
-    for req in ("token_col", "order_col", "budget"):
-        if req not in options:
-            raise OperatorError(f"pack_shards operator requires options.{req}")
-    return pack_shards(
-        inp,
-        token_col=options["token_col"],
-        order_col=options["order_col"],
-        budget=int(options["budget"]),
-        parts=int(options.get("parts", 64)),
-        tiebreak_cols=options.get("tiebreak_cols", ()),
-    )
-
-
-def _op_shuffle_corpus(spark, inp, options):
-    from .mixing import shuffle_corpus
-
-    n_shards = options.get("n_shards")
-    return shuffle_corpus(
-        inp,
-        id_col=options.get("id_col", "doc_id"),
-        seed=str(options.get("seed", "")),
-        n_shards=int(n_shards) if n_shards is not None else None,
-        key_col=options.get("key_col", "shuffle_key"),
-        shard_col=options.get("shard_col", "shard_id"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_corpus_offsets(spark, inp, options):
-    from .mixing import corpus_offsets
-
-    order_cols = options.get("order_cols", ["shuffle_key", "doc_id"])
-    if isinstance(order_cols, str):
-        order_cols = [c.strip() for c in order_cols.split(",") if c.strip()]
-    kwargs = {}
-    if "max_shards" in options:
-        kwargs["max_shards"] = int(options["max_shards"])
-    return corpus_offsets(
-        inp,
-        order_cols,
-        shard_col=options.get("shard_col"),
-        token_col=options.get("token_col"),
-        pos_col=options.get("pos_col", "global_pos"),
-        offset_col=options.get("offset_col", "token_start"),
-        **kwargs,
-    )
-
-
-def _op_luhn_cards(spark, inp, options):
-    from .text import luhn_cards
-
-    keep = options.get("keep_cols")
-    if isinstance(keep, str):
-        keep = [c.strip() for c in keep.split(",") if c.strip()]
-    return luhn_cards(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        tag=options.get("tag", "[CARD]"),
-        keep_cols=keep,
-    )
-
-
-def _bpe_stage_args(options):
-    """Shared byte_level/end_marker option handling for the BPE stages:
-    ``byte_level: true`` defaults the marker to none (byte-level BPE
-    has no word-end marker) — an EXPLICIT non-null end_marker alongside
-    byte_level still reaches the operator and raises its loud error."""
-    byte_level = bool(options.get("byte_level", False))
-    default_marker = None if byte_level else "</w>"
-    end_marker = options.get("end_marker", default_marker)
-    if end_marker in ("", None, "none", "null"):
-        end_marker = None
-    return byte_level, end_marker
-
-
-def _op_bpe_pairs(spark, inp, options):
-    from .text import bpe_pair_counts
-
-    merges = options.get("merges") or []
-    byte_level, end_marker = _bpe_stage_args(options)
-    return bpe_pair_counts(
-        inp,
-        text_col=options.get("text_col", "text"),
-        merges=[tuple(m) for m in merges],
-        end_marker=end_marker,
-        min_count=int(options.get("min_count", 1)),
-        byte_level=byte_level,
-    )
-
-
-def _op_bpe_encode(spark, inp, options):
-    from .text import bpe_encode
-
-    keep = options.get("keep_cols")
-    byte_level, end_marker = _bpe_stage_args(options)
-    return bpe_encode(
-        inp,
-        merges=[tuple(m) for m in (options.get("merges") or [])],
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        keep_cols=list(keep) if keep else None,
-        end_marker=end_marker,
-        method=options.get("method", "auto"),
-        byte_level=byte_level,
-    )
-
-
-def _op_bpe_vocab(spark, inp, options):
-    from .text import bpe_vocab
-
-    byte_level, end_marker = _bpe_stage_args(options)
-    return bpe_vocab(
-        inp,
-        merges=[tuple(m) for m in (options.get("merges") or [])],
-        text_col=options.get("text_col", "text"),
-        end_marker=end_marker,
-        byte_level=byte_level,
-    )
-
-
-def _op_tokens_to_ids(spark, inp, options):
-    from .text import tokens_to_ids
-
-    vocab_table = options.get("vocab")
-    if not vocab_table:
-        raise OperatorError(
-            "tokens_to_ids operator requires options.vocab (a (token, "
-            "token_id) table, e.g. a bpe_vocab stage)"
-        )
-    keep = options.get("keep_cols")
-    unk = options.get("unk_id")
-    return tokens_to_ids(
-        inp,
-        spark.table(vocab_table),
-        tokens_col=options.get("tokens_col", "tokens"),
-        id_col=options.get("id_col", "doc_id"),
-        keep_cols=list(keep) if keep else None,
-        out_col=options.get("out_col", "token_ids"),
-        unk_id=None if unk is None else int(unk),
-        method=options.get("method", "auto"),
-    )
-
-
-def _op_sequence_spans(spark, inp, options):
-    from .mixing import sequence_spans
-
-    order_cols = options.get("order_cols", ["shuffle_key", "doc_id"])
-    if isinstance(order_cols, str):
-        order_cols = [c.strip() for c in order_cols.split(",") if c.strip()]
-    kwargs = {}
-    if "max_shards" in options:
-        kwargs["max_shards"] = int(options["max_shards"])
-    if "seq_len" not in options:
-        raise OperatorError(
-            "sequence_spans operator requires options.seq_len "
-            "(the packed sequence length in tokens)"
-        )
-    return sequence_spans(
-        inp,
-        int(options["seq_len"]),
-        order_cols,
-        token_col=options.get("token_col", "n_tokens"),
-        shard_col=options.get("shard_col"),
-        **kwargs,
-    )
-
-
-def _op_tokenizer_fertility(spark, inp, options):
-    from .text import tokenizer_fertility
-
-    byte_level, end_marker = _bpe_stage_args(options)
-    return tokenizer_fertility(
-        inp,
-        merges=[tuple(m) for m in (options.get("merges") or [])],
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        group_col=options.get("group_col"),
-        end_marker=end_marker,
-        method=options.get("method", "auto"),
-        byte_level=byte_level,
-    )
-
-
-def _op_contamination_report(spark, inp, options):
-    from .decontam import contamination_report
-
-    if "benchmark" not in options:
-        raise OperatorError(
-            "contamination_report operator requires options.benchmark "
-            "(the registered benchmark table name)"
-        )
-    bench = spark.table(options["benchmark"])
-    return contamination_report(
-        inp,
-        bench,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        bench_id_col=options.get("bench_id_col", "doc_id"),
-        bench_text_col=options.get("bench_text_col"),
-        n=int(options.get("n", 13)),
-        min_dirty_grams=int(options.get("min_dirty_grams", 1)),
-    )
-
-
-def _op_shard_manifest(spark, inp, options):
-    from .mixing import shard_manifest
-
-    return shard_manifest(
-        inp,
-        shard_col=options.get("shard_col", "shard_id"),
-        id_col=options.get("id_col", "doc_id"),
-        token_col=options.get("token_col"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_corpus_datacard(spark, inp, options):
-    from .profile import corpus_datacard
-
-    lang = options.get("lang_col", "lang")
-    if lang in ("", None, "none", "null"):
-        lang = None
-    return corpus_datacard(
-        inp,
-        group_col=options.get("group_col", "source"),
-        text_col=options.get("text_col", "text"),
-        lang_col=lang,
-    )
-
-
-def _op_skew_profile(spark, inp, options):
-    from .skew import key_skew_profile
-
-    return key_skew_profile(inp, options["key"], top=int(options.get("top", 10)))
-
-
-def _op_repetition(spark, inp, options):
-    from .text import repetition_features
-
-    return repetition_features(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        n=int(options.get("n", 2)),
-    )
-
-
-def _op_drop_common_lines(spark, inp, options):
-    from .dedup import drop_common_lines
-
-    return drop_common_lines(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        max_docs=int(options.get("max_docs", 2)),
-        sep=options.get("sep", "\n"),
-    )
-
-
-def _op_strip_markup(spark, inp, options):
-    from .text import strip_markup
-
-    return strip_markup(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        keep_cols=options.get("keep_cols"),
-    )
-
-
-def _op_redact_pii(spark, inp, options):
-    from .text import redact_pii
-
-    return redact_pii(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        patterns=options.get("patterns"),
-        keep_cols=options.get("keep_cols"),
-    )
-
-
-def _op_stratified_fixed_n(spark, inp, options):
-    from .sampling import stratified_fixed_n
-
-    for req in ("stratum_col", "n_per_stratum"):
-        if req not in options:
-            raise OperatorError(f"stratified_fixed_n operator requires options.{req}")
-    return stratified_fixed_n(
-        inp,
-        options.get("id_col", "doc_id"),
-        options["stratum_col"],
-        int(options["n_per_stratum"]),
-        salt=options.get("salt", ""),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_group_cap(spark, inp, options):
-    from .sampling import group_cap
-
-    for req in ("group_cols", "order_col", "n"):
-        if req not in options:
-            raise OperatorError(f"group_cap operator requires options.{req}")
-    groups = options["group_cols"]
-    return group_cap(
-        inp,
-        [groups] if isinstance(groups, str) else list(groups),
-        options["order_col"],
-        int(options["n"]),
-        descending=_bool_opt(options, "descending", True),
-        tiebreak_col=options.get("tiebreak_col"),
-    )
-
-
-def _op_chunk_documents(spark, inp, options):
-    from .text import chunk_documents
-
-    return chunk_documents(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        chunk_tokens=int(options.get("chunk_tokens", 64)),
-        overlap=int(options.get("overlap", 8)),
-    )
-
-
-def _op_ngram_overlap(spark, inp, options):
-    from .decontam import ngram_overlap
-
-    bench_table = options.get("benchmark")
-    if not bench_table:
-        raise OperatorError("ngram_overlap operator requires options.benchmark (a table name)")
-    return ngram_overlap(
-        inp,
-        spark.table(bench_table),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        n=int(options.get("n", 13)),
-    )
-
-
-def _op_decontaminate(spark, inp, options):
-    from .decontam import decontaminate
-
-    bench_table = options.get("benchmark")
-    if not bench_table:
-        raise OperatorError("decontaminate operator requires options.benchmark (a table name)")
-    return decontaminate(
-        inp,
-        spark.table(bench_table),
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        n=int(options.get("n", 13)),
-        threshold=int(options.get("threshold", 1)),
-    )
-
-
-def _op_bigram_logprob(spark, inp, options):
-    from .text import bigram_logprob
-
-    return bigram_logprob(inp, **_docs_args(options))
-
-
-def _op_dedup_against(spark, inp, options):
-    from .dedup import dedup_against
-
-    corpus_table = options.get("corpus")
-    if not corpus_table:
-        raise OperatorError(
-            "dedup_against operator requires options.corpus (a table name)"
-        )
-    return dedup_against(
-        inp,
-        spark.table(corpus_table),
-        cols=options.get("columns", ["text"]),
-        broadcast_corpus=_bool_opt(options, "broadcast_corpus", False),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_fuzzy_decontaminate(spark, inp, options):
-    from .decontam import fuzzy_decontaminate
-
-    bench_table = options.get("benchmark")
-    if not bench_table:
-        raise OperatorError(
-            "fuzzy_decontaminate operator requires options.benchmark "
-            "(a table name)"
-        )
-    return fuzzy_decontaminate(
-        inp,
-        spark.table(bench_table),
-        id_col=options.get("id_col", "doc_id"),
-        bench_id_col=options.get("bench_id_col", "doc_id"),
-        text_col=options.get("text_col", "text"),
-        bench_text_col=options.get("bench_text_col"),
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        threshold=float(options.get("threshold", 0.8)),
-        hash_fn=options.get("hash_fn", "md5"),
-        validate_ids=bool(options.get("validate_ids", False)),
-    )
-
-
-def _op_fuzzy_decontam_rowwise(spark, inp, options):
-    from .decontam import fuzzy_decontaminate_rowwise
-
-    bench_table = options.get("benchmark")
-    if not bench_table:
-        raise OperatorError(
-            "fuzzy_decontam_rowwise operator requires options.benchmark "
-            "(a table name)"
-        )
-    return fuzzy_decontaminate_rowwise(
-        inp,
-        spark.table(bench_table),
-        text_col=options.get("text_col", "text"),
-        bench_text_col=options.get("bench_text_col"),
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        threshold=float(options.get("threshold", 0.8)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_minhash_overlap(spark, inp, options):
-    from .decontam import minhash_overlap
-
-    bench_table = options.get("benchmark")
-    if not bench_table:
-        raise OperatorError(
-            "minhash_overlap operator requires options.benchmark "
-            "(a table name)"
-        )
-    return minhash_overlap(
-        inp,
-        spark.table(bench_table),
-        id_col=options.get("id_col", "doc_id"),
-        bench_id_col=options.get("bench_id_col", "doc_id"),
-        text_col=options.get("text_col", "text"),
-        bench_text_col=options.get("bench_text_col"),
-        num_hashes=int(options.get("num_hashes", 16)),
-        bands=int(options.get("bands", 4)),
-        shingle_n=int(options.get("shingle_n", 3)),
-        threshold=float(options.get("threshold", 0.8)),
-        hash_fn=options.get("hash_fn", "md5"),
-        validate_ids=_bool_opt(options, "validate_ids", False),
-    )
-
-
-def _op_cms_sketch(spark, inp, options):
-    from .sketch import cms_sketch
-
-    if "value_col" not in options:
-        raise OperatorError("cms_sketch operator requires options.value_col")
-    return cms_sketch(
-        inp,
-        group_cols=options.get("group_cols", []),
-        value_col=options["value_col"],
-        width=int(options.get("width", 1024)),
-        depth=int(options.get("depth", 3)),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-def _op_cms_freq(spark, inp, options):
-    from .sketch import cms_estimate, cms_sketch
-
-    if "value_col" not in options:
-        raise OperatorError("cms_freq operator requires options.value_col")
-    items_table = options.get("items")
-    if not items_table:
-        raise OperatorError("cms_freq operator requires options.items (a table name)")
-    width = int(options.get("width", 1024))
-    depth = int(options.get("depth", 3))
-    grp = options.get("group_cols", [])
-    hash_fn = options.get("hash_fn", "md5")
-    sketch = cms_sketch(inp, grp, options["value_col"], width, depth, hash_fn)
-    return cms_estimate(
-        sketch,
-        spark.table(items_table),
-        item_col=options.get("item_col", options["value_col"]),
-        width=width,
-        depth=depth,
-        group_cols=grp,
-        hash_fn=hash_fn,
-    )
-
-
-def _op_bloom_prefilter(spark, inp, options):
-    from .sketch import bloom_filter, bloom_sketch
-
-    build_table = options.get("build")
-    if not build_table:
-        raise OperatorError(
-            "bloom_prefilter operator requires options.build (a table name)"
-        )
-    if "value_col" not in options:
-        raise OperatorError("bloom_prefilter operator requires options.value_col")
-    num_bits = int(options.get("num_bits", 8192))
-    num_hashes = int(options.get("num_hashes", 4))
-    hash_fn = options.get("hash_fn", "md5")
-    bits = bloom_sketch(
-        spark.table(build_table),
-        options.get("build_col", options["value_col"]),
-        num_bits=num_bits,
-        num_hashes=num_hashes,
-        hash_fn=hash_fn,
-    )
-    return bloom_filter(
-        inp,
-        options["value_col"],
-        bits,
-        num_bits=num_bits,
-        num_hashes=num_hashes,
-        hash_fn=hash_fn,
-    )
-
-
-def _op_validate(spark, inp, options):
-    from .validate import validate_rules
-
-    rules = options.get("rules")
-    if not rules:
-        raise OperatorError("validate operator requires options.rules (a list)")
-    return validate_rules(inp, rules)
-
-
-def _op_profile_table(spark, inp, options):
-    from .profile import profile_table
-
-    return profile_table(
-        inp,
-        columns=options.get("columns"),
-        exact_distinct=_bool_opt(options, "exact_distinct", True),
-    )
-
-
-def _op_kn_bigram_logprob(spark, inp, options):
-    from .text import kn_bigram_logprob
-
-    return kn_bigram_logprob(
-        inp,
-        discount=float(options.get("discount", 0.75)),
-        **_docs_args(options),
-    )
-
-
-def _op_kn_trigram_logprob(spark, inp, options):
-    from .text import kn_trigram_logprob
-
-    return kn_trigram_logprob(
-        inp,
-        discount=float(options.get("discount", 0.75)),
-        **_docs_args(options),
-    )
-
-
-def _op_kn_bigram_fit(spark, inp, options):
-    from .text import kn_bigram_fit
-
-    return kn_bigram_fit(inp, text_col=options.get("text_col", "text"))
-
-
-def _op_kn_bigram_score(spark, inp, options):
-    from .text import kn_bigram_score
-
-    model_table = options.get("model")
-    if not model_table:
-        raise OperatorError(
-            "kn_bigram_score operator requires options.model (a (w1, w2, "
-            "ct) table, e.g. a kn_bigram_fit stage or one read from disk)"
-        )
-    return kn_bigram_score(
-        inp,
-        spark.table(model_table),
-        discount=float(options.get("discount", 0.75)),
-        **_docs_args(options),
-    )
-
-
-def _op_kn_trigram_fit(spark, inp, options):
-    from .text import kn_trigram_fit
-
-    return kn_trigram_fit(inp, text_col=options.get("text_col", "text"))
-
-
-def _op_kn_trigram_score(spark, inp, options):
-    from .text import kn_trigram_score
-
-    model_table = options.get("model")
-    if not model_table:
-        raise OperatorError(
-            "kn_trigram_score operator requires options.model (a (w1, w2, "
-            "w3, ct) table, e.g. a kn_trigram_fit stage or one read from "
-            "disk)"
-        )
-    return kn_trigram_score(
-        inp,
-        spark.table(model_table),
-        discount=float(options.get("discount", 0.75)),
-        **_docs_args(options),
-    )
-
-
-def _op_unigram_logprob(spark, inp, options):
-    from .text import unigram_logprob
-
-    return unigram_logprob(inp, **_docs_args(options))
-
-
-def _op_remove_duplicated_spans(spark, inp, options):
-    from .dedup import remove_duplicated_spans
-
-    return remove_duplicated_spans(
-        inp,
-        n=int(options.get("n", 8)),
-        max_docs=int(options.get("max_docs", 1)),
-        **_docs_args(options),
-    )
-
-
-def _op_quantize_embeddings(spark, inp, options):
-    from .embedding import quantize_embeddings
-
-    return quantize_embeddings(
-        inp,
-        vec_col=options.get("vec_col", "embedding"),
-        id_col=options.get("id_col", "vec_id"),
-    )
-
-
-def _op_label_centroids(spark, inp, options):
-    from .embedding import label_centroids
-
-    return label_centroids(
-        inp,
-        vec_col=options.get("vec_col", "embedding"),
-        label_col=options.get("label_col", "label"),
-    )
-
-
-def _op_linear_probe(spark, inp, options):
-    from .embedding import linear_probe_score
-
-    weights = options.get("weights")
-    if not isinstance(weights, (list, tuple)) or not weights:
-        raise OperatorError(
-            "linear_probe requires options.weights (non-empty list of floats)"
-        )
-    return linear_probe_score(
-        inp,
-        weights=[float(w) for w in weights],
-        bias=float(options.get("bias", 0.0)),
-        vec_col=options.get("vec_col", "embedding"),
-        id_col=options.get("id_col", "vec_id"),
-        threshold=(
-            float(options["threshold"]) if "threshold" in options else None
-        ),
-    )
-
-
-def _op_byte_stats(spark, inp, options):
-    from .multimodal import byte_stats
-
-    return byte_stats(
-        inp, options.get("payload_col", "payload"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_byte_histogram(spark, inp, options):
-    from .multimodal import byte_histogram_features
-
-    return byte_histogram_features(
-        inp, options.get("payload_col", "payload"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_url_parts(spark, inp, options):
-    from .web import url_parts
-
-    return url_parts(inp, options.get("url_col", "url"))
-
-
-def _op_semantic_dedup(spark, inp, options):
-    from .dedup import semantic_dedup
-
-    return semantic_dedup(
-        inp,
-        id_col=options.get("id_col", "vec_id"),
-        vec_col=options.get("vec_col", "embedding"),
-        # default None derives ~sqrt(N) clusters — a fixed small count
-        # is a quadratic-join footgun on a real corpus
-        n_clusters=(
-            int(options["n_clusters"]) if "n_clusters" in options else None
-        ),
-        threshold=float(options.get("threshold", 0.95)),
-        sample_size=int(options.get("sample_size", 4096)),
-        iters=int(options.get("iters", 8)),
-        seed=int(options.get("seed", 42)),
-        max_cluster_size=(
-            int(options["max_cluster_size"])
-            if options.get("max_cluster_size") is not None
-            else None
-        )
-        if "max_cluster_size" in options
-        else 100_000,
-        quantize=bool(options.get("quantize", False)),
-    )
-
-
-def _op_dsir_weights(spark, inp, options):
-    from .selection import dsir_weights
-
-    target_table = options.get("target")
-    ratios_table = options.get("ratios")
-    if bool(target_table) == bool(ratios_table):
-        raise OperatorError(
-            "dsir_weights requires exactly one of options.target (fit "
-            "inline) or options.ratios (a pre-fitted dsir_log_ratios "
-            "table)"
-        )
-    raw_table = options.get("raw")
-    # fit-only knobs (smoothing/raw/target_text_col) are forwarded only
-    # on the fit path — dsir_weights rejects them alongside a pre-fitted
-    # ratios table rather than silently ignoring them
-    fit_kw = {}
-    if ratios_table:
-        bad = [
-            o for o in ("smoothing", "raw", "target_text_col") if o in options
+        raise ValueError(f"cannot parse {v!r} as a boolean")
+    if isinstance(v, (bool, int)):
+        return bool(v)
+    raise TypeError(f"expected a boolean, got {v!r}")
+
+
+def _to_str(v: Any) -> str:
+    if isinstance(v, (str, int, float)) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"expected a string, got {v!r}")
+
+
+def _is_none(v: Any) -> bool:
+    return v is None or (
+        isinstance(v, str) and v.strip().lower() in ("", "none", "null")
+    )
+
+
+def _converter(tp: Any) -> Callable[[Any], Any]:
+    """Option value -> argument of annotation ``tp``; TypeError for an
+    annotation no YAML value maps to."""
+    if tp is Any:
+        return lambda v: v
+    if tp is bool:
+        return _to_bool
+    if tp in (int, float):
+        return tp
+    if tp is str:
+        return _to_str
+    origin, args = typing.get_origin(tp), typing.get_args(tp)
+    if origin in (Union, types.UnionType):
+        members = [a for a in args if a is not type(None)]
+        convs = [_converter(a) for a in members]
+        optional = len(members) < len(args)
+
+        def union(v):
+            if optional and _is_none(v):
+                return None
+            for conv in convs:
+                try:
+                    return conv(v)
+                except (TypeError, ValueError):
+                    pass
+            raise ValueError(f"{v!r} is not a {tp}")
+
+        return union
+    if tp in (list, tuple) or origin in (list, tuple, cabc.Sequence):
+        fixed = origin is tuple and args and args[-1] is not Ellipsis
+        members = [a for a in args if a is not Ellipsis] or [Any]
+        elems = [_converter(a) for a in members]
+
+        def sequence(v):
+            if isinstance(v, str):
+                v = v.replace(",", " ").split()
+            if not isinstance(v, (list, tuple)):
+                raise TypeError(f"expected a list, got {v!r}")
+            if fixed and len(v) != len(elems):
+                raise ValueError(f"expected {len(elems)} values, got {v!r}")
+            out = [elems[i if fixed else 0](x) for i, x in enumerate(v)]
+            return tuple(out) if tp is tuple or origin is tuple else out
+
+        return sequence
+    if tp is dict or origin in (dict, cabc.Mapping):
+        key, val = (_converter(a) for a in (args or (Any, Any)))
+
+        def mapping(v):
+            if not isinstance(v, dict):
+                raise TypeError(f"expected a mapping, got {v!r}")
+            return {key(k): val(x) for k, x in v.items()}
+
+        return mapping
+    raise TypeError(f"no YAML form for {tp!r}")
+
+
+def _table_names(tp: Any) -> Any:
+    """For a DataFrame, Optional[DataFrame] or list[DataFrame] parameter
+    the annotation of the name(s) it binds until run_operator resolves
+    them; None for any other parameter."""
+    if tp is DataFrame:
+        return str
+    if DataFrame in typing.get_args(tp):
+        return list[str] if typing.get_origin(tp) is list else Optional[str]
+    return None
+
+
+class _Param(NamedTuple):
+    convert: Callable[[Any], Any]
+    required: bool
+    table: bool
+
+
+class _Signature(NamedTuple):
+    spec: Op
+    input: str  # parameter the stage input binds
+    params: dict  # option name -> _Param
+
+
+def _parameters(fn: Callable) -> list[tuple[str, Any, bool]]:
+    """(name, annotation, has default) of each named parameter."""
+    hints = typing.get_type_hints(fn)
+    return [
+        (p.name, hints.get(p.name, Any), p.default is not p.empty)
+        for p in inspect.signature(fn).parameters.values()
+        if p.kind not in (p.VAR_POSITIONAL, p.VAR_KEYWORD)
+    ]
+
+
+@lru_cache(maxsize=None)
+def signature(op_type: str) -> _Signature:
+    """How the options of operator ``op_type`` bind to its function."""
+    spec = OPERATORS[op_type]
+    if not isinstance(spec, Op):
+        spec = Op(spec)
+    found = _parameters(_load(spec.fn))
+    if spec.forward:
+        own = {name for name, _, _ in found}
+        found += [
+            p for p in _parameters(_load(spec.forward))[1:] if p[0] not in own
         ]
-        if bad:
-            raise OperatorError(
-                f"dsir_weights: options {bad} are fit-time parameters — "
-                "they are baked into the pre-fitted options.ratios table; "
-                "refit with dsir_log_ratios instead"
-            )
-    if target_table:
-        fit_kw = dict(
-            smoothing=(
-                float(options["smoothing"]) if "smoothing" in options else None
-            ),
-            raw=spark.table(raw_table) if raw_table else None,
-            target_text_col=options.get("target_text_col"),
-        )
-    return dsir_weights(
-        inp,
-        spark.table(target_table) if target_table else None,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-        buckets=int(options.get("buckets", 10_000)),
-        ratios=spark.table(ratios_table) if ratios_table else None,
-        **fit_kw,
+    params = {}
+    for name, tp, has_default in found:
+        names = _table_names(tp)
+        required = not has_default and name not in spec.defaults
+        params[name] = _Param(_converter(names or tp), required, names is not None)
+    input_param = spec.input or next(n for n, p in params.items() if p.table)
+    del params[input_param]
+    return _Signature(spec, input_param, params)
+
+
+def _yaml_name(spec: Op, param: str) -> str:
+    """The YAML key documented for a parameter: its first string alias."""
+    return next(
+        (k for k, v in spec.aliases.items() if v == param and isinstance(k, str)),
+        param,
     )
 
 
-def _op_dsir_log_ratios(spark, inp, options):
-    from .selection import dsir_log_ratios
-
-    target_table = options.get("target")
-    if not target_table:
-        raise OperatorError(
-            "dsir_log_ratios requires options.target (the "
-            "target-distribution corpus); the stage input is the raw corpus"
-        )
-    return dsir_log_ratios(
-        spark.table(target_table),
-        inp,
-        text_col=options.get("text_col", "text"),
-        buckets=int(options.get("buckets", 10_000)),
-        smoothing=float(options.get("smoothing", 1.0)),
-        target_text_col=options.get("target_text_col"),
-    )
-
-
-def _op_dsir_select(spark, inp, options):
-    from .selection import dsir_select
-
-    if "k" not in options:
-        raise OperatorError("dsir_select requires options.k (rows to keep)")
-    return dsir_select(
-        inp,
-        int(options["k"]),
-        id_col=options.get("id_col", "doc_id"),
-        logw_col=options.get("logw_col", "logw"),
-        temperature=float(options.get("temperature", 1.0)),
-        salt=options.get("salt", "dsir"),
-        max_driver_k=int(options.get("max_driver_k", 100_000)),
-        quantile_error=float(options.get("quantile_error", 1e-4)),
-    )
-
-
-def _op_perplexity_buckets(spark, inp, options):
-    from .selection import perplexity_buckets
-
-    if "score_col" not in options:
-        raise OperatorError(
-            "perplexity_buckets requires options.score_col (the "
-            "smaller-is-better score to bucket by)"
-        )
-    return perplexity_buckets(
-        inp,
-        score_col=options["score_col"],
-        id_col=options.get("id_col", "doc_id"),
-        group_col=options.get("group_col"),
-        head=float(options.get("head", 1.0 / 3.0)),
-        middle=float(options.get("middle", 1.0 / 3.0)),
-        bucket_col=options.get("bucket_col", "ppl_bucket"),
-        method=options.get("method", "exact"),
-        accuracy=int(options.get("accuracy", 10_000)),
-    )
-
-
-def _op_url_blocklist(spark, inp, options):
-    from .web import url_blocklist
-
-    blocked_table = options.get("blocked")
-    return url_blocklist(
-        inp,
-        blocked=spark.table(blocked_table) if blocked_table else None,
-        keywords=[str(k) for k in options.get("keywords", [])],
-        url_col=options.get("url_col", "url"),
-        domain_col=options.get("domain_col", "domain"),
-        host_out=options.get("host_out", "host"),
-        domain_out=options.get("domain_out", "domain"),
-    )
-
-
-def _op_script_profile(spark, inp, options):
-    from .text import script_profile
-
-    return script_profile(
-        inp,
-        text_col=options.get("text_col", "text"),
-        id_col=options.get("id_col", "doc_id"),
-    )
-
-
-def _op_random_projection(spark, inp, options):
-    from .embedding import random_projection
-
-    for req in ("k", "in_dim"):
-        if req not in options:
-            raise OperatorError(
-                f"random_projection requires options.{req}"
-            )
-    return random_projection(
-        inp,
-        k=int(options["k"]),
-        in_dim=int(options["in_dim"]),
-        vec_col=options.get("vec_col", "embedding"),
-        id_col=options.get("id_col", "vec_id"),
-        out_col=options.get("out_col", "proj"),
-        seed=str(options.get("seed", "jl")),
-    )
-
-
-def _op_registered_domain_psl(spark, inp, options):
-    from .web import registered_domain_psl
-
-    psl_table = options.get("psl")
-    if not psl_table:
-        raise OperatorError(
-            "registered_domain_psl requires options.psl (a table of "
-            "public-suffix-list rules)"
-        )
-    return registered_domain_psl(
-        inp,
-        spark.table(psl_table),
-        host_col=options.get("host_col", "host"),
-        out_col=options.get("out_col", "domain"),
-        max_labels=int(options.get("max_labels", 5)),
-    )
-
-
-def _op_url_dedup(spark, inp, options):
-    from .web import url_dedup
-
-    return url_dedup(
-        inp, options.get("url_col", "url"), options.get("id_col", "doc_id")
-    )
-
-
-def _op_domain_cap(spark, inp, options):
-    from .web import domain_cap
-
-    if "n" not in options:
-        raise OperatorError("domain_cap requires options.n (max docs per domain)")
-    return domain_cap(
-        inp,
-        int(options["n"]),
-        options.get("url_col", "url"),
-        options.get("id_col", "doc_id"),
-        hash_fn=options.get("hash_fn", "md5"),
-    )
-
-
-OPERATORS: dict[str, Callable[[SparkSession, DataFrame, dict], DataFrame]] = {
-    "exact_dedup": _op_exact_dedup,
-    "dup_weights": _op_dup_weights,
-    "minhash_bands": _op_minhash_bands,
-    "minhash_signatures": _op_minhash_signatures,
-    "fuzzy_filter_against": _op_fuzzy_filter_against,
-    "minhash_pairs": _op_minhash_pairs,
-    "fuzzy_dedup": _op_fuzzy_dedup,
-    "jaccard_pairs": _op_jaccard_pairs,
-    "simhash": _op_simhash,
-    "hamming_pairs": _op_hamming_pairs,
-    "hamming_filter": _op_hamming_filter,
-    "simhash_wide": _op_simhash_wide,
-    "hamming_pairs_wide": _op_hamming_pairs_wide,
-    "hamming_filter_wide": _op_hamming_filter_wide,
-    "perceptual_hash": _op_perceptual_hash,
-    "embed_neardup": _op_embed_neardup,
-    "embed_neardup_lsh": _op_embed_neardup_lsh,
-    "quality_score": _op_quality_score,
-    "text_features": _op_text_features,
-    "langid": _op_langid,
-    "fingerprint": _op_fingerprint,
-    "token_count": _op_token_count,
-    "topk": _op_topk,
-    "quantized_topk": _op_quantized_topk,
-    "pq_encode": _op_pq_encode,
-    "pq_topk": _op_pq_topk,
-    "ivfpq_topk": _op_ivfpq_topk,
-    "lsh_topk": _op_lsh_topk,
-    "ivf_topk": _op_ivf_topk,
-    "hash_sample": _op_hash_sample,
-    "weighted_sample": _op_weighted_sample,
-    "stratified_sample": _op_stratified_sample,
-    "split": _op_split,
-    "connected_components": _op_connected_components,
-    "cluster_dedup": _op_cluster_dedup,
-    "salted_join": _op_salted_join,
-    "asof_join": _op_asof_join,
-    "range_join": _op_range_join,
-    "time_rollup": _op_time_rollup,
-    "kmv_distinct": _op_kmv_distinct,
-    "corpus_overlap": _op_corpus_overlap,
-    "hll_distinct": _op_hll_distinct,
-    "dd_sketch": _op_dd_sketch,
-    "dd_quantiles": _op_dd_quantiles,
-    "weighted_mix": _op_weighted_mix,
-    "temperature_mix": _op_temperature_mix,
-    "token_budget_mix": _op_token_budget_mix,
-    "corpus_diff": _op_corpus_diff,
-    "pack_shards": _op_pack_shards,
-    "shuffle_corpus": _op_shuffle_corpus,
-    "corpus_offsets": _op_corpus_offsets,
-    "sequence_spans": _op_sequence_spans,
-    "shard_manifest": _op_shard_manifest,
-    "contamination_report": _op_contamination_report,
-    "skew_profile": _op_skew_profile,
-    "vocabulary": _op_vocabulary,
-    "tfidf_top_terms": _op_tfidf,
-    "gopher_rules": _op_gopher_rules,
-    "c4_rules": _op_c4_rules,
-    "fineweb_rules": _op_fineweb_rules,
-    "bm25": _op_bm25,
-    "rrf_fuse": _op_rrf_fuse,
-    "hybrid_topk": _op_hybrid_topk,
-    "repetition_features": _op_repetition,
-    "chunk_documents": _op_chunk_documents,
-    "luhn_cards": _op_luhn_cards,
-    "bpe_pairs": _op_bpe_pairs,
-    "bpe_encode": _op_bpe_encode,
-    "bpe_vocab": _op_bpe_vocab,
-    "tokens_to_ids": _op_tokens_to_ids,
-    "tokenizer_fertility": _op_tokenizer_fertility,
-    "redact_pii": _op_redact_pii,
-    "strip_markup": _op_strip_markup,
-    "normalize_text": _op_normalize_text,
-    "oov_rate": _op_oov_rate,
-    "drop_common_lines": _op_drop_common_lines,
-    "stratified_fixed_n": _op_stratified_fixed_n,
-    "group_cap": _op_group_cap,
-    "ngram_overlap": _op_ngram_overlap,
-    "remove_duplicated_spans": _op_remove_duplicated_spans,
-    "unigram_logprob": _op_unigram_logprob,
-    "kn_bigram_logprob": _op_kn_bigram_logprob,
-    "kn_bigram_fit": _op_kn_bigram_fit,
-    "kn_bigram_score": _op_kn_bigram_score,
-    "kn_trigram_logprob": _op_kn_trigram_logprob,
-    "kn_trigram_fit": _op_kn_trigram_fit,
-    "kn_trigram_score": _op_kn_trigram_score,
-    "profile_table": _op_profile_table,
-    "corpus_datacard": _op_corpus_datacard,
-    "bigram_logprob": _op_bigram_logprob,
-    "quantize_embeddings": _op_quantize_embeddings,
-    "label_centroids": _op_label_centroids,
-    "linear_probe": _op_linear_probe,
-    "decontaminate": _op_decontaminate,
-    "fuzzy_decontaminate": _op_fuzzy_decontaminate,
-    "fuzzy_decontam_rowwise": _op_fuzzy_decontam_rowwise,
-    "minhash_overlap": _op_minhash_overlap,
-    "byte_stats": _op_byte_stats,
-    "byte_histogram": _op_byte_histogram,
-    "url_parts": _op_url_parts,
-    "url_dedup": _op_url_dedup,
-    "url_blocklist": _op_url_blocklist,
-    "registered_domain_psl": _op_registered_domain_psl,
-    "perplexity_buckets": _op_perplexity_buckets,
-    "script_profile": _op_script_profile,
-    "random_projection": _op_random_projection,
-    "dsir_weights": _op_dsir_weights,
-    "nb_fit": _op_nb_fit,
-    "nb_classify": _op_nb_classify,
-    "dsir_log_ratios": _op_dsir_log_ratios,
-    "dsir_select": _op_dsir_select,
-    "semantic_dedup": _op_semantic_dedup,
-    "domain_cap": _op_domain_cap,
-    "dedup_against": _op_dedup_against,
-    "cms_sketch": _op_cms_sketch,
-    "cms_freq": _op_cms_freq,
-    "bloom_prefilter": _op_bloom_prefilter,
-    "validate": _op_validate,
-}
-
-
-def run_operator(spark: SparkSession, config: dict[str, Any]) -> DataFrame:
+def bind(config: dict[str, Any]) -> dict[str, Any]:
+    """Validate an ``operator:`` mapping and convert it to keyword
+    arguments of its function; table parameters (the input among them)
+    hold table names.  Needs no Spark session — pipelines call it when
+    they load."""
     op_type = config.get("type")
-    fn = OPERATORS.get(str(op_type))
-    if fn is None:
+    if not isinstance(op_type, str) or op_type not in OPERATORS:
         raise OperatorError(
             f"unknown operator type: {op_type!r} (available: {sorted(OPERATORS)})"
         )
@@ -2129,51 +253,347 @@ def run_operator(spark: SparkSession, config: dict[str, Any]) -> DataFrame:
             f"operator '{op_type}': unknown keys {sorted(unknown)} — "
             "operator parameters go under 'options'"
         )
-    input_table = config.get("input")
-    if not input_table:
+    if not config.get("input"):
         raise OperatorError(f"operator '{op_type}' requires an 'input' table name")
-    try:
-        inp = spark.table(input_table)
-    except Exception:
-        raise OperatorError(
-            f"operator '{op_type}': input table '{input_table}' is not registered"
-        ) from None
-    try:
-        return fn(spark, inp, config.get("options") or {})
-    except KeyError as exc:
-        # the wrappers index required options directly; surface a
-        # descriptive error instead of a bare quoted key name
-        raise OperatorError(
-            f"operator '{op_type}' is missing required option {exc}"
-        ) from exc
+    spec, input_param, params = signature(op_type)
+    options = config.get("options") or {}
+    if not isinstance(options, dict):
+        raise OperatorError(f"operator '{op_type}': options must be a mapping")
+    kwargs = {input_param: str(config["input"])}
+    for key, value in options.items():
+        name = spec.aliases.get(key, key)
+        if name not in params:
+            accepted = set(params) | {k for k in spec.aliases if isinstance(k, str)}
+            raise OperatorError(
+                f"operator '{op_type}': unknown option {key!r} "
+                f"(accepted: {sorted(accepted)})"
+            )
+        if name in kwargs:
+            raise OperatorError(
+                f"operator '{op_type}': option {key!r} repeats "
+                f"options.{_yaml_name(spec, name)}"
+            )
+        try:
+            kwargs[name] = params[name].convert(value)
+        except (TypeError, ValueError) as exc:
+            raise OperatorError(
+                f"operator '{op_type}': option {key!r}: {exc}"
+            ) from None
+    for name, value in spec.defaults.items():
+        kwargs.setdefault(name, value)
+    for name, p in params.items():
+        if p.required and name not in kwargs:
+            raise OperatorError(
+                f"{op_type} requires options.{_yaml_name(spec, name)}"
+            )
+    return kwargs
+
+
+def run_operator(spark: SparkSession, config: dict[str, Any]) -> DataFrame:
+    op_type = config.get("type")
+    kwargs = bind(config)
+    spec, input_param, params = signature(op_type)
+
+    def table(param: str, name: str) -> DataFrame:
+        try:
+            return spark.table(name)
+        except AnalysisException:
+            what = (
+                "input" if param == input_param
+                else f"options.{_yaml_name(spec, param)}"
+            )
+            raise OperatorError(
+                f"operator '{op_type}': {what} table '{name}' is not registered"
+            ) from None
+
+    for param, value in kwargs.items():
+        if value is not None and (param == input_param or params[param].table):
+            kwargs[param] = (
+                [table(param, t) for t in value]
+                if isinstance(value, list)
+                else table(param, value)
+            )
+    return _load(spec.fn)(**kwargs)
 
 
 def referenced_tables(config: dict[str, Any]) -> list[str]:
     """Table names an operator stage reads (for TTL bookkeeping)."""
-    out = []
-    if config.get("input"):
-        out.append(str(config["input"]))
-    options = config.get("options") or {}
-    if options.get("queries"):
-        out.append(str(options["queries"]))
-    if options.get("pairs"):
-        out.append(str(options["pairs"]))
-    if options.get("right"):
-        out.append(str(options["right"]))
-    if options.get("benchmark"):
-        out.append(str(options["benchmark"]))
-    if options.get("corpus"):
-        out.append(str(options["corpus"]))
-    if options.get("items"):
-        out.append(str(options["items"]))
-    if options.get("build"):
-        out.append(str(options["build"]))
-    if options.get("target"):
-        out.append(str(options["target"]))
-    if options.get("raw"):
-        out.append(str(options["raw"]))
-    if options.get("psl"):
-        out.append(str(options["psl"]))
-    if options.get("ratios"):
-        out.append(str(options["ratios"]))
+    out = [str(config["input"])] if config.get("input") else []
+    op_type = config.get("type")
+    if not isinstance(op_type, str) or op_type not in OPERATORS:
+        return out
+    spec, _, params = signature(op_type)
+    for key, value in (config.get("options") or {}).items():
+        p = params.get(spec.aliases.get(key, key))
+        if p is not None and p.table and not _is_none(value):
+            names = p.convert(value)
+            out += names if isinstance(names, list) else [names]
     return out
+
+
+# ---------------------------------------------------------------------------
+# Adapters: stages whose options are more than one function's parameters
+# ---------------------------------------------------------------------------
+
+
+def _fingerprint(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    from .text import fingerprint
+
+    return df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+
+
+def _token_count(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    from .text import token_count
+
+    return df.select(
+        F.col(id_col), token_count(F.col(text_col)).cast("bigint").alias("n_tokens")
+    )
+
+
+def _dd_quantiles(
+    df: DataFrame,
+    value_col: str,
+    group_cols: Sequence[str] = (),
+    quantiles: Sequence[float] = (0.5, 0.95, 0.99),
+    gamma: float = 1.02,
+) -> DataFrame:
+    from .sketch import dd_quantile, dd_sketch
+
+    sketch = dd_sketch(df, group_cols, value_col, gamma=gamma)
+    return dd_quantile(sketch, group_cols, quantiles, gamma=gamma)
+
+
+def _cms_freq(
+    df: DataFrame,
+    items: DataFrame,
+    value_col: str,
+    item_col: Optional[str] = None,
+    group_cols: Sequence[str] = (),
+    width: int = 1024,
+    depth: int = 3,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Count-min sketch of ``df`` probed with the ``items`` table."""
+    from .sketch import cms_estimate, cms_sketch
+
+    sketch = cms_sketch(df, group_cols, value_col, width, depth, hash_fn)
+    return cms_estimate(
+        sketch, items, item_col or value_col, width, depth, group_cols, hash_fn
+    )
+
+
+def _bloom_prefilter(
+    df: DataFrame,
+    build: DataFrame,
+    value_col: str,
+    build_col: Optional[str] = None,
+    num_bits: int = 8192,
+    num_hashes: int = 4,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Rows of ``df`` whose ``value_col`` may occur in the ``build`` table."""
+    from .sketch import bloom_filter, bloom_sketch
+
+    bits = bloom_sketch(build, build_col or value_col, num_bits, num_hashes, hash_fn)
+    return bloom_filter(df, value_col, bits, num_bits, num_hashes, hash_fn)
+
+
+def _rrf_fuse(df: DataFrame, others: list[DataFrame], **kw) -> DataFrame:
+    """The stage input is the first ranked list, ``others`` the rest."""
+    from .similarity import rrf_fuse
+
+    return rrf_fuse([df, *others], **kw)
+
+
+def _dsir_weights(
+    df: DataFrame,
+    target: Optional[DataFrame] = None,
+    ratios: Optional[DataFrame] = None,
+    **kw,
+) -> DataFrame:
+    from .selection import dsir_weights
+
+    if (target is None) == (ratios is None):
+        raise OperatorError(
+            "dsir_weights requires exactly one of options.target (fit "
+            "inline) or options.ratios (a pre-fitted dsir_log_ratios table)"
+        )
+    fit_only = sorted({"smoothing", "raw", "target_text_col"} & set(kw))
+    if ratios is not None and fit_only:
+        raise OperatorError(
+            f"dsir_weights: options {fit_only} are fit-time parameters — "
+            "they are baked into the pre-fitted options.ratios table; "
+            "refit with dsir_log_ratios instead"
+        )
+    return dsir_weights(df, target, ratios=ratios, **kw)
+
+
+def _pq_stage(target: str) -> Op:
+    """A PQ stage trains its codebooks on the stage input
+    (:func:`~.similarity.train_pq`) unless ``codebooks`` gives them."""
+
+    def stage(
+        corpus: DataFrame,
+        codebooks: Optional[list[list[list[float]]]] = None,
+        vec_col: str = "embedding",
+        n_subspaces: int = 8,
+        n_centroids: int = 16,
+        sample_size: int = 4096,
+        seed: int = 42,
+        **kw,
+    ) -> DataFrame:
+        from .similarity import train_pq
+
+        if codebooks is None:
+            codebooks = train_pq(
+                corpus, vec_col, n_subspaces, n_centroids, sample_size, seed=seed
+            )
+        return _load(target)(corpus, codebooks=codebooks, vec_col=vec_col, **kw)
+
+    return Op(stage, forward=target)
+
+
+def _bpe_stage(target: str) -> Op:
+    """``byte_level: true`` defaults a BPE stage's end_marker to none
+    (byte-level BPE has no word-end marker); an explicit marker still
+    reaches the operator and raises its error."""
+
+    def stage(df: DataFrame, byte_level: bool = False, **kw) -> DataFrame:
+        if byte_level:
+            kw.setdefault("end_marker", None)
+        return _load(target)(df, byte_level=byte_level, **kw)
+
+    return Op(stage, forward=target)
+
+
+# YAML 1.1 reads a bare `on:` key as boolean True
+_JOIN_KEY = {"key": "on", True: "on"}
+_TS = {"left_ts": "ts", "right_ts": "ts"}
+_NO_GROUPS = {"group_cols": ()}
+_DOC_ID = {"id_col": "doc_id"}
+_COLS = {"columns": "cols"}
+
+OPERATORS: dict[str, Union[str, Op]] = {
+    "exact_dedup": Op("dedup:exact_dedup", aliases=_COLS),
+    "dup_weights": Op("dedup:dup_weights", aliases=_COLS),
+    "minhash_bands": "dedup:minhash_bands",
+    "minhash_signatures": "dedup:minhash_signatures",
+    "fuzzy_filter_against": "dedup:fuzzy_filter_against",
+    "minhash_pairs": "dedup:minhash_candidate_pairs",
+    "fuzzy_dedup": "dedup:fuzzy_dedup",
+    "jaccard_pairs": "dedup:jaccard_pairs",
+    "simhash": "dedup:simhash",
+    "hamming_pairs": "dedup:hamming_pairs",
+    "hamming_filter": "dedup:hamming_filter",
+    "simhash_wide": "dedup:simhash_wide",
+    "hamming_pairs_wide": "dedup:hamming_pairs_wide",
+    "hamming_filter_wide": "dedup:hamming_filter_wide",
+    "perceptual_hash": "multimodal:perceptual_hash",
+    "embed_neardup": "dedup:embedding_near_duplicates",
+    "embed_neardup_lsh": "dedup:embedding_near_duplicates_lsh",
+    "quality_score": "text:quality_score",
+    "text_features": "text:text_features",
+    "langid": "text:detect_language",
+    "fingerprint": Op(_fingerprint),
+    "token_count": Op(_token_count),
+    "topk": "similarity:brute_force_topk",
+    "quantized_topk": "similarity:quantized_topk",
+    "pq_encode": _pq_stage("similarity:pq_encode"),
+    "pq_topk": _pq_stage("similarity:pq_topk"),
+    "ivfpq_topk": "similarity:ivfpq_topk",
+    "lsh_topk": "similarity:lsh_topk",
+    "ivf_topk": "similarity:ivf_topk",
+    "hash_sample": Op("sampling:hash_sample", defaults=_DOC_ID),
+    "weighted_sample": "sampling:weighted_sample",
+    "stratified_sample": Op("sampling:stratified_sample", defaults=_DOC_ID),
+    "split": Op("sampling:deterministic_split", defaults=_DOC_ID),
+    "connected_components": "cluster:connected_components",
+    "cluster_dedup": "cluster:cluster_dedup",
+    "salted_join": Op("skew:salted_join", aliases={"right": "small", **_JOIN_KEY}),
+    "asof_join": Op("temporal:asof_join", aliases=_JOIN_KEY, defaults=_TS),
+    "range_join": Op("temporal:range_join", aliases=_JOIN_KEY, defaults=_TS),
+    "time_rollup": Op("temporal:time_rollup", defaults={"ts_col": "ts"}),
+    "kmv_distinct": Op("sketch:kmv_distinct", defaults=_NO_GROUPS),
+    "corpus_overlap": Op("sketch:corpus_overlap", aliases={"other": "df_b"}),
+    "hll_distinct": Op("sketch:hll_distinct", defaults=_NO_GROUPS),
+    "dd_sketch": Op("sketch:dd_sketch", defaults=_NO_GROUPS),
+    "dd_quantiles": Op(_dd_quantiles),
+    "weighted_mix": "mixing:weighted_mix",
+    "temperature_mix": "mixing:temperature_mix",
+    "token_budget_mix": "mixing:token_budget_mix",
+    "corpus_diff": Op("profile:corpus_diff", input="new", aliases={"old_table": "old"}),
+    "pack_shards": "mixing:pack_shards",
+    "shuffle_corpus": "mixing:shuffle_corpus",
+    "corpus_offsets": "mixing:corpus_offsets",
+    "sequence_spans": "mixing:sequence_spans",
+    "shard_manifest": "mixing:shard_manifest",
+    "contamination_report": "decontam:contamination_report",
+    "skew_profile": "skew:key_skew_profile",
+    "vocabulary": "text:vocabulary",
+    "tfidf_top_terms": "text:tfidf_top_terms",
+    "gopher_rules": "text:gopher_rules",
+    "c4_rules": "text:c4_rules",
+    "fineweb_rules": "text:fineweb_rules",
+    "bm25": "text:bm25_scores",
+    "rrf_fuse": Op(_rrf_fuse, forward="similarity:rrf_fuse"),
+    "hybrid_topk": Op("similarity:hybrid_topk", aliases={"vectors": "corpus_vec"}),
+    "repetition_features": "text:repetition_features",
+    "chunk_documents": "text:chunk_documents",
+    "luhn_cards": "text:luhn_cards",
+    "bpe_pairs": _bpe_stage("text:bpe_pair_counts"),
+    "bpe_encode": _bpe_stage("text:bpe_encode"),
+    "bpe_vocab": _bpe_stage("text:bpe_vocab"),
+    "tokens_to_ids": "text:tokens_to_ids",
+    "tokenizer_fertility": _bpe_stage("text:tokenizer_fertility"),
+    "redact_pii": "text:redact_pii",
+    "strip_markup": "text:strip_markup",
+    "normalize_text": "text:normalize_text",
+    "oov_rate": "text:oov_rate",
+    "drop_common_lines": "dedup:drop_common_lines",
+    "stratified_fixed_n": Op("sampling:stratified_fixed_n", defaults=_DOC_ID),
+    "group_cap": "sampling:group_cap",
+    "ngram_overlap": "decontam:ngram_overlap",
+    "remove_duplicated_spans": "dedup:remove_duplicated_spans",
+    "unigram_logprob": "text:unigram_logprob",
+    "kn_bigram_logprob": "text:kn_bigram_logprob",
+    "kn_bigram_fit": "text:kn_bigram_fit",
+    "kn_bigram_score": "text:kn_bigram_score",
+    "kn_trigram_logprob": "text:kn_trigram_logprob",
+    "kn_trigram_fit": "text:kn_trigram_fit",
+    "kn_trigram_score": "text:kn_trigram_score",
+    "profile_table": "profile:profile_table",
+    "corpus_datacard": "profile:corpus_datacard",
+    "bigram_logprob": "text:bigram_logprob",
+    "quantize_embeddings": "embedding:quantize_embeddings",
+    "label_centroids": "embedding:label_centroids",
+    "linear_probe": "embedding:linear_probe_score",
+    "decontaminate": "decontam:decontaminate",
+    "fuzzy_decontaminate": "decontam:fuzzy_decontaminate",
+    "fuzzy_decontam_rowwise": "decontam:fuzzy_decontaminate_rowwise",
+    "minhash_overlap": "decontam:minhash_overlap",
+    "byte_stats": "multimodal:byte_stats",
+    "byte_histogram": "multimodal:byte_histogram_features",
+    "url_parts": "web:url_parts",
+    "url_dedup": "web:url_dedup",
+    "url_blocklist": "web:url_blocklist",
+    "registered_domain_psl": "web:registered_domain_psl",
+    "perplexity_buckets": "selection:perplexity_buckets",
+    "script_profile": "text:script_profile",
+    "random_projection": "embedding:random_projection",
+    "dsir_weights": Op(_dsir_weights, forward="selection:dsir_weights"),
+    "nb_fit": "selection:nb_fit",
+    "nb_classify": "selection:nb_classify",
+    "dsir_log_ratios": Op("selection:dsir_log_ratios", input="raw"),
+    "dsir_select": "selection:dsir_select",
+    "semantic_dedup": "dedup:semantic_dedup",
+    "domain_cap": "web:domain_cap",
+    "dedup_against": Op("dedup:dedup_against", aliases={"corpus": "corpus_df", **_COLS}),
+    "cms_sketch": Op("sketch:cms_sketch", defaults=_NO_GROUPS),
+    "cms_freq": Op(_cms_freq),
+    "bloom_prefilter": Op(_bloom_prefilter),
+    "validate": "validate:validate_rules",
+}

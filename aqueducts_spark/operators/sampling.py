@@ -99,8 +99,8 @@ def hash_sample(
 
 def weighted_sample(
     df: DataFrame,
-    id_col: str,
-    weight_col: str,
+    id_col: str = "doc_id",
+    weight_col: str = "dup_weight",
     salt: str = "",
     hash_fn: str = "md5",
 ) -> DataFrame:
@@ -149,7 +149,7 @@ def stratified_sample(
     df: DataFrame,
     id_col: str,
     stratum_col: str,
-    rates: dict[str, float],
+    rates: dict[str, float] | None = None,
     default_rate: float = 0.0,
     salt: str = "",
     hash_fn: str = "md5",
@@ -164,7 +164,7 @@ def stratified_sample(
     if not 0.0 <= default_rate <= 1.0:
         raise ValueError(f"default_rate must be in [0, 1], got {default_rate}")
     threshold = F.lit(int(round(default_rate * _BUCKETS)))
-    for value, rate in sorted(rates.items()):
+    for value, rate in sorted((rates or {}).items()):
         if not 0.0 <= rate <= 1.0:
             raise ValueError(f"rate for {value!r} must be in [0, 1], got {rate}")
         threshold = (

@@ -2082,8 +2082,8 @@ def quantized_topk(
 def hybrid_topk(
     corpus_text: DataFrame,
     corpus_vec: DataFrame,
-    query_terms: list,
-    query_vec: list,
+    query_terms: list[str],
+    query_vec: list[float],
     k: int = 10,
     lexical_k: int = 100,
     vector_k: int = 100,

@@ -888,7 +888,7 @@ def train_bpe(
 
 def bpe_encode(
     df: DataFrame,
-    merges: list,
+    merges: list | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     keep_cols: list[str] | None = None,
@@ -1222,7 +1222,7 @@ def _bpe_encode_python(
 
 def bpe_vocab(
     df: DataFrame,
-    merges: list,
+    merges: list | None = None,
     text_col: str = "text",
     end_marker: str | None = "</w>",
     max_alphabet: int = 1_000_000,
@@ -1701,7 +1701,7 @@ def tokens_to_ids(
 
 def tokenizer_fertility(
     df: DataFrame,
-    merges: list,
+    merges: list | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str | None = None,

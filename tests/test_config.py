@@ -541,3 +541,39 @@ def test_normalize_location_preserves_glob_characters():
         == "file:///data/docs.parque*"
     )
     assert normalize_location("/data/part-?.json").endswith("part-?.json")
+
+
+def test_operator_type_and_option_keys_checked_at_load():
+    bad_type = """
+sources: []
+stages:
+  - name: s
+    operator: {type: frobnicate, input: x}
+"""
+    with pytest.raises(ValueError, match="unknown operator type: 'frobnicate'"):
+        load_pipeline_str(bad_type)
+    misspelt = """
+sources: []
+stages:
+  - name: s
+    operator: {type: quality_score, input: x, options: {txet_col: text}}
+"""
+    with pytest.raises(ValueError, match="unknown option 'txet_col'"):
+        load_pipeline_str(misspelt)
+    missing = """
+sources: []
+stages:
+  - name: s
+    operator: {type: oov_rate, input: x}
+"""
+    with pytest.raises(ValueError, match="oov_rate requires options.vocab"):
+        load_pipeline_str(missing)
+    ok = load_pipeline_str(misspelt.replace("txet_col", "text_col"))
+    assert ok.stage_groups[0][0].operator["options"] == {"text_col": "text"}
+
+
+def test_stream_safe_operators_are_registered():
+    from aqueducts_spark.config.model import STREAM_SAFE_OPERATORS
+    from aqueducts_spark.operators.registry import OPERATORS
+
+    assert STREAM_SAFE_OPERATORS <= set(OPERATORS)

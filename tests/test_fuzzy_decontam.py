@@ -412,3 +412,29 @@ def test_fuzzy_decontaminate_forwards_validate_ids(spark):
             bench_id_col="bench_key", bench_text_col="body",
             validate_ids=True,
         ).collect()
+
+
+def test_validate_ids_string_false_binds_false(spark):
+    """YAML `validate_ids: "false"` is False: bool("false") would have
+    turned the duplicate-id check on."""
+    from aqueducts_spark.operators.registry import run_operator
+
+    spark.createDataFrame(
+        [(1, BASE), (1, "other text one"), (2, "clean text")],
+        "doc_id long, text string",
+    ).createOrReplaceTempView("vi_corpus")
+    _bench(spark).createOrReplaceTempView("vi_bench")
+    stage = {
+        "type": "fuzzy_decontaminate",
+        "input": "vi_corpus",
+        "options": {
+            "benchmark": "vi_bench", "bench_id_col": "bench_key",
+            "bench_text_col": "body", "validate_ids": "false",
+        },
+    }
+    run_operator(spark, stage).collect()
+    stage["options"]["validate_ids"] = "true"
+    with pytest.raises(Exception, match="duplicate ids"):
+        run_operator(spark, stage).collect()
+    spark.catalog.dropTempView("vi_corpus")
+    spark.catalog.dropTempView("vi_bench")

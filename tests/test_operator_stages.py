@@ -88,17 +88,35 @@ stages:
         )
 
 
-def test_unknown_operator_rejected(spark):
+def test_unknown_operator_rejected():
     yml = """
 sources: []
 stages:
   - name: s
     operator: {type: frobnicate, input: x}
 """
-    from aqueducts_spark.stages import StageError
+    # rejected when the pipeline loads, before any stage runs
+    with pytest.raises(ValueError, match="unknown operator"):
+        load_pipeline_str(yml)
 
-    with pytest.raises(StageError, match="unknown operator"):
-        run_pipeline(spark, load_pipeline_str(yml))
+
+def test_jaccard_pairs_stage_shares_python_defaults(spark):
+    """A YAML stage with no options runs the Python defaults
+    (shingle_n=1 here, not a wrapper's own 3)."""
+    from aqueducts_spark.operators.dedup import jaccard_pairs
+    from aqueducts_spark.operators.registry import run_operator
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "d c b a"), (3, "a b c e"), (4, "x y z w")],
+        "doc_id long, text string",
+    )
+    docs.createOrReplaceTempView("jd_docs")
+    stage = run_operator(spark, {"type": "jaccard_pairs", "input": "jd_docs"})
+    got = sorted(map(tuple, stage.collect()))
+    assert got == sorted(map(tuple, jaccard_pairs(docs).collect()))
+    # word-order-blind unigram match; shingle_n=3 would find no pair 1-2
+    assert (1, 2) in {(r[0], r[1]) for r in got}
+    spark.catalog.dropTempView("jd_docs")
 
 
 def test_tfidf_top_terms_semantics(spark):

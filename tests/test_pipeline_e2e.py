@@ -407,6 +407,51 @@ stages:
         spark.catalog.dropTempView(v)
 
 
+def test_ttl_keeps_eager_view_read_through_operator_option(spark, sf_dir):
+    """A view named only in an operator's table option (oov_rate's
+    options.vocab) is a use: TTL reclamation must not drop the eager
+    vocabulary stage's view before the later group reads it."""
+    from aqueducts_spark import load_pipeline_str, run_pipeline
+    from aqueducts_spark.progress import CollectingTracker
+
+    yml = f"""
+sources:
+  - type: file
+    name: ttlop_docs
+    format: {{type: parquet}}
+    location: {sf_dir}/documents.parquet
+stages:
+  - - name: ttlop_vocab
+      eager: true
+      operator: {{type: vocabulary, input: ttlop_docs, options: {{top_n: 50}}}}
+  - - name: ttlop_oov
+      operator: {{type: oov_rate, input: ttlop_docs, options: {{vocab: ttlop_vocab}}}}
+"""
+    result = run_pipeline(spark, load_pipeline_str(yml), CollectingTracker())
+    assert result.result.count() == spark.table("ttlop_docs").count()
+    for v in ("ttlop_oov", "ttlop_vocab", "ttlop_docs"):
+        spark.catalog.dropTempView(v)
+
+
+def test_referenced_tables_lists_every_table_option():
+    from aqueducts_spark.operators.registry import (
+        OPERATORS,
+        referenced_tables,
+        signature,
+    )
+
+    for op_type in OPERATORS:
+        spec, _, params = signature(op_type)
+        yaml_key = {param: key for key, param in spec.aliases.items()}
+        for param, p in params.items():
+            if p.table:
+                key = yaml_key.get(param, param)
+                refs = referenced_tables(
+                    {"type": op_type, "input": "in_t", "options": {key: "tbl_x"}}
+                )
+                assert refs == ["in_t", "tbl_x"], (op_type, key)
+
+
 def test_in_memory_destination_cache_survives_pipeline_end(spark, sf_dir):
     """The in_memory destination caches the result so later reads don't
     recompute; the post-write cache release must not undo that."""
