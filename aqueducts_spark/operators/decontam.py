@@ -26,6 +26,9 @@ training-data operator per the build plan, SURVEY.md §7.2.7).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,18 +49,20 @@ __all__ = [
 ]
 
 
-def _submit_bench_id_check(benchmark: DataFrame, bench_id_col: str):
-    """Submit the eager benchmark-id validation aggregate on a second
-    driver thread (guide §2.6, overlap independent jobs): the tiny
-    benchmark-side agg is independent of the corpus-side candidate /
-    gram materialization it used to serialize in front of, so its job
-    back-fills cores while the heavy pass runs.  Returns a future whose
-    ``.result()`` is the one-row check; callers MUST consume it (and
-    raise) before returning any frame — the fail-fast contract is
-    unchanged, only the wall clock overlaps.
-    """
-    from concurrent.futures import ThreadPoolExecutor
+@contextmanager
+def _bench_ids_checked(benchmark: DataFrame, bench_id_col: str, check):
+    """Validate the benchmark ids around the ``with`` body.
 
+    The eager validation aggregate runs on a second driver thread
+    (guide §2.6, overlap independent jobs): the tiny benchmark-side agg
+    is independent of the corpus-side candidate / gram materialization
+    in the body, so its job back-fills cores while the heavy pass runs.
+    ``check`` receives the one-row result ``(n, nn, nd)`` and raises on
+    a bad id set.  It runs on EVERY exit: when the body raises too
+    (a misspelt corpus column, or a banding pass killed by the invalid
+    benchmark), the contract error surfaces first, the old eager
+    ordering, and no error is left unread in the thread.
+    """
     pool = ThreadPoolExecutor(max_workers=1)
     fut = pool.submit(
         lambda: benchmark.agg(
@@ -69,7 +74,12 @@ def _submit_bench_id_check(benchmark: DataFrame, bench_id_col: str):
     # the submitted task still runs to completion; nothing else is ever
     # submitted, so the pool can start tearing down immediately
     pool.shutdown(wait=False)
-    return fut
+    try:
+        yield
+    except Exception:
+        check(fut.result())
+        raise
+    check(fut.result())
 
 
 def benchmark_ngrams(
@@ -234,13 +244,9 @@ def minhash_overlap(
     sc = _fresh("__s")
     sza, szb, itc = _fresh("__size_a"), _fresh("__size_b"), _fresh("__inter")
     # eager benchmark-id validation: one tiny aggregate over the small
-    # side (the corpus is never touched).  Submitted on a second driver
-    # thread so its job overlaps the candidate materialization below
-    # (guide §2.6); the outcome is checked before anything is returned.
-    chk_fut = _submit_bench_id_check(benchmark, bench_id_col)
-
-    def _check_bench_ids() -> None:
-        chk = chk_fut.result()
+    # side (the corpus is never touched), overlapping the candidate
+    # materialization below and checked on every exit path
+    def _check_bench_ids(chk) -> None:
         if chk["nn"] != chk["n"]:
             raise ValueError(
                 f"minhash_overlap: benchmark has {chk['n'] - chk['nn']} NULL "
@@ -254,48 +260,43 @@ def minhash_overlap(
                 "deduplicate or re-key the benchmark first"
             )
 
-    bench = benchmark.select(
-        F.col(bench_id_col).alias(bid), F.col(bench_text_col).alias("__btext")
-    )
-    dup_tag = None
-    corpus_in = corpus
-    if validate_ids:
-        # per-ROW tag (unique within this computation); the signature
-        # groupBy counts distinct tags per id — >1 means pooled rows
-        dup_tag = _fresh("__mo_rowtag")
-        corpus_in = corpus.withColumn(
-            dup_tag, F.monotonically_increasing_id()
-        )
-    cb = minhash_bands(
-        corpus_in, id_col, text_col, num_hashes, bands, shingle_n, hash_fn,
-        dup_check_col=dup_tag,
-    )
-    bb = minhash_bands(
-        bench, bid, "__btext", num_hashes, bands, shingle_n, hash_fn
-    )
-    cand = (
-        cb.join(F.broadcast(bb), ["band", "band_hash"])
-        .select(id_col, bid)
-        .distinct()
-    )
-    # eagerly materialize the candidate pairs (bounded by banding
-    # collisions — contamination-scale, never corpus-scale): they feed
-    # the corpus semi-filter AND the verification's pair filter, and
-    # AQE never reuses a shared exchange across consumers — without
-    # this each consumer re-ran the full corpus MinHash banding pass
-    # (the r8 scan audit measured 10 corpus scans in
-    # fuzzy_decontaminate's executed plan; 3 after)
     from .materialize import materialize
 
-    try:
+    with _bench_ids_checked(benchmark, bench_id_col, _check_bench_ids):
+        bench = benchmark.select(
+            F.col(bench_id_col).alias(bid),
+            F.col(bench_text_col).alias("__btext"),
+        )
+        dup_tag = None
+        corpus_in = corpus
+        if validate_ids:
+            # per-ROW tag (unique within this computation); the
+            # signature groupBy counts distinct tags per id — >1 means
+            # pooled rows
+            dup_tag = _fresh("__mo_rowtag")
+            corpus_in = corpus.withColumn(
+                dup_tag, F.monotonically_increasing_id()
+            )
+        cb = minhash_bands(
+            corpus_in, id_col, text_col, num_hashes, bands, shingle_n,
+            hash_fn, dup_check_col=dup_tag,
+        )
+        bb = minhash_bands(
+            bench, bid, "__btext", num_hashes, bands, shingle_n, hash_fn
+        )
+        cand = (
+            cb.join(F.broadcast(bb), ["band", "band_hash"])
+            .select(id_col, bid)
+            .distinct()
+        )
+        # eagerly materialize the candidate pairs (bounded by banding
+        # collisions — contamination-scale, never corpus-scale): they
+        # feed the corpus semi-filter AND the verification's pair filter,
+        # and AQE never reuses a shared exchange across consumers —
+        # without this each consumer re-ran the full MinHash banding pass
+        # (the r8 scan audit measured 10 corpus scans in
+        # fuzzy_decontaminate's executed plan; 3 after)
         cand = materialize(cand)
-    except Exception:
-        # if both the heavy pass and the validation fail, surface the
-        # contract error (the old eager ordering) rather than whatever
-        # the invalid benchmark made the banding pass die with
-        _check_bench_ids()
-        raise
-    _check_bench_ids()
     # exact verification of the candidates only: restrict the corpus to
     # candidate docs (broadcast semi join — the candidate id list is
     # bounded by banding collisions), then count shared DISTINCT
@@ -563,12 +564,7 @@ def contamination_report(
             "output column name — rename the corpus id column first"
         )
     bench_text_col = bench_text_col if bench_text_col is not None else text_col
-    # eager id validation, overlapped with the gram materialization
-    # below (guide §2.6) and checked before anything is returned
-    chk_fut = _submit_bench_id_check(benchmark, bench_id_col)
-
-    def _check_bench_ids() -> None:
-        chk = chk_fut.result()
+    def _check_bench_ids(chk) -> None:
         if chk["nn"] != chk["n"] or chk["nd"] != chk["nn"]:
             raise ValueError(
                 "contamination_report: benchmark ids must be unique and "
@@ -577,12 +573,14 @@ def contamination_report(
 
     from .materialize import materialize
 
-    base = benchmark.select(F.col(bench_id_col).alias("bench_id"))
-    # benchmark-sized and consumed twice (per-item gram counts + the
-    # broadcast into the corpus join) — materialize so neither consumer
-    # re-tokenizes the benchmark source (AQE shares no subtree across
-    # consumers on the write path)
-    try:
+    # eager id validation, overlapped with the gram materialization
+    # below (guide §2.6) and checked on every exit path
+    with _bench_ids_checked(benchmark, bench_id_col, _check_bench_ids):
+        base = benchmark.select(F.col(bench_id_col).alias("bench_id"))
+        # benchmark-sized and consumed twice (per-item gram counts + the
+        # broadcast into the corpus join) — materialize so neither
+        # consumer re-tokenizes the benchmark source (AQE shares no
+        # subtree across consumers on the write path)
         bg = materialize(
             benchmark.select(
                 F.col(bench_id_col).alias("bench_id"),
@@ -596,10 +594,6 @@ def contamination_report(
             )
             .where(F.col("shingle") != "")
         )
-    except Exception:
-        _check_bench_ids()
-        raise
-    _check_bench_ids()
     sizes = bg.groupBy("bench_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )

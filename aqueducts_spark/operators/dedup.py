@@ -2192,25 +2192,33 @@ def embedding_near_duplicates_lsh(
     # every task builds the identical matrix, exactly what the driver
     # used to broadcast via the closure.  An empty corpus now simply
     # yields an empty result through the same plan instead of an
-    # early-return frame.
+    # early-return frame.  A vector whose dim differs from the task's
+    # first one raises: planes of another dim would bucket it against
+    # a different sketch, silently.
     from pyspark.sql.functions import pandas_udf
 
     pow2 = (1 << np.arange(bits_per_table - 1, -1, -1)).astype(np.int64)
     offsets = (np.arange(num_tables, dtype=np.int64) << bits_per_table)
     n_planes = num_tables * bits_per_table
-    plane_cache: dict = {}
+    planes: list = []  # [(dim, dim x (T*B) matrix)], set by the first batch
 
     @pandas_udf("array<long>")
     def _buckets(vs: pd.Series) -> pd.Series:
+        dims = vs.map(len)
+        dim = planes[0][0] if planes else int(dims.iloc[0])
+        other = dims[dims != dim]
+        if len(other):
+            raise ValueError(
+                "embedding_near_duplicates_lsh: ragged embedding dims "
+                f"{dim} and {int(other.iloc[0])} in {vec_col!r} — every "
+                "vector must have the same dimension"
+            )
+        if not planes:
+            planes.append((dim, np.asarray(
+                random_hyperplanes(dim, n_planes, seed), dtype=np.float64,
+            ).T))
         x = np.vstack(vs.to_numpy()).astype(np.float64)  # n x dim
-        mat = plane_cache.get(x.shape[1])
-        if mat is None:
-            mat = np.asarray(
-                random_hyperplanes(x.shape[1], n_planes, seed),
-                dtype=np.float64,
-            ).T  # dim x (T*B)
-            plane_cache[x.shape[1]] = mat
-        bits = (x @ mat) >= 0.0  # n x (T*B)
+        bits = (x @ planes[0][1]) >= 0.0  # n x (T*B)
         vals = bits.reshape(len(x), num_tables, bits_per_table) @ pow2
         return pd.Series(list(vals + offsets))
 

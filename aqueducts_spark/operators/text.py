@@ -2555,6 +2555,7 @@ def bigram_logprob(
     # stage the token array ONCE per consumer branch (word_ngrams_col
     # contract): the regex split is non-cheap and the projections below
     # reference it repeatedly — inline it re-tokenizes per reference
+    from .dedup import _sql_ident
     from .materialize import materialize
     from .sampling import _fresh_name
 
@@ -2562,15 +2563,15 @@ def bigram_logprob(
     toked = src.select(
         F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
     )
-    toks = F.col(tk)
-    tkn = tk
+    t = _sql_ident(tk)
 
     # gram TYPE table: FULL unigram counts (the first token is scored
     # by its global unigram probability, so the whole token stream
     # explodes, not just first tokens) + bigram counts, one shuffle
     types0 = (
         toked.select(
-            F.explode(F.concat(toks, _kn_true_grams(tkn, 2))).alias("gram")
+            F.expr(f"explode(concat({t}, {_kn_grams_sql(t, 2)}))")
+            .alias("gram")
         )
         .groupBy("gram")
         .agg(F.count("*").alias("ct"))
@@ -2601,11 +2602,7 @@ def bigram_logprob(
 
     # the corpus-volume pass: per-doc events -> tf -> scored join
     # (zero-shuffle per-row RLE — see _doc_term_tf)
-    events = _doc_term_tf(
-        toked,
-        id_col,
-        F.concat(_kn_first_event(tkn), _kn_true_grams(tkn, 2)),
-    )
+    events = _doc_term_tf(toked, id_col, _kn_events(tk, 2))
     scored = events.join(scores, "gram").select(
         F.col(id_col),
         F.col("tf").cast("bigint").alias("events"),
@@ -2719,67 +2716,62 @@ def _doc_term_tf(
     )
 
 
-def _kn_true_grams(toks: "Column | str", n: int) -> Column:
-    """Real n-grams only: :func:`word_ngrams_col` emits one partial
-    gram for docs shorter than ``n``; the slice drops it (empty array
-    for short docs), so explode sites need no ``size >= n`` filter.
-    Accepts the staged token column's NAME (str) for the one-parse
-    construction (r11, the word_ngrams_col contract)."""
-    if isinstance(toks, str):
-        from .dedup import _sql_ident, _word_ngrams_sql
+def _kn_grams_sql(t: str, k: int) -> str:
+    """SQL for the real k-grams of the quoted token column ``t``:
+    :func:`word_ngrams_col` emits one partial gram for docs shorter
+    than ``k``; the slice drops it (empty array for short docs), so
+    explode sites need no ``size >= k`` filter."""
+    from .dedup import _word_ngrams_sql
 
-        t = _sql_ident(toks)
-        return F.expr(
-            f"slice({_word_ngrams_sql(t, n)}, 1, "
-            f"greatest(size({t}) - {n - 1}, 0))"
-        )
-    return F.slice(
-        word_ngrams_col(toks, n),
-        1,
-        F.greatest(F.size(toks) - (n - 1), F.lit(0)),
+    if k == 1:
+        return t
+    return (
+        f"slice({_word_ngrams_sql(t, k)}, 1, greatest(size({t}) - {k - 1}, 0))"
     )
 
 
-def _kn_first_event(toks: "Column | str") -> Column:
-    """Single-element ``[first_token]`` array, empty for empty docs.
+def _kn_events(toks: str, n: int) -> Column:
+    """Per-document KN events of order ``n`` over the staged token
+    column ``toks``: the first k-gram for each k < n (scored at level
+    k), then every n-gram (scored at the top level), one array, empty
+    for empty docs.
 
-    The KN event/type tables need no explicit level tag: tokens
-    contain no whitespace (``normalized_tokens`` splits on it), so a
-    gram's word count IS its level — unigram, bigram and trigram key
-    spaces are disjoint by content.  Exploding plain string arrays
-    keeps the hot corpus pass in whole-stage codegen (struct-tagged
-    higher-order transforms evaluate interpreted).
+    Events need no level tag: tokens contain no whitespace
+    (``normalized_tokens`` splits on it), so a gram's word count IS
+    its level.  Exploding plain string arrays keeps the hot corpus
+    pass in whole-stage codegen, and the tree is one ``F.expr`` parse
+    (r11, the word_ngrams_col contract).
     """
-    if isinstance(toks, str):
-        from .dedup import _sql_ident
+    from .dedup import _sql_ident
 
-        t = _sql_ident(toks)
-        return F.expr(f"slice({t}, 1, least(size({t}), 1))")
-    return F.slice(toks, 1, F.least(F.size(toks), F.lit(1)))
+    t = _sql_ident(toks)
+    firsts = [
+        f"slice(array(concat_ws(' ', slice({t}, 1, {k}))), 1, "
+        f"least(greatest(size({t}) - {k - 1}, 0), 1))"
+        for k in range(1, n)
+    ]
+    return F.expr(f"concat({', '.join(firsts + [_kn_grams_sql(t, n)])})")
 
 
-def _kn_second_event(toks: "Column | str") -> Column:
-    """Single-element ``["t1 t2"]`` array (the document's first
-    bigram — the P2-scored event), empty for docs shorter than 2."""
-    if isinstance(toks, str):
-        from .dedup import _sql_ident
+def _kn_doc_events(
+    df: DataFrame, text_col: str, id_col: str, order: int
+) -> DataFrame:
+    """The corpus-volume pass: ``(id, gram, tf)`` of the order-n events,
+    one tokenize and zero-shuffle run-length count (see _doc_term_tf)."""
+    from .sampling import _fresh_name
 
-        t = _sql_ident(toks)
-        return F.expr(
-            f"slice(array(concat_ws(' ', slice({t}, 1, 2))), 1, "
-            f"least(greatest(size({t}) - 1, 0), 1))"
-        )
-    return F.slice(
-        F.array(F.concat_ws(" ", F.slice(toks, 1, 2))),
-        1,
-        F.least(F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(1)),
+    src = ensure_parallelism(df)
+    tk = _fresh_name("__toks", src.columns)
+    toked = src.select(
+        F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
     )
+    return _doc_term_tf(toked, id_col, _kn_events(tk, order))
 
 
 def _kn_per_doc(scored: DataFrame, id_col: str) -> DataFrame:
-    """Shared KN finisher: micro-nat integer sums per document plus the
-    derived ``avg_nll`` — identical column math across all four KN
-    scorers so their outputs stay mutually row-identical."""
+    """Shared LM finisher: micro-nat integer sums per document plus the
+    derived ``avg_nll`` (n_tokens >= 1 on every row: a doc emits
+    events only when it has a token)."""
     per_doc = scored.groupBy(id_col).agg(
         F.sum("events").cast("bigint").alias("n_tokens"),
         F.sum("nll_micro").cast("bigint").alias("nll_micro"),
@@ -2795,6 +2787,266 @@ def _kn_per_doc(scored: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+# floor(tf * nll * 1e6 + 0.5) micro-nat quantization, rendered once
+# (identical to the Column form: 1000000.0D == F.lit(1e6))
+_KN_MICRO_SQL = (
+    "CAST(floor(CAST(tf AS DOUBLE) * __nll * 1000000.0D + 0.5D) AS BIGINT)"
+)
+
+
+def _kn_key(length: int, skip: int = 0) -> str:
+    """SQL for the ``length`` words of a gram that end ``skip`` words
+    before its last one — level k's suffix is ``(k, 0)``, its context
+    ``(k - 1, 1)``.  A gram too short for the window keys as ``''``,
+    which matches no statistic (its level never reads that one)."""
+    return (
+        f"array_join(slice(split(gram, ' '), {-length - skip}, {length}), ' ')"
+    )
+
+
+def _kn_nll_sql(order: int, discount: float) -> str:
+    """SQL of the per-gram ``-ln P`` tree of the order-n recursion
+    (see :func:`_kn_score`): P1, then one interpolation per level,
+    each gram scored at the level of its word count."""
+    d = f"{float(discount)!r}D"
+    nw = "size(split(gram, ' '))"
+    p = (
+        "(CAST(coalesce(n1p1, 0) AS DOUBLE) + 1.0D) / "
+        "(CAST(n_types AS DOUBLE) + CAST(v AS DOUBLE))"
+    )
+    whens = [f"WHEN {nw} = 1 THEN - ln({p})"]
+    for k in range(2, order + 1):
+        c = "ct" if k == order else f"n1p{k}"
+        p = (
+            f"CASE WHEN tot{k} IS NULL THEN {p} ELSE "
+            f"greatest(CAST(coalesce({c}, 0) AS DOUBLE) - {d}, 0.0D) / "
+            f"CAST(tot{k} AS DOUBLE) + {d} * CAST(fan{k} AS DOUBLE) / "
+            f"CAST(tot{k} AS DOUBLE) * ({p}) END"
+        )
+        whens.append(f"WHEN {nw} = {k} THEN - ln({p})")
+    return f"CASE {' '.join(whens)} END"
+
+
+def _kn_score(
+    events: DataFrame,
+    types: DataFrame,
+    top: DataFrame,
+    bigrams: DataFrame,
+    scalars: DataFrame,
+    order: int,
+    discount: float,
+    id_col: str,
+) -> DataFrame:
+    """Interpolated Kneser-Ney (KN) NLL per document, order 2 or 3 —
+    the one home of the model math behind all four KN scorers.
+
+        Pk(w|h) = max(c_k(h w) - D, 0) / tot_k(h)
+                  + D * fan_k(h) / tot_k(h) * P(k-1)(w|h')
+        P1(w)   = (N1+(.w) + 1) / (N1+(..) + V)
+
+    ``h`` is the k-1 words before ``w`` and ``h'`` its last k-2.  At
+    the TOP level ``c_k`` is the raw count ``ct`` of the n-gram,
+    ``tot_k(h)`` its context's mass ``c(h .)`` and ``fan_k(h)`` the
+    context's distinct continuations ``N1+(h .)``.  A MIDDLE level (the
+    bigram level of the trigram model) runs on continuation counts
+    from the same trigram type table: ``c_2(w2 w3) = N1+(. w2 w3)``,
+    ``tot_2(w2) = N1+(. w2 .)``, ``fan_2(w2)`` the distinct ``w3`` —
+    so probability mass conserves exactly (pinned by test).  ``P1`` is
+    the add-one-smoothed continuation distribution over the bigram
+    type set: strictly positive for every word (a word seen only
+    document-initially has ``N1+(.w) = 0``) and a deterministic OOV
+    floor ``1/(N1+(..) + V)``.  An unseen n-gram under a seen context
+    gets pure discount mass; a context never seen (``tot_k`` NULL)
+    backs off entirely to the level below.  A document's first token
+    is scored by P1, its first k-gram (k < n) by Pk, and every n-gram
+    by Pn.  The self-trained scorers run the same guarded tree: on a
+    corpus's own type table every context is seen and ``ct`` is never
+    NULL, so the guards never fire.
+
+    Micro-nat contract (:func:`bigram_logprob`'s): each (doc, gram)
+    contribution quantizes ``tf * -ln P`` to integer micro-nats before
+    the per-doc sum, so engine-side float summation order cannot move
+    the hash.  Output ``id, n_tokens, nll_micro, avg_nll``; empty/NULL
+    documents produce no row.
+
+    Inputs: the per-doc ``events`` ``(id, gram, tf)``; ``types``, the
+    distinct event grams with a count ``ct`` that is read for top-order
+    grams only (NULL when the model never saw one); ``top``, the
+    top-order type table
+    ``(gram, ct)``; ``bigrams``, the bigram type set; ``scalars``, one
+    row ``(n_types, v)``.  Every statistic is a small groupBy of a
+    type table on the same rendered key (:func:`_kn_key`) that joins it
+    back — broadcast at gate scale, hash joins of type-sized tables at
+    cluster scale; ``-ln P`` is computed once per distinct gram and the
+    corpus pays one equi-join on ``gram``.
+    """
+    def stat(src: DataFrame, key: str, name: str, *aggs) -> tuple:
+        return key, src.groupBy(F.expr(key).alias(name)).agg(*aggs)
+
+    # (rendered key, statistic keyed by its first column) per join
+    stats = [stat(top, _kn_key(order - 1, 1), f"__x{order}",
+                  F.sum("ct").alias(f"tot{order}"),
+                  F.count("*").alias(f"fan{order}"))]
+    for k in range(2, order):  # the middle level: trigram types (order 3)
+        cont = top.groupBy(F.expr(_kn_key(k)).alias("gram")).agg(
+            F.count("*").alias(f"n1p{k}")
+        )
+        stats += [
+            (_kn_key(k), cont.withColumnRenamed("gram", f"__s{k}")),
+            stat(cont, _kn_key(k - 1, 1), f"__x{k}",
+                 F.sum(f"n1p{k}").alias(f"tot{k}"),
+                 F.count("*").alias(f"fan{k}")),
+        ]
+    stats.append(stat(bigrams, _kn_key(1), "__s1",
+                      F.count("*").alias("n1p1")))
+    for key, st in stats:
+        types = types.join(st, F.expr(f"({key}) = {st.columns[0]}"), "left")
+    scores = types.crossJoin(F.broadcast(scalars)).select(
+        "gram", F.expr(_kn_nll_sql(order, discount)).alias("__nll")
+    )
+    scored = events.join(scores, "gram").select(
+        F.col(id_col),
+        F.col("tf").cast("bigint").alias("events"),
+        F.expr(_KN_MICRO_SQL).alias("nll_micro"),
+    )
+    return _kn_per_doc(scored, id_col)
+
+
+def _kn_selftrained(df, text_col, id_col, discount, cache_stats,
+                    checkpoint_dir, order, fn) -> DataFrame:
+    """Self-trained KN: the model is the corpus's own event type table.
+
+    ONE tokenize/explode over the corpus (r9): the events are
+    materialized and the gram TYPE table derives from their blocks
+    (sum of tf == corpus ct exactly), itself materialized type-sized
+    because every statistic re-aggregates it.  The bigram type set
+    needs no second corpus pass: every corpus bigram is a first bigram
+    or a pair of some trigram type (order <= 3), and every corpus word
+    is a first token or a word of some bigram, so V and N1+(..) come
+    from one tiny aggregate."""
+    from .materialize import materialize
+
+    if not 0 < discount < 1:
+        raise ValueError(f"{fn}: discount must be in (0, 1), got {discount}")
+
+    def mat(x: DataFrame) -> DataFrame:
+        return materialize(x, checkpoint_dir) if cache_stats else x
+
+    events = mat(_kn_doc_events(df, text_col, id_col, order))
+    types = mat(events.groupBy("gram").agg(F.sum("tf").alias("ct")))
+    nw = "size(split(gram, ' '))"
+    top = types.where(f"{nw} = {order}")
+    bigrams = types.where(f"{nw} = 2").select("gram")
+    if order == 3:
+        bigrams = (
+            bigrams.union(top.select(F.expr(_kn_key(2, 1))))
+            .union(top.select(F.expr(_kn_key(2))))
+            .distinct()
+        )
+    scalars = (
+        bigrams.union(types.where(f"{nw} = 1").select("gram"))
+        .selectExpr("gram", "explode(split(gram, ' ')) AS w")
+        .agg(
+            F.count_distinct(F.expr("CASE WHEN contains(gram, ' ') "
+                                    "THEN gram END")).alias("n_types"),
+            F.count_distinct("w").alias("v"),
+        )
+    )
+    return _kn_score(events, types, top, bigrams, scalars, order,
+                     discount, id_col)
+
+
+def _kn_external(df, model, text_col, id_col, discount, cache_model,
+                 checkpoint_dir, normalize_model, order, fn) -> DataFrame:
+    """KN against an external :func:`_kn_fit` model ``(w1..wn, ct)``.
+
+    The model is normalized (an UNMERGED union of per-shard fits
+    carries duplicate gram rows; summing makes plain ``unionByName``
+    of shard fits a valid model, and a merged model passes through)
+    and eagerly materialized type-sized: several statistics consume
+    it, and a lazy ``.cache()`` raced by concurrent consumers measured
+    slower than recompute.  It is validated in the same lazy scalars
+    action (no extra pass): w1 non-NULL, non-NULL words a prefix,
+    vocabulary rows present (V and the OOV floor need them), and no
+    level missing under a higher one.  The corpus events are
+    materialized eagerly: they feed the scoring join and the
+    distinct-gram side, and AQE shares no exchange across consumers.
+    """
+    from .materialize import materialize
+
+    fit = fn.replace("_score", "_fit")
+    if not 0 < discount < 1:
+        raise ValueError(f"{fn}: discount must be in (0, 1), got {discount}")
+    words = [f"w{i}" for i in range(1, order + 1)]
+    for c in words + ["ct"]:
+        if c not in model.columns:
+            raise ValueError(
+                f"{fn}: model must be a {fit} relation with columns "
+                f"({', '.join(words)}, ct) — missing {c!r}"
+            )
+    if normalize_model:
+        model = model.groupBy(*words).agg(F.sum("ct").alias("ct"))
+    if cache_model:
+        model = materialize(model, checkpoint_dir)
+
+    def level(k: int) -> str:
+        return f"w{k} IS NOT NULL" + (
+            f" AND w{k + 1} IS NULL" if k < order else ""
+        )
+
+    bad = " OR ".join(["w1 IS NULL"] + [
+        f"(w{i} IS NULL AND w{i + 1} IS NOT NULL)" for i in range(1, order)
+    ])
+    invalid = " OR ".join(["n1 <= 0", "bad > 0"] + [
+        f"(n{k} <= 0 AND n{k + 1} > 0)" for k in range(2, order)
+    ])
+    scalars = model.agg(
+        *[F.expr(f"coalesce(sum(CASE WHEN {level(k)} THEN 1 END), 0)")
+          .alias(f"n{k}") for k in range(1, order + 1)],
+        F.expr(f"coalesce(sum(CASE WHEN {bad} THEN 1 END), 0)").alias("bad"),
+    ).select(
+        F.col("n2").alias("n_types"),
+        F.when(F.expr(invalid), F.raise_error(F.lit(
+            f"{fn}: model is not a {fit} relation (no unigram vocabulary "
+            "rows, rows with NULL w1 or a word after a NULL one, or a "
+            "level missing under a higher one) — refit or repair the model"
+        )).cast("long")).otherwise(F.col("n1")).alias("v"),
+    )
+    gram = f"concat_ws(' ', {', '.join(words)}) AS gram"
+    top = model.where(level(order)).selectExpr(gram, "ct")
+    bigrams = model.where(level(2)).selectExpr(gram)
+    events = materialize(
+        _kn_doc_events(df, text_col, id_col, order), checkpoint_dir,
+        eager=True,
+    )
+    types = events.select("gram").distinct().join(top, "gram", "left")
+    return _kn_score(events, types, top, bigrams, scalars, order,
+                     discount, id_col)
+
+
+def _kn_fit(df: DataFrame, text_col: str, order: int) -> DataFrame:
+    """The raw 1..n-gram type counts as ``(w1, .., wn, ct)`` rows, the
+    words past a gram's length NULL: one tokenize pass, one explode and
+    one shuffle (a gram's word count is its level); output size is the
+    type table, not the corpus."""
+    toked = ensure_parallelism(df).select(
+        normalized_tokens(F.col(text_col)).alias("__toks")
+    )
+    grams = ", ".join(
+        _kn_grams_sql("`__toks`", k) for k in range(1, order + 1)
+    )
+    return (
+        toked.select(F.expr(f"explode(concat({grams}))").alias("gram"))
+        .groupBy("gram")
+        .agg(F.count("*").alias("ct"))
+        .select(
+            *[F.expr(f"get(split(gram, ' '), {i})").alias(f"w{i + 1}")
+              for i in range(order)],
+            "ct",
+        )
+    )
+
+
 def kn_bigram_logprob(
     df: DataFrame,
     text_col: str = "text",
@@ -2803,149 +3055,21 @@ def kn_bigram_logprob(
     cache_stats: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Self-trained **interpolated Kneser-Ney** bigram LM score per
-    document — the smoothing family real perplexity filters use (CCNet
-    scores with a KN-smoothed KenLM; plain MLE bigrams assign -inf to
-    any unseen transition, so :func:`bigram_logprob` can only score
-    self-trained corpora where every transition was observed).
+    """Self-trained **interpolated Kneser-Ney** bigram NLL per document
+    — the smoothing family real perplexity filters use (CCNet scores
+    with a KN-smoothed KenLM; plain MLE bigrams give -inf to any unseen
+    transition).  Token 1 is scored by the add-one continuation
+    distribution, tokens 2..n by the interpolated conditional; the
+    math and the micro-nat contract are on :func:`_kn_score`.
 
-        P(w2|w1) = max(c(w1w2) - D, 0)/c(w1.)
-                   + D * N1+(w1,.)/c(w1.) * Pcont(w2)
-        Pcont(w) = (N1+(.,w) + 1) / (N1+(.,.) + V)
-
-    ``N1+`` are DISTINCT-neighbor counts (the KN continuation idea: "how
-    many contexts does w complete" rather than "how often"), ``D`` the
-    absolute discount, and the continuation distribution carries add-one
-    smoothing over the vocabulary ``V`` so it is strictly positive for
-    every in-vocab word (a word seen only document-initially has
-    N1+(.,w)=0, and interpolated KN's lowest order must not emit
-    log(0); this also gives external-fit scoring a deterministic OOV
-    floor of 1/(N1+(.,.)+V)).  The first token of each document is
-    scored by ``Pcont`` (the model's lowest order); tokens 2..n by the
-    conditional.  A document whose every transition was seen once gets
-    the same treatment as one with repeated transitions — no special
-    cases, the formula covers unseen/rare/frequent uniformly.
-
-    Reproducibility contract (micro-nat discipline, exactly
-    :func:`bigram_logprob`'s): each (doc, gram) contribution quantizes
-    ``tf * -ln P`` to integer micro-nats before the per-doc sum, so
-    engine-side float summation order cannot move the hash.  Output:
-    ``id, n_tokens, nll_micro, avg_nll``; empty/NULL-token documents
-    produce no row.
-
-    Plan shape (r8): the per-doc EVENT table — ``[first_token] ++
-    bigrams`` exploded into one ``(doc, gram) -> tf`` shuffle — is the
-    only corpus-volume shuffle; levels need no tag because tokens
-    contain no whitespace, so the unigram/bigram key spaces are
-    disjoint by content.  The gram TYPE table (the same explode
-    reduced by gram alone) is an independent subtree AQE schedules
-    concurrently, eagerly materialized type-sized (its single-word
-    rows are exactly the first-token vocabulary the lvl-1 scores
-    need, and every corpus word is a first token or the 2nd word of
-    some bigram type, so V needs no unigram corpus pass).  Every statistic is a
-    small groupBy of the materialized type table joined back by plain
-    equality — the joins broadcast at gate scale (pipelining into one
-    codegen stage, measured ~5x faster than the window-based form
-    whose tiny shuffles serialize) and degrade to hash joins of
-    type-sized tables at cluster scale.  ``-ln P`` per distinct gram
-    is computed once; the corpus pays exactly one more equi-join on
-    ``gram``.  The double ``-ln P`` is computed from the same integer
-    column inputs as the row-first form, so per-doc micro-nat sums
-    are bit-identical.
-
-    ``cache_stats=False`` skips the type-table materialization (pure
-    lazy plan, e.g. for EXPLAIN); ``checkpoint_dir`` switches it
-    from executor-local ``localCheckpoint`` blocks to a reliable
-    ``checkpoint()`` that survives executor loss at cluster scale.
+    Output: ``id, n_tokens, nll_micro, avg_nll``; empty/NULL-token
+    documents produce no row.  ``cache_stats=False`` skips the events
+    and type-table materialization (pure lazy plan, e.g. for EXPLAIN);
+    ``checkpoint_dir`` switches it from executor-local
+    ``localCheckpoint`` blocks to a reliable ``checkpoint()``.
     """
-    if not 0 < discount < 1:
-        raise ValueError(
-            f"kn_bigram_logprob: discount must be in (0, 1), got {discount}"
-        )
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract: one regex split
-    # per consumer branch instead of one per reference)
-    from .materialize import materialize
-    from .sampling import _fresh_name
-
-    tk = _fresh_name("__toks", src.columns)
-    toked = src.select(
-        F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
-    )
-    tkn = tk
-
-    # ---- the corpus-volume pass: per-doc events -> tf ----------------
-    # ONE tokenize/explode over the corpus (r9): the events relation is
-    # materialized and the gram TYPE table derives from its blocks —
-    # the r8 form ran a second independent scan+explode for the types
-    # (AQE schedules independent subtrees concurrently but shares
-    # nothing), which the trigram scorer's r9 A/B measured slower at
-    # gate scale and which costs a full extra corpus pass at 100 TB.
-    # Σ_docs tf(doc, gram) == corpus ct(gram) exactly, so the derived
-    # type table is bit-identical to the independent aggregation.
-    ev_arr = F.concat(_kn_first_event(tkn), _kn_true_grams(tkn, 2))
-    events = _doc_term_tf(toked, id_col, ev_arr)
-    if cache_stats:
-        events = materialize(events, checkpoint_dir)
-    # gram TYPE table (type-sized), re-aggregated from the events
-    # blocks; materialized itself because four statistics consumers
-    # re-aggregate it and AQE does not reuse exchanges across consumers
-    types0 = events.groupBy("gram").agg(F.sum("tf").alias("ct"))
-    if cache_stats:
-        types0 = materialize(types0, checkpoint_dir)
-
-    is2 = F.col("gram").contains(" ")
-    s0 = F.split(F.col("gram"), " ")[0]
-    s1 = F.split(F.col("gram"), " ")[1]
-    bi = types0.where(is2)
-    prefix_stats = bi.groupBy(s0.alias("prefix")).agg(
-        F.sum("ct").alias("ct_prefix"), F.count("*").alias("n1p_fwd")
-    )
-    cont_counts = bi.groupBy(s1.alias("cont")).agg(
-        F.count("*").alias("n1p_bwd")
-    )
-    # scalars in ONE tiny aggregate over the word-exploded type table:
-    # count_distinct(w) IS the vocabulary size V (first tokens plus
-    # both words of every bigram type cover every corpus token) and
-    # count_distinct(gram | bigram) is N1+(..) = n_types
-    exploded = types0.select(
-        "gram",
-        is2.alias("__b"),
-        F.explode(
-            F.when(is2, F.array(s0, s1)).otherwise(F.array(F.col("gram")))
-        ).alias("w"),
-    )
-    scalars = exploded.agg(
-        F.coalesce(
-            F.count_distinct(F.when(F.col("__b"), F.col("gram"))), F.lit(0)
-        ).alias("n_types"),
-        F.coalesce(F.count_distinct("w"), F.lit(0)).alias("v"),
-    )
-
-    # type rows ARE the distinct event grams (same explode), so the
-    # scored type table covers every event key; stat joins are plain
-    # left equi-joins on unique keys (no fanout).  One-parse SQL trees
-    # (r11, see _kn2_sql_parts).
-    kq = _kn2_sql_parts(discount, ct_sql="CAST(ct AS DOUBLE)",
-                        unseen_prefix_backoff=False)
-    scores = (
-        types0.join(prefix_stats, F.expr(f"({kq['pfx']}) = prefix"), "left")
-        .join(cont_counts, F.expr(f"({kq['last']}) = cont"), "left")
-        .crossJoin(F.broadcast(scalars))
-        .select("gram", F.expr(kq["nll"]).alias("__nll"))
-    )
-
-    scored = events.join(scores, "gram").select(
-        F.col(id_col),
-        F.col("tf").cast("bigint").alias("events"),
-        F.floor(
-            F.col("tf").cast("double") * F.col("__nll") * F.lit(1e6)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("nll_micro"),
-    )
-    return _kn_per_doc(scored, id_col)
+    return _kn_selftrained(df, text_col, id_col, discount, cache_stats,
+                           checkpoint_dir, 2, "kn_bigram_logprob")
 
 
 def kn_bigram_fit(
@@ -2953,45 +3077,14 @@ def kn_bigram_fit(
     text_col: str = "text",
 ) -> DataFrame:
     """Fit the Kneser-Ney bigram model as a RELATION — the production
-    shape (CCNet's): fit once on a reference corpus (Wikipedia), persist
-    to parquet, score every crawl against it with
-    :func:`kn_bigram_score`.
+    shape (CCNet's): fit once on a reference corpus, persist to
+    parquet, score every crawl with :func:`kn_bigram_score`.
 
-    Model rows: ``(w1, w2, ct)`` — bigram counts where ``w2`` is
-    non-NULL, unigram counts as ``(w, NULL, ct)`` (the vocabulary rows;
-    scoring needs V and they make the relation self-contained).  The
-    model is MERGEABLE by construction: per-shard fits roll up with
+    Model rows: bigram counts ``(w1, w2, ct)`` and unigram (vocabulary)
+    counts ``(w, NULL, ct)``.  MERGEABLE: per-shard fits roll up with
     ``unionByName`` + ``groupBy(w1, w2).sum(ct)`` — counts are counts.
-
-    ONE tokenize pass and one shuffle: unigram and bigram types explode
-    level-tagged into a single ``groupBy(lvl, gram)`` (the r8 shape —
-    the r7 form ran one corpus aggregation per level); output size is
-    the gram-type table, not the corpus.
     """
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract); a gram's word
-    # count is its level (tokens contain no whitespace), so unigrams
-    # and bigrams share one explode + one groupBy
-    toked = src.select(normalized_tokens(F.col(text_col)).alias("__toks"))
-    toks = F.col("__toks")
-    tkn = "__toks"
-    is2 = F.col("gram").contains(" ")
-    return (
-        toked.select(
-            F.explode(F.concat(toks, _kn_true_grams(tkn, 2))).alias("gram")
-        )
-        .groupBy("gram")
-        .agg(F.count("*").alias("ct"))
-        .select(
-            F.when(is2, F.split(F.col("gram"), " ")[0])
-            .otherwise(F.col("gram"))
-            .alias("w1"),
-            F.when(is2, F.split(F.col("gram"), " ")[1])
-            .otherwise(F.lit(None).cast("string"))
-            .alias("w2"),
-            "ct",
-        )
-    )
+    return _kn_fit(df, text_col, 2)
 
 
 def kn_bigram_score(
@@ -3004,154 +3097,24 @@ def kn_bigram_score(
     checkpoint_dir: str | None = None,
     normalize_model: bool = True,
 ) -> DataFrame:
-    """Score documents against an EXTERNAL :func:`kn_bigram_fit` model
-    — the CCNet shape (the self-trained single-pass form is
-    :func:`kn_bigram_logprob`; ``kn_bigram_score(df, kn_bigram_fit(df))``
-    is row-identical to it, pinned by test).
+    """Score documents against an EXTERNAL :func:`kn_bigram_fit` model;
+    ``kn_bigram_score(df, kn_bigram_fit(df))`` is row-identical to
+    :func:`kn_bigram_logprob` (pinned by test).  Same output.
 
-    Out-of-model events stay finite deterministically: an OOV or
-    never-second word scores the add-one continuation floor
-    ``1/(N1+(.,.) + V)``; an unseen PREFIX backs off entirely to the
-    continuation distribution (the discount mass is all of it:
-    ``p = Pcont(w2)``); an unseen bigram under a seen prefix gets pure
-    discount mass ``lambda(w1) * Pcont(w2)``.
+    Out-of-model events stay finite: an OOV or never-second word
+    scores the continuation floor ``1/(N1+(..) + V)``; an unseen
+    PREFIX backs off entirely to the continuation distribution; an
+    unseen bigram under a seen prefix gets pure discount mass.  A model
+    without vocabulary rows or with NULL ``w1`` raises.
 
-    Plan shape (r9, the trigram scorer's shape one order down): the
-    normalized model is eagerly materialized (type-sized;
-    ``checkpoint_dir`` selects the reliable form) and its statistics
-    are small groupBys of it; the corpus pays ONE tokenize/explode
-    pass into the ``(doc, gram) -> tf`` shuffle, the events relation is
-    materialized (per-doc-distinct volume), and the distinct grams that
-    left-join the model statistics derive FROM it — AQE shares no
-    subtree across consumers, so the r8 form re-scanned and re-exploded
-    the corpus for the distinct-gram side.  NULL statistics are exactly
-    the backoff semantics, and the joins broadcast at gate scale /
-    hash-join type-sized tables at cluster scale.  Persist the model
-    parquet once; every daily crawl score reads it instead of
-    re-fitting — and pass ``normalize_model=False`` for a model that is
-    one fit's already-aggregated output (the normalization groupBy
-    exists to make unionByName of per-shard fits a valid model).
+    ``normalize_model=False`` skips the groupBy that makes a plain
+    ``unionByName`` of shard fits valid (pass it for one fit's
+    persisted output); ``cache_model=False`` skips the eager model
+    materialization (e.g. a parquet read); ``checkpoint_dir`` selects
+    reliable checkpoints over ``localCheckpoint``.
     """
-    if not 0 < discount < 1:
-        raise ValueError(
-            f"kn_bigram_score: discount must be in (0, 1), got {discount}"
-        )
-    for c in ("w1", "w2", "ct"):
-        if c not in model.columns:
-            raise ValueError(
-                "kn_bigram_score: model must be a kn_bigram_fit relation "
-                f"with columns (w1, w2, ct) — missing {c!r}"
-            )
-    from .materialize import materialize
-    from .sampling import _fresh_name
-
-    # normalize the model first: an UNMERGED union of per-shard fits
-    # carries duplicate gram rows, and summing totals over them twice
-    # would double-count statistics while a dict-based consumer
-    # (kn_score_stream) sums them — aggregating here makes both
-    # readings identical and makes plain unionByName of shard fits a
-    # valid model with no manual merge step.  A merged model passes
-    # through unchanged (sum over one row).
-    if normalize_model:
-        model = model.groupBy("w1", "w2").agg(F.sum("ct").alias("ct"))
-    # eagerly materialize the normalized model (type-sized): it feeds
-    # several statistics subtrees below — on an unpersisted
-    # kn_bigram_fit each would re-execute the whole fit lineage.
-    # EAGER materialization, not a lazy .cache(): concurrent consumers
-    # racing to fill a lazy cache inside one action measured SLOWER
-    # than plain recompute at sf0.1 (10.0s vs 8.0s).  Pass
-    # ``cache_model=False`` when the model is a parquet read that
-    # needs no materialization.
-    if cache_model:
-        model = materialize(model, checkpoint_dir)
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract)
-    tk = _fresh_name("__toks", src.columns)
-    toked = src.select(
-        F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
-    )
-    tkn = tk
-
-    # a model with no unigram (vocabulary) rows makes the continuation
-    # denominator n_types+V degenerate (V=0 with n_types=0 divides by
-    # zero under ANSI; V=0 alone silently mis-floors OOV); a NULL w1
-    # belongs to no model level and would silently pool into the
-    # prefix/vocabulary statistics — both rejected in the same lazy
-    # scalars action (no extra pass)
-    has2 = F.col("w2").isNotNull()
-    scalars = model.agg(
-        F.coalesce(F.sum(F.when(has2, F.lit(1))), F.lit(0)).alias(
-            "n_types"
-        ),
-        F.coalesce(F.sum(F.when(~has2, F.lit(1))), F.lit(0)).alias(
-            "__v_raw"
-        ),
-        F.coalesce(
-            F.sum(F.when(F.col("w1").isNull(), F.lit(1))), F.lit(0)
-        ).alias("__bad_w1"),
-    ).select(
-        "n_types",
-        F.when(
-            (F.col("__v_raw") <= 0) | (F.col("__bad_w1") > 0),
-            F.raise_error(
-                F.lit(
-                    "kn_bigram_score: model is not a kn_bigram_fit "
-                    "relation (no unigram vocabulary rows, or rows with "
-                    "NULL w1) — refit or repair the model"
-                )
-            ).cast("long"),
-        ).otherwise(F.col("__v_raw")).alias("v"),
-    )
-
-    bi_model = model.where(has2)
-    bi_totals = bi_model.select(
-        F.concat_ws(" ", "w1", "w2").alias("bgram"),
-        F.col("ct").alias("ct_bi"),
-    )
-    prefix_stats = bi_model.groupBy(F.col("w1").alias("prefix")).agg(
-        F.sum("ct").alias("ct_prefix"), F.count("*").alias("n1p_fwd")
-    )
-    cont_counts = bi_model.groupBy(F.col("w2").alias("cont")).agg(
-        F.count("*").alias("n1p_bwd")
-    )
-
-    # corpus events: [first_token] ++ bigrams, ONE tokenize/explode
-    # pass into one (doc, gram) shuffle.  The events relation is
-    # consumed twice (scoring join + distinct-gram stat side) and AQE
-    # shares no exchange across consumers, so it is materialized
-    # eagerly — the r8 form recomputed the scan+explode for the
-    # distinct-gram side, which the trigram scorer's r9 A/B measured
-    # slower AND is strictly worse at 100 TB (a second full corpus
-    # scan vs re-reading per-doc-distinct event blocks)
-    ev_arr = F.concat(_kn_first_event(tkn), _kn_true_grams(tkn, 2))
-    events = materialize(
-        _doc_term_tf(toked, id_col, ev_arr),
-        checkpoint_dir,
-        eager=True,
-    )
-    ev_types = events.select("gram").distinct()
-
-    # unseen bigram -> ct_bi 0 (pure discount mass); unseen prefix ->
-    # the whole probability backs off to Pcont (main term 0, lambda 1).
-    # One-parse SQL trees (r11, see _kn2_sql_parts).
-    kq = _kn2_sql_parts(
-        discount,
-        ct_sql="CAST(coalesce(ct_bi, 0) AS DOUBLE)",
-        unseen_prefix_backoff=True,
-    )
-    scores = (
-        ev_types.join(bi_totals, F.col("gram") == F.col("bgram"), "left")
-        .join(prefix_stats, F.expr(f"({kq['pfx']}) = prefix"), "left")
-        .join(cont_counts, F.expr(f"({kq['last']}) = cont"), "left")
-        .crossJoin(F.broadcast(scalars))
-        .select("gram", F.expr(kq["nll"]).alias("__nll"))
-    )
-    scored = events.join(scores, "gram").select(
-        F.col(id_col),
-        F.col("tf").cast("bigint").alias("events"),
-        F.expr(_KN_MICRO_SQL).alias("nll_micro"),
-    )
-    return _kn_per_doc(scored, id_col)
+    return _kn_external(df, model, text_col, id_col, discount, cache_model,
+                        checkpoint_dir, normalize_model, 2, "kn_bigram_score")
 
 
 def kn_trigram_logprob(
@@ -3162,313 +3125,33 @@ def kn_trigram_logprob(
     cache_stats: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Self-trained **trigram** interpolated Kneser-Ney — the textbook
-    three-level recursion (real perplexity filters score with KN
-    n-gram KenLMs; :func:`kn_bigram_logprob` is the two-level form):
-
-        P3(w3|w1w2) = max(c(w1w2w3)-D, 0)/c(w1w2.)
-                      + D * N1+(w1w2,.)/c(w1w2.) * P2(w3|w2)
-        P2(w3|w2)   = max(N1+(.w2w3)-D, 0)/N1+(.w2.)
-                      + D * N1+mid(w2)/N1+(.w2.) * P1(w3)
-        P1(w3)      = (N1+(.w3) + 1)/(N1+(..) + V)
-
-    The MID level runs on CONTINUATION counts, all derived from the
-    trigram TYPE table (the KN insight applied one level down):
-    ``N1+(.w2w3)`` = distinct predecessors of bigram (w2,w3),
-    ``N1+(.w2.)`` their sum over w3, ``N1+mid(w2)`` = distinct w3 with
-    ``N1+(.w2w3) >= 1`` — defining all three from the SAME table makes
-    probability mass conserve EXACTLY (sum_w3 P2 = 1, pinned by test).
-    ``P1`` is the bigram scorer's add-one-smoothed continuation
-    distribution.  Guards: a w2 never seen mid-trigram has
-    ``N1+(.w2.) = 0`` — P2 backs off fully to P1 (the zero-evidence
-    case); likewise an event-2 bigram prefix.  Event decomposition per
-    document: token 1 by P1, token 2 by P2(t2|t1), tokens 3..n by P3.
-
-    Same micro-nat integer discipline and output schema as the other
-    NLL scorers (``id, n_tokens, nll_micro, avg_nll``; empty docs emit
-    no row); documents shorter than 3 tokens simply have no P3 events.
-
-    Plan shape (r8 — the :func:`kn_bigram_logprob` shape one order
-    up): the per-doc EVENT table (``[t1]`` ++ ``["t1 t2"]`` ++
-    trigrams, one ``(doc, gram) -> tf`` shuffle) is the only
-    corpus-volume shuffle; a gram's word count is its level.  The
-    gram TYPE table (same explode reduced by gram alone) is an
-    independent concurrent subtree, eagerly materialized type-sized;
-    the bigram TYPE SET — needed for N1+(.,w)
-    and N1+(..) — is recovered from the type table without another
-    corpus pass (every corpus bigram is either some document's FIRST
-    bigram, i.e. a 2-word type row, or the leading/trailing pair of
-    some trigram type; likewise V's vocabulary is the first tokens
-    plus both words of every bigram in that set).  Every KN statistic
-    is a small groupBy of the materialized type tables joined back by
-    plain equality — broadcast-pipelined at gate scale (measured ~5x
-    faster than window-based tiny shuffles, which serialize), hash
-    joins of type-sized tables at cluster scale.  Same micro-nat
-    bit-identity argument as the bigram scorer.  ``cache_stats`` /
+    """Self-trained **trigram** interpolated Kneser-Ney NLL per
+    document — the three-level recursion (:func:`_kn_score`) whose
+    middle level runs on continuation counts.  Token 1 is scored by
+    P1, token 2 by P2(t2|t1), tokens 3..n by P3; documents shorter
+    than 3 tokens have no P3 events.  Output, ``cache_stats`` and
     ``checkpoint_dir`` as in :func:`kn_bigram_logprob`.
     """
-    if not 0 < discount < 1:
-        raise ValueError(
-            f"kn_trigram_logprob: discount must be in (0, 1), got {discount}"
-        )
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract: one regex split
-    # per consumer branch instead of one per reference)
-    from .materialize import materialize
-    from .sampling import _fresh_name
-
-    tk = _fresh_name("__toks", src.columns)
-    toked = src.select(
-        F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
-    )
-    tkn = tk
-    ev_arr = F.concat(
-        _kn_first_event(tkn), _kn_second_event(tkn), _kn_true_grams(tkn, 3)
-    )
-
-    # ---- the corpus-volume pass: per-doc events -> tf ----------------
-    # ONE tokenize/explode (r9): events materialized, type table
-    # derived from its blocks (Σ_docs tf == corpus ct exactly) — see
-    # kn_bigram_logprob on why the second independent explode lost
-    events = _doc_term_tf(toked, id_col, ev_arr)
-    if cache_stats:
-        events = materialize(events, checkpoint_dir)
-    types0 = events.groupBy("gram").agg(F.sum("tf").alias("ct"))
-    if cache_stats:
-        types0 = materialize(types0, checkpoint_dir)
-
-    nw = F.size(F.split(F.col("gram"), " "))
-    s0 = F.split(F.col("gram"), " ")[0]
-    s1 = F.split(F.col("gram"), " ")[1]
-    s2 = F.split(F.col("gram"), " ")[2]
-    tri = types0.where(nw == 3)
-    # top level: prefix mass + distinct continuations of (w1,w2)
-    top_prefix = tri.groupBy(F.concat_ws(" ", s0, s1).alias("pfx12")).agg(
-        F.sum("ct").alias("ct_pfx12"), F.count("*").alias("n1p_top")
-    )
-    # mid level (continuation counts): trigram TYPE rows grouped by the
-    # trailing bigram count its distinct predecessors; their per-w2
-    # sum and count are N1+(.w2.) and N1+mid(w2)
-    mid_bi = tri.groupBy(F.concat_ws(" ", s1, s2).alias("big23")).agg(
-        F.count("*").alias("n1p_mid_bi")
-    )
-    mid_w2 = mid_bi.groupBy(
-        F.split(F.col("big23"), " ")[0].alias("mid_w")
-    ).agg(
-        F.sum("n1p_mid_bi").alias("n1p_mid_tot"),
-        F.count("*").alias("n1p_mid_fwd"),
-    )
-    # the complete bigram TYPE SET (counts are never needed — only
-    # distinct-neighbor statistics): first bigrams ∪ leading pairs ∪
-    # trailing pairs of trigram types
-    bi_set = (
-        types0.where(nw == 2)
-        .select("gram")
-        .union(tri.select(F.concat_ws(" ", s0, s1)))
-        .union(tri.select(F.concat_ws(" ", s1, s2)))
-        .distinct()
-    )
-    cont_counts = bi_set.groupBy(
-        F.split(F.col("gram"), " ")[1].alias("cont")
-    ).agg(F.count("*").alias("n1p_bwd"))
-    # scalars in ONE tiny aggregate over the word-exploded bigram set
-    # plus first tokens: count_distinct(gram | bigram) = N1+(..), and
-    # count_distinct(w) = V (every corpus word is a first token or the
-    # 2nd word of some bigram; trigram words add nothing new)
-    exploded = bi_set.select(
-        "gram", F.lit(True).alias("__b"), F.explode(F.array(s0, s1)).alias("w")
-    ).unionByName(
-        types0.where(nw == 1).select(
-            "gram", F.lit(False).alias("__b"), F.col("gram").alias("w")
-        )
-    )
-    scalars = exploded.agg(
-        F.coalesce(
-            F.count_distinct(F.when(F.col("__b"), F.col("gram"))), F.lit(0)
-        ).alias("n_types"),
-        F.coalesce(F.count_distinct("w"), F.lit(0)).alias("v"),
-    )
-
-    # One-parse score/key trees (r11, the word_ngrams_col contract):
-    # the Column forms of pcont/p2/p3 + the four key conditionals cost
-    # ~600 py4j round-trips per call; rendered as SQL they are the
-    # same tree node for node (textual re-inlining of p2/pcont matches
-    # the Column form exactly — Catalyst expressions are trees, so a
-    # reused Column object embeds as a copy anyway).
-    kq = _kn3_sql_parts(discount, ct_sql="CAST(ct AS DOUBLE)",
-                        unseen_prefix_backoff=False)
-    scores = (
-        types0.join(top_prefix, F.expr(f"({kq['pfx']}) = pfx12"), "left")
-        .join(mid_bi, F.expr(f"({kq['tail2']}) = big23"), "left")
-        .join(mid_w2, F.expr(f"({kq['mid']}) = mid_w"), "left")
-        .join(cont_counts, F.expr(f"({kq['last']}) = cont"), "left")
-        .crossJoin(F.broadcast(scalars))
-        .select("gram", F.expr(kq["nll"]).alias("__nll"))
-    )
-
-    scored = events.join(scores, "gram").select(
-        F.col(id_col),
-        F.col("tf").cast("bigint").alias("events"),
-        F.expr(_KN_MICRO_SQL).alias("nll_micro"),
-    )
-    return _kn_per_doc(scored, id_col)
-
-
-# floor(tf * nll * 1e6 + 0.5) micro-nat quantization, rendered once
-# (identical to the Column form: 1000000.0D == F.lit(1e6))
-_KN_MICRO_SQL = (
-    "CAST(floor(CAST(tf AS DOUBLE) * __nll * 1000000.0D + 0.5D) AS BIGINT)"
-)
-
-
-def _kn2_sql_parts(
-    discount: float, ct_sql: str, unseen_prefix_backoff: bool
-) -> dict:
-    """SQL text of the bigram-KN per-gram score tree and its two join
-    keys — the :func:`_kn3_sql_parts` shape one order down, shared by
-    :func:`kn_bigram_logprob` (``CAST(ct AS DOUBLE)``, no guard) and
-    :func:`kn_bigram_score` (``coalesce(ct_bi, 0)`` + full backoff on
-    an unseen prefix)."""
-    D = f"{float(discount)!r}D"
-    pcont = (
-        "(CAST(coalesce(n1p_bwd, 0) AS DOUBLE) + 1.0D) / "
-        "(CAST(n_types AS DOUBLE) + CAST(v AS DOUBLE))"
-    )
-    p_bi_core = (
-        f"greatest({ct_sql} - {D}, 0.0D) / CAST(ct_prefix AS DOUBLE) + "
-        f"{D} * CAST(n1p_fwd AS DOUBLE) / CAST(ct_prefix AS DOUBLE) "
-        f"* ({pcont})"
-    )
-    p_bi = (
-        f"CASE WHEN ct_prefix IS NULL THEN {pcont} ELSE {p_bi_core} END"
-        if unseen_prefix_backoff
-        else p_bi_core
-    )
-    is2 = "contains(gram, ' ')"
-    s0, s1 = (f"split(gram, ' ')[{i}]" for i in range(2))
-    return {
-        "pfx": f"CASE WHEN {is2} THEN {s0} ELSE gram END",
-        "last": f"CASE WHEN {is2} THEN {s1} ELSE gram END",
-        "nll": (
-            f"CASE WHEN NOT ({is2}) THEN - ln({pcont}) "
-            f"ELSE - ln({p_bi}) END"
-        ),
-    }
-
-
-def _kn3_sql_parts(
-    discount: float, ct_sql: str, unseen_prefix_backoff: bool
-) -> dict:
-    """SQL text of the trigram-KN per-gram score tree and its four
-    level-conditional join keys — shared by :func:`kn_trigram_logprob`
-    (``ct_sql='CAST(ct AS DOUBLE)'``, no unseen-prefix guard: the
-    self-trained type table covers every event) and
-    :func:`kn_trigram_score` (``coalesce(ct_tri, 0)`` + full backoff
-    when the external model never saw the prefix).  Node-for-node the
-    trees the r10 Column forms built; construction-parity pinned by
-    the gate oracles (micro-nat integers are bit-sensitive).
-    """
-    D = f"{float(discount)!r}D"
-    pcont = (
-        "(CAST(coalesce(n1p_bwd, 0) AS DOUBLE) + 1.0D) / "
-        "(CAST(n_types AS DOUBLE) + CAST(v AS DOUBLE))"
-    )
-    p2 = (
-        "CASE WHEN (n1p_mid_tot IS NULL) OR (n1p_mid_tot = 0) "
-        f"THEN {pcont} "
-        f"ELSE greatest(CAST(coalesce(n1p_mid_bi, 0) AS DOUBLE) - {D}, "
-        "0.0D) / CAST(n1p_mid_tot AS DOUBLE) + "
-        f"{D} * CAST(n1p_mid_fwd AS DOUBLE) / CAST(n1p_mid_tot AS DOUBLE)"
-        f" * ({pcont}) END"
-    )
-    p3_core = (
-        f"greatest({ct_sql} - {D}, 0.0D) / CAST(ct_pfx12 AS DOUBLE) + "
-        f"{D} * CAST(n1p_top AS DOUBLE) / CAST(ct_pfx12 AS DOUBLE) * ({p2})"
-    )
-    p3 = (
-        f"CASE WHEN ct_pfx12 IS NULL THEN ({p2}) ELSE {p3_core} END"
-        if unseen_prefix_backoff
-        else p3_core
-    )
-    nw = "size(split(gram, ' '))"
-    s0, s1, s2 = (f"split(gram, ' ')[{i}]" for i in range(3))
-    return {
-        "last": (
-            f"CASE WHEN {nw} = 3 THEN {s2} WHEN {nw} = 2 THEN {s1} "
-            "ELSE gram END"
-        ),
-        "tail2": (
-            f"CASE WHEN {nw} = 3 THEN concat_ws(' ', {s1}, {s2}) "
-            "ELSE gram END"
-        ),
-        "mid": (
-            f"CASE WHEN {nw} = 3 THEN {s1} WHEN {nw} = 2 THEN {s0} "
-            "ELSE gram END"
-        ),
-        "pfx": (
-            f"CASE WHEN {nw} = 3 THEN concat_ws(' ', {s0}, {s1}) "
-            "ELSE gram END"
-        ),
-        "nll": (
-            f"CASE WHEN {nw} = 1 THEN - ln({pcont}) "
-            f"WHEN {nw} = 2 THEN - ln({p2}) "
-            f"ELSE - ln({p3}) END"
-        ),
-    }
+    return _kn_selftrained(df, text_col, id_col, discount, cache_stats,
+                           checkpoint_dir, 3, "kn_trigram_logprob")
 
 
 def kn_trigram_fit(
     df: DataFrame,
     text_col: str = "text",
 ) -> DataFrame:
-    """Fit the Kneser-Ney trigram model as a RELATION — the production
-    shape (:func:`kn_bigram_fit` one order up): fit once on a reference
-    corpus, persist to parquet, score every crawl against it with
+    """Fit the Kneser-Ney trigram model as a RELATION
+    (:func:`kn_bigram_fit` one order up), scored by
     :func:`kn_trigram_score`.
 
-    Model rows: trigram type counts ``(w1, w2, w3, ct)`` (all three
-    non-NULL), bigram type counts as ``(w1, w2, NULL, ct)``, and
-    unigram counts as ``(w1, NULL, NULL, ct)`` — the RAW type tables
-    every KN statistic derives from, NOT the derived N1+ counts: the
-    distinct-neighbor statistics are recomputed at score time, which
-    is exactly what makes the relation MERGEABLE (per-shard fits roll
-    up with ``unionByName`` + ``groupBy(w1, w2, w3).sum(ct)`` — a
-    merged derived count would double-count shared neighbors).
-
-    ONE tokenize pass and one shuffle: all three levels explode
-    level-tagged into a single ``groupBy(lvl, gram)`` (the r8 shape —
-    the r7 form ran one corpus aggregation per level); output size is
-    the trigram-type table, not the corpus.
+    Model rows: trigram counts ``(w1, w2, w3, ct)``, bigram counts
+    ``(w1, w2, NULL, ct)`` and unigram counts ``(w1, NULL, NULL, ct)``
+    — the RAW type tables, not derived N1+ counts: the distinct-
+    neighbor statistics are recomputed at score time, which is what
+    keeps the relation MERGEABLE (``unionByName`` +
+    ``groupBy(w1, w2, w3).sum(ct)``).
     """
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract); a gram's word
-    # count is its level (tokens contain no whitespace), so all three
-    # levels share one explode + one groupBy
-    toked = src.select(normalized_tokens(F.col(text_col)).alias("__toks"))
-    toks = F.col("__toks")
-    tkn = "__toks"
-    null_s = F.lit(None).cast("string")
-    nw = F.size(F.split(F.col("gram"), " "))
-    s0 = F.split(F.col("gram"), " ")[0]
-    s1 = F.split(F.col("gram"), " ")[1]
-    s2 = F.split(F.col("gram"), " ")[2]
-    return (
-        toked.select(
-            F.explode(
-                F.concat(
-                    toks, _kn_true_grams(tkn, 2), _kn_true_grams(tkn, 3)
-                )
-            ).alias("gram")
-        )
-        .groupBy("gram")
-        .agg(F.count("*").alias("ct"))
-        .select(
-            F.when(nw == 1, F.col("gram")).otherwise(s0).alias("w1"),
-            F.when(nw == 1, null_s).otherwise(s1).alias("w2"),
-            F.when(nw == 3, s2).otherwise(null_s).alias("w3"),
-            "ct",
-        )
-    )
+    return _kn_fit(df, text_col, 3)
 
 
 def kn_trigram_score(
@@ -3481,184 +3164,26 @@ def kn_trigram_score(
     checkpoint_dir: str | None = None,
     normalize_model: bool = True,
 ) -> DataFrame:
-    """Score documents against an EXTERNAL :func:`kn_trigram_fit` model
-    — the CCNet shape one order up from :func:`kn_bigram_score`
-    (``kn_trigram_score(df, kn_trigram_fit(df))`` is row-identical to
-    the self-trained :func:`kn_trigram_logprob`, pinned by test).
+    """Score documents against an EXTERNAL :func:`kn_trigram_fit`
+    model; ``kn_trigram_score(df, kn_trigram_fit(df))`` is
+    row-identical to :func:`kn_trigram_logprob` (pinned by test).
 
-    Out-of-model events stay finite deterministically, one backoff
-    level at a time (each level's guard is the self-trained scorer's
-    zero-evidence rule applied to the external statistics):
+    Out-of-model events stay finite, one backoff level at a time:
 
-    * OOV / never-continuation ``w3``: P1's add-one floor
-      ``1/(N1+(..) + V)``;
+    * OOV / never-continuation ``w3``: P1's floor ``1/(N1+(..) + V)``;
     * ``w2`` never seen mid-trigram: P2 backs off entirely to P1;
-    * unseen ``(w2, w3)`` under a seen mid-context: P2's pure discount
-      mass;
-    * unseen ``(w1, w2)`` prefix: P3 backs off entirely to P2 (the
-      discount mass is all of it);
-    * unseen trigram under a seen prefix: P3's pure discount mass.
+    * unseen ``(w2, w3)`` under a seen mid-context: P2's discount mass;
+    * unseen ``(w1, w2)`` prefix: P3 backs off entirely to P2;
+    * unseen trigram under a seen prefix: P3's discount mass.
 
-    Plan shape (r9): the normalized model is eagerly materialized
-    (type-sized; ``checkpoint_dir`` selects the reliable form) and
-    every KN statistic is a small groupBy of it; the corpus pays ONE
-    tokenize/explode pass into the ``(doc, gram) -> tf`` shuffle, the
-    shuffled events relation is materialized (its volume is the
-    per-doc-distinct events — at or below corpus token volume), and
-    the distinct grams that left-join the statistics derive FROM it —
-    Spark/AQE does not share a subtree across consumers, so without
-    the materialization the distinct-grams side re-scanned and
-    re-exploded the whole corpus.  NULL statistics are exactly the
-    backoff semantics; the stat joins broadcast at gate scale and
-    hash-join type-sized tables at cluster scale.  Persist the model
-    parquet once; daily crawls score against it instead of re-fitting
-    — and pass ``normalize_model=False`` for a model that is already
-    one fit's output (the normalization groupBy exists to make a plain
-    ``unionByName`` of per-shard fits a valid model; a single persisted
-    fit is already aggregated, and skipping the model-sized shuffle is
-    measurably cheaper per scoring run).
+    A model without vocabulary rows, with NULL ``w1``, with ``w2``
+    NULL but ``w3`` set, or with trigrams but no bigram level raises.
+    ``cache_model``, ``checkpoint_dir`` and ``normalize_model`` as in
+    :func:`kn_bigram_score`.
     """
-    if not 0 < discount < 1:
-        raise ValueError(
-            f"kn_trigram_score: discount must be in (0, 1), got {discount}"
-        )
-    for c in ("w1", "w2", "w3", "ct"):
-        if c not in model.columns:
-            raise ValueError(
-                "kn_trigram_score: model must be a kn_trigram_fit relation "
-                f"with columns (w1, w2, w3, ct) — missing {c!r}"
-            )
-    from .materialize import materialize
-    from .sampling import _fresh_name
-
-    # normalize first (the kn_bigram_score rule): an unmerged union of
-    # per-shard fits carries duplicate gram rows that would double-count
-    # statistics — aggregating makes plain unionByName of shard fits a
-    # valid model; a merged model passes through unchanged (and a
-    # single persisted fit can skip the shuffle: normalize_model=False)
-    if normalize_model:
-        model = model.groupBy("w1", "w2", "w3").agg(F.sum("ct").alias("ct"))
-    # eager materialization of the normalized, gram-type-sized relation
-    # so an unpersisted kn_trigram_fit lineage executes once (lazy
-    # .cache() measured slower than recompute — kn_bigram_score's note)
-    if cache_model:
-        model = materialize(model, checkpoint_dir)
-    src = ensure_parallelism(df)
-    # staged token array (word_ngrams_col contract)
-    tk = _fresh_name("__toks", src.columns)
-    toked = src.select(
-        F.col(id_col), normalized_tokens(F.col(text_col)).alias(tk)
-    )
-    tkn = tk
-
-    has3 = F.col("w3").isNotNull()
-    has2 = F.col("w2").isNotNull()
-    # same contract as kn_bigram_score: vocabulary rows are required
-    # (the continuation denominator and the OOV floor need V); rows
-    # with (w2 NULL, w3 set) or NULL w1 belong to no model level; a
-    # trigram level without its bigram level is impossible from a real
-    # fit and would silently collapse P1 to uniform 1/V — all rejected
-    # in the same lazy scalars action (no extra pass)
-    scalars = model.agg(
-        F.coalesce(
-            F.sum(F.when(has2 & ~has3, F.lit(1))), F.lit(0)
-        ).alias("n_types"),
-        F.coalesce(
-            F.sum(F.when(~has2 & ~has3, F.lit(1))), F.lit(0)
-        ).alias("__v_raw"),
-        F.coalesce(
-            F.sum(
-                F.when((~has2 & has3) | F.col("w1").isNull(), F.lit(1))
-            ),
-            F.lit(0),
-        ).alias("__bad"),
-        F.coalesce(F.sum(F.when(has2 & has3, F.lit(1))), F.lit(0)).alias(
-            "__n_tri"
-        ),
-    ).select(
-        "n_types",
-        F.when(
-            (F.col("__v_raw") <= 0)
-            | (F.col("__bad") > 0)
-            | ((F.col("__n_tri") > 0) & (F.col("n_types") <= 0)),
-            F.raise_error(
-                F.lit(
-                    "kn_trigram_score: model is not a kn_trigram_fit "
-                    "relation (missing unigram vocabulary rows, rows with "
-                    "NULL w1 or with w2 NULL but w3 set, or a trigram "
-                    "level without its bigram level) — refit or repair "
-                    "the model"
-                )
-            ).cast("long"),
-        ).otherwise(F.col("__v_raw")).alias("v"),
-    )
-
-    tri_model = model.where(has2 & has3)
-    bi_model = model.where(has2 & ~has3)
-    tri_totals = tri_model.select(
-        F.concat_ws(" ", "w1", "w2", "w3").alias("tgram"),
-        F.col("ct").alias("ct_tri"),
-    )
-    top_prefix = tri_model.groupBy(
-        F.concat_ws(" ", "w1", "w2").alias("pfx12")
-    ).agg(F.sum("ct").alias("ct_pfx12"), F.count("*").alias("n1p_top"))
-    mid_bi = tri_model.groupBy(
-        F.concat_ws(" ", "w2", "w3").alias("big23")
-    ).agg(F.count("*").alias("n1p_mid_bi"))
-    mid_w2 = mid_bi.groupBy(
-        F.split(F.col("big23"), " ")[0].alias("mid_w")
-    ).agg(
-        F.sum("n1p_mid_bi").alias("n1p_mid_tot"),
-        F.count("*").alias("n1p_mid_fwd"),
-    )
-    cont_counts = bi_model.groupBy(F.col("w2").alias("cont")).agg(
-        F.count("*").alias("n1p_bwd")
-    )
-
-    # corpus events: [t1] ++ ["t1 t2"] ++ trigrams, ONE tokenize/
-    # explode pass into one (doc, gram) shuffle.  The events relation
-    # is consumed twice (scoring join + the distinct-gram stat side),
-    # and AQE does not share exchanges across consumers, so it is
-    # materialized — both consumers then re-read blocks instead of
-    # re-scanning and re-exploding the corpus
-    ev_arr = F.concat(
-        _kn_first_event(tkn), _kn_second_event(tkn), _kn_true_grams(tkn, 3)
-    )
-    # eager: filling the blocks lazily from inside the broadcast-build
-    # thread measured unstable (2.2-4.9s at sf0.1 across runs) while the
-    # dedicated job is stable — and the blocks must exist before BOTH
-    # consumers anyway
-    events = materialize(
-        _doc_term_tf(toked, id_col, ev_arr),
-        checkpoint_dir,
-        eager=True,
-    )
-    ev_types = events.select("gram").distinct()
-
-    # unseen trigram -> ct_tri 0 (pure discount mass); unseen prefix ->
-    # the whole probability backs off to P2 (main term 0, lambda 1) —
-    # the kn_bigram_score rule one order up.  One-parse SQL trees (r11,
-    # see _kn3_sql_parts).
-    kq = _kn3_sql_parts(
-        discount,
-        ct_sql="CAST(coalesce(ct_tri, 0) AS DOUBLE)",
-        unseen_prefix_backoff=True,
-    )
-    scores = (
-        ev_types.join(tri_totals, F.col("gram") == F.col("tgram"), "left")
-        .join(top_prefix, F.expr(f"({kq['pfx']}) = pfx12"), "left")
-        .join(mid_bi, F.expr(f"({kq['tail2']}) = big23"), "left")
-        .join(mid_w2, F.expr(f"({kq['mid']}) = mid_w"), "left")
-        .join(cont_counts, F.expr(f"({kq['last']}) = cont"), "left")
-        .crossJoin(F.broadcast(scalars))
-        .select("gram", F.expr(kq["nll"]).alias("__nll"))
-    )
-    scored = events.join(scores, "gram").select(
-        F.col(id_col),
-        F.col("tf").cast("bigint").alias("events"),
-        F.expr(_KN_MICRO_SQL).alias("nll_micro"),
-    )
-    return _kn_per_doc(scored, id_col)
+    return _kn_external(df, model, text_col, id_col, discount, cache_model,
+                        checkpoint_dir, normalize_model, 3,
+                        "kn_trigram_score")
 
 
 # Unicode script blocks for script_profile, in PRECEDENCE order (the

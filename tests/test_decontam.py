@@ -959,6 +959,39 @@ def test_kn_fit_score_equals_selftrained(spark, sf_dir):
     assert split == joint
 
 
+@pytest.mark.parametrize("order", [2, 3])
+def test_kn_fit_score_equals_selftrained_short_docs(spark, order):
+    """At both orders, external scoring against the corpus's own fit is
+    row-identical to the self-trained scorer on the shapes the sf0.001
+    sweeps never hit: empty and NULL docs, docs shorter than the order,
+    repeated grams, and a crawl doc whose words occur nowhere else."""
+    from aqueducts_spark.operators import text
+
+    name = {2: "bigram", 3: "trigram"}[order]
+    logprob, fit, score = (
+        getattr(text, f"kn_{name}_{f}") for f in ("logprob", "fit", "score")
+    )
+    df = spark.createDataFrame(
+        [
+            (1, ""),
+            (2, None),
+            (3, "solo"),
+            (4, "two words"),
+            (5, "now three tokens"),
+            (6, "a b a b a b a b"),
+            (7, "the cat sat on the mat the cat sat"),
+            (8, "Zyx QWV the cat blorp"),
+        ],
+        "doc_id long, text string",
+    )
+    joint = sorted(map(tuple, logprob(df).collect()))
+    assert sorted(map(tuple, score(df, fit(df)).collect())) == joint
+    assert {r[0]: r[1] for r in joint} == {
+        3: 1, 4: 2, 5: 3, 6: 8, 7: 9, 8: 5
+    }
+    assert all(r[2] > 0 for r in joint)
+
+
 def test_kn_score_external_model_oov_finite(spark):
     """Scoring a corpus with OOV words, unseen prefixes and unseen
     bigrams against an external fit stays finite and ordered sanely."""

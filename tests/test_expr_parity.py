@@ -1,6 +1,6 @@
 """Construction parity for the r11 one-parse (F.expr) fast paths.
 
-The str-input forms of word_ngrams_col / _kn_* / _gram_buckets and the
+The str-input forms of word_ngrams_col / _kn_events / _gram_buckets and the
 SQL-rendered internals of _doc_term_tf exist purely to cut driver-side
 py4j round-trips (~0.4 s per word_ngrams_col(n=13) call); they must
 build the SAME expression tree the Column forms build.  These tests pin
@@ -47,22 +47,41 @@ def test_word_ngrams_str_vs_column(spark):
 
 
 def test_kn_event_helpers_str_vs_column(spark):
-    from aqueducts_spark.operators.text import (
-        _kn_first_event,
-        _kn_second_event,
-        _kn_true_grams,
-    )
+    """The one-parse KN event builder over orders 2 and 3 equals the
+    Column-built tree (the first k-gram for each k < n, then the real
+    n-grams) and a pure-Python replay of the same event list."""
+    from aqueducts_spark.operators.dedup import word_ngrams_col
+    from aqueducts_spark.operators.text import _kn_events
 
     df = _tok_df(spark)
-    for fn in (_kn_first_event, _kn_second_event):
-        a = df.select(fn(F.col("tk")).alias("e"))
-        b = df.select(fn("tk").alias("e"))
-        assert a.schema == b.schema
-        assert a.collect() == b.collect(), fn.__name__
+    tk = F.col("tk")
+    toks = [r.tk for r in df.collect()]
     for n in (2, 3):
-        a = df.select(_kn_true_grams(F.col("tk"), n).alias("e"))
-        b = df.select(_kn_true_grams("tk", n).alias("e"))
-        assert a.collect() == b.collect(), f"_kn_true_grams n={n}"
+        firsts = [
+            F.slice(
+                F.array(F.concat_ws(" ", F.slice(tk, 1, k))),
+                1,
+                F.least(F.greatest(F.size(tk) - (k - 1), F.lit(0)), F.lit(1)),
+            )
+            for k in range(1, n)
+        ]
+        grams = F.slice(
+            word_ngrams_col(tk, n),
+            1,
+            F.greatest(F.size(tk) - (n - 1), F.lit(0)),
+        )
+        a = df.select(F.concat(*firsts, grams).alias("e"))
+        b = df.select(_kn_events("tk", n).alias("e"))
+        assert a.schema == b.schema
+        got = [r.e for r in b.collect()]
+        assert [r.e for r in a.collect()] == got, f"n={n}"
+        want = [
+            None if ts is None else
+            [" ".join(ts[:k]) for k in range(1, n) if len(ts) >= k]
+            + [" ".join(ts[i:i + n]) for i in range(len(ts) - n + 1)]
+            for ts in toks
+        ]
+        assert got == want, f"n={n}"
 
 
 def test_gram_buckets_str_vs_column(spark):

@@ -136,6 +136,23 @@ def test_validation(spark):
         )
 
 
+def test_bench_id_error_surfaces_before_a_corpus_error(spark):
+    """Duplicate benchmark ids are reported even when building the
+    corpus side fails first (here a misspelt corpus text column): the
+    background id check is read on every exit path."""
+    from aqueducts_spark.operators.decontam import contamination_report
+
+    dup_bench = spark.createDataFrame(
+        [(7, BASE), (7, "x")], "bench_key long, body string"
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        minhash_overlap(_corpus(spark), dup_bench, text_col="txet",
+                        bench_id_col="bench_key", bench_text_col="body")
+    with pytest.raises(ValueError, match="must be unique"):
+        contamination_report(_corpus(spark), dup_bench, text_col="txet",
+                             bench_id_col="bench_key", bench_text_col="nobody")
+
+
 def test_benchmark_side_joins_are_broadcast(spark):
     plan = (
         minhash_overlap(

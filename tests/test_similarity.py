@@ -266,6 +266,32 @@ def test_embed_neardup_lsh_tolerates_null_vectors(spark):
     assert [(r.id_a, r.id_b) for r in got] == [(2, 3)]
 
 
+def test_embed_neardup_lsh_rejects_ragged_dims(spark):
+    """Vectors of different dims in one partition raise a ValueError
+    naming the operator and both dims: within one Arrow batch (where
+    numpy's vstack used to fail bare) and across batches (where the
+    second dim used to get its own plane matrix, silently)."""
+    from aqueducts_spark.operators.dedup import embedding_near_duplicates_lsh
+
+    rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.1, 0.0]), (3, [1.0, 0.0])]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in ("10000", "2"):
+            spark.conf.set(key, batch)
+            with pytest.raises(
+                Exception,
+                match=r"embedding_near_duplicates_lsh: ragged embedding "
+                r"dims 3 and 2",
+            ):
+                embedding_near_duplicates_lsh(df, threshold=0.9).collect()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_default_image_codec_resolves_by_availability(monkeypatch):
     """The codec swap point self-resolves: fake without Pillow, PIL
     decoder when importable."""

@@ -1,6 +1,10 @@
 """Isolated timing for the KN gate family vs their DuckDB oracles.
 
 Usage: python tools/kn_bench.py [gate ...]   (default: all three)
+
+Runs on local[$SPARK_GRAFT_CPUS] (default: the cores this process may
+use) with as many shuffle partitions, over $SPARK_GRAFT_SF_DIR; every
+result line records the cpus and the SF directory.
 """
 from __future__ import annotations
 
@@ -12,20 +16,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 GATES = sys.argv[1:] or ["op_kn_nll", "op_kn3_nll", "op_kn3_score"]
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or str(
+    len(os.sched_getaffinity(0))
+)
 
 
 def main() -> None:
     from aqueducts_spark.session import session_builder
 
     spark = (
-        session_builder("kn-bench", master="local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        session_builder("kn-bench", master=f"local[{CPUS}]")
+        .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:-UseCodeCacheFlushing",
-        )
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -40,7 +43,7 @@ def main() -> None:
     import duckdb
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count() or 8}")
+    con.execute(f"SET threads TO {CPUS}")
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"
@@ -66,7 +69,8 @@ def main() -> None:
                 obest = min(obest, time.monotonic() - t0)
         ratio = best / obest if obest > 0 else float("nan")
         print(
-            f"{name}: spark={best:.2f}s duck={obest:.2f}s ratio={ratio:.1f}x",
+            f"{name}: spark={best:.2f}s duck={obest:.2f}s "
+            f"ratio={ratio:.1f}x cpus={CPUS} sf={SF_DIR}",
             flush=True,
         )
     spark.stop()
