@@ -4002,7 +4002,7 @@ def _sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_recall_overlap(build_approx, emb, queries):
+def _ann_recall_overlap(build_approx, emb, queries, k):
     """Run an ANN gate's two independent arms concurrently (guide §2.6,
     overlap independent jobs): the recall-assert arm's exact brute-force
     top-k depends only on the corpus and the queries — never on the
@@ -4017,6 +4017,9 @@ def _ann_recall_overlap(build_approx, emb, queries):
     silently reused across bench repeats, turning best-of-3 into a
     cache-read measurement — checkpoints are per-call, so every repeat
     honestly pays the index compute exactly once.
+
+    ``k`` is the gate's own depth: the exact arm must rank as deep as
+    the approx arm, or recall compares different top-k sets.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -4024,7 +4027,7 @@ def _ann_recall_overlap(build_approx, emb, queries):
 
     def _exact():
         return (
-            brute_force_topk(emb, queries, k=10)
+            brute_force_topk(emb, queries, k=k)
             .select("query_id", F.col("neighbor_id").alias("exact_id"))
             .localCheckpoint(eager=True)
         )
@@ -4068,8 +4071,9 @@ def _sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    k = 10
     approx, exact = _ann_recall_overlap(
-        lambda: ivf_topk(emb, queries, k=10, n_centroids=8, nprobe=4).select(
+        lambda: ivf_topk(emb, queries, k=k, n_centroids=8, nprobe=4).select(
             "query_id",
             "neighbor_id",
             "cosine",
@@ -4077,12 +4081,13 @@ def _sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         emb,
         queries,
+        k,
     )
     # recall@10 with nprobe=4/8 centroids
     recall = _ann_recall(exact, approx)
     if recall < 0.5:
         raise AssertionError(
-            f"sim_ivf_topk: recall@10 {recall:.2f} < 0.5 vs brute force"
+            f"sim_ivf_topk: recall@{k} {recall:.2f} < 0.5 vs brute force"
         )
     return approx
 
@@ -4103,11 +4108,12 @@ def _sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    k = 10
     approx, exact = _ann_recall_overlap(
         lambda: ivfpq_topk(
             emb,
             queries,
-            k=10,
+            k=k,
             n_centroids=8,
             nprobe=4,
             n_subspaces=16,
@@ -4120,11 +4126,12 @@ def _sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         emb,
         queries,
+        k,
     )
     recall = _ann_recall(exact, approx)
     if recall < 0.5:
         raise AssertionError(
-            f"sim_ivfpq_topk: recall@10 {recall:.2f} < 0.5 vs brute force"
+            f"sim_ivfpq_topk: recall@{k} {recall:.2f} < 0.5 vs brute force"
         )
     return approx
 
@@ -4144,20 +4151,22 @@ def _sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
 
+    k = 10
+
     def _approx():
         books = train_pq(emb, n_subspaces=16, n_centroids=16)
-        return pq_topk(emb, queries, books, k=10, rerank=100).select(
+        return pq_topk(emb, queries, books, k=k, rerank=100).select(
             "query_id",
             "neighbor_id",
             "cosine",
             F.col("rank").cast("bigint").alias("rank"),
         )
 
-    approx, exact = _ann_recall_overlap(_approx, emb, queries)
+    approx, exact = _ann_recall_overlap(_approx, emb, queries, k)
     recall = _ann_recall(exact, approx)
     if recall < 0.7:
         raise AssertionError(
-            f"sim_pq_topk: recall@10 {recall:.2f} < 0.7 vs brute force"
+            f"sim_pq_topk: recall@{k} {recall:.2f} < 0.7 vs brute force"
         )
     return approx
 

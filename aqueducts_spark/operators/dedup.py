@@ -19,13 +19,16 @@ Scale design (100 TB):
 * n-gram Jaccard join is exposed for verification and small corpora;
   its doc-pair blowup makes LSH the scale path, and the docstring of
   each function says which to use;
-* SimHash packs a document into one 60-bit integer; near-dup candidates
-  are hamming-ball lookups over that integer.
+* SimHash packs a document into one 60-bit integer, or an array of two
+  for up to 120 bits; near-dup candidates are hamming-ball lookups over
+  that signature, by one width-generic core (``_simhash``,
+  ``_hamming_pairs``, ``_hamming_filter``).
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 from typing import Optional, Sequence
 
 import numpy as np
@@ -1106,134 +1109,116 @@ def jaccard_pairs(
     )
 
 
-def _token_hash60(col: Column, hash_fn: str = "md5") -> Column:
-    """First 60 bits of md5 as a non-negative bigint (15 hex chars keeps
-    the value inside a signed 64-bit int in every engine); or the
-    xxhash64 fast path (native codegen, Spark-internal determinism)."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(1 << 60))
-    if hash_fn != "md5":
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+def _check_width(name: str, arg: str, bits: int, wide: bool) -> None:
+    lo, hi = (61, 120) if wide else (1, 60)
+    if not lo <= bits <= hi:
+        use = f" (use {name.removesuffix('_wide')} for <= 60)" if wide else ""
+        raise ValueError(f"{name}: {arg} must be in {lo}..{hi}{use}, got {bits}")
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """60-bit SimHash per document: bit b of the fingerprint is 1 iff
-    more token hashes have bit b set than unset.
+def _check_radius(name: str, sig_bits: int, max_hamming: int, wide: bool) -> None:
+    _check_width(name, "sig_bits", sig_bits, wide)
+    if not 0 <= max_hamming < sig_bits:
+        raise ValueError(
+            f"{name}: max_hamming must be in 0..{sig_bits - 1}, got {max_hamming}"
+        )
 
-    Pure relational form: explode tokens -> one bit-count sum per bit in
-    a single aggregation (60 expressions, one shuffle). Near-duplicate
-    lookup is then hamming distance on a single bigint —
-    ``bit_count(a ^ b)`` — which at scale is a cheap integer compare,
-    not a text comparison.
 
-    The per-token expression is the raw bit ``sum((h >> b) & 1)`` plus
-    one shared ``count(*)`` — integer-identical to the textbook
-    ``sum(bit ? +1 : -1) > 0`` form (``2*set > n`` ⇔ ``set - unset >
-    0``) while dropping a branch from the per-token-per-bit hot loop
-    (60 CASEs per exploded token was the dominant cost of the scan).
+def _sig_elems(sig: Column, sig_bits: int, wide: bool) -> list[Column]:
+    """A signature as its 60-bit elements: the BIGINT itself, or each
+    element of an ``array<long>``."""
+    if not wide:
+        return [sig]
+    return [F.element_at(sig, e + 1) for e in range(-(-sig_bits // 60))]
+
+
+def _sig_check(sig: Column, sig_bits: int, wide: bool) -> tuple[Column, str]:
+    """The predicate a signature must satisfy, and what a failing one is.
+
+    Element ``e`` must lie in ``[0, 2^width_e)`` (60 bits, the last one
+    ``sig_bits - 60e``): a bit outside the declared width sits outside
+    every band and silently breaks the completeness guarantee.  An
+    array must also have exactly its element count, tested FIRST so
+    ``element_at`` never reads past a short array.
     """
-    if not 1 <= bits <= 60:
-        # the token hash is 60 bits: bits 61-63 would silently always be
-        # zero and 1<<63 overflows the BIGINT literal under ANSI
-        raise ValueError(f"simhash: bits must be in 1..60, got {bits}")
-    src = ensure_parallelism(df)
-    # NULL-id documents ride a per-text working key ('\x00' + md5 of
-    # the text — cannot collide with a cast id unless an id string
-    # starts with '\x00'): a NULL group key would merge EVERY NULL-id
-    # document into one aggregate and fingerprint each over the union
-    # of all their tokens.  Identical NULL-id texts share a key, which
-    # is exact (same text ⇒ same fingerprint).
-    wk = "__sh_key"
-    while wk in src.columns:
-        wk = "_" + wk
-    keyed = src.withColumn(
-        wk,
-        F.when(
-            F.col(id_col).isNull(),
-            F.concat(
-                F.lit("\x00"),
-                F.md5(F.coalesce(F.col(text_col), F.lit("\x00NULL"))),
-            ),
-        ).otherwise(F.col(id_col).cast("string")),
-    )
-    toks = keyed.select(
-        F.col(wk), F.explode(normalized_tokens(F.col(text_col))).alias("tok")
-    )
-    hashed = toks.withColumn("h", _token_hash60(F.col("tok"), hash_fn))
-    # expressions are SQL strings, not Column compositions: 60 sums
-    # built from ~5 py4j calls each cost ~1s of driver time per plan
-    # construction (measured), vs one JVM-side parse per F.expr
-    bit_sums = [
-        F.expr(f"sum(shiftright(h, {b}) & 1) AS b{b}") for b in range(bits)
+    elems = _sig_elems(sig, sig_bits, wide)
+    conds = [F.size(sig) == len(elems)] if wide else []
+    conds += [
+        (el >= 0) & (el < F.lit(1 << min(60, sig_bits - 60 * e)))
+        for e, el in enumerate(elems)
     ]
-    agg = hashed.groupBy(wk).agg(F.expr("count(*) AS __n"), *bit_sums)
-    fingerprint = " + ".join(
-        f"IF(b{b} * 2 > __n, CAST({1 << b} AS BIGINT), CAST(0 AS BIGINT))"
-        for b in range(bits)
+    shape = (
+        f"is not {len(elems)} elements of [0, 2^60) covering {sig_bits} bits"
+        if wide else f"outside [0, 2^{sig_bits})"
     )
-    fingerprints = agg.select(F.col(wk), F.expr(f"({fingerprint}) AS simhash"))
-    # explode emits no rows for empty/whitespace/NULL text, which
-    # silently LOST those documents from the output; reinstate them
-    # with fingerprint 0 (no tokens -> every bit majority is 0), the
-    # same keep-the-row contract drop_common_lines documents.  The
-    # working key is never NULL, so a plain equi-join reinstates
-    # NULL-id documents with their own computed fingerprint too.
-    base = keyed.select(id_col, wk)
-    return (
-        base.join(fingerprints, wk, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("simhash", F.lit(0).cast("bigint")).alias("simhash"),
-        )
-    )
+    return reduce(Column.__and__, conds), shape
 
 
-def simhash_wide(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 120,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Wide SimHash (61..120 bits) as ``array<long>`` — 60 bits per
-    element, the scale answer :func:`hamming_pairs` documents: at a
-    fixed 60-bit signature, random band agreement ~2^-(60/bands) makes
-    banded candidates quadratic past ~10^6 documents; doubling the
-    signature squares the per-band miss rate for the SAME band count
-    (bands=4 over 120 bits = 30-bit bands: random agreement 2^-30,
-    candidates stay ~n up to n ≈ 10^9).
+def _hamming(a: Column, b: Column, sig_bits: int, wide: bool) -> Column:
+    """Exact Hamming distance: the element-wise ``bit_count(a ^ b)`` sum."""
+    pairs = zip(_sig_elems(a, sig_bits, wide), _sig_elems(b, sig_bits, wide))
+    return reduce(Column.__add__, [F.bit_count(x.bitwiseXOR(y)) for x, y in pairs])
 
-    Token hashes take two INDEPENDENT 60-bit slices of the 128-bit md5
-    (hex chars 1-15 and 16-30 — disjoint digest bits, so element bits
-    are independent exactly like the single-long form's), or two
-    differently-seeded xxhash64 digests on the fast path.  Same
-    contracts as :func:`simhash`: NULL-id docs fingerprint per-text
-    under a working key, empty/NULL text keeps its row with an
-    all-zero signature, one explode + one aggregation.
 
-    Pair with :func:`hamming_pairs_wide`.  For <= 60 bits use
-    :func:`simhash` (single BIGINT, cheaper joins).
+def _band_values(elems: list[Column], sig_bits: int, bands: int) -> list[Column]:
+    """Balanced contiguous bands over the concatenated ``sig_bits``: the
+    first ``sig_bits % bands`` bands get one extra bit, and a band that
+    straddles an element boundary assembles its value from both."""
+    base_w, extra = divmod(sig_bits, bands)
+    vals, off = [], 0
+    for b in range(bands):
+        end = off + base_w + (b < extra)
+        parts, lo = [], off
+        while lo < end:
+            e = lo // 60
+            hi = min(end, 60 * (e + 1))
+            part = F.shiftright(elems[e], lo - 60 * e).bitwiseAND(
+                F.lit((1 << (hi - lo)) - 1)
+            )
+            parts.append(F.shiftleft(part, lo - off) if lo > off else part)
+            lo = hi
+        vals.append(reduce(Column.bitwiseOR, parts))
+        off = end
+    return vals
+
+
+def _simhash(df, id_col, text_col, bits, hash_fn, wide) -> DataFrame:
+    """SimHash (Charikar 2002) of each document in ``n = ceil(bits/60)``
+    60-bit elements: bit ``g`` is 1 iff more of the document's token
+    hashes have bit ``g`` set than unset.  One BIGINT when ``wide`` is
+    False, else an ``array<long>``.
+
+    Each token is hashed ONCE into ``n`` independent 60-bit slices (60
+    bits keep every element a non-negative BIGINT, and ``1 << 63``
+    would overflow the literal under ANSI): md5 hex chars ``1-15`` and
+    ``16-30`` (disjoint digest bits), or ``pmod(xxhash64(tok), 2^60)``
+    and ``pmod(xxhash64(1, tok), 2^60)`` on the native fast path.  The
+    md5 digest is its own projection so it runs once per token however
+    many slices read it.
+
+    Pure relational form: one explode, then one aggregation of
+    ``sum((h >> b) & 1)`` per bit plus one shared ``count(*)``, which is
+    integer-identical to the textbook ``sum(bit ? +1 : -1) > 0``
+    (``2*set > n`` iff ``set - unset > 0``) without a branch in the
+    per-token-per-bit loop.  The expressions are SQL text parsed once
+    each: Column compositions cost ~1 s of plan construction in Python.
+
+    NULL-id documents group under a working key ``'\\x00' + md5(text)``
+    (it cannot collide with a cast id unless that id starts with
+    ``'\\x00'``): a NULL group key would merge every NULL-id document
+    into one aggregate.  Identical NULL-id texts share a key, which is
+    exact.  Explode emits no rows for NULL, empty or whitespace-only
+    text; the final left join keeps those rows with an all-zero
+    signature (no tokens, so every bit majority is 0).
     """
-    if not 61 <= bits <= 120:
-        raise ValueError(
-            f"simhash_wide: bits must be in 61..120 (use simhash for "
-            f"<= 60), got {bits}"
-        )
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(
-            f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}"
-        )
+    from .sampling import _fresh_name
+    from .sketch import _check_hash_fn
+
+    _check_width("simhash_wide" if wide else "simhash", "bits", bits, wide)
+    _check_hash_fn(hash_fn)
+    n_elem = -(-bits // 60)
     src = ensure_parallelism(df)
-    wk = "__sh_key"
-    while wk in src.columns:
-        wk = "_" + wk
+    wk = _fresh_name("__sh_key", src.columns)
     keyed = src.withColumn(
         wk,
         F.when(
@@ -1248,143 +1233,100 @@ def simhash_wide(
         F.col(wk), F.explode(normalized_tokens(F.col(text_col))).alias("tok")
     )
     if hash_fn == "md5":
-        # hash-once discipline (the sketch.py lesson): materialize the
-        # digest as its OWN projection — CollapseProject keeps a
-        # multi-referenced non-cheap expression in its own project, so
-        # md5 runs once per token; inlining it into both slices
-        # re-computes it per reference
-        dig = toks.withColumn("__d", F.md5(F.col("tok")))
-        hashed = dig.select(
-            F.col(wk),
-            F.conv(F.substring(F.col("__d"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h0"),
-            F.conv(F.substring(F.col("__d"), 16, 15), 16, 10)
-            .cast("long")
-            .alias("h1"),
-        )
+        toks = toks.withColumn("__d", F.md5("tok"))
+        slices = [
+            F.conv(F.substring("__d", 1 + 15 * e, 15), 16, 10).cast("long")
+            for e in range(n_elem)
+        ]
     else:
-        h0 = F.pmod(F.xxhash64(F.col("tok")), F.lit(1 << 60))
-        h1 = F.pmod(F.xxhash64(F.lit(1), F.col("tok")), F.lit(1 << 60))
-        hashed = toks.withColumn("h0", h0).withColumn("h1", h1)
+        slices = [
+            F.pmod(F.xxhash64(*([F.lit(e)] if e else []), F.col("tok")),
+                   F.lit(1 << 60))
+            for e in range(n_elem)
+        ]
+    hashed = toks.select(
+        F.col(wk), *[h.alias(f"h{e}") for e, h in enumerate(slices)]
+    )
     bit_sums = [
-        F.expr(f"sum(shiftright(h{b // 60}, {b % 60}) & 1) AS b{b}")
-        for b in range(bits)
+        F.expr(f"sum(shiftright(h{g // 60}, {g % 60}) & 1) AS b{g}")
+        for g in range(bits)
     ]
     agg = hashed.groupBy(wk).agg(F.expr("count(*) AS __n"), *bit_sums)
-    n_elem = -(-bits // 60)
-    elems = []
-    for e in range(n_elem):
-        lo, hi = 60 * e, min(60 * (e + 1), bits)
-        recombine = " + ".join(
-            f"IF(b{g} * 2 > __n, CAST({1 << (g - lo)} AS BIGINT), "
+    elems = [
+        " + ".join(
+            f"IF(b{g} * 2 > __n, CAST({1 << (g % 60)} AS BIGINT), "
             "CAST(0 AS BIGINT))"
-            for g in range(lo, hi)
+            for g in range(60 * e, min(60 * (e + 1), bits))
         )
-        elems.append(f"({recombine})")
-    fingerprints = agg.select(
-        F.col(wk), F.expr(f"array({', '.join(elems)}) AS simhash")
-    )
-    zeros = F.array(*[F.lit(0).cast("long") for _ in range(n_elem)])
-    base = keyed.select(id_col, wk)
-    return base.join(fingerprints, wk, "left").select(
-        F.col(id_col),
-        F.coalesce("simhash", zeros).alias("simhash"),
-    )
+        for e in range(n_elem)
+    ]
+    fp = f"array({', '.join(elems)})" if wide else elems[0]
+    fingerprints = agg.select(F.col(wk), F.expr(f"({fp}) AS simhash"))
+    zero = F.lit(0).cast("bigint")
+    zeros = F.array(*[zero] * n_elem) if wide else zero
+    out = keyed.select(id_col, wk).join(fingerprints, wk, "left")
+    return out.select(F.col(id_col), F.coalesce("simhash", zeros).alias("simhash"))
 
 
-def hamming_pairs_wide(
-    df: DataFrame,
-    sig_col: str = "simhash",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: Optional[int] = None,
-    sig_bits: int = 120,
-    max_bucket_size: Optional[int] = 10_000,
-) -> DataFrame:
-    """:func:`hamming_pairs` over wide ``array<long>`` signatures
-    (:func:`simhash_wide`'s 60-bits-per-element layout): the same
-    Manku banded-table layout and pigeonhole completeness, with band
-    values assembled across element boundaries where a balanced band
-    straddles two longs.  Verification is the element-wise XOR popcount
-    sum.  Same contracts: NULL ids raise, NULL signatures drop, out-of-
-    range elements raise (a wrong sig_bits silently breaks banding),
-    ``max_bucket_size`` drops degenerate pileups, output
-    ``id_a < id_b, hamming <= max_hamming``, exactly-once per pair.
+def _hamming_pairs(df, sig_col, id_col, max_hamming, bands, sig_bits,
+                   max_bucket_size, wide) -> DataFrame:
+    """Near-duplicate pairs by Hamming distance over a SimHash-layout
+    signature (one BIGINT, or ``array<long>`` when ``wide``): the banded
+    table layout of Manku et al. 2007 §3.
+
+    **Completeness by pigeonhole**: the ``sig_bits`` bits split into
+    ``bands`` contiguous balanced blocks (:func:`_band_values`).  Two
+    signatures within Hamming distance ``max_hamming`` differ in at most
+    ``max_hamming`` blocks, so with ``bands >= max_hamming + 1`` (the
+    default) they agree exactly on at least one: the band equi-join
+    generates every true pair, and the exact XOR-popcount verification
+    makes precision 1.  There is no recall approximation; fewer bands
+    are rejected rather than silently lossy.  The one exception is
+    ``max_bucket_size``: buckets above it (e.g. an all-zero pileup) are
+    dropped before pairing; None keeps the strict guarantee.
+
+    **Candidate volume**: a random pair agrees on a given band with
+    probability ~``2^-(sig_bits/bands)``, so random candidates are
+    ``Theta(n^2 * bands * 2^-(sig_bits/bands))``, the arithmetic of
+    :func:`solve_lsh_params`.  Bands cannot drop below
+    ``max_hamming + 1``, so the knob that scales is the signature: 60
+    bits at bands=4 gives 15-bit bands, and random collisions
+    ~n²·4/2¹⁵ cross ``candidates ≈ n`` near n ≈ 8k; 120 bits at bands=4
+    gives 30-bit bands and stays ~n up to n ≈ 10^9.  Or screen against
+    an at-rest index with :func:`hamming_filter`, where only the new
+    side pays pair volume.
+
+    **Rules**: NULL ids raise (a pair needs two addressable rows), NULL
+    signatures drop (no fingerprint, no neighbors), and a signature
+    outside :func:`_sig_check` raises at execution.  Output ``id_a,
+    id_b, hamming int`` with ``id_a < id_b`` and ``hamming <=
+    max_hamming``, once per pair.
+
+    The exploded ``(band, value, id, sig)`` relation is slim and is
+    materialized after the bucket cap: the self-join's sides are two
+    consumers and write-path AQE reuses no exchange, so the upstream
+    signature computation would otherwise run twice.
     """
-    if not 61 <= sig_bits <= 120:
-        raise ValueError(
-            f"hamming_pairs_wide: sig_bits must be in 61..120 (use "
-            f"hamming_pairs for <= 60), got {sig_bits}"
-        )
-    if not 0 <= max_hamming < sig_bits:
-        raise ValueError(
-            f"hamming_pairs_wide: max_hamming must be in 0..{sig_bits - 1}, "
-            f"got {max_hamming}"
-        )
-    if bands is None:
-        bands = max_hamming + 1
+    name = "hamming_pairs_wide" if wide else "hamming_pairs"
+    _check_radius(name, sig_bits, max_hamming, wide)
+    bands = max_hamming + 1 if bands is None else bands
     if not max_hamming < bands <= sig_bits:
         raise ValueError(
-            f"hamming_pairs_wide: bands must be in "
-            f"{max_hamming + 1}..{sig_bits} (>= max_hamming + 1 for the "
-            f"pigeonhole completeness guarantee), got {bands}"
+            f"{name}: bands must be in {max_hamming + 1}..{sig_bits} "
+            f"(>= max_hamming + 1 for the pigeonhole completeness "
+            f"guarantee), got {bands}"
         )
-    n_elem = -(-sig_bits // 60)
     sig = F.col(sig_col)
-
-    def elem(e: int) -> Column:
-        return F.element_at(sig, e + 1)
-
-    elem_ok = F.lit(True)
-    for e in range(n_elem):
-        width = min(60, sig_bits - 60 * e)
-        elem_ok = elem_ok & (elem(e) >= 0) & (elem(e) < F.lit(1 << width))
-    guard = F.assert_true(
-        (F.size(sig) == n_elem) & elem_ok,
-        F.lit(
-            f"hamming_pairs_wide: signature is not {n_elem} elements of "
-            f"[0, 2^60) covering {sig_bits} bits — wrong sig_bits "
-            "silently breaks banding completeness"
-        ),
-    )
-    src = (
-        df.where(sig.isNotNull())
-        .where(
-            F.assert_true(
-                F.col(id_col).isNotNull(),
-                F.lit(
-                    "hamming_pairs_wide: NULL id — a pair needs two "
-                    "addressable rows; assign unique ids first"
-                ),
-            ).isNull()
-        )
-        .where(guard.isNull())
-    )
-    # balanced band widths over the CONCATENATED sig_bits; a band
-    # straddling an element boundary assembles its value from both
-    base_w, extra = divmod(sig_bits, bands)
-    vals, off = [], 0
-    for b in range(bands):
-        w = base_w + (1 if b < extra else 0)
-        parts = []
-        lo = off
-        while lo < off + w:
-            e = lo // 60
-            hi = min(off + w, 60 * (e + 1))
-            pw = hi - lo
-            part = F.shiftright(elem(e), lo - 60 * e).bitwiseAND(
-                F.lit((1 << pw) - 1)
-            )
-            parts.append(
-                F.shiftleft(part, lo - off) if lo > off else part
-            )
-            lo = hi
-        v = parts[0]
-        for p in parts[1:]:
-            v = v.bitwiseOR(p)
-        vals.append(v)
-        off += w
+    ok, shape = _sig_check(sig, sig_bits, wide)
+    src = df.where(sig.isNotNull())
+    for cond, msg in (
+        (F.col(id_col).isNotNull(),
+         "NULL id — a pair needs two addressable rows; assign unique ids first"),
+        (ok, f"signature {shape} — wrong sig_bits silently breaks banding "
+             "completeness"),
+    ):
+        src = src.where(F.assert_true(cond, F.lit(f"{name}: {msg}")).isNull())
+    vals = _band_values(_sig_elems(sig, sig_bits, wide), sig_bits, bands)
     slim = src.select(
         F.col(id_col).alias("__id"),
         sig.alias("__sig"),
@@ -1393,36 +1335,21 @@ def hamming_pairs_wide(
     if max_bucket_size is not None:
         from pyspark.sql.window import Window
 
-        slim = (
-            slim.withColumn(
-                "__bn",
-                F.count("*").over(Window.partitionBy("__band", "__bval")),
-            )
-            .where(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
-    # see hamming_pairs: the self-join's sides are two consumers and
-    # write-path AQE reuses nothing — materialize the slim relation so
-    # the wide-signature computation runs once
+        bucket = F.count("*").over(Window.partitionBy("__band", "__bval"))
+        slim = slim.withColumn("__bn", bucket).where(
+            F.col("__bn") <= max_bucket_size
+        ).drop("__bn")
     from .materialize import materialize
 
     slim = materialize(slim)
-    a = slim.select(
-        "__band", "__bval", F.col("__id").alias("id_a"),
-        F.col("__sig").alias("__sa"),
+    a, b = (
+        slim.select("__band", "__bval", F.col("__id").alias(f"id_{s}"),
+                    F.col("__sig").alias(f"__s{s}"))
+        for s in "ab"
     )
-    b = slim.select(
-        "__band", "__bval", F.col("__id").alias("id_b"),
-        F.col("__sig").alias("__sb"),
-    )
-    ham = None
-    for e in range(n_elem):
-        term = F.bit_count(
-            F.element_at(F.col("__sa"), e + 1).bitwiseXOR(
-                F.element_at(F.col("__sb"), e + 1)
-            )
-        )
-        ham = term if ham is None else ham + term
+    ham = _hamming(F.col("__sa"), F.col("__sb"), sig_bits, wide)
+    # merge hints: auto-broadcast could not size the post-explode side
+    # anyway (see embedding_near_duplicates_lsh)
     return (
         a.hint("merge")
         .join(b.hint("merge"), ["__band", "__bval"])
@@ -1431,6 +1358,83 @@ def hamming_pairs_wide(
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
+
+
+def _hamming_filter(df, index, sig_col, index_sig_col, max_hamming, sig_bits,
+                    wide) -> DataFrame:
+    """Drop rows whose signature lies within ``max_hamming`` of ANY
+    signature in ``index``: the ingestion-filter twin of
+    :func:`_hamming_pairs`.
+
+    Stateless, so it runs unchanged on a streaming frame: the drop is
+    one stream-static broadcast anti-join whose condition is the exact
+    verification itself.  An XOR-popcount per element per (row, index
+    entry) is cheaper than any LSH candidacy pre-check, so unlike
+    :func:`~.decontam.fuzzy_decontaminate_rowwise` the nested-loop join
+    needs no banding.  Each row pays ``n_index`` of them (~ns each):
+    fine for rate-limited streams and indexes into the millions; batch
+    corpus x corpus dedup should use :func:`_hamming_pairs`.
+
+    NULL input signatures are KEPT (no fingerprint, no neighbors), NULL
+    index rows are ignored, and a signature outside :func:`_sig_check`
+    raises on either side.  The check is folded into the join and filter
+    predicates (see weighted_sample for why a separate assert filter is
+    reorderable).
+    """
+    name = "hamming_filter_wide" if wide else "hamming_filter"
+    _check_radius(name, sig_bits, max_hamming, wide)
+    index_sig_col = index_sig_col if index_sig_col is not None else sig_col
+
+    def _checked(col: Column, side: str) -> Column:
+        ok, shape = _sig_check(col, sig_bits, wide)
+        return F.when(col.isNull() | ok, F.lit(True)).otherwise(
+            F.raise_error(F.lit(f"{name}: {side} signature {shape}"))
+            .cast("boolean")
+        )
+
+    from .sampling import _fresh_name
+
+    isig = _fresh_name("__hf_sig", df.columns)
+    idx = F.broadcast(
+        index.filter(_checked(F.col(index_sig_col), "index"))
+        .where(F.col(index_sig_col).isNotNull())
+        .select(F.col(index_sig_col).alias(isig))
+    )
+    src = df.filter(_checked(F.col(sig_col), "input"))
+    ham = _hamming(F.col(sig_col), F.col(isig), sig_bits, wide)
+    return src.join(idx, on=ham <= F.lit(max_hamming), how="left_anti")
+
+
+def simhash(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 60,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """SimHash of up to 60 bits per document as one BIGINT ``simhash``
+    column (see :func:`_simhash`).  Near-duplicate lookup is then
+    ``bit_count(a ^ b)`` on one integer: pair with :func:`hamming_pairs`
+    or screen with :func:`hamming_filter`.
+    """
+    return _simhash(df, id_col, text_col, bits, hash_fn, wide=False)
+
+
+def simhash_wide(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 120,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """SimHash of 61..120 bits as ``array<long>``, 60 bits per element
+    (see :func:`_simhash`); element 1 equals :func:`simhash` at 60 bits.
+    The scale answer for banded lookup: doubling the signature squares
+    the per-band miss rate at the same band count.  Pair with
+    :func:`hamming_pairs_wide`; for <= 60 bits use :func:`simhash`
+    (one BIGINT, cheaper joins).
+    """
+    return _simhash(df, id_col, text_col, bits, hash_fn, wide=True)
 
 
 def hamming_pairs(
@@ -1442,155 +1446,32 @@ def hamming_pairs(
     sig_bits: int = 60,
     max_bucket_size: Optional[int] = 10_000,
 ) -> DataFrame:
-    """Near-duplicate pairs by Hamming distance over an integer
-    signature column — the lookup half of :func:`simhash` (Charikar
-    2002; Manku et al. 2007 §3 describe exactly this banded-table
-    layout for web-scale simhash dedup), and equally the pairing stage
-    for any other <= 60-bit fingerprint (e.g.
-    :func:`~.multimodal.perceptual_hash` image signatures).
-
-    **Completeness by pigeonhole**: the signature's ``sig_bits`` bits
-    are split into ``bands`` contiguous blocks (balanced widths); two
-    signatures within Hamming distance ``max_hamming`` differ in at
-    most ``max_hamming`` blocks, so with ``bands >= max_hamming + 1``
-    (the default) they MUST agree exactly on at least one block — the
-    band equi-join generates every true pair, and the exact
-    ``bit_count(a ^ b)`` verification makes precision 1.  Unlike
-    MinHash/hyperplane LSH there is NO recall approximation at the
-    default banding; fewer bands are rejected rather than silently
-    lossy.  The exception is ``max_bucket_size``: degenerate buckets
-    (e.g. an all-zero-signature pileup) are dropped before pairing,
-    bounding the worst bucket — set it to None for the strict
-    guarantee.
-
-    Scale shape (the Manku layout, r9): the exploded (band, value, id)
-    relation is slim — signatures are one BIGINT, no text/vectors
-    travel — and is MATERIALIZED after the count-window cap, because
-    the self-join's two sides are two consumers and write-path AQE
-    reuses no exchange (the signature computation would run twice);
-    candidate pairs dedupe with one distinct and verify with a single
-    integer XOR — never corpus x corpus.
-
-    NULL ids are rejected loudly (a pair needs two addressable rows;
-    assign ids first), NULL signatures are dropped (no fingerprint, no
-    neighbors).  Signatures must lie in ``[0, 2^sig_bits)`` — validated
-    at execution, since an out-of-range bit would sit outside every
-    band and silently break the completeness guarantee.
-
-    Output: ``id_a, id_b, hamming int`` with ``id_a < id_b``,
-    ``hamming <= max_hamming``.
-
-    **Candidate volume at scale**: a random pair agrees on a given
-    band with probability ~``2^-(sig_bits/bands)``, so — the same
-    arithmetic as :func:`solve_lsh_params` — expected random
-    candidates are ``Theta(n^2 * bands * 2^-(sig_bits/bands))``.
-    Unlike hyperplane LSH the bit budget here is FIXED by the
-    signature (60 bits), and shrinking ``bands`` below
-    ``max_hamming+1`` is forbidden (completeness), so the knob that
-    scales is the SIGNATURE: at bands=4 the band width is 15 bits ⇒
-    random collisions ~n²·4/2¹⁵, which crosses `candidates ≈ n` around
-    n ≈ 8k and grows quadratically beyond.  For corpora past ~10⁶
-    documents use a longer fingerprint (simhash at 60 bits is the
-    64-bit-integer ceiling here; a 128-bit two-column variant is the
-    documented extension) or screen against an at-rest index with
-    :func:`hamming_filter` where only the NEW side pays pair volume.
-    ``max_bucket_size`` bounds the degenerate tail either way.
+    """Pairs within ``max_hamming`` bits over a BIGINT signature of
+    ``sig_bits`` <= 60 bits: :func:`simhash` fingerprints, or any other
+    such integer (e.g. :func:`~.multimodal.perceptual_hash`).  Complete
+    by pigeonhole at ``bands >= max_hamming + 1``; the contract, the
+    candidate-volume arithmetic and the NULL and range rules are on
+    :func:`_hamming_pairs`.  Output ``id_a, id_b, hamming int``.
     """
-    if not 1 <= sig_bits <= 60:
-        raise ValueError(
-            f"hamming_pairs: sig_bits must be in 1..60, got {sig_bits}"
-        )
-    if not 0 <= max_hamming < sig_bits:
-        raise ValueError(
-            f"hamming_pairs: max_hamming must be in 0..{sig_bits - 1}, "
-            f"got {max_hamming}"
-        )
-    if bands is None:
-        bands = max_hamming + 1
-    if not max_hamming < bands <= sig_bits:
-        raise ValueError(
-            f"hamming_pairs: bands must be in {max_hamming + 1}..{sig_bits} "
-            f"(>= max_hamming + 1 for the pigeonhole completeness "
-            f"guarantee), got {bands}"
-        )
-    sig = F.col(sig_col)
-    guard = F.assert_true(
-        (sig >= 0) & (sig < F.lit(1 << sig_bits)),
-        F.lit(
-            f"hamming_pairs: signature outside [0, 2^{sig_bits}) — wrong "
-            "sig_bits silently breaks banding completeness"
-        ),
-    )
-    src = (
-        df.where(sig.isNotNull())
-        .where(
-            F.assert_true(
-                F.col(id_col).isNotNull(),
-                F.lit(
-                    "hamming_pairs: NULL id — a pair needs two addressable "
-                    "rows; assign unique ids first"
-                ),
-            ).isNull()
-        )
-        .where(guard.isNull())
-    )
-    # balanced band widths: first (sig_bits % bands) bands get one extra
-    # bit; value b = (sig >> offset_b) & (2^width_b - 1)
-    base_w, extra = divmod(sig_bits, bands)
-    vals, off = [], 0
-    for b in range(bands):
-        w = base_w + (1 if b < extra else 0)
-        vals.append(
-            F.shiftright(sig, off).bitwiseAND(F.lit((1 << w) - 1))
-        )
-        off += w
-    slim = src.select(
-        F.col(id_col).alias("__id"),
-        sig.alias("__sig"),
-        F.posexplode(F.array(*vals)).alias("__band", "__bval"),
-    )
-    if max_bucket_size is not None:
-        from pyspark.sql.window import Window
+    return _hamming_pairs(df, sig_col, id_col, max_hamming, bands, sig_bits,
+                          max_bucket_size, wide=False)
 
-        slim = (
-            slim.withColumn(
-                "__bn",
-                F.count("*").over(Window.partitionBy("__band", "__bval")),
-            )
-            .where(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
-    # materialize the slim banded relation (r9): the self-join's two
-    # sides are two CONSUMERS, and on the write path AQE never reuses
-    # the shared exchange the merge hints canonicalize to — without
-    # this, the whole upstream signature computation (simhash/pHash
-    # over the corpus) executed twice.  The relation is bands x corpus
-    # rows of four integers — no text, no vectors.
-    from .materialize import materialize
 
-    slim = materialize(slim)
-    a = slim.select(
-        "__band", "__bval", F.col("__id").alias("id_a"), F.col("__sig").alias("__sa")
-    )
-    b = slim.select(
-        "__band", "__bval", F.col("__id").alias("id_b"), F.col("__sig").alias("__sb")
-    )
-    # merge hints: auto-broadcast could not size the post-explode side
-    # anyway (see embedding_near_duplicates_lsh)
-    return (
-        a.hint("merge")
-        .join(b.hint("merge"), ["__band", "__bval"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+def hamming_pairs_wide(
+    df: DataFrame,
+    sig_col: str = "simhash",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: Optional[int] = None,
+    sig_bits: int = 120,
+    max_bucket_size: Optional[int] = 10_000,
+) -> DataFrame:
+    """:func:`hamming_pairs` over :func:`simhash_wide`'s ``array<long>``
+    signatures of 61..120 bits; a band straddling the element boundary
+    takes its value from both elements (see :func:`_hamming_pairs`).
+    """
+    return _hamming_pairs(df, sig_col, id_col, max_hamming, bands, sig_bits,
+                          max_bucket_size, wide=True)
 
 
 def hamming_filter(
@@ -1601,69 +1482,14 @@ def hamming_filter(
     max_hamming: int = 3,
     sig_bits: int = 60,
 ) -> DataFrame:
-    """Drop rows whose signature lies within ``max_hamming`` of ANY
-    signature in ``index`` — the ingestion-filter twin of
-    :func:`hamming_pairs` (the live-crawl shape: fingerprint incoming
-    documents/images with :func:`simhash` /
-    :func:`~.multimodal.perceptual_hash`, then reject near-duplicates
-    of the existing corpus before they land).
-
-    STATELESS, so it runs unchanged on a streaming frame: the drop is
-    ONE stream-static broadcast ANTI-join whose condition is the exact
-    verification itself — ``bit_count(sig ^ index_sig) <= max_hamming``
-    is ONE integer instruction per (row, index entry), CHEAPER than any
-    LSH candidacy pre-check would be, so unlike
-    :func:`~.decontam.fuzzy_decontaminate_rowwise` the nested-loop
-    condition join needs no banding at all.  Cost model: each row pays
-    ``n_index`` XOR+popcounts (~ns each) — fine for rate-limited
-    streams and indexes into the millions; corpus x corpus BATCH dedup
-    should pair with :func:`hamming_pairs` (equi-join banding) instead.
-
-    NULL signatures on the input are KEPT (no fingerprint, no
-    neighbors — the :func:`hamming_pairs` contract); NULL index rows
-    are ignored.  Out-of-range signatures raise on either side (the
-    guard is folded into the join/filter predicates — see
-    weighted_sample for why a separate assert filter is reorderable).
+    """Drop rows within ``max_hamming`` of any BIGINT signature in
+    ``index`` (``index_sig_col``, default ``sig_col``): the stateless,
+    stream-safe ingestion screen for :func:`simhash` and
+    :func:`~.multimodal.perceptual_hash` fingerprints of ``sig_bits`` <=
+    60 bits (see :func:`_hamming_filter`).
     """
-    if not 1 <= sig_bits <= 60:
-        raise ValueError(
-            f"hamming_filter: sig_bits must be in 1..60, got {sig_bits}"
-        )
-    if not 0 <= max_hamming < sig_bits:
-        raise ValueError(
-            f"hamming_filter: max_hamming must be in 0..{sig_bits - 1}, "
-            f"got {max_hamming}"
-        )
-    index_sig_col = index_sig_col if index_sig_col is not None else sig_col
-    lim = F.lit(1 << sig_bits)
-
-    def _checked(col: Column, side: str) -> Column:
-        return F.when(
-            col.isNull() | ((col >= 0) & (col < lim)),
-            F.lit(True),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"hamming_filter: {side} signature outside "
-                    f"[0, 2^{sig_bits})"
-                )
-            ).cast("boolean")
-        )
-
-    from .sampling import _fresh_name
-
-    isig = _fresh_name("__hf_sig", df.columns)
-    idx = F.broadcast(
-        index.filter(_checked(F.col(index_sig_col), "index"))
-        .where(F.col(index_sig_col).isNotNull())
-        .select(F.col(index_sig_col).alias(isig))
-    )
-    src = df.filter(_checked(F.col(sig_col), "input"))
-    cond = (
-        F.bit_count(F.col(sig_col).bitwiseXOR(F.col(isig)))
-        <= F.lit(max_hamming)
-    )
-    return src.join(idx, on=cond, how="left_anti")
+    return _hamming_filter(df, index, sig_col, index_sig_col, max_hamming,
+                           sig_bits, wide=False)
 
 
 def hamming_filter_wide(
@@ -1674,60 +1500,11 @@ def hamming_filter_wide(
     max_hamming: int = 3,
     sig_bits: int = 120,
 ) -> DataFrame:
-    """:func:`hamming_filter` for wide ``array<long>`` signatures
-    (:func:`simhash_wide`'s layout): drop rows within ``max_hamming``
-    of ANY index signature.  Same shape and contracts — STATELESS
-    stream-static broadcast anti-join whose condition is the exact
-    element-wise XOR-popcount sum (a handful of integer instructions
-    per (row, index entry)); NULL input signatures are KEPT, NULL index
-    rows ignored, malformed signatures raise on either side.
+    """:func:`hamming_filter` over :func:`simhash_wide`'s ``array<long>``
+    signatures of 61..120 bits (see :func:`_hamming_filter`).
     """
-    if not 61 <= sig_bits <= 120:
-        raise ValueError(
-            f"hamming_filter_wide: sig_bits must be in 61..120 (use "
-            f"hamming_filter for <= 60), got {sig_bits}"
-        )
-    if not 0 <= max_hamming < sig_bits:
-        raise ValueError(
-            f"hamming_filter_wide: max_hamming must be in 0..{sig_bits - 1}, "
-            f"got {max_hamming}"
-        )
-    index_sig_col = index_sig_col if index_sig_col is not None else sig_col
-    n_elem = -(-sig_bits // 60)
-
-    def _checked(col: Column, side: str) -> Column:
-        ok = F.size(col) == n_elem
-        for e in range(n_elem):
-            width = min(60, sig_bits - 60 * e)
-            el = F.element_at(col, e + 1)
-            ok = ok & el.isNotNull() & (el >= 0) & (el < F.lit(1 << width))
-        return F.when(col.isNull() | ok, F.lit(True)).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"hamming_filter_wide: {side} signature is not "
-                    f"{n_elem} elements covering {sig_bits} bits"
-                )
-            ).cast("boolean")
-        )
-
-    from .sampling import _fresh_name
-
-    isig = _fresh_name("__hf_sig", df.columns)
-    idx = F.broadcast(
-        index.filter(_checked(F.col(index_sig_col), "index"))
-        .where(F.col(index_sig_col).isNotNull())
-        .select(F.col(index_sig_col).alias(isig))
-    )
-    src = df.filter(_checked(F.col(sig_col), "input"))
-    ham = None
-    for e in range(n_elem):
-        term = F.bit_count(
-            F.element_at(F.col(sig_col), e + 1).bitwiseXOR(
-                F.element_at(F.col(isig), e + 1)
-            )
-        )
-        ham = term if ham is None else ham + term
-    return src.join(idx, on=ham <= F.lit(max_hamming), how="left_anti")
+    return _hamming_filter(df, index, sig_col, index_sig_col, max_hamming,
+                           sig_bits, wide=True)
 
 
 def embedding_near_duplicates(

@@ -16,9 +16,10 @@ silently lost ~20 gate timings and failed to parse). Two changes:
   every benched gate with an ``oracle_sql()`` entry — is written to
   ``bench_out.json`` next to this file;
 * the stdout JSON line is kept under ~1900 chars: 2-decimal values,
-  compact separators, and (only if still too long) the smallest
-  entries dropped with an ``"omitted"`` count. ``bench_out.json`` is
-  always the authoritative record.
+  compact separators, and (only if still too long) the lowest-priority
+  gates of ``_GATE_PRIORITY`` dropped with an ``"omitted"`` count, the
+  same ones on every run. ``bench_out.json`` is always the
+  authoritative record.
 
 Isolation modes (r8 — the in-suite totals drift with JVM pressure as
 the suite grows; the r7 judge's isolated A/B proved the code was equal
@@ -291,6 +292,52 @@ def _oracle_timings(sf_dir: str, names: list[str]) -> dict[str, float]:
         con.close()
 
 
+# stdout is recorded only as its last 2000 bytes
+_LINE_BYTES = 1900
+# sizing stand-ins, as wide as a gate time (2 decimals, under 1000 s)
+# and the suite total (3 decimals) print: the cut then depends on the
+# gate set, never on this run's timings
+_WIDEST_GATE = 999.99
+_WIDEST_TOTAL = 99999.999
+
+
+def _stdout_line(out: dict) -> str:
+    """The one-line JSON summary of ``out`` that fits ``_LINE_BYTES``.
+
+    When every gate does not fit, gates drop from the tail of
+    ``_GATE_PRIORITY`` (only from this line; ``bench_out.json`` keeps
+    them), and the cut is sized with every value at its widest, so the
+    same gate set drops the same names on every run.
+    """
+    from __spark_entry__ import _GATE_PRIORITY
+
+    line = {
+        k: v for k, v in out.items()
+        if k not in ("oracle", "isolated", "isolated_errors")
+    }
+    line["detail"] = "bench_out.json"
+    if "errors" in line:
+        line["errors"] = {k: v[:80] for k, v in line["errors"].items()}
+    queries = out.get("queries", {})
+    rank = {k: i for i, k in enumerate(_GATE_PRIORITY)}
+    by_priority = sorted(queries, key=lambda k: (rank.get(k, len(rank)), k))
+
+    def dump(head: dict, values: dict) -> str:
+        obj = dict(head, queries=values)
+        if len(values) < len(queries):
+            obj["omitted"] = len(queries) - len(values)
+        return json.dumps(obj, separators=(",", ":"))
+
+    widest = dict(line, value=_WIDEST_TOTAL)
+    keep = len(by_priority)
+    while keep and len(
+        dump(widest, dict.fromkeys(by_priority[:keep], _WIDEST_GATE))
+    ) > _LINE_BYTES:
+        keep -= 1
+    kept = set(by_priority[:keep])
+    return dump(line, {k: round(v, 2) for k, v in queries.items() if k in kept})
+
+
 def _emit(out: dict, sf_dir: str, oracle: bool = True) -> None:
     """Write the full artifact to bench_out.json; print a line that
     fits the driver's 2000-byte stdout tail window."""
@@ -309,31 +356,7 @@ def _emit(out: dict, sf_dir: str, oracle: bool = True) -> None:
             fh.write("\n")
     except Exception:  # noqa: BLE001
         pass
-
-    line_obj = dict(out)
-    line_obj.pop("oracle", None)
-    line_obj.pop("isolated_errors", None)
-    line_obj["detail"] = "bench_out.json"
-    line_obj["queries"] = {
-        k: round(v, 2) for k, v in out.get("queries", {}).items()
-    }
-    line_obj.pop("isolated", None)
-    if "errors" in line_obj:
-        line_obj["errors"] = {
-            k: v[:80] for k, v in line_obj["errors"].items()
-        }
-    s = json.dumps(line_obj, separators=(",", ":"))
-    if len(s) > 1900:
-        # drop the cheapest gates from the stdout map only — they stay
-        # in bench_out.json; the driver artifact must parse
-        q = line_obj["queries"]
-        for k in sorted(q, key=q.get):
-            del q[k]
-            line_obj["omitted"] = len(out.get("queries", {})) - len(q)
-            s = json.dumps(line_obj, separators=(",", ":"))
-            if len(s) <= 1900:
-                break
-    print(s)
+    print(_stdout_line(out))
 
 
 def main() -> None:

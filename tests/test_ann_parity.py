@@ -140,3 +140,15 @@ def test_brute_force_scan_raises_on_value_nan(spark):
     with pytest.raises(Exception) as exc:
         S.brute_force_topk(corpus, queries, k=2).collect()
     assert "NaN component" in str(exc.value)
+
+
+def test_ann_recall_arms_rank_to_the_gate_depth(emb100, queries5):
+    # the ANN gates' recall check: the exact arm ranks as deep as the
+    # approx arm, at whatever k the gate uses
+    import __spark_entry__ as entrymod
+
+    approx, exact = entrymod._ann_recall_overlap(
+        lambda: S.brute_force_topk(emb100, queries5, k=3), emb100, queries5, 3
+    )
+    assert exact.count() == approx.count() == 5 * 3
+    assert entrymod._ann_recall(exact, approx) == 1.0

@@ -158,3 +158,31 @@ def test_coverage_md_totals_match_live_gates():
     assert m2 and int(m2.group(1)) == len(rows_only), (m2, rows_only)
     for key in rows_only:
         assert f"`{key}`" in text, f"rows-only key {key} not named in COVERAGE.md"
+
+
+def test_bench_stdout_line_drops_the_same_gates_whatever_the_timings():
+    # bench.py prints one line, recorded only as its last 2000 bytes;
+    # when every gate does not fit, the dropped gates must be the tail
+    # of _GATE_PRIORITY, not whichever ran fastest this time
+    import json
+
+    import bench
+
+    names = list(bench.BENCH_QUERIES)
+    outs = [
+        {"metric": "m", "value": v, "unit": "sec", "sf": 0.1,
+         "queries": {n: t(i) for i, n in enumerate(names)}}
+        for v, t in (
+            (1.5, lambda i: 0.5),
+            (12345.678, lambda i: (i * 7919 % 97) * 10.0 ** (i % 3 - 1) + 0.003),
+        )
+    ]
+    lines = [bench._stdout_line(o) for o in outs]
+    assert all(len(s) <= bench._LINE_BYTES for s in lines)
+    kept = [set(json.loads(s)["queries"]) for s in lines]
+    assert kept[0] == kept[1]
+    dropped = set(names) - kept[0]
+    assert dropped, "the full gate set should not fit one line"
+    rank = {k: i for i, k in enumerate(entrymod._GATE_PRIORITY)}
+    assert min(rank[k] for k in dropped) > max(rank[k] for k in kept[0])
+    assert json.loads(lines[0])["omitted"] == len(dropped)

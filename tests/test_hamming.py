@@ -516,3 +516,73 @@ def test_hamming_filter_wide_validation(spark):
     short = spark.createDataFrame([(1, [1])], "doc_id long, simhash array<long>")
     with _pytest.raises(Exception, match="covering 120 bits"):
         hamming_filter_wide(short, df).collect()
+
+
+# ---------------------------------------------------------------------------
+# width equivalence: each narrow function is the one-element wide case
+# ---------------------------------------------------------------------------
+
+
+def _width_frame(spark):
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    rows, nid = [], 0
+    for _ in range(6):
+        base = [rng.choice(vocab) for _ in range(14)]
+        for edits in range(4):
+            doc = list(base)
+            for _ in range(edits):
+                doc[rng.randrange(len(doc))] = rng.choice(vocab)
+            rows.append((nid, " ".join(doc)))
+            nid += 1
+    rows += [
+        (None, "a document without an id"),
+        (None, rows[0][1]),
+        (100, None),
+        (101, ""),
+        (102, "   "),
+        (103, "\t \n"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_narrow_functions_are_the_one_element_wide_case(spark, hash_fn):
+    from aqueducts_spark.operators.dedup import (
+        hamming_filter,
+        hamming_filter_wide,
+        hamming_pairs_wide,
+        simhash_wide,
+    )
+
+    docs = _width_frame(spark)
+    narrow = simhash(docs, bits=60, hash_fn=hash_fn).cache()
+    wide = simhash_wide(docs, bits=120, hash_fn=hash_fn)
+    first = wide.select("doc_id", F.element_at("simhash", 1).alias("simhash"))
+    assert sorted(map(tuple, first.collect()), key=repr) == sorted(
+        map(tuple, narrow.collect()), key=repr
+    )
+
+    lifted = narrow.select(
+        "doc_id", F.array("simhash", F.lit(0).cast("long")).alias("simhash")
+    )
+    ided = narrow.where(F.col("doc_id").isNotNull())
+    pairs = hamming_pairs(ided, max_hamming=6, max_bucket_size=None).collect()
+    pairs_wide = hamming_pairs_wide(
+        lifted.where(F.col("doc_id").isNotNull()),
+        max_hamming=6, sig_bits=61, max_bucket_size=None,
+    ).collect()
+    assert {tuple(r) for r in pairs} == {tuple(r) for r in pairs_wide}
+    assert any(r.hamming > 0 for r in pairs)  # near, not only exact, pairs
+
+    idx = narrow.where(F.col("doc_id") % 4 == 0).select("simhash")
+    idx_wide = lifted.where(F.col("doc_id") % 4 == 0).select("simhash")
+    kept = hamming_filter(narrow, idx, max_hamming=8).collect()
+    kept_wide = hamming_filter_wide(
+        lifted, idx_wide, max_hamming=8, sig_bits=61
+    ).collect()
+    assert sorted((r.doc_id for r in kept), key=repr) == sorted(
+        (r.doc_id for r in kept_wide), key=repr
+    )
+    assert 0 < len(kept) < docs.count()
+    narrow.unpersist()

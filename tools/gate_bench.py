@@ -1,13 +1,18 @@
-"""Isolated timing for the KN gate family vs their DuckDB oracles.
+"""Isolated timing and result hash for bench gates vs their DuckDB oracles.
 
-Usage: python tools/kn_bench.py [gate ...]   (default: all three)
+Usage: python tools/gate_bench.py [gate ...]   (default: the three KN gates)
 
 Runs on local[$SPARK_GRAFT_CPUS] (default: the cores this process may
-use) with as many shuffle partitions, over $SPARK_GRAFT_SF_DIR; every
-result line records the cpus and the SF directory.
+use) with as many shuffle partitions, over $SPARK_GRAFT_SF_DIR.  Each
+line gives the best-of-3 Spark and DuckDB times, then ``rows=`` and
+``sha=`` (sha256 of the rows canonicalized as tools/oracle_check.py
+does: columns by name, floats to 10 significant digits, rows sorted),
+the cpus and the SF directory.  Run it in two checkouts to check that a
+change keeps a gate's output hash for hash.
 """
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -23,9 +28,10 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or str(
 
 def main() -> None:
     from aqueducts_spark.session import session_builder
+    from oracle_check import canon
 
     spark = (
-        session_builder("kn-bench", master=f"local[{CPUS}]")
+        session_builder("gate-bench", master=f"local[{CPUS}]")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -68,9 +74,12 @@ def main() -> None:
                 con.execute(oracles[name]).fetchall()
                 obest = min(obest, time.monotonic() - t0)
         ratio = best / obest if obest > 0 else float("nan")
+        rows = canon(df.collect(), df.columns)
+        sha = hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
         print(
             f"{name}: spark={best:.2f}s duck={obest:.2f}s "
-            f"ratio={ratio:.1f}x cpus={CPUS} sf={SF_DIR}",
+            f"ratio={ratio:.1f}x rows={len(rows)} sha={sha} "
+            f"cpus={CPUS} sf={SF_DIR}",
             flush=True,
         )
     spark.stop()
