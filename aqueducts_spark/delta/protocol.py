@@ -30,20 +30,22 @@ fallback that still speaks the real protocol.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from datetime import datetime, timezone
 from pathlib import Path
-from typing import Any, Optional
+from typing import Any, Iterable, Optional, Sequence
 from urllib.parse import quote, unquote
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +57,8 @@ LOG_DIR = "_delta_log"
 CDC_DIR = "_change_data"
 LAST_CHECKPOINT = "_last_checkpoint"
 CHECKPOINT_INTERVAL = 10
+# column :meth:`DeltaProtocolTable._read_snapshot` adds with ``with_file``
+_FILE_COL = "__file"
 
 # reader features this implementation understands; anything else in a
 # protocol-v3 readerFeatures list is refused loudly rather than misread
@@ -171,6 +175,43 @@ def _to_logical(
     )
 
 
+# marker of a row that failed a constraint assertion of
+# DeltaProtocolTable._prepare, inside the Spark error that carries it
+_VIOLATION = "DELTA-CONSTRAINT-VIOLATION"
+
+
+@contextmanager
+def _surface_violations():
+    """Re-raise a Spark job failure caused by a constraint assertion of
+    :meth:`DeltaProtocolTable._prepare` as :class:`DeltaProtocolError`
+    naming the constraint; any other failure passes through."""
+    try:
+        yield
+    except Exception as exc:
+        msg = str(exc)
+        if _VIOLATION in msg:
+            detail = msg[msg.index(_VIOLATION):]
+            raise DeltaProtocolError(detail.splitlines()[0]) from exc
+        raise
+
+
+# Java's URI path encoding (what Hadoop Path.toString / Spark's
+# _metadata.file_path emit): percent-encode characters ILLEGAL in a URI
+# path, leave unreserved + sub-delims (so '=' in hive partition dirs
+# stays literal while ' ' becomes %20) and non-ASCII raw
+_URI_PATH_SAFE = "/!$&'()*+,;=:@-._~"
+
+
+def _java_uri_quote(path: str) -> str:
+    out: list[str] = []
+    for ch in path:
+        if (ch.isascii() and ch.isalnum()) or ch in _URI_PATH_SAFE or ord(ch) > 127:
+            out.append(ch)
+        else:
+            out.extend(f"%{b:02X}" for b in ch.encode("utf-8"))
+    return "".join(out)
+
+
 # ---------------------------------------------------------------------------
 # snapshot state
 # ---------------------------------------------------------------------------
@@ -209,6 +250,12 @@ class _Snapshot:
             if txn.get("appId") is not None:
                 self.txns[txn["appId"]] = txn
         # commitInfo / cdc / domainMetadata carry no replay state
+
+    def restricted(self, paths: Iterable[str]) -> "_Snapshot":
+        """This snapshot with only the live files ``paths``."""
+        out = copy.copy(self)
+        out.files = {p: self.files[p] for p in paths}
+        return out
 
     def schema(self) -> T.StructType:
         if self.metadata is None or not self.metadata.get("schemaString"):
@@ -922,7 +969,11 @@ class DeltaProtocolTable:
                         out.append(unquote(f["path"]))
         return out
 
-    def _read_snapshot(self, snap: _Snapshot) -> DataFrame:
+    def _read_snapshot(self, snap: _Snapshot, with_file: bool = False) -> DataFrame:
+        """The rows of ``snap``'s live files under its logical schema.
+        ``with_file`` adds the scan's ``_metadata.file_path`` as column
+        ``_FILE_COL`` to a snapshot with files (one spelling of the
+        file's URI; map it back to a live path with :meth:`_candidates`)."""
         logical = snap.schema()
         mapped = snap.column_mapping_mode() not in ("none", "None")
         # column mapping (r9): the whole scan runs in PHYSICAL terms —
@@ -972,6 +1023,8 @@ class DeltaProtocolTable:
             if dv_files
             else []
         )
+        if with_file:
+            meta.append(F.col("_metadata.file_path").alias(_FILE_COL))
         paths = sorted(snap.files)
         if not part_cols:
             df = self.spark.read.schema(data_struct).parquet(
@@ -998,10 +1051,31 @@ class DeltaProtocolTable:
             list(snap.files.values()),
             struct,
             part_cols,
-            with_meta=bool(dv_files),
+            meta=meta,
         )
         assert out is not None
         return done(out)
+
+    def _candidates(self, rel: str) -> list[str]:
+        """Every spelling the scan's ``_metadata.file_path`` may give the
+        live file ``rel`` (a decoded path relative to the root).
+
+        ``_metadata.file_path`` is a URI whose exact spelling Spark
+        controls (scheme slashes, percent-encoded specials like spaces
+        in partition values, NO symlink resolution).  Guessing one
+        normalization and string-mangling the scan side is how rows get
+        silently matched to no file — instead the caller compares the
+        scan's spelling VERBATIM against all of these: the plain
+        absolute path via ``os.path.abspath`` (which — matching
+        Hadoop's qualification — does NOT resolve symlinks) plus the
+        RFC-3986 ``file:`` URI in its one- and three-slash forms, each
+        raw and Java-URI-quoted."""
+        plain = os.path.abspath(str(self.root / rel))
+        quoted = _java_uri_quote(plain)
+        return sorted(
+            {plain}
+            | {pre + q for pre in ("file:", "file://") for q in (plain, quoted)}
+        )
 
     def _apply_deletion_vectors(
         self, df: DataFrame, dv_files: dict[str, dict]
@@ -1021,49 +1095,10 @@ class DeltaProtocolTable:
         if not dv_files:
             return df
         root = str(self.root)
-        # JOIN-KEY DISCIPLINE: ``_metadata.file_path`` is a URI whose
-        # exact spelling Spark controls (scheme slashes, percent-encoded
-        # specials like spaces in partition values, NO symlink
-        # resolution).  Guessing one normalization and string-mangling
-        # the scan side is how deleted rows get silently resurrected —
-        # instead each descriptor row carries every plausible spelling
-        # of its file (plain absolute path via ``os.path.abspath``,
-        # which — matching Hadoop's qualification — does NOT resolve
-        # symlinks, plus the RFC-3986 ``file:`` URI in its one-, two-
-        # and three-slash forms), the anti-join compares the scan's
-        # ``file_path`` VERBATIM against all of them, and a one-file
-        # one-row probe below fails LOUDLY if the scan's actual
-        # spelling is not covered.
-        # Java's URI path encoding (what Hadoop Path.toString / Spark's
-        # file_path emit): percent-encode characters ILLEGAL in a URI
-        # path, leave unreserved + sub-delims (so '=' in hive partition
-        # dirs stays literal while ' ' becomes %20) and non-ASCII raw
-        _uri_path_safe = "/!$&'()*+,;=:@-._~"
-
-        def _java_uri_quote(path: str) -> str:
-            out: list[str] = []
-            for ch in path:
-                if (
-                    (ch.isascii() and ch.isalnum())
-                    or ch in _uri_path_safe
-                    or ord(ch) > 127
-                ):
-                    out.append(ch)
-                else:
-                    out.extend(f"%{b:02X}" for b in ch.encode("utf-8"))
-            return "".join(out)
-
-        def candidates(rel: str) -> list[str]:
-            plain = os.path.abspath(str(self.root / rel))
-            quoted = _java_uri_quote(plain)
-            return sorted(
-                {plain}
-                | {
-                    pre + q
-                    for pre in ("file:", "file://")
-                    for q in (plain, quoted)
-                }
-            )
+        # JOIN-KEY DISCIPLINE: the anti-join compares the scan's
+        # ``file_path`` VERBATIM against every spelling of
+        # :meth:`_candidates`, and a one-file one-row probe below fails
+        # LOUDLY if the scan's actual spelling is not covered.
 
         # probe ONE FILE PER SPELLING CLASS (ADVICE r9): a path whose
         # URI form percent-encodes characters (spaces in partition
@@ -1086,18 +1121,18 @@ class DeltaProtocolTable:
                 .select(F.col("_metadata.file_path"))
                 .head(1)
             )
-            if probed and probed[0][0] not in candidates(probe_rel):
+            if probed and probed[0][0] not in self._candidates(probe_rel):
                 raise DeltaProtocolError(
                     "deletion-vector apply: the scan reports file_path "
                     f"{probed[0][0]!r} but the descriptor side generated "
-                    f"{candidates(probe_rel)!r} for the same file — the "
+                    f"{self._candidates(probe_rel)!r} for the same file — the "
                     "anti-join keys would never match and deleted rows "
                     "would be silently resurrected; this filesystem/URI "
                     "scheme needs a new candidate spelling here"
                 )
         desc = self.spark.createDataFrame(
             [
-                (json.dumps(candidates(p)), json.dumps(dv))
+                (json.dumps(self._candidates(p)), json.dumps(dv))
                 for p, dv in sorted(dv_files.items())
             ],
             "file_cands string, dv_json string",
@@ -1182,10 +1217,7 @@ class DeltaProtocolTable:
             out = out.where(
                 F.assert_true(
                     ok,
-                    F.lit(
-                        f"DELTA-CONSTRAINT-VIOLATION {name}: row violates "
-                        f"({predicate})"
-                    ),
+                    F.lit(f"{_VIOLATION} {name}: row violates ({predicate})"),
                 ).isNull()
             )
         return out
@@ -1217,13 +1249,9 @@ class DeltaProtocolTable:
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         try:
-            writer.parquet(str(stage))
-        except Exception as exc:
-            if "DELTA-CONSTRAINT-VIOLATION" in str(exc):
-                marker = str(exc)
-                detail = marker[marker.index("DELTA-CONSTRAINT-VIOLATION"):]
-                shutil.rmtree(stage, ignore_errors=True)
-                raise DeltaProtocolError(detail.splitlines()[0]) from exc
+            with _surface_violations():
+                writer.parquet(str(stage))
+        except Exception:
             shutil.rmtree(stage, ignore_errors=True)
             raise
         adds: list[dict] = []
@@ -1349,9 +1377,13 @@ class DeltaProtocolTable:
         operation: str,
         params: dict,
         change_df: Optional[DataFrame] = None,
+        removed: Optional[Iterable[str]] = None,
     ) -> int:
-        """Copy-on-write: stage the merged relation, remove every
-        current file, add the new ones — one commit.  On CDF tables the
+        """Copy-on-write commit: stage ``merged``, remove the live files
+        ``removed`` (decoded paths of ``snap``; every live file when
+        None) and add the staged ones — one commit.  ``merged`` must
+        hold every row of the removed files that stays in the table,
+        and nothing of the files that stay live.  On CDF tables the
         caller passes ``change_df`` (table columns + ``_change_type``):
         it is staged under ``_change_data/`` and committed as ``cdc``
         actions per the spec — CDF readers then use those exclusively
@@ -1376,6 +1408,18 @@ class DeltaProtocolTable:
                 return snap.version
         try:
             merged = self._checkpoint_enforced(merged)
+            if snap.partition_columns():
+                # one file per partition value: staged as it comes, every
+                # scan task and every batch task writes its own file for
+                # each value it holds, so live files multiply commit
+                # after commit; AQE splits a skewed value and merges
+                # small ones.  Hinted after the checkpoint, so the cached
+                # blocks keep the scan's split sizes: hinted before it,
+                # AQE coalesced the cache into one block and the
+                # delta_incremental benchmark's peak memory rose 14% over
+                # the whole-table rewrite (1% after; medians of 7 pairs,
+                # 4 cores)
+                merged = merged.hint("rebalance", *snap.partition_columns())
             adds = self._stage_physical(merged, snap)
         except Exception:
             # cdc files are already inside _change_data/, which vacuum
@@ -1394,7 +1438,11 @@ class DeltaProtocolTable:
                 "partitionValues": add.get("partitionValues") or {},
                 "size": add.get("size"),
             }
-            for add in snap.files.values()
+            for add in (
+                snap.files.values()
+                if removed is None
+                else [snap.files[p] for p in removed]
+            )
         ]
         actions = [
             self._commit_info(operation, params),
@@ -1420,20 +1468,57 @@ class DeltaProtocolTable:
         """localCheckpoint that surfaces constraint assertions embedded
         by :meth:`_prepare` as :class:`DeltaProtocolError` — eager
         checkpointing executes the plan, so a violating row raises HERE
-        rather than inside ``_stage_files``'s marker handler."""
-        try:
+        rather than inside ``_stage_files``."""
+        with _surface_violations():
             return df.localCheckpoint(eager=True)
-        except Exception as exc:
-            msg = str(exc)
-            if "DELTA-CONSTRAINT-VIOLATION" in msg:
-                detail = msg[msg.index("DELTA-CONSTRAINT-VIOLATION"):]
-                raise DeltaProtocolError(detail.splitlines()[0]) from exc
-            raise
+
+    def _touched_files(
+        self, snap: _Snapshot, df: DataFrame, cond: Column
+    ) -> list[str]:
+        """Decoded paths of ``snap``'s live files that hold a row
+        matching a row of ``df`` on ``cond`` (aliases ``old``/``new``).
+
+        One semi-join job over the snapshot read (key columns and the
+        file path only).  Each scan spelling of a path is mapped back
+        to its live file through :meth:`_candidates`, never guessed: a
+        file missed here keeps its matched row live beside the batch's
+        replacement — a silent duplicate key — so a spelling no live
+        file owns is an error.  The job is the first to run ``df``, so
+        a constraint violation in it surfaces here."""
+        if not snap.files:
+            return []
+        scan = self._read_snapshot(snap, with_file=True)
+        with _surface_violations():
+            spellings = [
+                r[0]
+                for r in scan.alias("old")
+                .join(df.alias("new"), on=cond, how="left_semi")
+                .select(_FILE_COL)
+                .distinct()
+                .collect()
+            ]
+        live = {c: rel for rel in snap.files for c in self._candidates(rel)}
+        unknown = sorted(set(spellings) - set(live))
+        if unknown:
+            raise DeltaProtocolError(
+                f"upsert: the scan reports file_path {unknown[:3]!r}, which "
+                "no live file's spelling matches — its matched rows could "
+                "not be removed; this filesystem/URI scheme needs a new "
+                "candidate spelling"
+            )
+        return sorted({live[sp] for sp in spellings})
 
     def upsert(self, df: DataFrame, keys: list[str]) -> int:
         """MERGE semantics of the reference (delta/src/lib.rs:240-328):
         every target row matching a source key is replaced by ALL of
-        that key's source rows (delete-matching + insert-all)."""
+        that key's source rows (delete-matching + insert-all).
+
+        Copy-on-write by file, as the reference's MERGE: only the live
+        files holding a matched row are read, rewritten without those
+        rows (together with every source row) and removed; every other
+        file stays live untouched.  A source of only new keys commits
+        adds and no remove.  The bytes written follow the source and
+        the files it touches, not the table."""
         self._ensure_created_from(df)
         snap = self._snapshot()
         snap.check_writable("upsert")
@@ -1444,8 +1529,9 @@ class DeltaProtocolTable:
             # feed disagree with the committed data (and the source is
             # not computed twice)
             df = self._checkpoint_enforced(df)
-        current = self._read_snapshot(snap)
         cond = merge_key_condition(df.schema, keys, "old", "new")
+        touched = self._touched_files(snap, df, cond)
+        current = self._read_snapshot(snap.restricted(touched))
         untouched = (
             current.alias("old")
             .join(df.alias("new"), on=cond, how="left_anti")
@@ -1470,7 +1556,12 @@ class DeltaProtocolTable:
                 )
             )
         return self._rewrite(
-            merged, snap, "MERGE", {"predicate": keys}, change_df=change_df
+            merged,
+            snap,
+            "MERGE",
+            {"predicate": keys},
+            change_df=change_df,
+            removed=touched,
         )
 
     def replace(self, df: DataFrame, conditions: list[tuple[str, str]]) -> int:
@@ -1621,11 +1712,33 @@ class DeltaProtocolTable:
 
     def changes(self, v_from: int, v_to: Optional[int] = None) -> DataFrame:
         """CDF-style row diff between versions (insert/delete tagging,
-        updates surface as delete+insert) — multiset ``exceptAll``."""
+        updates surface as delete+insert) — multiset ``exceptAll``.
+
+        The diff runs over changed files only: a file live in both
+        versions with the same add action (path and deletion vector)
+        adds the same rows to both sides of the multiset diff, so it
+        cancels out and is not read.  That holds while every column of
+        ``v_from`` keeps its name, type and metadata in ``v_to`` (an
+        additive migration null-fills both sides alike); otherwise
+        every file is diffed.  A ``compact()`` rewrite diffs to empty."""
         if v_to is None:
             v_to = self.latest_version()
-        before = self.read(version=v_from)
-        after = self.read(version=v_to)
+        snap_from = self._snapshot(v_from)
+        snap_to = self._snapshot(v_to)
+        to_fields = snap_to.schema().fields
+        same: set[str] = set()
+        if snap_from.partition_columns() == snap_to.partition_columns() and all(
+            f in to_fields for f in snap_from.schema().fields
+        ):
+            same = {
+                p
+                for p, add in snap_from.files.items()
+                if p in snap_to.files
+                and add.get("deletionVector")
+                == snap_to.files[p].get("deletionVector")
+            }
+        before = self._read_snapshot(snap_from.restricted(set(snap_from.files) - same))
+        after = self._read_snapshot(snap_to.restricted(set(snap_to.files) - same))
         for c in after.columns:
             if c not in before.columns:
                 before = before.withColumn(c, F.lit(None).cast(dict(after.dtypes)[c]))
@@ -1649,14 +1762,14 @@ class DeltaProtocolTable:
         struct: T.StructType,
         part_cols: list[str],
         extra: Optional[list[tuple[str, T.DataType]]] = None,
-        with_meta: bool = False,
+        meta: Sequence[Column] = (),
     ) -> Optional[DataFrame]:
         """Read the parquet files named by add/remove/cdc actions,
         reattaching partition columns from ``partitionValues`` as typed
         literals; ``extra`` declares file-resident columns beyond the
-        table schema (``_change_type`` in cdc files); ``with_meta``
-        appends the scan's ``_metadata`` (file_path, row_index) as
-        ``__dv_file``/``__dv_row`` for deletion-vector filtering."""
+        table schema (``_change_type`` in cdc files); ``meta`` appends
+        columns of the scan's ``_metadata`` (file_path, row_index), as
+        :meth:`_read_snapshot` selects them."""
         extra = extra or []
         data_struct = T.StructType(
             [f for f in struct.fields if f.name not in part_cols]
@@ -1685,14 +1798,6 @@ class DeltaProtocolTable:
                 typ = by_name[col].dataType
                 lit = F.lit(None) if raw is None else F.lit(raw)
                 part = part.withColumn(col, lit.cast(typ))
-            meta = (
-                [
-                    F.col("_metadata.file_path").alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_row"),
-                ]
-                if with_meta
-                else []
-            )
             part = part.select(*out_cols, *meta)
             out = part if out is None else out.unionByName(part)
         return out

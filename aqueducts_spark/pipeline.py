@@ -42,12 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .config.model import Pipeline, Stage
 from .destinations import prepare_destination, write_to_destination
-from .functions import (
-    register_compat_functions,
-    register_udafs,
-    register_udfs,
-    register_udtfs,
-)
+from .functions import register_function_pack
 from .progress import LoggingTracker, ProgressEvent, ProgressTracker, timer
 from .sources import register_sources
 from .stages import process_stage
@@ -113,10 +108,7 @@ def run_pipeline(
     core/src/lib.rs:26-72, tests/integration.rs:36-52).
     """
     tracker = tracker or LoggingTracker()
-    register_udfs(spark)
-    register_compat_functions(spark)
-    register_udtfs(spark)
-    register_udafs(spark)
+    register_function_pack(spark)
     tracker.on_progress(ProgressEvent("started"))
 
     dest = pipeline.parsed_destination
@@ -462,10 +454,7 @@ def explain_pipeline(
     from .plans import lint_plan
     from .stages import build_stage_df
 
-    register_udfs(spark)
-    register_compat_functions(spark)
-    register_udtfs(spark)
-    register_udafs(spark)
+    register_function_pack(spark)
     register_sources(spark, pipeline.parsed_sources)
 
     reports: list[dict] = []

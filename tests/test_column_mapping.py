@@ -470,6 +470,30 @@ def test_change_feed_on_mapped_table(spark, tmp_path):
     assert rows[0]._change_type == "insert" and rows[0].name == "d"
 
 
+def test_changes_across_a_column_rename_diffs_every_file(spark, tmp_path):
+    """A rename keeps every file live but changes the rows each file
+    reads as, so the endpoint diff must not cancel the shared files:
+    every row leaves under its old column and comes back under the
+    new one, as in a diff of the two full snapshots."""
+    root = tmp_path / "tbl"
+    _write_mapped_table(root)
+    meta = _meta_action("name")
+    schema = json.loads(meta["metaData"]["schemaString"])
+    schema["fields"][1]["name"] = "label"  # same physical name
+    meta["metaData"]["schemaString"] = json.dumps(schema)
+    (root / "_delta_log" / f"{1:020d}.json").write_text(json.dumps(meta))
+    rows = DeltaProtocolTable(spark, str(root)).changes(0, 1).collect()
+    assert len(rows) == 6
+    assert {(r.id, r.name, r.label, r._change_type) for r in rows} == {
+        (1, None, "a", "insert"),
+        (1, "a", None, "delete"),
+        (2, None, "b", "insert"),
+        (2, "b", None, "delete"),
+        (3, None, "c", "insert"),
+        (3, "c", None, "delete"),
+    }
+
+
 def test_time_travel_on_mapped_table(spark, tmp_path):
     root = tmp_path / "tbl"
     _write_mapped_table(root)

@@ -7,13 +7,19 @@ partitionValues, parquet checkpoints, protocol/feature gating.
 from __future__ import annotations
 
 import json
+from collections import Counter
 from pathlib import Path
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
 from aqueducts_spark.delta.protocol import (
+    CDC_DIR,
+    LOG_DIR,
     DeltaProtocolError,
     DeltaProtocolTable,
 )
@@ -229,6 +235,208 @@ def test_changes_between_versions(spark, tmp_path):
     diff = t.changes(1, 2)
     tagged = sorted((r.id, r._change_type) for r in diff.collect())
     assert tagged == [(1, "delete"), (1, "insert"), (2, "insert")]
+
+
+# ---------------------------------------------------------------------------
+# file-level MERGE and change diff
+# ---------------------------------------------------------------------------
+
+MERGE_FIELDS = [
+    Field(name="k", data_type="int64", nullable=True),
+    Field(name="p", data_type="string", nullable=True),
+    Field(name="v", data_type="int64", nullable=True),
+]
+PARTS = "abcdef"
+# updates in a, b and e; key 1 twice in the batch; the NULL key matches
+# the NULL-key row of c (null-safe); key 30 lives in d and moves to e;
+# key 100 is new
+MERGE_BATCH = [
+    (1, "a", 1),
+    (1, "a", 2),
+    (11, "b", 1),
+    (None, "c", 1),
+    (30, "e", 1),
+    (41, "e", 1),
+    (100, "a", 1),
+]
+
+
+def _mdf(spark, rows):
+    return spark.createDataFrame(rows, "k long, p string, v long")
+
+
+def _merge_table(spark, tmp_path, partitioned=True, props=None, name="m"):
+    """Six values of ``p``, three keys each plus a NULL key in c, one
+    append (one file) per value."""
+    t = DeltaProtocolTable(spark, str(tmp_path / name))
+    t.create_if_absent(MERGE_FIELDS, ["p"] if partitioned else [], props or {}, {})
+    for i, p in enumerate(PARTS):
+        rows = [(i * 10 + j, p, 0) for j in range(3)]
+        if p == "c":
+            rows.append((None, "c", 0))
+        t.append(_mdf(spark, rows).coalesce(1))
+    return t
+
+
+def _commit(t, version):
+    path = t.log_dir / f"{version:020d}.json"
+    return [json.loads(line) for line in path.read_text().splitlines() if line.strip()]
+
+
+def _bag(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _merge_reference(before, batch, keys):
+    """Delete every row whose key the batch carries, insert the batch."""
+    return Counter([r for r in before.elements() if r[0] not in keys] + batch)
+
+
+@pytest.mark.parametrize("partitioned", [True, False], ids=["partitioned", "flat"])
+def test_upsert_rewrites_only_the_files_holding_matched_rows(spark, tmp_path, partitioned):
+    t = _merge_table(spark, tmp_path, partitioned)
+    keys = {r[0] for r in MERGE_BATCH}
+    files = t._snapshot().files
+    holding = {
+        path
+        for path in files
+        if keys & set(pq.read_table(t.root / path, columns=["k"]).column("k").to_pylist())
+    }
+    assert len(holding) == 5  # every file but f's
+    before = _bag(t.read())
+
+    v = t.upsert(_mdf(spark, MERGE_BATCH), keys=["k"])
+
+    assert _bag(t.read()) == _merge_reference(before, MERGE_BATCH, keys)
+    actions = _commit(t, v)
+    removed = {unquote(a["remove"]["path"]) for a in actions if "remove" in a}
+    assert removed == holding
+    live = t._snapshot().files
+    added = {unquote(a["add"]["path"]) for a in actions if "add" in a}
+    for path in set(files) - holding:
+        assert path in live and path not in added
+        assert live[path] == files[path]
+
+
+def test_upsert_keeps_one_file_per_partition_value(spark, tmp_path):
+    t = _merge_table(spark, tmp_path)
+    t.upsert(_mdf(spark, MERGE_BATCH), keys=["k"])
+    # each later batch updates a key of one value and adds a new key there
+    for i, p in enumerate("abcd"):
+        t.upsert(_mdf(spark, [(i * 10 + 2, p, 9), (200 + i, p, 9)]), keys=["k"])
+    per_value = Counter(a["partitionValues"]["p"] for a in t._snapshot().files.values())
+    assert per_value == {p: 1 for p in PARTS}
+
+    v = t.upsert(_mdf(spark, [(500, "f", 1), (501, "b", 1)]), keys=["k"])
+    actions = _commit(t, v)
+    assert not [a for a in actions if "remove" in a]
+    assert len([a for a in actions if "add" in a]) == 2
+
+
+def test_cdf_pruned_upsert_feeds_matched_deletes_and_every_insert(spark, tmp_path):
+    t = _merge_table(spark, tmp_path, props={"delta.enableChangeDataFeed": "true"})
+    keys = {r[0] for r in MERGE_BATCH}
+    before = _bag(t.read())
+    v = t.upsert(_mdf(spark, MERGE_BATCH), keys=["k"])
+    assert any("cdc" in a for a in _commit(t, v))
+    feed = Counter(
+        (r.k, r.p, r.v, r._change_type) for r in t.change_feed(v - 1).collect()
+    )
+    assert feed == Counter(
+        [(*r, "delete") for r in before.elements() if r[0] in keys]
+        + [(*r, "insert") for r in MERGE_BATCH]
+    )
+    assert _bag(t.read()) == _merge_reference(before, MERGE_BATCH, keys)
+
+
+def test_upsert_constraint_violation_commits_and_leaves_nothing(spark, tmp_path):
+    t = _merge_table(spark, tmp_path, props={"delta.constraints.nonneg": "v >= 0"})
+    version = t.latest_version()
+    with pytest.raises(DeltaProtocolError, match="nonneg"):
+        t.upsert(_mdf(spark, [(1, "a", 5), (2, "a", -1)]), keys=["k"])
+    assert t.latest_version() == version
+    referenced = {
+        unquote(a[kind]["path"])
+        for v in range(version + 1)
+        for a in _commit(t, v)
+        for kind in ("add", "cdc")
+        if kind in a
+    }
+    on_disk = {
+        str(f.relative_to(t.root))
+        for f in t.root.rglob("*")
+        if f.is_file() and LOG_DIR not in f.relative_to(t.root).parts
+    }
+    assert on_disk <= referenced
+
+
+def _full_snapshot_diff(t, v_from, v_to):
+    """The endpoint diff over every row of both snapshots: the result
+    ``changes`` must give, whichever files it reads."""
+    before, after = t.read(version=v_from), t.read(version=v_to)
+    for c in after.columns:
+        if c not in before.columns:
+            before = before.withColumn(c, F.lit(None).cast(dict(after.dtypes)[c]))
+    before = before.select(*after.columns)
+    return Counter(
+        [(*r, "insert") for r in after.exceptAll(before).collect()]
+        + [(*r, "delete") for r in before.exceptAll(after).collect()]
+    )
+
+
+def test_changes_reads_changed_files_and_equals_the_full_snapshot_diff(spark, tmp_path):
+    t = _merge_table(spark, tmp_path)
+    v_append = t.latest_version()
+    v_upsert = t.upsert(_mdf(spark, MERGE_BATCH), keys=["k"])
+    v_replace = t.replace(_mdf(spark, [(7, "f", 7)]), conditions=[("p", "f")])
+    v_compact = t.compact()
+    t.create_if_absent(
+        MERGE_FIELDS + [Field(name="note", data_type="string")], ["p"], {}, {}
+    )
+    v_migrate = t.latest_version()
+    assert v_migrate == v_compact + 1
+    v_last = t.upsert(
+        spark.createDataFrame(
+            [(2, "a", 3, "x"), (300, "f", 3, "y")],
+            "k long, p string, v long, note string",
+        ),
+        keys=["k"],
+    )
+    for v_from, v_to in [
+        (v_append - 1, v_append),
+        (v_append, v_upsert),
+        (v_upsert, v_replace),
+        (v_replace, v_compact),
+        (v_compact, v_migrate),
+        (v_migrate, v_last),
+        (v_append, v_last),
+        (0, v_last),
+    ]:
+        got = Counter(
+            (*r[:-3], r._change_type) for r in t.changes(v_from, v_to).collect()
+        )
+        assert got == _full_snapshot_diff(t, v_from, v_to), (v_from, v_to)
+    assert t.changes(v_replace, v_compact).count() == 0
+    # the upsert left f's file live: its diff never reads it
+    read = t.changes(v_append, v_upsert).inputFiles()
+    assert read and not [f for f in read if "p=f" in f]
+
+
+def test_upsert_loses_a_commit_race_and_reclaims_its_cdc_files(spark, tmp_path, monkeypatch):
+    t = _merge_table(spark, tmp_path, props={"delta.enableChangeDataFeed": "true"})
+    snapshot = t._snapshot
+
+    def snapshot_then_race(*args, **kwargs):
+        # another writer commits the next version right after ours reads
+        snap = snapshot(*args, **kwargs)
+        t._write_commit(snap.version + 1, [t._commit_info("WRITE", {"mode": "Append"})])
+        return snap
+
+    monkeypatch.setattr(t, "_snapshot", snapshot_then_race)
+    with pytest.raises(DeltaProtocolError, match="concurrent commit raced"):
+        t.upsert(_mdf(spark, MERGE_BATCH), keys=["k"])
+    monkeypatch.undo()
+    assert not list((t.root / CDC_DIR).rglob("*.parquet"))
 
 
 # ---------------------------------------------------------------------------

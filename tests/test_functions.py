@@ -4,6 +4,7 @@
 import pytest
 
 from aqueducts_spark.functions import register_udfs
+from aqueducts_spark.functions.compat import _SQL_UDFS
 
 
 @pytest.fixture(autouse=True)
@@ -224,3 +225,40 @@ def test_parse_key_values_malformed_separators_skip_not_crash(spark):
         "SELECT * FROM parse_key_values('a=1,b=2', ',', '=') ORDER BY key"
     ).collect()
     assert [(r.key, r.value) for r in rows] == [("a", "1"), ("b", "2")]
+
+
+def _function_ddls(spark, run):
+    """Run ``run()`` and count the CREATE FUNCTION executions it fired,
+    read from the session's SQL status store (execution ids are dense)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    next_id = store.executionsList(n - 1, 1).apply(0).executionId() + 1 if n else 0
+    result = run()
+    plans = []
+    while (found := store.execution(next_id)).isDefined():
+        plans.append(found.get().physicalPlanDescription())
+        next_id += 1
+    return result, sum("CreateSQLFunctionCommand" in p for p in plans)
+
+
+def test_function_pack_registers_once_per_session(spark):
+    from aqueducts_spark import load_pipeline_str, run_pipeline
+
+    def run(session, name):
+        yml = f"""
+version: "v2"
+sources: []
+stages:
+  - - name: {name}
+      query: SELECT gcd(12, 18) AS g, unnest_json_array('[1, "a"]') AS u
+"""
+        return run_pipeline(session, load_pipeline_str(yml)).result.collect()
+
+    run(spark, "pack_warm")
+    fresh = spark.newSession()  # temporary functions are per session
+    rows, first = _function_ddls(fresh, lambda: run(fresh, "pack_first"))
+    assert [(r.g, r.u) for r in rows] == [(6, ["1", '"a"'])]
+    assert first == len(_SQL_UDFS)
+    rows, second = _function_ddls(fresh, lambda: run(fresh, "pack_second"))
+    assert [(r.g, r.u) for r in rows] == [(6, ["1", '"a"'])]
+    assert second == 0
