@@ -279,23 +279,11 @@ def _cmd_optimize(args) -> int:
         version = table.compact(target_partitions=args.target_partitions)
         print(f"compacted {args.location} -> version {version}")
         if retention is not None:
-            import inspect as _inspect
-
-            if "retention_hours" not in _inspect.signature(table.vacuum).parameters:
-                # capability check by signature — a broad `except
-                # TypeError` around the call misattributed ANY internal
-                # TypeError to "legacy table"
-                print(
-                    "--vacuum-retention-hours requires a Delta-protocol table "
-                    "(legacy tables support --vacuum-keep only)",
-                    file=sys.stderr,
-                )
-                return 1
             removed = table.vacuum(retention_hours=retention)
             print(f"vacuumed {len(removed)} data file(s)")
         elif args.vacuum_keep is not None:
             removed = table.vacuum(keep_versions=args.vacuum_keep)
-            print(f"vacuumed {len(removed)} data dir(s)")
+            print(f"vacuumed {len(removed)} data file(s)")
         return 0
     finally:
         spark.stop()
@@ -303,9 +291,9 @@ def _cmd_optimize(args) -> int:
 
 def _cmd_history(args) -> int:
     """DESCRIBE HISTORY parity: one line per commit, oldest first.
-    Protocol and legacy tables are read directly; with delta-spark
-    installed the native connector serves the history (and with it,
-    object-store locations)."""
+    The log is read directly; with delta-spark installed the native
+    connector serves the history (and with it, object-store
+    locations)."""
     import datetime as _dt
 
     from .delta.table import delta_layer
@@ -347,16 +335,30 @@ def _cmd_history(args) -> int:
                 if isinstance(ts, (int, float))
                 else str(ts)
             )
-            op = e.get("operation") or e.get("action") or "?"
-            params = e.get("operationParameters") or {
-                k: v
-                for k, v in e.items()
-                if k not in ("version", "timestamp", "action", "active_dirs", "schema")
-                and not isinstance(v, (list, dict))
-            }
+            op = e.get("operation") or "?"
+            params = e.get("operationParameters")
             extra = f" {params}" if params else ""
             print(f"v{e['version']:>4}  {when}  {op}{extra}")
         return 0
+    finally:
+        spark.stop()
+
+
+def _cmd_delta_upgrade(args) -> int:
+    from .delta.table import DeltaTableError
+    from .delta.upgrade import upgrade
+    from .session import get_spark
+
+    spark = get_spark("aqueducts-delta-upgrade", master=args.master)
+    try:
+        first, last = upgrade(spark, args.location)
+        print(f"upgraded {args.location}: Delta log versions {first}..{last}")
+        if first:
+            print(f"versions below {first} lost their data to a vacuum and stay unreadable")
+        return 0
+    except DeltaTableError as exc:
+        print(f"delta-upgrade: {exc}", file=sys.stderr)
+        return 1
     finally:
         spark.stop()
 
@@ -476,9 +478,16 @@ def main(argv: list[str] | None = None) -> int:
         type=float,
         default=None,
         help="Delta VACUUM semantics: delete unreferenced files tombstoned "
-        "longer than N hours ago (protocol tables only)",
+        "longer than N hours ago",
     )
     opt_p.add_argument("--master", default=None, help="Spark master (default local[*])")
+
+    up_p = sub.add_parser(
+        "delta-upgrade",
+        help="convert a table in the retired pre-Delta log format to a Delta log",
+    )
+    up_p.add_argument("location", help="table path")
+    up_p.add_argument("--master", default=None, help="Spark master (default local[*])")
 
     args = parser.parse_args(argv)
     if args.command == "run":
@@ -499,6 +508,8 @@ def main(argv: list[str] | None = None) -> int:
         return _cmd_optimize(args)
     if args.command == "history":
         return _cmd_history(args)
+    if args.command == "delta-upgrade":
+        return _cmd_delta_upgrade(args)
     return 1
 
 

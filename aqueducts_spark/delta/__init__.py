@@ -1,3 +1,3 @@
-from .table import VersionedParquetTable, DeltaLayer, delta_layer
+from .table import DeltaLayer, delta_layer
 
-__all__ = ["VersionedParquetTable", "DeltaLayer", "delta_layer"]
+__all__ = ["DeltaLayer", "delta_layer"]

@@ -6,10 +6,9 @@ Implements the open Delta protocol (delta.io ``PROTOCOL.md``) directly:
 parquet checkpoints plus ``_last_checkpoint``, URL-encoded relative file
 paths, and stringly-typed ``partitionValues``.  Tables written here are
 readable by delta-rs / delta-spark / DuckDB-delta, and tables written by
-those engines (reader version <= 3 without column mapping or deletion
-vectors) are readable here — this is the interop boundary the
-``VersionedParquetTable`` fallback could not provide (its commit log is
-a private format).
+those engines (reader version <= 3) are readable here.  It is the
+table layer's only log format; a table in the retired private log
+format is converted once by :mod:`aqueducts_spark.delta.upgrade`.
 
 Reference semantics mirrored (aqueducts/delta/src/lib.rs):
 
@@ -24,8 +23,8 @@ Scale shape: all data movement is distributed ``df.write.parquet`` /
 ``spark.read.parquet``; only the JSON/Arrow action log (KB-scale per
 commit) touches the driver, same as every Delta implementation.  On a
 real cluster with delta-spark installed the ``DeltaLayer`` dispatches to
-the native connector instead; this module is the batteries-included
-fallback that still speaks the real protocol.
+the native connector instead; this module is the default when it is
+absent.
 """
 
 from __future__ import annotations
@@ -650,7 +649,7 @@ class DeltaProtocolTable:
             tmp.unlink(missing_ok=True)
         if version > 0 and version % CHECKPOINT_INTERVAL == 0:
             try:
-                self._write_checkpoint(version)
+                self._write_checkpoint(self._snapshot(version))
             except Exception:
                 # a failed checkpoint never corrupts the log — readers
                 # replay JSON commits without it
@@ -671,8 +670,8 @@ class DeltaProtocolTable:
 
     # ----- checkpoints --------------------------------------------------
 
-    def _write_checkpoint(self, version: int) -> None:
-        snap = self._snapshot(version)
+    def _write_checkpoint(self, snap: _Snapshot) -> None:
+        """Write ``snap`` as the classic checkpoint of its version."""
         rows: list[dict] = []
         rows.append({"protocol": snap.protocol})
         if snap.metadata is not None:
@@ -694,9 +693,9 @@ class DeltaProtocolTable:
                 base[k] = _conform(v, schema.field(k).type)
             normalized.append(base)
         table = pa.Table.from_pylist(normalized, schema=schema)
-        pq.write_table(table, self.log_dir / f"{version:020d}.checkpoint.parquet")
+        pq.write_table(table, self.log_dir / f"{snap.version:020d}.checkpoint.parquet")
         (self.log_dir / LAST_CHECKPOINT).write_text(
-            json.dumps({"version": version, "size": len(normalized)})
+            json.dumps({"version": snap.version, "size": len(normalized)})
         )
 
     # ----- lifecycle ----------------------------------------------------
@@ -727,6 +726,20 @@ class DeltaProtocolTable:
         metadata: dict,
     ) -> None:
         self.root.mkdir(parents=True, exist_ok=True)
+        self._write_commit(
+            0,
+            self._create_actions(struct, partition_columns, table_properties, metadata),
+        )
+        self._pending_create = None
+
+    def _create_actions(
+        self,
+        struct: T.StructType,
+        partition_columns: list[str],
+        table_properties: dict,
+        metadata: dict,
+    ) -> list[dict]:
+        """commitInfo, protocol and metaData of a table's version 0."""
         config = {str(k): str(v) for k, v in (table_properties or {}).items()}
         # authoring a column-mapped table (r10): a configuration that
         # requests mapping obliges the CREATE to assign each field a
@@ -758,15 +771,13 @@ class DeltaProtocolTable:
             name = metadata.get("name")
             if name:
                 meta_action["name"] = str(name)
-        actions = [
+        return [
             self._commit_info(
                 "CREATE TABLE", {"partitionBy": list(partition_columns or [])}
             ),
             {"protocol": _protocol_for(struct, config)},
             {"metaData": meta_action},
         ]
-        self._write_commit(0, actions)
-        self._pending_create = None
 
     def _migrate_schema_if_needed(self, fields: list[Field]) -> None:
         snap = self._snapshot()
@@ -929,45 +940,39 @@ class DeltaProtocolTable:
         )
         return _physical_struct(snap.schema(), mode, field_ids=True)
 
-    def _cdf_probe_paths(self, v_from: int, v_to: int) -> list[str]:
-        """Parquet paths the CDF replay of commits ``(v_from, v_to]``
-        will ACTUALLY read, for the column-mapping probe in
-        :meth:`change_feed` — mirroring the replay's own selection:
-        per commit, cdc files when present, else dataChange=true
-        add/remove files.  Files the replay never touches
-        (dataChange=false OPTIMIZE rewrites; add/remove in commits
-        that also carry cdc) make useless probe targets — and a fatal
-        one if vacuumed, failing a range that is fully servable from
-        the surviving cdc files.  Empty when the range carries no
-        replayed file actions (output is empty; nothing to probe)."""
-        out: list[str] = []
-        for v in range(v_from + 1, v_to + 1):
-            path = self.log_dir / f"{v:020d}.json"
-            if not path.is_file():
-                continue  # change_feed itself raises the loud error
-            actions = [
-                json.loads(l)
-                for l in path.read_text().splitlines()
-                if l.strip()
-            ]
-            cdc = [
-                a["cdc"]["path"]
-                for a in actions
-                if a.get("cdc", {}).get("path")
-            ]
-            if cdc:
-                out.extend(unquote(p) for p in cdc)
-                continue
-            for a in actions:
-                for kind in ("add", "remove"):
-                    f = a.get(kind)
-                    if (
-                        f
-                        and f.get("path")
-                        and f.get("dataChange", True)
-                    ):
-                        out.append(unquote(f["path"]))
-        return out
+    def _cdf_files(self, v: int) -> list[tuple[Optional[str], list[dict]]]:
+        """The files a CDF read of commit ``v`` replays, as
+        ``(change_type, file actions)`` groups: its ``cdc`` actions
+        EXCLUSIVELY when it has any (PROTOCOL.md "Change Data Files";
+        change type ``None``: the files carry ``_change_type``), else
+        its dataChange add (``insert``) and remove (``delete``) actions.
+        Empty groups are left out."""
+        path = self.log_dir / f"{v:020d}.json"
+        if not path.is_file():
+            raise DeltaProtocolError(
+                f"change_feed: commit {v} not in the log (checkpoint-"
+                "truncated) — CDF replay needs the JSON commits"
+            )
+        actions = [json.loads(l) for l in path.read_text().splitlines() if l.strip()]
+        cdcs = [a["cdc"] for a in actions if "cdc" in a]
+        if cdcs:
+            return [(None, cdcs)]
+        # a DV-carrying add/remove changes ROWS WITHIN a file; deriving
+        # per-row changes from it needs DV diffing this CDF reader does
+        # not implement — refuse rather than emit wrong change rows
+        # (plain snapshot reads of DV tables ARE supported, see
+        # _apply_deletion_vectors)
+        if any((a.get("add") or a.get("remove") or {}).get("deletionVector") for a in actions):
+            raise DeltaProtocolError(
+                f"change_feed: commit {v} carries deletion vectors; CDF "
+                "derivation over DV commits is not supported (read the "
+                "snapshot instead)"
+            )
+        groups = [
+            (change, [a[kind] for a in actions if kind in a and a[kind].get("dataChange", True)])
+            for kind, change in (("add", "insert"), ("remove", "delete"))
+        ]
+        return [(change, files) for change, files in groups if files]
 
     def _read_snapshot(self, snap: _Snapshot, with_file: bool = False) -> DataFrame:
         """The rows of ``snap``'s live files under its logical schema.
@@ -1267,22 +1272,9 @@ class DeltaProtocolTable:
                 target = self.root / rel
                 target.parent.mkdir(parents=True, exist_ok=True)
                 fpath.rename(target)
-                stat = target.stat()
-                pv = _partition_values_from_path(
-                    fpath.relative_to(stage), part_cols
+                adds.append(
+                    _add_action(self.root, rel, part_cols, data_change, with_stats)
                 )
-                action = {
-                    # percent-encode per spec, but keep the hive
-                    # "col=value" '=' literal as every engine does
-                    "path": quote(str(rel), safe="/="),
-                    "partitionValues": pv,
-                    "size": stat.st_size,
-                    "modificationTime": int(stat.st_mtime * 1000),
-                    "dataChange": data_change,
-                }
-                if with_stats:
-                    action["stats"] = _file_stats(target)
-                adds.append(action)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         return adds
@@ -1431,13 +1423,7 @@ class DeltaProtocolTable:
             raise
         now = int(time.time() * 1000)
         removes = [
-            {
-                "path": add["path"],
-                "deletionTimestamp": now,
-                "dataChange": True,
-                "partitionValues": add.get("partitionValues") or {},
-                "size": add.get("size"),
-            }
+            _remove_action(add, now, True)
             for add in (
                 snap.files.values()
                 if removed is None
@@ -1483,20 +1469,19 @@ class DeltaProtocolTable:
         to its live file through :meth:`_candidates`, never guessed: a
         file missed here keeps its matched row live beside the batch's
         replacement — a silent duplicate key — so a spelling no live
-        file owns is an error.  The job is the first to run ``df``, so
-        a constraint violation in it surfaces here."""
+        file owns is an error.  ``df`` must be materialized: this job
+        and the rewrite must see the same rows."""
         if not snap.files:
             return []
         scan = self._read_snapshot(snap, with_file=True)
-        with _surface_violations():
-            spellings = [
-                r[0]
-                for r in scan.alias("old")
-                .join(df.alias("new"), on=cond, how="left_semi")
-                .select(_FILE_COL)
-                .distinct()
-                .collect()
-            ]
+        spellings = [
+            r[0]
+            for r in scan.alias("old")
+            .join(df.alias("new"), on=cond, how="left_semi")
+            .select(_FILE_COL)
+            .distinct()
+            .collect()
+        ]
         live = {c: rel for rel in snap.files for c in self._candidates(rel)}
         unknown = sorted(set(spellings) - set(live))
         if unknown:
@@ -1522,13 +1507,12 @@ class DeltaProtocolTable:
         self._ensure_created_from(df)
         snap = self._snapshot()
         snap.check_writable("upsert")
-        df = self._prepare(df, snap)
-        if snap.cdf_enabled():
-            # merged AND the change rows both consume df: materialize it
-            # once so a non-deterministic source cannot make the cdc
-            # feed disagree with the committed data (and the source is
-            # not computed twice)
-            df = self._checkpoint_enforced(df)
+        # the touched-file scan, the rewrite and the change rows all
+        # consume df: materialize it once, so the source runs (and is
+        # broadcast) once and a non-deterministic source cannot show the
+        # scan other keys than the rewrite — a key matched in a file the
+        # scan missed would stay live beside its replacement
+        df = self._checkpoint_enforced(self._prepare(df, snap))
         cond = merge_key_condition(df.schema, keys, "old", "new")
         touched = self._touched_files(snap, df, cond)
         current = self._read_snapshot(snap.restricted(touched))
@@ -1627,16 +1611,7 @@ class DeltaProtocolTable:
         current = current.localCheckpoint(eager=True)
         adds = self._stage_physical(current, snap, data_change=False)
         now = int(time.time() * 1000)
-        removes = [
-            {
-                "path": add["path"],
-                "deletionTimestamp": now,
-                "dataChange": False,
-                "partitionValues": add.get("partitionValues") or {},
-                "size": add.get("size"),
-            }
-            for add in snap.files.values()
-        ]
+        removes = [_remove_action(add, now, False) for add in snap.files.values()]
         actions = [
             self._commit_info("OPTIMIZE", {}),
             *({"remove": r} for r in removes),
@@ -1650,7 +1625,7 @@ class DeltaProtocolTable:
         self, keep_versions: int = 1, retention_hours: Optional[float] = None
     ) -> list[str]:
         """Delete data files unreferenced by the newest ``keep_versions``
-        snapshots (version count stands in for the retention window).
+        data snapshots (their count stands in for the retention window).
 
         ``retention_hours`` switches to real Delta VACUUM semantics:
         delete files NOT referenced by the CURRENT snapshot whose
@@ -1678,8 +1653,17 @@ class DeltaProtocolTable:
         else:
             if keep_versions < 1:
                 raise DeltaProtocolError("vacuum: keep_versions must be >= 1")
-            for v in versions[-keep_versions:]:
-                keep.update(self._snapshot(v).files.keys())
+            # count data snapshots, newest first: a commit that changes
+            # no file (ADD COLUMNS, an upgraded table's VACUUM END) has
+            # its predecessor's files and must not crowd one out
+            kept: list[set[str]] = []
+            for v in reversed(versions):
+                files = set(self._snapshot(v).files)
+                if not kept or files != kept[-1]:
+                    kept.append(files)
+                    keep.update(files)
+                if len(kept) == keep_versions:
+                    break
         removed: list[str] = []
         for fpath in sorted(self.root.rglob("*.parquet")):
             rel = fpath.relative_to(self.root)
@@ -1830,12 +1814,19 @@ class DeltaProtocolTable:
         # fallback silently null-filled id-named tables.
         struct = logical
         if mapped:
-            # try the replay's own files in order; a vacuumed probe
-            # target falls through to the next candidate instead of
-            # failing a range servable from the surviving files (only
-            # missing-file errors fall through — a resolution refusal
-            # like id-less foreign naming stays loud)
-            cands = self._cdf_probe_paths(v_from, v_to)
+            # try the replay's own files in order (files it never
+            # reads, like an OPTIMIZE rewrite's, make useless probe
+            # targets); a vacuumed probe target falls through to the
+            # next candidate instead of failing a range servable from
+            # the surviving files (only missing-file errors fall through
+            # — a resolution refusal like id-less foreign naming stays
+            # loud)
+            cands = [
+                unquote(f["path"])
+                for v in range(v_from + 1, v_to + 1)
+                for _, files in self._cdf_files(v)
+                for f in files
+            ]
             struct = snap_to.physical_schema()
             last_missing: Optional[DeltaProtocolError] = None
             for probe in cands:
@@ -1858,62 +1849,18 @@ class DeltaProtocolTable:
         )
         out: Optional[DataFrame] = None
         for v in range(v_from + 1, v_to + 1):
-            path = self.log_dir / f"{v:020d}.json"
-            if not path.is_file():
-                raise DeltaProtocolError(
-                    f"change_feed: commit {v} not in the log (checkpoint-"
-                    "truncated) — CDF replay needs the JSON commits"
-                )
-            actions = [
-                json.loads(l) for l in path.read_text().splitlines() if l.strip()
-            ]
-            cdcs = [a["cdc"] for a in actions if "cdc" in a]
-            if cdcs:
-                part = self._read_action_files(
-                    cdcs, struct, part_cols,
-                    extra=[("_change_type", T.StringType())],
-                )
-            else:
-                adds = [
-                    a["add"] for a in actions
-                    if "add" in a and a["add"].get("dataChange", True)
-                ]
-                # a DV-carrying add/remove changes ROWS WITHIN a file;
-                # deriving per-row changes from it needs DV diffing this
-                # CDF reader does not implement — refuse rather than
-                # emit wrong change rows (plain snapshot reads of DV
-                # tables ARE supported, see _apply_deletion_vectors)
-                if any(
-                    (a.get("add") or a.get("remove") or {}).get(
-                        "deletionVector"
+            part = None
+            for change, files in self._cdf_files(v):
+                if change is None:
+                    piece = self._read_action_files(
+                        files, struct, part_cols,
+                        extra=[("_change_type", T.StringType())],
                     )
-                    for a in actions
-                ):
-                    raise DeltaProtocolError(
-                        f"change_feed: commit {v} carries deletion "
-                        "vectors; CDF derivation over DV commits is "
-                        "not supported (read the snapshot instead)"
-                    )
-                removes = [
-                    a["remove"] for a in actions
-                    if "remove" in a and a["remove"].get("dataChange", True)
-                ]
-                pieces = []
-                if adds:
-                    pieces.append(
-                        self._read_action_files(adds, struct, part_cols)
-                        .withColumn("_change_type", F.lit("insert"))
-                    )
-                if removes:
-                    pieces.append(
-                        self._read_action_files(removes, struct, part_cols)
-                        .withColumn("_change_type", F.lit("delete"))
-                    )
-                if not pieces:
-                    continue
-                part = pieces[0]
-                for extra_piece in pieces[1:]:
-                    part = part.unionByName(extra_piece)
+                else:
+                    piece = self._read_action_files(
+                        files, struct, part_cols
+                    ).withColumn("_change_type", F.lit(change))
+                part = piece if part is None else part.unionByName(piece)
             if part is None:
                 continue
             info = self._commit_info_of(v)
@@ -2031,6 +1978,37 @@ def _uses_ntz(dt: T.DataType) -> bool:
     if isinstance(dt, T.MapType):
         return _uses_ntz(dt.keyType) or _uses_ntz(dt.valueType)
     return False
+
+
+def _add_action(
+    root: Path, rel: Path, part_cols: list[str], data_change: bool, with_stats: bool = True
+) -> dict:
+    """The ``add`` action of the data file ``root / rel``; its
+    partitionValues come from the ``col=value`` segments of ``rel``."""
+    stat = (root / rel).stat()
+    action = {
+        # percent-encode per spec, but keep the hive "col=value" '='
+        # literal as every engine does
+        "path": quote(str(rel), safe="/="),
+        "partitionValues": _partition_values_from_path(rel, part_cols),
+        "size": stat.st_size,
+        "modificationTime": int(stat.st_mtime * 1000),
+        "dataChange": data_change,
+    }
+    if with_stats:
+        action["stats"] = _file_stats(root / rel)
+    return action
+
+
+def _remove_action(add: dict, deleted_at_ms: int, data_change: bool) -> dict:
+    """The ``remove`` action that tombstones the file of ``add``."""
+    return {
+        "path": add["path"],
+        "deletionTimestamp": deleted_at_ms,
+        "dataChange": data_change,
+        "partitionValues": add.get("partitionValues") or {},
+        "size": add.get("size"),
+    }
 
 
 def _partition_values_from_path(rel: Path, part_cols: list[str]) -> dict:

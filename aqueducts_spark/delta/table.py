@@ -1,5 +1,5 @@
-"""Delta-style table layer: append / upsert (MERGE) / replace, with
-snapshot isolation and time travel.
+"""Delta table layer: append / upsert (MERGE) / replace, with snapshot
+isolation and time travel.
 
 Reference semantics (aqueducts/delta/src/lib.rs):
 
@@ -13,24 +13,16 @@ Reference semantics (aqueducts/delta/src/lib.rs):
   empty conditions -> full overwrite (lib.rs:203-231, 365-375);
 * version / timestamp time travel on reads (lib.rs:45-74).
 
-Implementation: when ``delta-spark`` is importable we delegate to it
-(the production path on a real cluster). Otherwise we run on
-:class:`VersionedParquetTable` — a minimal commit-log-over-parquet
-table: each commit is a JSON entry naming the complete set of active
-data directories (a snapshot), giving atomic-enough local semantics,
-snapshot reads, and version/timestamp time travel. Writes go through
-normal distributed ``df.write.parquet`` — no driver-side data movement —
-so the layer scales with the cluster; only the tiny JSON log is
-driver-side.
+:class:`DeltaLayer` picks the engine: delta-spark when its session
+extension is configured (the production path on a real cluster),
+otherwise :class:`~aqueducts_spark.delta.protocol.DeltaProtocolTable`,
+which reads and writes the real ``_delta_log`` format itself.  This
+module holds the MERGE and replace predicates and the cast preamble
+the two engines use.
 """
 
 from __future__ import annotations
 
-import json
-import shutil
-import time
-import uuid
-from pathlib import Path
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -38,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..location import to_local_path
-from ..types import Field, fields_to_struct
+from ..types import Field
 
 try:  # pragma: no cover - exercised only where delta-spark is installed
     from delta.tables import DeltaTable  # type: ignore
@@ -46,8 +38,6 @@ try:  # pragma: no cover - exercised only where delta-spark is installed
     HAVE_DELTA_SPARK = True
 except ImportError:
     HAVE_DELTA_SPARK = False
-
-_LOG_DIR = "_aqueducts_delta_log"
 
 
 class DeltaTableError(RuntimeError):
@@ -127,362 +117,6 @@ def cast_to_schema(df: DataFrame, fields: list[Field]) -> DataFrame:
     return df.select(*cols)
 
 
-class VersionedParquetTable:
-    """Commit-log parquet table with snapshot reads and time travel."""
-
-    def __init__(self, spark: SparkSession, location: str):
-        self.spark = spark
-        self.root = to_local_path(location)
-        self.log_dir = self.root / _LOG_DIR
-
-    # ----- commit log ---------------------------------------------------
-    def exists(self) -> bool:
-        return self.log_dir.is_dir() and any(self.log_dir.glob("*.json"))
-
-    def _entries(self) -> list[dict]:
-        entries = []
-        for p in sorted(self.log_dir.glob("*.json")):
-            entries.append(json.loads(p.read_text()))
-        return entries
-
-    def _latest(self) -> dict:
-        entries = self._entries()
-        if not entries:
-            raise DeltaTableError(f"no table at {self.root}")
-        return entries[-1]
-
-    def _commit(self, action: str, active_dirs: list[str], extra: Optional[dict] = None) -> int:
-        self.log_dir.mkdir(parents=True, exist_ok=True)
-        version = len(list(self.log_dir.glob("*.json")))
-        entry = {
-            "version": version,
-            "timestamp": time.time(),
-            "action": action,
-            "active_dirs": active_dirs,
-            **(extra or {}),
-        }
-        tmp = self.log_dir / f".{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(entry))
-        tmp.rename(self.log_dir / f"{version:010d}.json")
-        return version
-
-    # ----- lifecycle ----------------------------------------------------
-    def create_if_absent(
-        self,
-        fields: list[Field],
-        partition_columns: list[str],
-        table_properties: dict,
-        metadata: dict,
-    ) -> None:
-        """SaveMode::Ignore create, with additive schema migration when
-        the declared schema diverges from the table's (reference
-        delta/src/lib.rs:138-163: merging supports only adding new
-        columns, never changing partitioning or existing types)."""
-        if self.exists():
-            self._migrate_schema_if_needed(fields)
-            return
-        self.root.mkdir(parents=True, exist_ok=True)
-        schema_json = json.loads(fields_to_struct(fields).json()) if fields else None
-        self._commit(
-            "create",
-            [],
-            {
-                "schema": schema_json,
-                "declared_fields": [
-                    {"name": f.name, "data_type": f.data_type, "nullable": f.nullable}
-                    for f in fields
-                ],
-                "partition_columns": partition_columns,
-                "table_properties": table_properties,
-                "metadata": metadata,
-            },
-        )
-
-    def _migrate_schema_if_needed(self, fields: list[Field]) -> None:
-        if not fields:
-            return
-        existing = {f.name: f for f in self.declared_fields()}
-        if not existing:
-            return
-        for f in fields:
-            cur = existing.get(f.name)
-            if cur is not None and cur.data_type != f.data_type:
-                raise DeltaTableError(
-                    f"schema migration cannot change column '{f.name}' from "
-                    f"{cur.data_type} to {f.data_type} (only additions supported)"
-                )
-        added = [f for f in fields if f.name not in existing]
-        if not added:
-            return
-        merged = self.declared_fields() + added
-        meta = self._table_meta()
-        self._commit(
-            "migrate",
-            self._latest()["active_dirs"],
-            {
-                "schema": json.loads(fields_to_struct(merged).json()),
-                "declared_fields": [
-                    {"name": f.name, "data_type": f.data_type, "nullable": f.nullable}
-                    for f in merged
-                ],
-                "partition_columns": meta.get("partition_columns", []),
-                "table_properties": meta.get("table_properties", {}),
-                "metadata": meta.get("metadata", {}),
-            },
-        )
-
-    def _table_meta(self, upto_version: Optional[int] = None) -> dict:
-        meta = {}
-        for entry in self._entries():
-            if upto_version is not None and entry["version"] > upto_version:
-                break
-            if entry["action"] in ("create", "migrate"):
-                meta = entry
-        return meta
-
-    def declared_fields(self) -> list[Field]:
-        meta = self._table_meta()
-        return [
-            Field(name=f["name"], data_type=f["data_type"], nullable=f.get("nullable", True))
-            for f in meta.get("declared_fields", [])
-        ]
-
-    def partition_columns(self) -> list[str]:
-        return self._table_meta().get("partition_columns", []) or []
-
-    # ----- reads --------------------------------------------------------
-    def read(
-        self, version: Optional[int] = None, timestamp: Optional[str] = None
-    ) -> DataFrame:
-        entries = self._entries()
-        if not entries:
-            raise DeltaTableError(f"no table at {self.root}")
-        snapshot = entries[-1]
-        if version is not None:
-            if version > entries[-1]["version"]:
-                raise DeltaTableError(
-                    f"version {version} not found at {self.root} "
-                    f"(latest is {entries[-1]['version']})"
-                )
-            matching = [e for e in entries if e["version"] <= version]
-            if not matching:
-                raise DeltaTableError(f"version {version} not found at {self.root}")
-            snapshot = matching[-1]
-        elif timestamp is not None:
-            ts = parse_travel_timestamp(timestamp)
-            matching = [e for e in entries if e["timestamp"] <= ts]
-            if not matching:
-                raise DeltaTableError(
-                    f"no version at or before {timestamp} at {self.root}"
-                )
-            snapshot = matching[-1]
-        dirs = snapshot["active_dirs"]
-        if not dirs:
-            # schema AS OF the requested snapshot — the latest meta may
-            # include columns from migrations that postdate it
-            meta = self._table_meta(upto_version=snapshot["version"])
-            if meta.get("schema"):
-                schema = T.StructType.fromJson(meta["schema"])
-                return self.spark.createDataFrame([], schema)
-            raise DeltaTableError(f"empty table with no declared schema at {self.root}")
-        paths = [str(self.root / d) for d in dirs]
-        if len(paths) == 1:
-            out = self.spark.read.parquet(paths[0])
-        else:
-            # each data dir is its own hive-partition root: a multi-path
-            # read trips Spark's conflicting-directory detection, so read
-            # per-dir (partition discovery works per root) and union —
-            # exactly the add-file union a real Delta snapshot performs
-            out = self.spark.read.parquet(paths[0])
-            for p in paths[1:]:
-                out = out.unionByName(
-                    self.spark.read.parquet(p), allowMissingColumns=True
-                )
-        # schema-on-read: columns added by migration after a file was
-        # written surface as nulls (the snapshot's schema, not the
-        # file's)
-        declared = [
-            Field(
-                name=f["name"],
-                data_type=f["data_type"],
-                nullable=f.get("nullable", True),
-            )
-            for e in entries
-            if e["action"] in ("create", "migrate") and e["version"] <= snapshot["version"]
-            for f in e.get("declared_fields", [])
-        ]
-        latest_meta: dict[str, Field] = {}
-        for f in declared:
-            latest_meta[f.name] = f
-        for name, f in latest_meta.items():
-            if name not in out.columns:
-                out = out.withColumn(name, F.lit(None).cast(f.spark_type))
-        return out
-
-    # ----- writes -------------------------------------------------------
-    def _write_data_dir(self, df: DataFrame, partition_by: list[str]) -> str:
-        name = f"data-{uuid.uuid4().hex}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(self.root / name))
-        return name
-
-    def _prepare(self, df: DataFrame) -> DataFrame:
-        fields = self.declared_fields()
-        return cast_to_schema(df, fields) if fields else df
-
-    def append(self, df: DataFrame) -> int:
-        df = self._prepare(df)
-        new_dir = self._write_data_dir(df, self.partition_columns())
-        active = (self._latest()["active_dirs"] if self.exists() else []) + [new_dir]
-        return self._commit("append", active)
-
-    def upsert(self, df: DataFrame, keys: list[str]) -> int:
-        """MERGE: matched rows updated with source values, unmatched
-        inserted (reference delta/src/lib.rs:240-328).
-
-        Duplicate-key sources follow the REFERENCE semantics (its own
-        examples rely on it): every target row matching a source key is
-        replaced by ALL of that key's source rows — delete-matching +
-        insert-all, deterministic and key-complete.  NOTE this is the
-        one place the fallback is more permissive than delta-spark,
-        whose MERGE raises on multiple matching source rows; pre-dedupe
-        (e.g. ``merge_stream_into_table(order_col=...)``) when the same
-        pipeline must also run against native Delta."""
-        df = self._prepare(df)
-        current = self.read()
-        cond = merge_key_condition(df.schema, keys, "old", "new")
-        old = current.alias("old")
-        new = df.alias("new")
-        # anti-join keeps target rows with no matching source row ...
-        untouched = old.join(new, on=cond, how="left_anti").select(
-            *[F.col(f"old.{c}").alias(c) for c in current.columns]
-        )
-        # ... and the full source acts as upserted rows (update + insert)
-        merged = untouched.unionByName(df.select(*current.columns))
-        # no checkpoint: the write goes to a FRESH data-<uuid> dir, so
-        # reading the current snapshot while writing never overlaps —
-        # materializing the merged set first just doubled the I/O
-        new_dir = self._write_data_dir(merged, self.partition_columns())
-        return self._commit("upsert", [new_dir], {"merge_keys": keys})
-
-    def replace(self, df: DataFrame, conditions: list[tuple[str, str]]) -> int:
-        """Conditional overwrite (``replaceWhere``): drop rows matching
-        the predicate, insert the new data (reference delta/src/lib.rs:203-231)."""
-        df = self._prepare(df)
-        pred = build_replace_predicate(conditions)
-        if self.exists() and self._latest()["active_dirs"]:
-            current = self.read()
-            kept = current.filter(~pred | pred.isNull())
-            out = kept.unionByName(df.select(*current.columns))
-        else:
-            out = df
-        new_dir = self._write_data_dir(out, self.partition_columns())
-        return self._commit("replace", [new_dir], {"conditions": conditions})
-
-
-    def changes(self, v_from: int, v_to: Optional[int] = None) -> DataFrame:
-        """Change-data-feed-style row diff between two versions: every
-        row added between ``v_from`` and ``v_to`` (default: latest)
-        tagged ``_change_type='insert'``, every row removed tagged
-        ``'delete'`` (an update surfaces as delete+insert, exactly like
-        Delta CDC without per-commit granularity). Multiset semantics
-        via ``exceptAll`` — duplicate rows diff by count.
-
-        This is the fallback-layer twin of delta-spark's
-        ``readChangeFeed``; with native delta installed, prefer
-        ``spark.read.format("delta").option("readChangeFeed", ...)``.
-        Scale shape: two snapshot scans + two ``exceptAll`` hash
-        anti-diffs (one shuffle each) — no driver-side row handling.
-        """
-        entries = self._entries()
-        if not entries:
-            raise DeltaTableError(f"no table at {self.root}")
-        if v_to is None:
-            v_to = entries[-1]["version"]
-        before = self.read(version=v_from)
-        after = self.read(version=v_to)
-        # align schemas across migrations: missing columns become nulls
-        for c in after.columns:
-            if c not in before.columns:
-                before = before.withColumn(
-                    c, F.lit(None).cast(dict(after.dtypes)[c])
-                )
-        for c in before.columns:
-            if c not in after.columns:
-                after = after.withColumn(
-                    c, F.lit(None).cast(dict(before.dtypes)[c])
-                )
-        cols = after.columns
-        before = before.select(*cols)
-        after = after.select(*cols)
-        inserts = after.exceptAll(before).withColumn(
-            "_change_type", F.lit("insert")
-        )
-        deletes = before.exceptAll(after).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        return (
-            inserts.unionByName(deletes)
-            .withColumn("_from_version", F.lit(int(v_from)))
-            .withColumn("_to_version", F.lit(int(v_to)))
-        )
-
-    # ----- maintenance --------------------------------------------------
-    def history(self) -> list[dict]:
-        """Commit log, oldest first (DESCRIBE HISTORY parity): version,
-        timestamp, action, plus action-specific fields."""
-        return self._entries()
-
-    def compact(self, target_partitions: Optional[int] = None) -> int:
-        """OPTIMIZE-style bin packing: rewrite the current snapshot as
-        one fresh data dir (optionally coalesced to
-        ``target_partitions`` files per partition tree) and commit a
-        new version with identical logical content.
-
-        Old versions keep their files until :meth:`vacuum`, so time
-        travel across the compaction boundary still works — the Delta
-        OPTIMIZE contract. An append-heavy table accumulates one dir
-        per append whose snapshot read unions N dirs; compaction
-        collapses that read back to a single parquet root.
-        """
-        current = self.read()
-        if target_partitions is not None:
-            current = current.coalesce(target_partitions)
-        new_dir = self._write_data_dir(current, self.partition_columns())
-        return self._commit("compact", [new_dir])
-
-    def vacuum(self, keep_versions: int = 1) -> list[str]:
-        """Delete data dirs unreferenced by the newest ``keep_versions``
-        snapshots and return their names. Time travel to a vacuumed
-        version subsequently fails (files are gone) — Delta VACUUM
-        semantics, with version count standing in for the retention
-        window."""
-        if keep_versions < 1:
-            raise DeltaTableError("vacuum: keep_versions must be >= 1")
-        entries = self._entries()
-        if not entries:
-            return []
-        # count only DATA snapshots toward the retention window: vacuum
-        # commits re-reference the latest dirs and would otherwise crowd
-        # real snapshots out of the protected set
-        data_entries = [e for e in entries if e["action"] != "vacuum"]
-        keep: set[str] = set()
-        for entry in data_entries[-keep_versions:]:
-            keep.update(entry.get("active_dirs", []))
-        removed = []
-        for p in sorted(self.root.glob("data-*")):
-            if p.is_dir() and p.name not in keep:
-                shutil.rmtree(p)
-                removed.append(p.name)
-        if removed:
-            self._commit(
-                "vacuum", self._latest()["active_dirs"], {"removed": removed}
-            )
-        return removed
-
-
 def parse_travel_timestamp(timestamp: str) -> float:
     """Epoch seconds of a time-travel timestamp.  ZONE-LESS inputs are
     UTC: commit timestamps are UTC epochs, and the native delta-spark
@@ -499,11 +133,10 @@ def parse_travel_timestamp(timestamp: str) -> float:
 
 
 class DeltaLayer:
-    """Dispatch between delta-spark (when installed), the pure-Python
-    Delta-protocol implementation (the default — real ``_delta_log``
-    format, interoperable with delta-rs / delta-spark / DuckDB-delta),
-    and the legacy ``VersionedParquetTable`` fallback (kept only so
-    tables written by earlier versions stay readable)."""
+    """Dispatch between delta-spark (when installed and configured) and
+    the pure-Python Delta-protocol implementation (the default — real
+    ``_delta_log`` format, interoperable with delta-rs / delta-spark /
+    DuckDB-delta)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -522,15 +155,18 @@ class DeltaLayer:
         return self.table(location).read(version, timestamp)
 
     def table(self, location: str):
-        """Pick the log format for ``location``: an existing legacy
-        ``_aqueducts_delta_log`` keeps its private-format handler; all
-        other tables (including new ones) speak the real Delta
-        protocol."""
-        from .protocol import DeltaProtocolTable
+        """The Delta-protocol table at ``location``.  A table still in
+        the retired ``_aqueducts_delta_log`` format is refused: a write
+        would otherwise start an empty Delta table over its data."""
+        from .protocol import LOG_DIR, DeltaProtocolTable
+        from .upgrade import LEGACY_LOG_DIR
 
-        legacy = VersionedParquetTable(self.spark, location)
-        if legacy.exists():
-            return legacy
+        root = to_local_path(location)
+        if (root / LEGACY_LOG_DIR).is_dir() and not (root / LOG_DIR).is_dir():
+            raise DeltaTableError(
+                f"{root} is in the retired {LEGACY_LOG_DIR} format; convert "
+                f"it once with `aqueducts-spark delta-upgrade {root}`"
+            )
         return DeltaProtocolTable(self.spark, location)
 
 

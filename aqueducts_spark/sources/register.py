@@ -318,12 +318,6 @@ def _register_delta(spark: SparkSession, source: DeltaSource) -> DataFrame:
             return reader.load(location)
         table = layer.table(location)
         if source.change_feed:
-            if not hasattr(table, "change_feed"):
-                raise SourceError(
-                    "delta source: change_feed requires a Delta-protocol "
-                    "table (legacy _aqueducts_delta_log tables only "
-                    "support the endpoint diff)"
-                )
             # changes_from is INCLUSIVE (native readChangeFeed
             # startingVersion semantics); change_feed's v_from is
             # exclusive, hence the -1

@@ -567,7 +567,7 @@ def merge_stream_into_table(
     order_col: str | None = None,
 ):
     """Stream-to-lakehouse CDC merge: upsert every micro-batch into a
-    delta-layer table (``VersionedParquetTable`` or any object with an
+    delta-layer table (``DeltaProtocolTable`` or any object with an
     ``upsert(df, keys)`` method) via ``foreachBatch`` — the standard
     pattern for landing a change stream in a merge-on-key table, since
     ``writeStream`` has no native MERGE sink.

@@ -176,16 +176,16 @@ stages:
     assert outcome["cancelled"] == [target]
 
 
-def test_cli_optimize_compacts_and_vacuums(spark, tmp_path, monkeypatch):
-    from aqueducts_spark.delta.table import VersionedParquetTable
+def test_cli_optimize_compacts_and_vacuums(spark, tmp_path, monkeypatch, capsys):
+    from aqueducts_spark.delta.protocol import DeltaProtocolTable
     from aqueducts_spark.types import Field
     from aqueducts_spark import cli
 
     loc = str(tmp_path / "tbl_cli_opt")
-    t = VersionedParquetTable(spark, loc)
+    t = DeltaProtocolTable(spark, loc)
     t.create_if_absent([Field(name="id", data_type="long")], [], {}, {})
     for i in range(3):
-        t.append(spark.createDataFrame([(i,)], ["id"]))
+        t.append(spark.createDataFrame([(i,)], ["id"]).coalesce(1))
 
     # reuse the test session instead of letting the CLI spin up (and
     # stop) its own
@@ -193,10 +193,11 @@ def test_cli_optimize_compacts_and_vacuums(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(spark, "stop", lambda: None)
     rc = cli.main(["optimize", loc, "--target-partitions", "1", "--vacuum-keep", "1"])
     assert rc == 0
-    t2 = VersionedParquetTable(spark, loc)
-    assert len(t2._latest()["active_dirs"]) == 1
-    assert sorted(r.id for r in t2.read().collect()) == [0, 1, 2]
-    assert [e["action"] for e in t2.history()][-2:] == ["compact", "vacuum"]
+    out = capsys.readouterr().out
+    assert "vacuumed 3 data file(s)" in out  # the three appended files
+    assert len(t.read().inputFiles()) == 1
+    assert sorted(r.id for r in t.read().collect()) == [0, 1, 2]
+    assert t.history()[-1]["operation"] == "OPTIMIZE"
 
 
 def test_cli_explain(spark, tmp_path, capsys, monkeypatch):

@@ -1,16 +1,16 @@
 """Delta-layer tests mirroring the reference's delta integration tests
 (aqueducts/delta/tests/integration.rs: append :115-187, upsert :190-272,
-replace :275-349) on the versioned-parquet fallback."""
+replace :275-349) on the Delta-protocol table."""
 
 import pytest
 
 from aqueducts_spark import load_pipeline_str, run_pipeline
-from aqueducts_spark.delta.table import VersionedParquetTable
+from aqueducts_spark.delta.protocol import DeltaProtocolTable
 
 
 @pytest.fixture()
 def table(spark, tmp_path):
-    t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    t = DeltaProtocolTable(spark, str(tmp_path / "tbl"))
     t.create_if_absent(
         fields=_fields(), partition_columns=[], table_properties={}, metadata={}
     )
@@ -80,7 +80,7 @@ def test_missing_column_rejected(spark, table):
 
 def test_upsert_with_array_keys_set_equality(spark, tmp_path):
     """List-typed merge keys compare as sets (reference delta/src/lib.rs:266-278)."""
-    t = VersionedParquetTable(spark, str(tmp_path / "arr_tbl"))
+    t = DeltaProtocolTable(spark, str(tmp_path / "arr_tbl"))
     t.create_if_absent([], [], {}, {})
     df1 = spark.createDataFrame([(["x", "y"], 1), (["q"], 2)], ["k", "v"])
     t.append(df1)
@@ -148,11 +148,11 @@ def test_schema_migration_adds_columns(spark, tmp_path):
     """create_if_absent on an existing table merges NEW columns
     (reference delta/src/lib.rs:138-140: additive migrations only);
     rows written before the migration read back with nulls."""
-    from aqueducts_spark.delta.table import DeltaTableError, VersionedParquetTable
+    from aqueducts_spark.delta.table import DeltaTableError
     from aqueducts_spark.types import parse_fields
 
     loc = str(tmp_path / "mig")
-    t = VersionedParquetTable(spark, loc)
+    t = DeltaProtocolTable(spark, loc)
     v1 = parse_fields(
         [{"name": "id", "data_type": "int64"}, {"name": "v", "data_type": "string"}]
     )
@@ -161,7 +161,8 @@ def test_schema_migration_adds_columns(spark, tmp_path):
 
     v2 = v1 + parse_fields([{"name": "extra", "data_type": "float64"}])
     t.create_if_absent(v2, [], {}, {})  # migrate, not error
-    assert [f.name for f in t.declared_fields()] == ["id", "v", "extra"]
+    assert t.read().dtypes == [("id", "bigint"), ("v", "string"), ("extra", "double")]
+    assert t.history()[-1]["operation"] == "ADD COLUMNS"
 
     t.append(
         spark.createDataFrame([(2, "b", 1.5)], ["id", "v", "extra"])
@@ -180,46 +181,53 @@ def test_schema_migration_adds_columns(spark, tmp_path):
 
 
 def test_compact_collapses_dirs_and_preserves_time_travel(spark, tmp_path):
-    from aqueducts_spark.delta.table import VersionedParquetTable
     from aqueducts_spark.types import Field
 
     loc = str(tmp_path / "tbl_compact")
-    t = VersionedParquetTable(spark, loc)
+    t = DeltaProtocolTable(spark, loc)
     t.create_if_absent(
         [Field(name="id", data_type="long"), Field(name="v", data_type="string")],
         [], {}, {},
     )
     for i in range(4):
-        t.append(spark.createDataFrame([(i, f"v{i}")], ["id", "v"]))
-    assert len(t._latest()["active_dirs"]) == 4
+        t.append(spark.createDataFrame([(i, f"v{i}")], ["id", "v"]).coalesce(1))
+    assert len(t.read().inputFiles()) == 4
 
     v = t.compact(target_partitions=1)
-    assert len(t._latest()["active_dirs"]) == 1
+    assert len(t.read().inputFiles()) == 1
     assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 3]
     # time travel to before the compaction still reads the old layout
+    assert len(t.read(version=v - 1).inputFiles()) == 4
     assert sorted(r.id for r in t.read(version=v - 1).collect()) == [0, 1, 2, 3]
-    assert [e["action"] for e in t.history()][-1] == "compact"
+    assert t.history()[-1]["operation"] == "OPTIMIZE"
 
 
 def test_vacuum_drops_unreferenced_dirs(spark, tmp_path):
-    import pytest as _pytest
-    from aqueducts_spark.delta.table import DeltaTableError, VersionedParquetTable
+    """Vacuum deletes the files no kept snapshot references, then the
+    partition directories it emptied."""
     from aqueducts_spark.types import Field
 
-    loc = str(tmp_path / "tbl_vacuum")
-    t = VersionedParquetTable(spark, loc)
-    t.create_if_absent([Field(name="id", data_type="long")], [], {}, {})
-    for i in range(3):
-        t.append(spark.createDataFrame([(i,)], ["id"]))
-    pre_compact_version = t._latest()["version"]
+    loc = tmp_path / "tbl_vacuum"
+    t = DeltaProtocolTable(spark, str(loc))
+    t.create_if_absent(
+        [Field(name="id", data_type="long"), Field(name="p", data_type="string")],
+        ["p"], {}, {},
+    )
+    for i, p in enumerate("aab"):
+        t.append(spark.createDataFrame([(i, p)], ["id", "p"]).coalesce(1))
+    pre_compact_version = t.history()[-1]["version"]
     t.compact(target_partitions=1)
+    t.replace(spark.createDataFrame([(9, "c")], ["id", "p"]), [("p", "a")])
+    assert sorted(d.name for d in loc.glob("p=*")) == ["p=a", "p=b", "p=c"]
 
     removed = t.vacuum(keep_versions=1)
-    assert len(removed) == 3  # the three pre-compaction append dirs
+    # the three appended files and the compacted p=a and p=b files
+    assert len(removed) == 5
+    assert sorted(d.name for d in loc.glob("p=*")) == ["p=b", "p=c"]
     # latest snapshot unaffected
-    assert sorted(r.id for r in t.read().collect()) == [0, 1, 2]
+    assert sorted((r.id, r.p) for r in t.read().collect()) == [(2, "b"), (9, "c")]
     # vacuumed versions are no longer readable (Delta VACUUM semantics)
-    with _pytest.raises(Exception):
+    with pytest.raises(Exception):
         t.read(version=pre_compact_version).collect()
     # idempotent
     assert t.vacuum(keep_versions=1) == []
@@ -345,7 +353,7 @@ def test_empty_snapshot_time_travel_uses_schema_as_of_version(spark, table):
     pre-migration empty snapshot must NOT show the migrated column."""
     from aqueducts_spark.types import parse_fields
 
-    v_created = table._latest()["version"]
+    v_created = table.history()[-1]["version"]
     wider = _fields() + parse_fields(
         [{"name": "extra", "data_type": "string", "nullable": True}]
     )
@@ -356,17 +364,29 @@ def test_empty_snapshot_time_travel_uses_schema_as_of_version(spark, table):
     assert "extra" not in table.read(version=v_created).columns
 
 
-def test_vacuum_counts_only_data_snapshots(spark, table):
-    """A prior vacuum commit must not crowd real snapshots out of the
+def test_vacuum_counts_only_data_snapshots(spark, tmp_path):
+    """Commits that change no file — an upgraded table's VACUUM END and
+    ADD COLUMNS commits — must not crowd data snapshots out of the
     keep_versions retention window."""
-    table.append(_df(spark, [("a", 1)]))                    # dirA
-    v_b = table.upsert(_df(spark, [("b", 2)]), ["col_1"])   # dirB (rewrite)
-    assert table.vacuum(keep_versions=1)                    # drops dirA + vacuum commit
-    table.upsert(_df(spark, [("c", 3)]), ["col_1"])         # dirC
-    # keep_versions=2 must protect the last TWO DATA snapshots (dirB &
-    # dirC) even though a vacuum commit sits between them
-    assert table.vacuum(keep_versions=2) == []
-    assert table.read(version=v_b).count() == 2             # dirB still readable
+    import shutil
+    from pathlib import Path
+
+    from aqueducts_spark.delta.upgrade import upgrade
+
+    loc = tmp_path / "events"
+    shutil.copytree(Path(__file__).parent / "data" / "legacy_delta" / "events", loc)
+    upgrade(spark, str(loc))
+    t = DeltaProtocolTable(spark, str(loc))
+    # versions 3..9: upsert, compact, VACUUM END, ADD COLUMNS, append,
+    # upsert, replace — 4, 5 and 6 hold the same files
+    assert [e["operation"] for e in t.history()][2:4] == ["VACUUM END", "ADD COLUMNS"]
+    rows_v3 = t.read(version=3).count()
+    # the five newest data snapshots are versions 9, 8, 7, 6 (= 5 = 4), 3
+    assert t.vacuum(keep_versions=5) == []
+    assert t.read(version=3).count() == rows_v3
+    assert t.vacuum(keep_versions=4)  # now the files of version 3 go
+    with pytest.raises(Exception):
+        t.read(version=3).collect()
 
 
 def test_time_travel_naive_timestamp_is_utc(spark, tmp_path):

@@ -1,9 +1,8 @@
-"""Differential test: the Delta-protocol table and the legacy
-versioned-parquet table implement the SAME semantics (reference
-aqueducts/delta/src/lib.rs) over different log formats.  Apply
-identical operation sequences to both and require identical visible
-state — current rows AND every historical version — plus protocol-only
-edge cases (schemaless create, array-key upsert, interleaved writers).
+"""Differential test: the Delta-protocol table against a pure-Python
+model of the reference semantics (aqueducts/delta/src/lib.rs).  Apply
+random operation sequences to both and require identical visible state
+— current rows AND every historical version — plus edge cases
+(schemaless create, array-key upsert, interleaved writers).
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from aqueducts_spark.delta.protocol import DeltaProtocolTable
-from aqueducts_spark.delta.table import VersionedParquetTable
 from aqueducts_spark.types import Field
 
 FIELDS = [
@@ -24,11 +22,26 @@ FIELDS = [
 ]
 
 
+def _sorted(rows):
+    return sorted(rows, key=lambda t: (t[0], t[1] is None, t[1] or "", t[2]))
+
+
 def _rows(df):
-    return sorted(
-        ((r.id, r.grp, r.val) for r in df.collect()),
-        key=lambda t: (t[0], t[1] is None, t[1] or "", t[2]),
-    )
+    return _sorted((r.id, r.grp, r.val) for r in df.collect())
+
+
+def _model(state, kind, rows, cond):
+    """The table's rows (a multiset of ``(id, grp, val)``) after one
+    operation, as the reference defines it."""
+    if kind == "append":
+        return state + rows
+    if kind == "upsert":  # delete every matching row, insert every source row
+        keys = {r[0] for r in rows}
+        return [r for r in state if r[0] not in keys] + rows
+    if kind == "replace":  # a row whose predicate is NULL stays
+        hit = lambda r: all(r[1] is not None and r[1] == v for _, v in cond)
+        return [r for r in state if not hit(r)] + rows
+    return state  # compact is content-neutral
 
 
 def _mkdf(spark, rows):
@@ -68,31 +81,28 @@ def _random_ops(seed: int, n_ops: int = 6):
 @pytest.mark.parametrize("seed", [7, 21, 99])
 def test_same_op_sequence_same_state_at_every_version(spark, tmp_path, seed):
     proto = DeltaProtocolTable(spark, str(tmp_path / f"proto{seed}"))
-    legacy = VersionedParquetTable(spark, str(tmp_path / f"legacy{seed}"))
-    for t in (proto, legacy):
-        t.create_if_absent(FIELDS, [], {}, {})
+    proto.create_if_absent(FIELDS, [], {}, {})
 
-    versions = []  # (proto_version, legacy_version)
+    state: list = []
+    versions = []  # (version, the model's rows at it)
     for kind, rows, cond in _random_ops(seed):
         if kind == "compact":
             if not proto.exists() or proto.latest_version() == 0:
                 continue
-            vp, vl = proto.compact(), legacy.compact()
+            v = proto.compact()
+        elif kind == "append":
+            v = proto.append(_mkdf(spark, rows))
+        elif kind == "upsert":
+            v = proto.upsert(_mkdf(spark, rows), ["id"])
         else:
-            df_p = _mkdf(spark, rows)
-            df_l = _mkdf(spark, rows)
-            if kind == "append":
-                vp, vl = proto.append(df_p), legacy.append(df_l)
-            elif kind == "upsert":
-                vp, vl = proto.upsert(df_p, ["id"]), legacy.upsert(df_l, ["id"])
-            else:
-                vp, vl = proto.replace(df_p, cond), legacy.replace(df_l, cond)
-        versions.append((vp, vl))
-        assert _rows(proto.read()) == _rows(legacy.read()), (kind, rows, cond)
+            v = proto.replace(_mkdf(spark, rows), cond)
+        state = _model(state, kind, rows, cond)
+        versions.append((v, _sorted(state)))
+        assert _rows(proto.read()) == _sorted(state), (kind, rows, cond)
 
     # every historical snapshot agrees too
-    for vp, vl in versions:
-        assert _rows(proto.read(version=vp)) == _rows(legacy.read(version=vl))
+    for v, expected in versions:
+        assert _rows(proto.read(version=v)) == expected
 
 
 def test_schemaless_create_defers_to_first_append(spark, tmp_path):

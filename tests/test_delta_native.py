@@ -4,11 +4,10 @@ These exercise the REAL Delta Lake protocol path (DeltaLayer.native /
 _write_delta_native) and therefore require the ``delta-spark`` package
 plus a session built with the Delta SQL extension.  In environments
 without delta-spark (such as this build container) every test is
-skipped — the suite then covers only the ``VersionedParquetTable``
-fallback, which is a private commit-log format, NOT the Delta protocol:
-a table written by the reference's delta-rs writer
-(reference aqueducts/delta/src/lib.rs:141-163) is only readable here
-when delta-spark is installed, and vice versa.
+skipped — the suite then covers the pure-Python Delta-protocol table
+(``aqueducts_spark.delta.protocol``), whose interop with other engines
+``tests/test_delta_interop.py`` checks against frozen fixtures and a
+clean-room reader.
 """
 
 from __future__ import annotations

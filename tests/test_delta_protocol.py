@@ -7,6 +7,7 @@ partitionValues, parquet checkpoints, protocol/feature gating.
 from __future__ import annotations
 
 import json
+import re
 from collections import Counter
 from pathlib import Path
 from urllib.parse import unquote
@@ -331,6 +332,29 @@ def test_upsert_keeps_one_file_per_partition_value(spark, tmp_path):
     actions = _commit(t, v)
     assert not [a for a in actions if "remove" in a]
     assert len([a for a in actions if "add" in a]) == 2
+
+
+def test_upsert_runs_its_source_once(spark, tmp_path):
+    """The touched-file scan and the rewrite must see the same batch.
+    This source yields a new key the first time it runs and an existing
+    key after that: run once per job, the scan finds no file to rewrite
+    while the rewrite inserts the existing key — a duplicate key."""
+    marker = tmp_path / "source_ran"
+
+    def key(_):
+        if marker.exists():
+            return 1
+        marker.touch()
+        return 100
+
+    t = _make(spark, tmp_path)
+    t.append(_df(spark, [(1, "old", 1.0)]))
+    key_udf = F.udf(key, "long").asNondeterministic()
+    src = spark.range(1).select(
+        key_udf("id").alias("id"), F.lit("new").alias("name"), F.lit(2.0).alias("score")
+    )
+    t.upsert(src, keys=["id"])
+    assert _rows(t.read()) == [(1, "old", 1.0), (100, "new", 2.0)]
 
 
 def test_cdf_pruned_upsert_feeds_matched_deletes_and_every_insert(spark, tmp_path):
@@ -663,15 +687,49 @@ def test_layer_prefers_protocol_for_new_tables(spark, tmp_path):
     assert isinstance(t, DeltaProtocolTable)
 
 
-def test_layer_keeps_legacy_tables_readable(spark, tmp_path):
-    from aqueducts_spark.delta.table import VersionedParquetTable
+@pytest.mark.parametrize("role", ["destination", "source"])
+def test_layer_refuses_unconverted_legacy_tables(spark, tmp_path, role):
+    """A pipeline pointed at a table still in the retired log format
+    fails with the ``delta-upgrade`` hint and touches nothing: without
+    the refusal a write would start an empty Delta table over it."""
+    import shutil
 
-    legacy = VersionedParquetTable(spark, str(tmp_path / "old"))
-    legacy.create_if_absent(FIELDS, [], {}, {})
-    legacy.append(_df(spark, [(1, "a", 1.0)]))
-    layer = delta_layer(spark)
-    assert isinstance(layer.table(str(tmp_path / "old")), VersionedParquetTable)
-    assert _rows(layer.read(str(tmp_path / "old"))) == [(1, "a", 1.0)]
+    from aqueducts_spark import load_pipeline_str, run_pipeline
+
+    loc = tmp_path / "legacy"
+    shutil.copytree(Path(__file__).parent / "data" / "legacy_delta" / "loose", loc)
+    before = sorted(p.relative_to(loc) for p in loc.rglob("*"))
+    if role == "destination":
+        yml = f"""
+sources:
+  - type: in_memory
+    name: legacy_src_rows
+stages:
+  - name: legacy_rows
+    query: SELECT CAST(9 AS BIGINT) AS k, 'z' AS v
+destination:
+  type: delta
+  name: legacy_out
+  location: {loc}
+  write_mode: {{operation: append}}
+"""
+        spark.createDataFrame([(1,)], "x int").createOrReplaceTempView("legacy_src_rows")
+    else:
+        yml = f"""
+sources:
+  - type: delta
+    name: legacy_in
+    location: {loc}
+stages:
+  - name: legacy_rows
+    query: SELECT count(*) AS n FROM legacy_in
+"""
+    with pytest.raises(Exception, match=re.escape(f"aqueducts-spark delta-upgrade {loc}`")):
+        run_pipeline(spark, load_pipeline_str(yml))
+    assert sorted(p.relative_to(loc) for p in loc.rglob("*")) == before
+    assert not (loc / "_delta_log").exists()
+    for view in ("legacy_src_rows", "legacy_rows", "legacy_in"):
+        spark.catalog.dropTempView(view)
 
 
 def test_pipeline_delta_destination_writes_real_delta_log(spark, tmp_path):

@@ -1,12 +1,12 @@
 """Delta source in YAML pipelines, including version time travel (A7)."""
 
 from aqueducts_spark import load_pipeline_str, run_pipeline
-from aqueducts_spark.delta.table import VersionedParquetTable
+from aqueducts_spark.delta.protocol import DeltaProtocolTable
 
 
 def test_delta_source_with_version_pin(spark, tmp_path):
     loc = tmp_path / "dt"
-    t = VersionedParquetTable(spark, str(loc))
+    t = DeltaProtocolTable(spark, str(loc))
     t.create_if_absent([], [], {}, {})
     t.append(spark.createDataFrame([(1, "a")], ["id", "v"]))   # version 1
     t.append(spark.createDataFrame([(2, "b")], ["id", "v"]))   # version 2
@@ -43,7 +43,6 @@ def test_delta_source_change_feed_mode(spark, tmp_path):
     import json
 
     from aqueducts_spark.config.loader import load_pipeline_str
-    from aqueducts_spark.delta.protocol import DeltaProtocolTable
     from aqueducts_spark.pipeline import run_pipeline
     from aqueducts_spark.progress import CollectingTracker
     from aqueducts_spark.types import Field

@@ -211,10 +211,10 @@ def test_merge_stream_into_table(spark, tmp_path):
     """foreachBatch CDC merge: a change stream lands in a merge-on-key
     table; later files win, within-batch duplicates collapse to one
     row per key before the upsert."""
-    from aqueducts_spark.delta.table import VersionedParquetTable
+    from aqueducts_spark.delta.protocol import DeltaProtocolTable
     from aqueducts_spark.streaming import file_stream_source, merge_stream_into_table
 
-    table = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    table = DeltaProtocolTable(spark, str(tmp_path / "tbl"))
     table.create_if_absent(
         fields=parse_fields(
             [
@@ -260,10 +260,10 @@ def test_merge_stream_into_table(spark, tmp_path):
 def test_merge_stream_order_col_last_change_wins(spark, tmp_path):
     """With order_col, within-batch CDC changes resolve to the row with
     the max sequence — not an arbitrary md5 winner."""
-    from aqueducts_spark.delta.table import VersionedParquetTable
+    from aqueducts_spark.delta.protocol import DeltaProtocolTable
     from aqueducts_spark.streaming import file_stream_source, merge_stream_into_table
 
-    table = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    table = DeltaProtocolTable(spark, str(tmp_path / "tbl"))
     table.create_if_absent(
         fields=parse_fields(
             [
