@@ -54,6 +54,8 @@ from .table import DeltaTableError, merge_key_condition, build_replace_predicate
 
 LOG_DIR = "_delta_log"
 CDC_DIR = "_change_data"
+# the retired log format's dir; ``delta-upgrade`` keeps it as the rollback
+LEGACY_LOG_DIR = "_aqueducts_delta_log"
 LAST_CHECKPOINT = "_last_checkpoint"
 CHECKPOINT_INTERVAL = 10
 # column :meth:`DeltaProtocolTable._read_snapshot` adds with ``with_file``
@@ -604,7 +606,8 @@ class DeltaProtocolTable:
             )
         snap = _Snapshot()
         start = 0
-        usable_cp = [v for v in self._checkpoint_versions() if v <= version]
+        checkpoints = self._checkpoint_versions()
+        usable_cp = [v for v in checkpoints if v <= version]
         if usable_cp:
             cp = usable_cp[-1]
             for action in self._read_checkpoint(cp):
@@ -613,6 +616,12 @@ class DeltaProtocolTable:
             start = cp + 1
         commits = [v for v in self._commit_versions() if start <= v <= version]
         expected = list(range(start, version + 1))
+        if commits != expected and not usable_cp and checkpoints:
+            raise DeltaProtocolError(
+                f"version {version} predates version {checkpoints[0]}, the "
+                f"oldest the log at {self.root} can rebuild: history before "
+                "it was truncated at that version's checkpoint"
+            )
         if commits != expected:
             missing = sorted(set(expected) - set(commits))
             raise DeltaProtocolError(
@@ -1664,33 +1673,48 @@ class DeltaProtocolTable:
                     keep.update(files)
                 if len(kept) == keep_versions:
                     break
+
+        def skipped(rel: Path) -> bool:
+            # the logs (the legacy one is an upgraded table's rollback)
+            # and _change_data, whose cdc files this add-action keep-set
+            # does not model (change-feed retention is a separate
+            # policy); hidden entries are a concurrent writer's .stage-*
+            # dirs or other working files
+            return bool(rel.parts) and (
+                rel.parts[0] in (LOG_DIR, CDC_DIR, LEGACY_LOG_DIR)
+                or any(part.startswith(".") for part in rel.parts)
+            )
+
         removed: list[str] = []
         for fpath in sorted(self.root.rglob("*.parquet")):
             rel = fpath.relative_to(self.root)
-            if rel.parts and rel.parts[0] == LOG_DIR:
-                continue
-            if rel.parts and rel.parts[0] == CDC_DIR:
-                # cdc files are referenced by cdc actions, which this
-                # keep-set (built from add actions) does not model —
-                # change-feed retention is a separate policy, so vacuum
-                # never touches _change_data
-                continue
-            if any(part.startswith(".") for part in rel.parts):
-                # a concurrent writer's .stage-* dir (or other hidden
-                # working files) is never vacuum's to delete
-                continue
-            if str(rel) not in keep:
+            if not skipped(rel) and str(rel) not in keep:
                 fpath.unlink()
+                fpath.with_name(f".{fpath.name}.crc").unlink(missing_ok=True)
                 removed.append(str(rel))
-        # drop now-empty partition directories
+
+        def debris(p: Path) -> bool:
+            # a Spark write's marker, or a checksum sidecar whose file
+            # is gone
+            return p.is_file() and (
+                p.name in ("_SUCCESS", "._SUCCESS.crc")
+                or (
+                    p.name.startswith(".")
+                    and p.name.endswith(".crc")
+                    and not p.with_name(p.name[1:-4]).exists()
+                )
+            )
+
+        # drop directories left holding nothing but debris, deepest first
         for d in sorted(
             (p for p in self.root.rglob("*") if p.is_dir()), reverse=True
         ):
-            if (
-                d.name != LOG_DIR
-                and not d.name.startswith(".")
-                and not any(d.iterdir())
-            ):
+            if skipped(d.relative_to(self.root)):
+                continue
+            entries = list(d.iterdir())
+            if all(map(debris, entries)):
+                for p in entries:
+                    p.unlink()
                 d.rmdir()
         return removed
 

@@ -29,10 +29,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..location import to_local_path
-from .protocol import LOG_DIR, DeltaProtocolTable, _add_action, _remove_action, _Snapshot
+from .protocol import (
+    LEGACY_LOG_DIR,
+    LOG_DIR,
+    DeltaProtocolTable,
+    _add_action,
+    _remove_action,
+    _Snapshot,
+)
 from .table import DeltaTableError
 
-LEGACY_LOG_DIR = "_aqueducts_delta_log"
 
 # legacy data action -> the operation and parameters the writer commits
 _OPERATIONS = {

@@ -515,97 +515,61 @@ _BPE_BYTE_PAT = (
     r"| ?\p{L}+| ?\p{N}+| ?[^" + _BPE_WS_CLS + r"\p{L}\p{N}]+"
     r"|[" + _BPE_WS_CLS + r"]+"
 )
-
-
-def _bpe_pretoken_counts(df: DataFrame, text_col: str, min_count: int):
-    """Byte-level twin of :func:`_bpe_word_counts`: distributed corpus
-    -> bounded PRETOKEN-count table, pretokens being the GPT-2-style
-    regex matches (case preserved — byte-level BPE never normalizes;
-    whitespace runs are pretokens too, exactly as GPT-2 learns its
-    space-prefixed tokens).  No ``\\x1f`` strip is needed: symbols are
-    hex byte pairs, so the reserved separator can never appear INSIDE
-    a symbol regardless of the text."""
-    toks = (
-        ensure_parallelism(df)
-        .select(
-            F.explode(
-                F.regexp_extract_all(
-                    F.coalesce(F.col(text_col), F.lit("")),
-                    F.lit(_BPE_BYTE_PAT),
-                    F.lit(0),
-                )
-            ).alias("word")
-        )
-        .where(F.length("word") > 0)
-    )
-    wc = toks.groupBy("word").agg(F.count(F.lit(1)).alias("__n"))
-    if min_count > 1:
-        wc = wc.where(F.col("__n") >= min_count)
-    return wc
-
-
-def _byte_syms_arr(w):
-    """``array<string>`` of lowercase-hex byte symbols (two hex chars
-    per UTF-8 byte) of string column ``w`` — the engine-portable
-    analogue of GPT-2's bytes_to_unicode printable remap: every
-    engine rebuilds the identical symbol stream from
-    ``lower(hex(encode(w, 'utf-8')))``, and merged symbols are simply
-    longer hex strings (decode back with ``decode(unhex(t), 'utf-8')``
-    once tokens re-align to code-point boundaries)."""
-    h = F.lower(F.hex(F.encode(w, "UTF-8")))
-    n = (F.length(h) / F.lit(2)).cast("int")
-    return F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: h.substr(i * F.lit(2) - F.lit(1), F.lit(2)),
-    )
-
-
 _HEX_CHARS = frozenset("0123456789abcdef")
+_BPE_MEMO_MAX = 1_000_000  # per-task word memo; a fat partition's task lives long
+
+# ---------------------------------------------------------------------------
+# The BPE core (Sennrich et al. 2016, arXiv:1508.07909).  Every operator
+# of the family — bpe_pair_counts, train_bpe, bpe_encode, bpe_vocab,
+# tokens_to_ids, tokenizer_fertility — and every engine path (Catalyst
+# expressions, the memoized Python word pass, the DuckDB oracle) shares
+# these semantics:
+#
+# - WORDS (`_bpe_words`): at word level, the normalized whitespace
+#   tokens (lowered, split on Java's ASCII \s) with the reserved
+#   `\x1f` symbol separator stripped and empties dropped; at byte
+#   level, every `_BPE_BYTE_PAT` pretoken (case preserved, whitespace
+#   runs included, so tokens concatenate back to the exact text).
+#   NULL text behaves like empty: zero words.
+# - SYMBOLS (`_bpe_syms` / `_bpe_syms_col`): a word starts as its
+#   characters plus `end_marker` (None: no marker), or at byte level as
+#   its UTF-8 bytes in lowercase hex, two chars per byte (the
+#   engine-portable analogue of GPT-2's bytes_to_unicode; merged
+#   symbols are longer hex strings) with no marker.
+# - MERGES (`_bpe_merge` / `_bpe_merge_fold`): the rules apply IN
+#   ORDER, each as one greedy left-to-right pass over WHOLE symbols, so
+#   a rule never fires inside a previously merged symbol.  Sequential
+#   application is the only well-defined semantic for arbitrary merge
+#   tables: the rank-based shortcut of serving tokenizers assumes each
+#   rule's symbols were created by earlier rules.
+# - UNITS: a document's tokens are its words' symbol runs in order;
+#   `n_words` counts words (pretokens) and `n_chars` their characters
+#   (bytes at byte level).
+# ---------------------------------------------------------------------------
 
 
-def _bpe_validate_byte(merges, end_marker, min_count, fn: str):
-    """byte_level argument validation: merges must be byte-aligned
-    lowercase-hex symbol pairs, and there is no word-end marker (the
-    pretokenizer carries the boundaries) — callers must pass
-    ``end_marker=None`` explicitly so a word-level call site that
-    flips ``byte_level=True`` cannot silently keep its marker."""
-    if end_marker is not None:
-        raise ValueError(
-            f"{fn}: byte-level BPE has no word-end marker (pretokens "
-            "carry their own boundaries) — pass end_marker=None"
-        )
-    if min_count < 1:
-        raise ValueError(f"{fn}: min_count must be >= 1, got {min_count}")
-    merges = [tuple(m) for m in (merges or [])]
-    for m in merges:
-        if (
-            len(m) != 2
-            or not m[0]
-            or not m[1]
-            or len(m[0]) % 2
-            or len(m[1]) % 2
-            or not set(m[0] + m[1]) <= _HEX_CHARS
-        ):
-            raise ValueError(
-                f"{fn}: byte-level merges must be (left, right) pairs "
-                f"of non-empty even-length lowercase-hex byte strings, "
-                f"got {m!r} — was this table trained with "
-                "byte_level=False?"
-            )
-    return merges
+def _bpe_words(text: Column, byte_level: bool) -> Column:
+    """The ``array<string>`` of a document's BPE words.  Word level
+    strips ``\\x1f`` from the lowered text before tokenizing: the same
+    list as stripping each token and dropping the emptied ones (the
+    second ``lower`` is a no-op on lowered text — it keeps case
+    mapping ahead of the strip, as on the tokens)."""
+    text = F.coalesce(text, F.lit(""))
+    if byte_level:
+        # every alternative of the pattern consumes a character, so no
+        # match is empty
+        return F.regexp_extract_all(text, F.lit(_BPE_BYTE_PAT), F.lit(0))
+    return normalized_tokens(F.translate(F.lower(text), _BPE_SEP, ""))
 
 
-def _bpe_word_counts(df: DataFrame, text_col: str, min_count: int):
-    """Distributed corpus -> bounded word-count table: the ONE pass
-    over the full corpus in BPE training (everything after operates on
-    distinct words).  Words are normalized tokens with the ``\\x1f``
-    symbol separator stripped (it is this module's reserved symbol
-    delimiter) and empties dropped."""
-    words = (
-        ensure_parallelism(df)
-        .select(F.explode(normalized_tokens(F.col(text_col))).alias("word"))
-        .select(F.translate(F.col("word"), _BPE_SEP, "").alias("word"))
-        .where(F.length("word") > 0)
+def _bpe_word_counts(
+    df: DataFrame, text_col: str, min_count: int, byte_level: bool
+) -> DataFrame:
+    """Distributed corpus -> bounded ``(word, __n)`` count table: the
+    ONE pass over the full corpus in BPE training (everything after
+    operates on distinct words)."""
+    words = ensure_parallelism(df).select(
+        F.explode(_bpe_words(F.col(text_col), byte_level)).alias("word")
     )
     wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("__n"))
     if min_count > 1:
@@ -613,24 +577,91 @@ def _bpe_word_counts(df: DataFrame, text_col: str, min_count: int):
     return wc
 
 
-def _bpe_validate(merges, end_marker, min_count):
+def _bpe_syms_col(w: Column, end_marker, byte_level: bool) -> Column:
+    """Initial ``array<string>`` symbols of word column ``w``.  Byte
+    level rebuilds the hex stream as ``lower(hex(encode(w)))`` — the
+    same bytes in every engine (decode a token with
+    ``decode(unhex(t), 'utf-8')`` once it is code-point aligned)."""
+    if byte_level:
+        h = F.lower(F.hex(F.encode(w, "UTF-8")))
+        n = (F.length(h) / F.lit(2)).cast("int")
+        return F.transform(
+            F.sequence(F.lit(1), n),
+            lambda i: h.substr(i * F.lit(2) - F.lit(1), F.lit(2)),
+        )
+    chars = F.transform(
+        F.sequence(F.lit(1), F.length(w)), lambda i: w.substr(i, F.lit(1))
+    )
+    if end_marker is None:
+        return chars
+    return F.concat(chars, F.array(F.lit(end_marker)))
+
+
+def _bpe_syms(word: str, end_marker, byte_level: bool) -> list[str]:
+    """:func:`_bpe_syms_col` for one Python string."""
+    if byte_level:
+        h = word.encode("utf-8").hex()
+        return [h[i : i + 2] for i in range(0, len(h), 2)]
+    return list(word) + ([end_marker] if end_marker is not None else [])
+
+
+def _bpe_merge(syms: list, a: str, b: str) -> None:
+    """Apply ONE rule (a, b) to ``syms`` in place: the greedy
+    left-to-right whole-symbol pass."""
+    if a not in syms:  # C-speed prune before the Python scan
+        return
+    i = 0
+    while i < len(syms) - 1:
+        if syms[i] == a and syms[i + 1] == b:
+            syms[i : i + 2] = [a + b]
+        else:
+            i += 1
+
+
+def _bpe_validate(
+    fn: str, merges, end_marker, byte_level: bool, min_count: int = 1
+) -> list[tuple]:
+    """Check the family's shared arguments and return the merges as
+    tuples; errors name the public function ``fn``.  Byte level has no
+    word-end marker (pretokens carry their boundaries) and takes only
+    byte-aligned lowercase-hex symbols; it needs ``end_marker=None``
+    passed explicitly, so a word-level call site that flips
+    ``byte_level=True`` cannot silently keep its marker."""
+    if byte_level and end_marker is not None:
+        raise ValueError(
+            f"{fn}: byte-level BPE has no word-end marker (pretokens "
+            "carry their own boundaries) — pass end_marker=None"
+        )
+    if end_marker is not None and (not end_marker or _BPE_SEP in end_marker):
+        raise ValueError(f"{fn}: end_marker must be non-empty without \\x1f")
+    if min_count < 1:
+        raise ValueError(f"{fn}: min_count must be >= 1, got {min_count}")
     merges = [tuple(m) for m in (merges or [])]
     for m in merges:
-        if len(m) != 2 or not m[0] or not m[1] or _BPE_SEP in m[0] + m[1]:
+        if len(m) == 2 and m[0] and m[1] and (
+            not (len(m[0]) % 2 or len(m[1]) % 2)
+            and set(m[0] + m[1]) <= _HEX_CHARS
+            if byte_level
+            else _BPE_SEP not in m[0] + m[1]
+        ):
+            continue
+        if byte_level:
             raise ValueError(
-                f"bpe: each merge must be a (left, right) pair of "
-                f"non-empty symbols without \\x1f, got {m!r}"
+                f"{fn}: byte-level merges must be (left, right) pairs "
+                f"of non-empty even-length lowercase-hex byte strings, "
+                f"got {m!r} — was this table trained with "
+                "byte_level=False?"
             )
-    if end_marker is not None and (not end_marker or _BPE_SEP in end_marker):
-        raise ValueError("bpe: end_marker must be non-empty without \\x1f")
-    if min_count < 1:
-        raise ValueError(f"bpe: min_count must be >= 1, got {min_count}")
+        raise ValueError(
+            f"{fn}: each merge must be a (left, right) pair of "
+            f"non-empty symbols without \\x1f, got {m!r}"
+        )
     return merges
 
 
 def _bpe_merge_fold(parts, a: str, b: str):
-    """Apply ONE merge rule (a, b) to a symbol array via the greedy
-    left-to-right fold, returning the merged ``\\x1f``-joined string.
+    """:func:`_bpe_merge` as a Catalyst expression over a symbol array,
+    returning the merged ``\\x1f``-joined string.
 
     The fold's acc is the joined-so-far string; a step merges iff the
     incoming symbol equals ``b`` AND acc's LAST WHOLE symbol equals
@@ -638,8 +669,10 @@ def _bpe_merge_fold(parts, a: str, b: str):
     separator-anchored suffix match (symbols never contain the
     separator, so ``…␟a`` at the end identifies the full last symbol;
     out-of-range substr starts can never produce a ␟-prefixed string,
-    so no false positives).  DuckDB's ``list_reduce`` reproduces this
-    exactly: its implicit first-element init IS this fold's init."""
+    so no false positives).  A flat string ``replace`` would be wrong:
+    after (a,b) creates "ab", rule (b,c) must NOT fire inside "ab␟c".
+    DuckDB's ``list_reduce`` reproduces this exactly: its implicit
+    first-element init IS this fold's init."""
     la = F.length(F.lit(a))
     sep_a = F.lit(_BPE_SEP + a)
 
@@ -658,6 +691,121 @@ def _bpe_merge_fold(parts, a: str, b: str):
     return F.aggregate(rest, F.element_at(parts, 1), step)
 
 
+def _bpe_unk(token: str, unk):
+    """The out-of-vocabulary rule of :func:`tokens_to_ids`: map to
+    ``unk`` or fail loudly."""
+    if unk is None:
+        raise ValueError(
+            f"tokens_to_ids: token {token!r} not in vocab and no unk_id given"
+        )
+    return unk
+
+
+def _bpe_python(
+    src: DataFrame,
+    merges: list,
+    text_col: str,
+    end_marker,
+    byte_level: bool,
+    cols: list[str],
+    out_col: str = "tokens",
+    vmap: dict | None = None,
+    unk: int | None = None,
+) -> DataFrame:
+    """The Python word pass: ONE ``mapInPandas`` over ``src`` with the
+    merge table in the closure and a bounded per-task memo, so the
+    merge loop runs once per DISTINCT word per task (natural language
+    hits the memo at its type-token ratio).  Zero shuffle, Arrow
+    batched and stateless, so it runs unchanged on a streaming frame.
+
+    Output columns are ``cols`` in order: ``out_col`` is each
+    document's token array, or with a vocabulary map ``vmap`` its
+    ``array<int>`` ids (the memo then holds word -> ids, so token
+    strings never cross back to the JVM; OOV per :func:`_bpe_unk`); a
+    column of ``src`` passes through; ``n_tokens``/``n_words``/
+    ``n_chars`` are computed."""
+    from pyspark.sql import types as T
+
+    if byte_level:
+        try:
+            import regex
+        except ImportError as e:  # pragma: no cover - env-dependent
+            raise ImportError(
+                "bpe_encode(byte_level=True, method='python') needs the "
+                "'regex' module for \\p{L}-class parity with the Spark/"
+                "DuckDB pretokenizer — install it or use method='expr'"
+            ) from e
+        # NO flags: the pattern spells whitespace as an explicit ASCII
+        # class (regex.ASCII would also ASCII-restrict \p{L})
+        pre = regex.compile(_BPE_BYTE_PAT)
+    else:
+        import re
+
+        pre = re.compile(r"\S+", re.ASCII)  # Java \s is ASCII-only
+    nchars = (lambda w: len(w.encode("utf-8"))) if byte_level else len
+    made = [
+        c for c in cols
+        if c == out_col
+        or (c in ("n_tokens", "n_words", "n_chars") and c not in src.columns)
+    ]
+    passed = [c for c in cols if c not in made]
+    sel = ensure_parallelism(src.select(*dict.fromkeys([*passed, text_col])))
+
+    def batches(it):
+        memo: dict = {}
+
+        def enc(word):
+            t = memo.get(word)
+            if t is None:
+                if len(memo) >= _BPE_MEMO_MAX:
+                    memo.clear()
+                t = _bpe_syms(word, end_marker, byte_level)
+                for a, b in merges:
+                    _bpe_merge(t, a, b)
+                if vmap is not None:
+                    t = [vmap[s] if s in vmap else _bpe_unk(s, unk) for s in t]
+                memo[word] = t
+            return t
+
+        for pdf in it:
+            texts = pdf[text_col].fillna("")
+            if byte_level:
+                # a regex-module pattern is not an re.Pattern: per row
+                wls = [pre.findall(s) for s in texts]
+            else:
+                # lower, then strip \x1f, then split: see _bpe_words
+                wls = texts.str.lower().str.replace(
+                    _BPE_SEP, "", regex=False
+                ).str.findall(pre)
+            seqs = []
+            for wl in wls:
+                out: list = []
+                for w in wl:
+                    out.extend(enc(w))
+                seqs.append(out)
+            values = {
+                out_col: lambda: seqs,
+                "n_tokens": lambda: [len(s) for s in seqs],
+                "n_words": lambda: [len(wl) for wl in wls],
+                "n_chars": lambda: [sum(map(nchars, wl)) for wl in wls],
+            }
+            res = pdf[passed].copy()
+            for c in made:
+                res[c] = values[c]()
+            yield res[cols]
+
+    fields = {f.name: f for f in sel.schema.fields}
+    out_type = T.ArrayType(T.IntegerType() if vmap is not None else T.StringType())
+    schema = T.StructType(
+        [
+            fields[c] if c in passed
+            else T.StructField(c, out_type if c == out_col else T.LongType())
+            for c in cols
+        ]
+    )
+    return sel.mapInPandas(batches, schema)
+
+
 def bpe_pair_counts(
     df: DataFrame,
     text_col: str = "text",
@@ -666,24 +814,15 @@ def bpe_pair_counts(
     min_count: int = 1,
     byte_level: bool = False,
 ) -> DataFrame:
-    """One iteration of BPE tokenizer training (Sennrich et al. 2016,
-    arXiv:1508.07909): adjacent-symbol pair frequencies over the corpus
-    word table, AFTER applying the ``merges`` learned so far.  The
-    argmax pair of each call is the next merge rule; iterating this is
-    the whole trainer (:func:`train_bpe` wraps the loop).
-
-    Each word starts as its characters plus ``end_marker`` as a final
-    symbol (the paper's word-boundary marker — merges then cannot cross
-    words; pass ``None`` to disable).  Merges apply in order, each as a
-    left-to-right greedy fold over WHOLE symbols (``aggregate`` /
-    DuckDB ``list_reduce`` — the implicit first-element init of
-    list_reduce is exactly this fold's init).  A flat string
-    ``replace`` would be wrong here: it can match the SUFFIX of a
-    multi-char symbol (after merge (a,b) creates "ab", rule (b,c)
-    must NOT fire inside "ab␟c"), so the fold compares full symbols
-    via the separator-anchored suffix check.  Identical greedy
-    semantics in Spark, DuckDB and :func:`train_bpe`'s Python loop —
-    the whole iteration is engine-exact.
+    """One iteration of BPE tokenizer training: adjacent-symbol pair
+    frequencies over the corpus word table, AFTER applying the
+    ``merges`` learned so far (see the BPE core above).  The argmax
+    pair of each call is the next merge rule; iterating this is the
+    whole trainer (:func:`train_bpe` wraps the loop).  ``end_marker``
+    keeps merges from crossing words; pass ``None`` to disable.  Each
+    rule is the :func:`_bpe_merge_fold` expression, the same greedy
+    pass as :func:`train_bpe`'s Python loop and DuckDB's
+    ``list_reduce`` — the whole iteration is engine-exact.
 
     Output: ``sym_left, sym_right, pair_count`` (BIGINT; a pair
     repeated inside one word counts once per occurrence, weighted by
@@ -701,30 +840,14 @@ def bpe_pair_counts(
     should use :func:`train_bpe`'s driver loop, which collects the
     word table once and never builds these expressions.
 
-    ``byte_level=True`` switches the whole chain to GPT-2-style
-    byte-level BPE: "words" are the :data:`_BPE_BYTE_PAT` pretokens
-    (case preserved, whitespace runs included), initial symbols are
-    the pretoken's UTF-8 bytes as lowercase-hex pairs, and there is no
-    end marker (pass ``end_marker=None`` explicitly).  Every downstream
-    mechanism — merge fold, pair explode, count — is IDENTICAL; only
-    the word table and the symbol init change.
+    ``byte_level=True`` counts GPT-2-style byte-level pairs (pass
+    ``end_marker=None`` explicitly); only the word table and the
+    symbol init change.
     """
-    if byte_level:
-        merges = _bpe_validate_byte(
-            merges, end_marker, min_count, "bpe_pair_counts"
-        )
-        wc = _bpe_pretoken_counts(df, text_col, min_count)
-        init = _byte_syms_arr(F.col("word"))
-    else:
-        merges = _bpe_validate(merges, end_marker, min_count)
-        wc = _bpe_word_counts(df, text_col, min_count)
-        chars = F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.col("word").substr(i, F.lit(1)),
-        )
-        init = chars
-        if end_marker is not None:
-            init = F.concat(init, F.array(F.lit(end_marker)))
+    merges = _bpe_validate(
+        "bpe_pair_counts", merges, end_marker, byte_level, min_count
+    )
+    wc = _bpe_word_counts(df, text_col, min_count, byte_level)
     # STAGE each merge layer into a named column: the fold references
     # its input array ~3x (slice/element_at/size), so inlining would
     # duplicate the previous layer's tree 3x per rule — exponential in
@@ -734,13 +857,14 @@ def bpe_pair_counts(
     syms_col = "__syms"
     while syms_col in wc.columns:
         syms_col = "_" + syms_col
-    staged = wc.withColumn(syms_col, init)
+    wc = wc.withColumn(
+        syms_col, _bpe_syms_col(F.col("word"), end_marker, byte_level)
+    )
     for a, b in merges:
-        staged = staged.withColumn(
+        wc = wc.withColumn(
             syms_col,
             F.split(_bpe_merge_fold(F.col(syms_col), a, b), _BPE_SEP),
         )
-    wc = staged
     parts = F.col(syms_col)
     # guard: Spark sequence(1, 0) is a DESCENDING [1, 0], not empty —
     # a single-symbol word (end_marker=None, fully-merged word) must
@@ -793,49 +917,23 @@ def train_bpe(
 
     Returns the ordered merge list — feed it back to
     :func:`bpe_pair_counts` (or an external tokenizer) as ``merges``.
-
-    ``byte_level=True`` trains GPT-2-style byte-level merges: the one
-    corpus pass reduces to the PRETOKEN-count table (GPT-2 regex,
-    case preserved), each pretoken starts as its UTF-8 bytes as
-    lowercase-hex symbols, and the learned merges are hex strings —
-    feed them to ``bpe_encode(..., byte_level=True)``.  Requires
+    ``byte_level=True`` learns hex byte-level merges for
+    ``bpe_encode(..., byte_level=True)``; it requires
     ``end_marker=None`` explicitly.
     """
-    if byte_level:
-        _bpe_validate_byte(None, end_marker, min_count, "train_bpe")
-    else:
-        _bpe_validate(None, end_marker, min_count)
+    _bpe_validate("train_bpe", None, end_marker, byte_level, min_count)
     if n_merges < 0:
         raise ValueError(f"train_bpe: n_merges must be >= 0, got {n_merges}")
-    wc = (
-        _bpe_pretoken_counts(df, text_col, min_count)
-        if byte_level
-        else _bpe_word_counts(df, text_col, min_count)
-    )
+    wc = _bpe_word_counts(df, text_col, min_count, byte_level)
     rows = wc.limit(max_words + 1).collect()
     if len(rows) > max_words:
         raise ValueError(
             f"train_bpe: more than {max_words} distinct words — raise "
             "max_words or min_count"
         )
-    if byte_level:
-
-        def _symize(word: str) -> list[str]:
-            h = word.encode("utf-8").hex()
-            return [h[i : i + 2] for i in range(0, len(h), 2)]
-
-        words: list[tuple[list[str], int]] = [
-            (_symize(r["word"]), r["__n"]) for r in rows
-        ]
-    else:
-        words = [
-            (
-                list(r["word"])
-                + ([end_marker] if end_marker is not None else []),
-                r["__n"],
-            )
-            for r in rows
-        ]
+    words = [
+        (_bpe_syms(r["word"], end_marker, byte_level), r["__n"]) for r in rows
+    ]
     # incremental trainer (the textbook structure): global pair counts
     # plus a pair -> word-index inverted index, built once; each merge
     # touches ONLY the words that contain the merged pair, subtracting
@@ -845,8 +943,7 @@ def train_bpe(
     counts: dict[tuple[str, str], int] = {}
     where: dict[tuple[str, str], set[int]] = {}
     for idx, (syms, n) in enumerate(words):
-        for i in range(len(syms) - 1):
-            k = (syms[i], syms[i + 1])
+        for k in zip(syms, syms[1:]):
             counts[k] = counts.get(k, 0) + n
             where.setdefault(k, set()).add(idx)
     out: list[tuple[str, str]] = []
@@ -855,17 +952,11 @@ def train_bpe(
             break
         best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
         out.append(best)
-        a, b = best
         for idx in sorted(where.get(best, ())):
             syms, n = words[idx]
-            old = [(syms[i], syms[i + 1]) for i in range(len(syms) - 1)]
-            i = 0
-            while i < len(syms) - 1:
-                if syms[i] == a and syms[i + 1] == b:
-                    syms[i : i + 2] = [a + b]
-                else:
-                    i += 1
-            new = [(syms[i], syms[i + 1]) for i in range(len(syms) - 1)]
+            old = list(zip(syms, syms[1:]))
+            _bpe_merge(syms, *best)
+            new = list(zip(syms, syms[1:]))
             for k in old:
                 c = counts[k] - n
                 if c:
@@ -873,11 +964,10 @@ def train_bpe(
                 else:
                     del counts[k]
                     where.pop(k, None)
-            dropped = set(old) - set(new)
             for k in new:
                 counts[k] = counts.get(k, 0) + n
                 where.setdefault(k, set()).add(idx)
-            for k in dropped:
+            for k in set(old) - set(new):
                 s = where.get(k)
                 if s is not None:
                     s.discard(idx)
@@ -900,32 +990,21 @@ def bpe_encode(
 ) -> DataFrame:
     """Apply a TRAINED merge table to the corpus — the inference half
     of the BPE tokenizer (:func:`train_bpe` learns the merges; this
-    tokenizes with them), emitting per-document token arrays and exact
-    token counts so downstream layout (``pack_shards`` /
-    ``corpus_offsets`` / ``temperature_weights``) budgets on REAL
-    tokenizer tokens instead of whitespace counts.
-
-    Semantics (identical in every path, and to :func:`train_bpe` /
-    :func:`bpe_pair_counts`): words are the normalized whitespace
-    tokens with the reserved ``\\x1f`` separator stripped and empties
-    dropped; each word starts as its characters plus ``end_marker``;
-    the merge rules apply IN ORDER, each as the greedy left-to-right
-    whole-symbol fold (a rule never fires inside a previously merged
-    multi-char symbol); the document's tokens are its words' symbol
-    runs concatenated in order.  NULL text behaves like empty (zero
-    tokens).  Sequential rule application is the ONLY well-defined
-    semantic for arbitrary merge tables: the rank-based shortcut used
-    by serving tokenizers assumes each rule's symbols were created by
-    EARLIER rules, which user-supplied tables need not satisfy.
+    tokenizes with them, per the BPE core above), emitting
+    per-document token arrays and exact token counts so downstream
+    layout (``pack_shards`` / ``corpus_offsets`` /
+    ``temperature_weights``) budgets on REAL tokenizer tokens instead
+    of whitespace counts.
 
     Output: ``id[, keep_cols], tokens array<string>, n_tokens bigint``
     — plus, with ``with_counts=True``, ``n_words bigint, n_chars
-    bigint`` (post-normalization, pre-``end_marker`` word and
-    character counts): free byproducts that make tokenizer-fertility
-    reporting (:func:`tokenizer_fertility`) a single aggregate over
-    this output.  They are opt-in because corpus schemas commonly
-    carry their own ``n_chars`` (the testdata ``documents`` table
-    does) and the clash check below would otherwise reject them.
+    bigint`` (post-normalization, pre-``end_marker``; pretokens and
+    bytes at byte level): free byproducts that make
+    tokenizer-fertility reporting (:func:`tokenizer_fertility`) a
+    single aggregate over this output.  They are opt-in because corpus
+    schemas commonly carry their own ``n_chars`` (the testdata
+    ``documents`` table does) and the clash check below would
+    otherwise reject them.
 
     Two engine paths, bit-identical (pinned by test):
 
@@ -937,14 +1016,9 @@ def bpe_encode(
       (DuckDB ``list_transform`` + ``list_reduce``) replays every
       byte.  Expression depth is linear in ``len(merges)`` — capped at
       ``max_expr_merges`` with a loud error.
-    - ``method="python"`` — the real-vocabulary scale path:
-      ``mapInPandas`` with the merge table in the closure and a
-      bounded per-task word -> tokens memo, so the merge loop runs
-      once per DISTINCT word per task (natural language hits the memo
-      at its type-token ratio, the :mod:`~..streaming.ops` DSIR
-      lesson); tokenization is pandas-vectorized.  Still zero
-      shuffle, Arrow-batched, and stateless — it runs UNCHANGED on a
-      streaming frame (the live-ingest tokenizer).
+    - ``method="python"`` — the real-vocabulary scale path: the
+      memoized :func:`_bpe_python` word pass, which a directly composed
+      :func:`tokens_to_ids` fuses its id lookup into.
 
     ``method="auto"`` picks ``python`` — MEASURED, not assumed: at
     sf0.1 with 5 rules the memoized path runs ~10x faster than the
@@ -961,28 +1035,18 @@ def bpe_encode(
     O(distinct words x merges) per task, not O(corpus tokens x
     merges).
 
-    ``byte_level=True`` (GPT-2-style): "words" are the
-    :data:`_BPE_BYTE_PAT` pretokens (case preserved, whitespace runs
-    included — every match, so the tokens concatenate back to the
-    exact original text), initial symbols are lowercase-hex UTF-8 byte
-    pairs (merged tokens are longer hex strings — ``unhex`` + UTF-8
-    decode recovers the text), no end marker (``end_marker=None``
-    required), no OOV by construction.  With ``with_counts=True``,
-    ``n_words`` counts PRETOKENS and ``n_chars`` counts BYTES (the
-    units byte-level fertility is measured in).  The python path needs
-    the ``regex`` module for ``\\p{L}``-class parity with Spark/DuckDB
-    — absent that, use ``method='expr'``.
+    ``byte_level=True`` (GPT-2-style) needs ``end_marker=None`` and
+    has no OOV by construction; its python path needs the ``regex``
+    module for ``\\p{L}``-class parity with Spark/DuckDB — absent
+    that, use ``method='expr'``.
     """
-    if byte_level:
-        merges = _bpe_validate_byte(merges, end_marker, 1, "bpe_encode")
-    else:
-        merges = _bpe_validate(merges, end_marker, 1)
+    merges = _bpe_validate("bpe_encode", merges, end_marker, byte_level)
     if method not in ("auto", "expr", "python"):
         raise ValueError(
             f"bpe_encode: method must be auto|expr|python, got {method!r}"
         )
-    out_cols = ("tokens", "n_tokens") + (
-        ("n_words", "n_chars") if with_counts else ()
+    out_cols = ["tokens", "n_tokens"] + (
+        ["n_words", "n_chars"] if with_counts else []
     )
     clashes = [c for c in out_cols if c in df.columns]
     if clashes:
@@ -991,8 +1055,6 @@ def bpe_encode(
             "the input"
         )
     keep = list(keep_cols or [])
-    if method == "auto":
-        method = "python"
     if method == "expr" and len(merges) > max_expr_merges:
         raise ValueError(
             f"bpe_encode: {len(merges)} merges exceeds max_expr_merges="
@@ -1005,48 +1067,25 @@ def bpe_encode(
             df, merges, text_col, id_col, keep, end_marker, with_counts,
             byte_level,
         )
-    return _bpe_encode_python(
-        df, merges, text_col, id_col, keep, end_marker, with_counts,
-        byte_level,
+    args = dict(
+        src=df, merges=merges, text_col=text_col, end_marker=end_marker,
+        byte_level=byte_level, cols=[id_col, *keep, *out_cols],
     )
+    out = _bpe_python(**args)
+    # Fusion hook for tokens_to_ids (the _aq_vocab_rows precedent): the
+    # arguments of this pass, so a DIRECTLY-composed tokens_to_ids can
+    # rerun it with the id mapping folded in.  Plain Python attribute —
+    # it dies with this DataFrame object (any select/filter returns a
+    # fresh frame without it), so the fusion only ever fires on the
+    # unmodified encode output, where it is provably equivalent.
+    out._aq_bpe_fuse = args
+    return out
 
 
 def _bpe_encode_expr(
-    df, merges, text_col, id_col, keep, end_marker, with_counts,
-    byte_level=False,
+    df, merges, text_col, id_col, keep, end_marker, with_counts, byte_level
 ):
-    from .dedup import ensure_parallelism, normalized_tokens
     from .sampling import _fresh_name
-
-    df = ensure_parallelism(df)
-
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    if byte_level:
-        words = F.filter(
-            F.regexp_extract_all(text, F.lit(_BPE_BYTE_PAT), F.lit(0)),
-            lambda w: F.length(w) > 0,
-        )
-
-        def to_syms(w):
-            return F.array_join(_byte_syms_arr(w), _BPE_SEP)
-
-    else:
-        words = F.filter(
-            F.transform(
-                normalized_tokens(text),
-                lambda w: F.translate(w, _BPE_SEP, ""),
-            ),
-            lambda w: F.length(w) > 0,
-        )
-
-        def to_syms(w):
-            chars = F.transform(
-                F.sequence(F.lit(1), F.length(w)),
-                lambda i: w.substr(i, F.lit(1)),
-            )
-            if end_marker is not None:
-                chars = F.concat(chars, F.array(F.lit(end_marker)))
-            return F.array_join(chars, _BPE_SEP)
 
     def merge_layer(a, b):
         # closure factory, not lambda default-args: pyspark's transform
@@ -1057,8 +1096,18 @@ def _bpe_encode_expr(
     # and the char count all read it without re-running the tokenize
     warr = _fresh_name("__bpe_warr", df.columns)
     wcol = _fresh_name("__bpe_ws", df.columns)
-    staged = df.withColumn(warr, words).withColumn(
-        wcol, F.transform(F.col(warr), to_syms)
+    staged = (
+        ensure_parallelism(df)
+        .withColumn(warr, _bpe_words(F.col(text_col), byte_level))
+        .withColumn(
+            wcol,
+            F.transform(
+                F.col(warr),
+                lambda w: F.array_join(
+                    _bpe_syms_col(w, end_marker, byte_level), _BPE_SEP
+                ),
+            ),
+        )
     )
     for a, b in merges:
         staged = staged.withColumn(
@@ -1067,7 +1116,6 @@ def _bpe_encode_expr(
     tokens = F.flatten(
         F.transform(F.col(wcol), lambda w: F.split(w, _BPE_SEP))
     )
-    # byte-level counts BYTES (octet_length); word-level counts chars
     _len = F.octet_length if byte_level else F.length
     counts = (
         [
@@ -1090,136 +1138,6 @@ def _bpe_encode_expr(
     )
 
 
-def _bpe_encode_python(
-    df, merges, text_col, id_col, keep, end_marker, with_counts,
-    byte_level=False,
-):
-    import re
-
-    from pyspark.sql import types as T
-
-    if byte_level:
-        try:
-            import regex as _rx
-        except ImportError as e:  # pragma: no cover - env-dependent
-            raise ImportError(
-                "bpe_encode(byte_level=True, method='python') needs the "
-                "'regex' module for \\p{L}-class parity with the Spark/"
-                "DuckDB pretokenizer — install it or use method='expr'"
-            ) from e
-        # NO flags: the pattern spells whitespace as an explicit ASCII
-        # class (regex.ASCII would also ASCII-restrict \p{L}), so the
-        # default-Unicode properties match Java/RE2 exactly
-        pre = _rx.compile(_BPE_BYTE_PAT)
-    else:
-        pre = re.compile(r"\S+", re.ASCII)  # Java \s is ASCII-only
-    mseq = list(merges)
-    em = end_marker
-    _CACHE_MAX = 1_000_000  # bounded: a task over a fat partition lives long
-
-    def encode_batches(batches):
-        memo: dict = {}
-
-        def enc(word):
-            t = memo.get(word)
-            if t is None:
-                if len(memo) >= _CACHE_MAX:
-                    memo.clear()
-                if byte_level:
-                    h = word.encode("utf-8").hex()
-                    syms = [h[i : i + 2] for i in range(0, len(h), 2)]
-                else:
-                    syms = list(word) + ([em] if em is not None else [])
-                for a, b in mseq:
-                    if a not in syms:  # cheap prune before the scan
-                        continue
-                    i = 0
-                    while i < len(syms) - 1:
-                        if syms[i] == a and syms[i + 1] == b:
-                            syms[i : i + 2] = [a + b]
-                        else:
-                            i += 1
-                memo[word] = t = syms
-            return t
-
-        for pdf in batches:
-            if byte_level:
-                # case preserved; the regex module pattern is not an
-                # re.Pattern, so findall runs per row (still memoized
-                # downstream — the merge loop dominates, not this)
-                wordlists = [
-                    pre.findall(s) for s in pdf[text_col].fillna("")
-                ]
-            else:
-                # vectorized tokenization: one pandas pass, lower+findall
-                wordlists = pdf[text_col].fillna("").str.lower().str.findall(pre)
-            toks_out, counts, wcounts, ccounts = [], [], [], []
-            for wl in wordlists:
-                out: list = []
-                nw = nc = 0
-                for w in wl:
-                    if not byte_level:
-                        w = w.replace(_BPE_SEP, "")
-                    if w:
-                        out.extend(enc(w))
-                        nw += 1
-                        # byte-level counts BYTES, word-level chars
-                        nc += len(w.encode("utf-8")) if byte_level else len(w)
-                toks_out.append(out)
-                counts.append(len(out))
-                wcounts.append(nw)
-                ccounts.append(nc)
-            res = pdf[[id_col, *keep]].copy()
-            res["tokens"] = toks_out
-            res["n_tokens"] = counts
-            if with_counts:
-                res["n_words"] = wcounts
-                res["n_chars"] = ccounts
-            yield res
-
-    in_fields = {f.name: f for f in df.schema.fields}
-    schema = T.StructType(
-        [in_fields[c] for c in [id_col, *keep]]
-        + [
-            T.StructField("tokens", T.ArrayType(T.StringType())),
-            T.StructField("n_tokens", T.LongType()),
-        ]
-        + (
-            [
-                T.StructField("n_words", T.LongType()),
-                T.StructField("n_chars", T.LongType()),
-            ]
-            if with_counts
-            else []
-        )
-    )
-    from .dedup import ensure_parallelism
-
-    sel = ensure_parallelism(
-        df.select(*dict.fromkeys([id_col, *keep, text_col]))
-    )
-    out = sel.mapInPandas(encode_batches, schema)
-    # Fusion hook for tokens_to_ids (the _aq_vocab_rows precedent):
-    # record how this frame was produced so a DIRECTLY-composed
-    # tokens_to_ids can rebuild the pass with the id mapping folded
-    # into the same mapInPandas instead of shipping the whole token
-    # stream JVM -> Python a second time.  Plain Python attribute —
-    # it dies with this DataFrame object (any select/filter returns a
-    # fresh frame without it), so the fusion only ever fires on the
-    # unmodified encode output, where it is provably equivalent.
-    out._aq_bpe_fuse = {
-        "source": df,
-        "merges": mseq,
-        "text_col": text_col,
-        "id_col": id_col,
-        "keep": keep,
-        "end_marker": em,
-        "byte_level": byte_level,
-        "with_counts": with_counts,
-    }
-    return out
-
-
 def bpe_vocab(
     df: DataFrame,
     merges: list | None = None,
@@ -1237,11 +1155,11 @@ def bpe_vocab(
     = characters + one symbol per merge).
 
     The distributed part is the ONE pass that reduces the corpus to
-    distinct characters (via the bounded word table); the id
-    assignment itself is a pure driver fold over ``merges`` (already a
-    driver list).  ``max_alphabet`` fails fast on byte-garbage corpora
-    whose "alphabet" is unbounded — Unicode itself caps at ~1.1M code
-    points, real corpora sit in the thousands.
+    distinct characters; the id assignment itself is a pure driver
+    fold over ``merges`` (already a driver list).  ``max_alphabet``
+    fails fast on byte-garbage corpora whose "alphabet" is unbounded —
+    Unicode itself caps at ~1.1M code points, real corpora sit in the
+    thousands.
 
     The alphabet deliberately takes NO ``min_count``-style frequency
     cut (the trainer's ``min_count`` trims which WORDS drive merge
@@ -1255,70 +1173,53 @@ def bpe_vocab(
 
     ``byte_level=True``: the alphabet is the FIXED full byte range —
     256 hex symbols ``00..ff`` in byte order — with NO corpus pass at
-    all (that is the whole point of byte-level BPE: every string
-    decomposes into known symbols, so there is no OOV and the vocab
-    does not depend on which corpus it is "built" from); ids follow
-    GPT-2's layout (bytes first, then one id per merge in merge
-    order).  Requires ``end_marker=None``.
+    all (every string decomposes into known symbols, so there is no
+    OOV and the vocab does not depend on the corpus); ids follow
+    GPT-2's layout.  Requires ``end_marker=None``.
     """
+    merges = _bpe_validate("bpe_vocab", merges, end_marker, byte_level)
     if byte_level:
-        merges = _bpe_validate_byte(merges, end_marker, 1, "bpe_vocab")
-        vocab = [f"{i:02x}" for i in range(256)]
-        seen = set(vocab)
-        for a, b in merges:
-            t = a + b
-            if t not in seen:
-                seen.add(t)
-                vocab.append(t)
-        return _vocab_df(df.sparkSession, vocab)
-    merges = _bpe_validate(merges, end_marker, 1)
-    # distinct characters straight off the documents — grouping words
-    # first cannot change the character set, so the word-count groupBy
-    # (a corpus-wide distinct-word exchange) buys nothing here (r10:
-    # measured 2.6s -> 0.6s at sf0.1 for a 24-char alphabet).  The
-    # word-table character set equals the non-whitespace, non-\x1f
-    # characters of the lowered text (normalized_tokens lowers, splits
-    # on Java \s+ and drops empties; \x1f is stripped from each word),
-    # so ONE native regexp pass per document replaces the interpreted
-    # per-character transform/substr HOF chain (r10: 2.9s -> 0.4s at
-    # sf0.1 — HOF lambdas evaluate interpreted per character, the
-    # regex engine walks the string once in codegen).  Java regex
-    # matches whole code points, so astral characters survive intact
-    # exactly like the code-point-based substr did.  array_distinct
-    # per document keeps the exploded row volume at docs x alphabet,
-    # and the final .distinct() partial-aggregates map-side, so the
-    # one remaining shuffle carries at most (partitions x alphabet)
-    # rows.
-    doc_chars = ensure_parallelism(df).select(
-        F.array_distinct(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                F.lit("[^\\s\\x1f]"),
-                F.lit(0),
-            )
-        ).alias("__chs")
-    )
-    chars = (
-        doc_chars.select(F.explode("__chs").alias("ch"))
-        .where(F.length("ch") > 0)
-        .distinct()
-    )
-    rows = chars.limit(max_alphabet + 1).collect()
-    if len(rows) > max_alphabet:
-        raise ValueError(
-            f"bpe_vocab: more than {max_alphabet} distinct characters — "
-            "this is not text; raise max_alphabet only if it truly is"
+        alpha = [f"{i:02x}" for i in range(256)]
+    else:
+        # distinct characters straight off the documents — grouping
+        # words first cannot change the character set, so the
+        # word-count groupBy (a corpus-wide distinct-word exchange)
+        # buys nothing here (r10: measured 2.6s -> 0.6s at sf0.1 for a
+        # 24-char alphabet).  The word-table character set equals the
+        # non-whitespace, non-\x1f characters of the lowered text, so
+        # ONE native regexp pass per document replaces the interpreted
+        # per-character transform/substr HOF chain (r10: 2.9s -> 0.4s
+        # at sf0.1).  Java regex matches whole code points, so astral
+        # characters survive intact.  array_distinct per document keeps
+        # the exploded row volume at docs x alphabet, and the final
+        # .distinct() partial-aggregates map-side, so the one shuffle
+        # carries at most (partitions x alphabet) rows.
+        doc_chars = ensure_parallelism(df).select(
+            F.array_distinct(
+                F.regexp_extract_all(
+                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                    F.lit("[^\\s\\x1f]"),
+                    F.lit(0),
+                )
+            ).alias("__chs")
         )
-    alpha = {r["ch"] for r in rows}
-    if end_marker is not None:
-        alpha.add(end_marker)
-    vocab = sorted(alpha)
-    seen = set(vocab)
-    for a, b in merges:
-        t = a + b
-        if t not in seen:
-            seen.add(t)
-            vocab.append(t)
+        rows = (
+            doc_chars.select(F.explode("__chs").alias("ch"))
+            .where(F.length("ch") > 0)
+            .distinct()
+            .limit(max_alphabet + 1)
+            .collect()
+        )
+        if len(rows) > max_alphabet:
+            raise ValueError(
+                f"bpe_vocab: more than {max_alphabet} distinct characters "
+                "— this is not text; raise max_alphabet only if it truly is"
+            )
+        alpha = sorted(
+            {r["ch"] for r in rows}
+            | ({end_marker} if end_marker is not None else set())
+        )
+    vocab = list(dict.fromkeys(alpha + [a + b for a, b in merges]))
     return _vocab_df(df.sparkSession, vocab)
 
 
@@ -1340,141 +1241,6 @@ def _vocab_df(spark, vocab: list) -> DataFrame:
     ).coalesce(1)
     vdf._aq_vocab_rows = rows
     return vdf
-
-
-def _tokens_to_ids_fused(fuse, vmap, unk, id_col, keep, out_col):
-    """Single-pass encode+ids: the tokenize+merge loop of
-    :func:`_bpe_encode_python` with the vocab lookup folded into the
-    per-distinct-word memo (word -> id list), so the token strings
-    never cross the Python boundary at all — only the source text in
-    and compact int arrays out.
-
-    Returns None when the requested output columns cannot all be
-    served from the source frame plus the encode byproducts (caller
-    falls back to the composed two-pass form).
-    """
-    import re
-
-    from pyspark.sql import types as T
-
-    src = fuse["source"]
-    text_col = fuse["text_col"]
-    byte_level = fuse["byte_level"]
-    em = fuse["end_marker"]
-    mseq = fuse["merges"]
-    # columns the composed form could have offered: the encode output
-    # minus 'tokens' itself
-    count_cols = {"n_tokens"} | (
-        {"n_words", "n_chars"} if fuse["with_counts"] else set()
-    )
-    avail = {fuse["id_col"], *fuse["keep"]} | count_cols
-    needed = [id_col, *keep]
-    if any(c not in avail for c in needed):
-        return None
-    passthrough = [c for c in needed if c not in count_cols]
-
-    if byte_level:
-        try:
-            import regex as _rx
-        except ImportError:  # pragma: no cover - env-dependent
-            return None
-        pre = _rx.compile(_BPE_BYTE_PAT)
-    else:
-        pre = re.compile(r"\S+", re.ASCII)
-    _CACHE_MAX = 1_000_000
-
-    def fused_batches(batches):
-        memo: dict = {}
-
-        def enc_ids(word):
-            t = memo.get(word)
-            if t is None:
-                if len(memo) >= _CACHE_MAX:
-                    memo.clear()
-                if byte_level:
-                    h = word.encode("utf-8").hex()
-                    syms = [h[i : i + 2] for i in range(0, len(h), 2)]
-                else:
-                    syms = list(word) + ([em] if em is not None else [])
-                for a, b in mseq:
-                    if a not in syms:
-                        continue
-                    i = 0
-                    while i < len(syms) - 1:
-                        if syms[i] == a and syms[i + 1] == b:
-                            syms[i : i + 2] = [a + b]
-                        else:
-                            i += 1
-                ids = []
-                for s in syms:
-                    i = vmap.get(s)
-                    if i is None:
-                        if unk is None:
-                            raise ValueError(
-                                f"tokens_to_ids: token {s!r} not in vocab "
-                                "and no unk_id given"
-                            )
-                        i = unk
-                    ids.append(i)
-                memo[word] = t = ids
-            return t
-
-        for pdf in batches:
-            if byte_level:
-                wordlists = [
-                    pre.findall(s) for s in pdf[text_col].fillna("")
-                ]
-            else:
-                wordlists = (
-                    pdf[text_col].fillna("").str.lower().str.findall(pre)
-                )
-            ids_out, counts, wcounts, ccounts = [], [], [], []
-            for wl in wordlists:
-                out: list = []
-                nw = nc = 0
-                for w in wl:
-                    if not byte_level:
-                        w = w.replace(_BPE_SEP, "")
-                    if w:
-                        out.extend(enc_ids(w))
-                        nw += 1
-                        nc += len(w.encode("utf-8")) if byte_level else len(w)
-                ids_out.append(out)
-                counts.append(len(out))
-                wcounts.append(nw)
-                ccounts.append(nc)
-            res = pdf[passthrough].copy() if passthrough else pdf[[]].copy()
-            computed = {
-                "n_tokens": counts,
-                "n_words": wcounts,
-                "n_chars": ccounts,
-            }
-            for c in needed:
-                if c in count_cols:
-                    res[c] = computed[c]
-            res[out_col] = ids_out
-            yield res[needed + [out_col]]
-
-    in_fields = {f.name: f for f in src.schema.fields}
-    fields = []
-    for c in needed:
-        if c in count_cols:
-            fields.append(T.StructField(c, T.LongType()))
-        else:
-            fields.append(in_fields[c])
-    fields.append(
-        T.StructField(out_col, T.ArrayType(T.IntegerType()))
-    )
-    from .dedup import ensure_parallelism
-
-    sel = ensure_parallelism(
-        src.select(
-            *dict.fromkeys(
-                [fuse["id_col"], *fuse["keep"], text_col]
-            )
-        )
-    )
-    return sel.mapInPandas(fused_batches, T.StructType(fields))
 
 
 def tokens_to_ids(
@@ -1509,7 +1275,9 @@ def tokens_to_ids(
       explode/join alternative shuffles the corpus's entire token
       stream to reassemble sequences — strictly worse at any scale
       while the vocab fits memory (every real vocab does;
-      ``max_vocab`` guards the pathological case).
+      ``max_vocab`` guards the pathological case).  On the unmodified
+      output of ``bpe_encode(method='python')`` the lookup fuses into
+      that encode pass (see below).
     - ``method="join"`` — pure-JVM engine-portable form: posexplode ->
       broadcast join -> ordered re-collect (ONE shuffle on the doc
       id).  This is also the relational form the DuckDB oracle
@@ -1540,61 +1308,51 @@ def tokens_to_ids(
             "the input"
         )
     keep = list(keep_cols or [])
-    if method == "auto":
-        method = "udf"
-    if method == "udf":
-        memo = getattr(vocab, "_aq_vocab_rows", None)
-        if memo is not None:
-            # vocab built by bpe_vocab in this very call chain — the
-            # driver already holds the (token, token_id) rows; a
-            # collect() would round-trip them through the JVM for
-            # nothing (measured 1.8s of fixed job overhead at 32 cores)
-            if len(memo) > max_vocab:
-                raise ValueError(
-                    f"tokens_to_ids: vocab exceeds max_vocab={max_vocab}"
-                    " — use method='join' or raise the cap"
-                )
-            vmap = dict(memo)
-        else:
-            vrows = (
-                vocab.select("token", "token_id")
-                .limit(max_vocab + 1)
-                .collect()
+    if method != "join":
+        # a vocab bpe_vocab just built: the driver already holds its
+        # rows, and a collect() would round-trip them through the JVM
+        # for nothing (measured 1.8s of fixed job overhead at 32 cores)
+        rows = getattr(vocab, "_aq_vocab_rows", None)
+        if rows is None:
+            rows = (
+                vocab.select("token", "token_id").limit(max_vocab + 1).collect()
             )
-            if len(vrows) > max_vocab:
-                raise ValueError(
-                    f"tokens_to_ids: vocab exceeds max_vocab={max_vocab}"
-                    " — use method='join' or raise the cap"
-                )
-            vmap = {r["token"]: r["token_id"] for r in vrows}
+        if len(rows) > max_vocab:
+            raise ValueError(
+                f"tokens_to_ids: vocab exceeds max_vocab={max_vocab}"
+                " — use method='join' or raise the cap"
+            )
+        vmap = dict(rows)
         unk = unk_id
 
         # Operator fusion: when ``df`` is the UNMODIFIED output of
-        # bpe_encode(method='python'), rebuild the pass with the id
-        # mapping folded into the same mapInPandas.  The composed form
-        # ships the entire token stream JVM -> Python -> JVM -> Python
-        # (MapInPandas then ArrowEvalPython, each crossing carrying
-        # every token as a string); the fused pass crosses ONCE and
-        # returns int arrays (r10: 1.4s -> 0.8s at sf0.1).  Bit-equal
-        # by construction: same tokenize+merge loop, same vocab dict,
-        # same OOV semantics — pinned by test_bpe_encode fusion tests.
-        # ...but NEVER on a persisted frame (ADVICE r10 #4):
-        # persist()/cache() returns self, so the fusion hook survives —
-        # and the fused pass would silently RE-EXECUTE the whole encode
-        # from the pre-encode source instead of reading the cached
-        # tokens (wasted work, and under a nondeterministic source the
-        # ids could disagree with the cached tokens the caller
-        # separately consumes).  A cached encode output is exactly the
-        # case where re-reading beats re-computing.
+        # bpe_encode(method='python'), rerun its word pass with the id
+        # mapping folded in.  The composed form ships the entire token
+        # stream JVM -> Python -> JVM -> Python (MapInPandas then
+        # ArrowEvalPython, each crossing carrying every token as a
+        # string); the fused pass crosses ONCE and returns int arrays
+        # (r10: 1.4s -> 0.8s at sf0.1).  Bit-equal by construction:
+        # same word pass, same vocab dict, same OOV rule.  It serves the
+        # columns the encode output offers, minus 'tokens' itself.
+        # NEVER on a persisted frame: persist()/cache() returns self,
+        # so the hook survives — and the fused pass would silently
+        # RE-EXECUTE the encode from the pre-encode source instead of
+        # reading the cached tokens (wasted work, and under a
+        # nondeterministic source the ids could disagree with the
+        # cached tokens the caller separately consumes).
         fuse = getattr(df, "_aq_bpe_fuse", None)
-        if fuse is not None and df.is_cached:
-            fuse = None
-        if fuse is not None and tokens_col == "tokens":
-            fused = _tokens_to_ids_fused(
-                fuse, vmap, unk, id_col, keep, out_col
+        if (
+            fuse is not None
+            and not df.is_cached
+            and tokens_col == "tokens"
+            and all(c in fuse["cols"] and c != "tokens" for c in [id_col, *keep])
+        ):
+            return _bpe_python(
+                **{**fuse, "cols": [id_col, *keep, out_col]},
+                out_col=out_col,
+                vmap=vmap,
+                unk=unk,
             )
-            if fused is not None:
-                return fused
 
         from pyspark.sql.functions import pandas_udf
 
@@ -1603,20 +1361,10 @@ def tokens_to_ids(
         def _to_ids(toks):
             out = []
             for ts in toks:
-                if ts is None:
-                    out.append([])
-                    continue
                 row = []
-                for t in ts:
+                for t in ts if ts is not None else ():
                     i = vmap.get(t)
-                    if i is None:
-                        if unk is None:
-                            raise ValueError(
-                                f"tokens_to_ids: token {t!r} not in vocab "
-                                "and no unk_id given"
-                            )
-                        i = unk
-                    row.append(i)
+                    row.append(_bpe_unk(t, unk) if i is None else i)
                 out.append(row)
             return pd.Series(out)
 
@@ -1627,8 +1375,6 @@ def tokens_to_ids(
             to_ids(F.col(tokens_col)).alias(out_col),
         )
     # join path: posexplode -> broadcast vocab join -> ordered re-collect
-    from pyspark.sql.window import Window
-
     from .sampling import _fresh_name
 
     pos_c = _fresh_name("__tid_pos", df.columns)
@@ -1717,45 +1463,41 @@ def tokenizer_fertility(
     language (``group_col``) to see exactly that skew.
 
     Output: ``[group_col,] n_docs, ws_tokens, bpe_tokens, n_chars``
-    (all BIGINT; ``ws_tokens`` is the normalized word count — BPE's
-    word segmentation — and ``n_chars`` counts post-normalization word
-    characters) plus ``fertility = bpe_tokens/ws_tokens`` and
+    (all BIGINT; ``ws_tokens`` is BPE's word count and ``n_chars``
+    its word characters — pretokens and bytes at byte level, see the
+    BPE core above) plus ``fertility = bpe_tokens/ws_tokens`` and
     ``chars_per_token = n_chars/bpe_tokens`` (DOUBLE, 6dp, NULL when
     the denominator is 0).  The ratios are single divisions of exact
     integer sums — engine-exact like the tf-idf/dup-weight gates.
+    Comparing a word-level and a byte-level table side by side is the
+    tokenizer-selection readout (the tokenizer_fit example does).
 
     Scale shape: :func:`bpe_encode`'s zero-shuffle map stage plus ONE
     map-side-combined aggregate on the (bounded) group key.
-
-    ``byte_level=True`` reports the byte-level tokenizer's fertility in
-    ITS units — ``ws_tokens`` counts GPT-2-regex pretokens and
-    ``n_chars`` counts BYTES (see :func:`bpe_encode`); comparing a
-    word-level and a byte-level table side by side is exactly the
-    tokenizer-selection readout (the tokenizer_fit example does).
     """
+    keys = [group_col] if group_col else []
     # project to exactly what the report needs BEFORE encoding: column
     # pruning for the scan, and the corpus's own n_words/n_chars-style
     # columns can never clash with the count outputs
     enc = bpe_encode(
-        df.select(*dict.fromkeys([id_col, group_col, text_col] if group_col else [id_col, text_col])),
+        df.select(*dict.fromkeys([id_col, *keys, text_col])),
         merges,
         text_col=text_col,
         id_col=id_col,
-        keep_cols=[group_col] if group_col else None,
+        keep_cols=keys,
         end_marker=end_marker,
         method=method,
         with_counts=True,
         byte_level=byte_level,
     )
-    keys = [group_col] if group_col else []
-    agg = enc.groupBy(*[F.col(k) for k in keys]).agg(
+    agg = enc.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_words").cast("bigint").alias("ws_tokens"),
         F.sum("n_tokens").cast("bigint").alias("bpe_tokens"),
         F.sum("n_chars").cast("bigint").alias("n_chars"),
     )
     return agg.select(
-        *[F.col(k) for k in keys],
+        *keys,
         "n_docs",
         "ws_tokens",
         "bpe_tokens",

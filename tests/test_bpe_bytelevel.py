@@ -240,6 +240,8 @@ def test_word_level_paths_unchanged(docs):
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from test_bpe_encode import _assert_id_arms_agree
+
 
 def _ref_byte_encode(text, merges):
     import regex as rx
@@ -291,3 +293,8 @@ def test_property_byte_paths_agree(spark, data):
             ).collect()
         }
         assert got == exp, method
+    _assert_id_arms_agree(
+        bpe_encode(df, merges, end_marker=None, byte_level=True, method="python"),
+        bpe_vocab(df, merges, end_marker=None, byte_level=True),
+        exp,
+    )

@@ -10,7 +10,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from aqueducts_spark.operators.text import bpe_encode, train_bpe
+from aqueducts_spark.operators.text import (
+    bpe_encode,
+    bpe_vocab,
+    tokens_to_ids,
+    train_bpe,
+)
 
 
 def _ref_encode(text, merges, end_marker="</w>"):
@@ -114,6 +119,27 @@ def test_property_paths_agree(spark, data):
             ).collect()
         }
         assert got == {i: (t, len(t)) for i, t in exp.items()}, method
+    _assert_id_arms_agree(
+        bpe_encode(df, merges, method="python", end_marker=end_marker),
+        bpe_vocab(df, merges, end_marker=end_marker),
+        exp,
+    )
+
+
+def _assert_id_arms_agree(enc, vocab, exp):
+    """The fused encode->ids pass, the composed udf (``select("*")``
+    drops the fusion hook) and the join path all give ``vocab[t]`` for
+    every expected token ``t``."""
+    vmap = {r.token: r.token_id for r in vocab.collect()}
+    want = {i: [vmap[t] for t in toks] for i, toks in exp.items()}
+    arms = {
+        "fused": tokens_to_ids(enc, vocab),
+        "udf": tokens_to_ids(enc.select("*"), vocab),
+        "join": tokens_to_ids(enc, vocab, method="join"),
+    }
+    for arm, out in arms.items():
+        got = {r.doc_id: list(r.token_ids) for r in out.collect()}
+        assert got == want, arm
 
 
 @pytest.mark.parametrize("method", ["expr", "python"])

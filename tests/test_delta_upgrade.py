@@ -84,8 +84,48 @@ def test_every_surviving_version_reads_back_as_the_legacy_reader_did(events):
 
 @pytest.mark.parametrize("version", [0, 1, 2])
 def test_versions_below_the_vacuum_line_raise(events, version):
-    with pytest.raises(DeltaProtocolError, match="missing commit versions"):
+    with pytest.raises(
+        DeltaProtocolError,
+        match=f"version {version} predates version 3, the oldest the log .* "
+        "can rebuild: history before it was truncated",
+    ):
         events.read(version=version)
+
+
+def test_a_gap_above_the_checkpoint_names_the_missing_commits(spark, tmp_path):
+    t = _converted(spark, tmp_path, "events")
+    (t.log_dir / f"{5:020d}.json").unlink()
+    assert _digest(t.read(version=4))["sha256"] == EXPECTED["events"][4]["sha256"]
+    with pytest.raises(DeltaProtocolError, match=r"missing commit versions \[5\]"):
+        t.read(version=6)
+
+
+def test_vacuum_reclaims_the_dead_legacy_data_dirs(spark, tmp_path):
+    t = _converted(spark, tmp_path, "events")
+    live = set(t._snapshot().files)
+    dead = next(
+        p for p in sorted(t.root.glob("data-*/*/*.parquet"))
+        if str(p.relative_to(t.root)) not in live
+    )
+    dead.unlink()  # as an older vacuum did: its .crc sidecar stays behind
+    t.vacuum(keep_versions=1)
+    logs = {"_delta_log", "_aqueducts_delta_log"}
+    data_dirs = [
+        d for d in t.root.rglob("*")
+        if d.is_dir() and d.relative_to(t.root).parts[0] not in logs
+    ]
+    # every dir left holds a live file: the dead data-<uuid> dirs went,
+    # with their _SUCCESS markers and .crc sidecars
+    assert data_dirs and all(any(d.rglob("*.parquet")) for d in data_dirs)
+    assert len([d for d in t.root.iterdir() if d.name.startswith("data-")]) < 5
+    assert not [
+        p for p in t.root.rglob(".*.crc") if not p.with_name(p.name[1:-4]).exists()
+    ]
+    legacy = sorted((FIXTURE / "events" / "_aqueducts_delta_log").iterdir())
+    for p in legacy:
+        assert (t.root / "_aqueducts_delta_log" / p.name).read_bytes() == p.read_bytes()
+    e = EXPECTED["events"][-1]
+    assert _digest(t.read()) == {k: e[k] for k in ("rows", "sha256", "columns")}
 
 
 def test_schemaless_table_takes_the_schema_of_its_data(spark, tmp_path):
