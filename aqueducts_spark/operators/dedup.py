@@ -28,6 +28,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import math
+import re
 from functools import reduce
 from typing import Optional, Sequence
 
@@ -65,6 +66,11 @@ __all__ = [
 ]
 
 
+# the operator name heading each line of a physical plan's tree string
+# (after the tree drawing and any ``*(n)`` codegen stage id)
+_PLAN_NODE = re.compile(r"^[\s:+|-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ONLY when the input has far fewer partitions than the
     cluster has slots (e.g. one small parquet file read locally).
@@ -74,16 +80,26 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     input; it only rescues the degenerate small-file case where one task
     would otherwise do all the work of an explosive operator.
 
-    Streaming frames pass through untouched: the partition probe
-    (``df.rdd``) is a batch-only API, and a micro-batch's parallelism
-    is the source's trigger sizing anyway — so every row-local operator
-    built on this helper stays applicable to streams unchanged.
+    Streaming frames pass through untouched: the partition probe is a
+    batch-only API, and a micro-batch's parallelism is the source's
+    trigger sizing anyway — so every row-local operator built on this
+    helper stays applicable to streams unchanged.
+
+    Only a plan without exchanges, subqueries and cached scans is
+    probed: counting the partitions of any other frame makes adaptive
+    execution run its shuffle, broadcast and cache-building jobs while
+    the caller is still building its plan (jobs outside any SQL
+    execution, and run again by the real action).  Such a frame is not
+    the small-file case, so it passes through.
     """
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
+    jqe = df._jdf.queryExecution()
+    nodes = _PLAN_NODE.findall(jqe.executedPlan().toString())
+    if any(n.endswith("Exchange") or "Subquery" in n or n.startswith("InMemory") for n in nodes):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if jqe.toRdd().getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
 

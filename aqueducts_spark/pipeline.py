@@ -137,94 +137,101 @@ def run_pipeline(
     cached: set[str] = set()
     _views_dropped: set[str] = set()
 
-    for gi, group in enumerate(groups):
-        def run_one(stage: Stage) -> tuple[str, DataFrame]:
-            tracker.on_progress(ProgressEvent("stage_started", name=stage.name))
-            with timer() as t:
-                # cache when >1 downstream consumer would otherwise
-                # recompute the whole lineage (SURVEY §7.3 policy)
-                consumers = count_consumers(groups, stage.name, gi)
-                df = process_stage(
-                    spark,
-                    stage,
-                    tracker,
-                    cache=consumers > 1,
-                    sql_dialect=pipeline.sql_dialect,
+    written = False
+    try:
+        for gi, group in enumerate(groups):
+            def run_one(stage: Stage) -> tuple[str, DataFrame]:
+                tracker.on_progress(ProgressEvent("stage_started", name=stage.name))
+                with timer() as t:
+                    # cache when >1 downstream consumer would otherwise
+                    # recompute the whole lineage (SURVEY §7.3 policy)
+                    consumers = count_consumers(groups, stage.name, gi)
+                    df = process_stage(
+                        spark,
+                        stage,
+                        tracker,
+                        cache=consumers > 1,
+                        sql_dialect=pipeline.sql_dialect,
+                    )
+                    if consumers > 1 or stage.eager or stage.explain_analyze:
+                        cached.add(stage.name)
+                tracker.on_progress(
+                    ProgressEvent("stage_completed", name=stage.name, duration_ms=t.elapsed_ms)
                 )
-                if consumers > 1 or stage.eager or stage.explain_analyze:
-                    cached.add(stage.name)
-            tracker.on_progress(
-                ProgressEvent("stage_completed", name=stage.name, duration_ms=t.elapsed_ms)
-            )
-            return stage.name, df
+                return stage.name, df
 
-        if len(group) == 1:
-            name, df = run_one(group[0])
-            stage_dfs[name] = df
-        else:
-            # parallel group with barrier (reference core/src/lib.rs:125-175);
-            # Spark's scheduler is thread-safe and FAIR-schedules jobs.
-            # Job-group/local properties are propagated into the pool
-            # threads: plain threads don't inherit them (pinned-thread
-            # mode), so jobs launched here would otherwise escape the
-            # remote executor's cancelJobGroup.
-            with ThreadPoolExecutor(max_workers=len(group)) as pool:
-                for name, df in pool.map(
-                    _propagate_job_group(spark, run_one), group
+            if len(group) == 1:
+                name, df = run_one(group[0])
+                stage_dfs[name] = df
+            else:
+                # parallel group with barrier (reference core/src/lib.rs:125-175);
+                # Spark's scheduler is thread-safe and FAIR-schedules jobs.
+                # Job-group/local properties are propagated into the pool
+                # threads: plain threads don't inherit them (pinned-thread
+                # mode), so jobs launched here would otherwise escape the
+                # remote executor's cancelJobGroup.
+                with ThreadPoolExecutor(max_workers=len(group)) as pool:
+                    for name, df in pool.map(
+                        _propagate_job_group(spark, run_one), group
+                    ):
+                        stage_dfs[name] = df
+
+            # TTL reclamation (reference core/src/lib.rs:223-274), adapted
+            # to LAZY stages: at last textual use only the view NAME goes —
+            # views matter solely for resolving later stages' SQL, which
+            # happens group by group, so a textually-dead name is truly
+            # dead.  The CACHE stays until the destination write: downstream
+            # consumers are lazy and execute nothing before it, so releasing
+            # at last *textual* use would destroy a cache (including an
+            # eager stage's already-paid count()) before anything read it,
+            # and the write would recompute the whole lineage per branch.
+            # ``spark.catalog.dropTempView`` would do exactly that (it
+            # uncaches the view's plan too), so the name is removed from
+            # the session catalog alone.  (View-drop scope stays cached
+            # stages only: callers legitimately read UNCACHED intermediate
+            # stage views after run_pipeline returns.)
+            for name, last_group in ttls.items():
+                if (
+                    last_group <= gi
+                    and gi < len(groups) - 1
+                    and name in cached
+                    and name not in _views_dropped
                 ):
-                    stage_dfs[name] = df
+                    spark._jsparkSession.sessionState().catalog().dropTempView(name)
+                    _views_dropped.add(name)
 
-        # TTL reclamation (reference core/src/lib.rs:223-274), adapted
-        # to LAZY stages: only the temp VIEW is dropped at last textual
-        # use — views matter solely for resolving later stages' SQL,
-        # which happens group by group, so a textually-dead view is
-        # truly dead.  CACHES are NOT released here: downstream
-        # consumers are lazy and execute nothing until the destination
-        # write, so unpersisting at last *textual* use would destroy a
-        # cache (including an eager stage's already-paid count())
-        # before anything ever read it, forcing the write to recompute
-        # the whole lineage per branch.  Caches release after the write
-        # — the first and only point where consumption is complete.
-        # (view-drop scope stays what it always was — cached stages
-        # only: callers legitimately read UNCACHED intermediate stage
-        # views after run_pipeline returns)
-        for name, last_group in ttls.items():
-            if (
-                last_group <= gi
-                and gi < len(groups) - 1
-                and name in cached
-                and name not in _views_dropped
-            ):
-                spark.catalog.dropTempView(name)
-                _views_dropped.add(name)
+        result: Optional[DataFrame] = None
+        if groups:
+            final_stage = groups[-1][-1]
+            result = stage_dfs[final_stage.name]
 
-    result: Optional[DataFrame] = None
-    if groups:
-        final_stage = groups[-1][-1]
-        result = stage_dfs[final_stage.name]
-
-    if dest is not None:
-        if result is None:
-            raise ValueError("pipeline has a destination but no stages")
-        with timer() as t_dst:
-            write_to_destination(spark, dest, result)
-        tracker.on_progress(
-            ProgressEvent(
-                "destination_completed", name=dest.name, duration_ms=t_dst.elapsed_ms
+        if dest is not None:
+            if result is None:
+                raise ValueError("pipeline has a destination but no stages")
+            with timer() as t_dst:
+                write_to_destination(spark, dest, result)
+            tracker.on_progress(
+                ProgressEvent(
+                    "destination_completed", name=dest.name, duration_ms=t_dst.elapsed_ms
+                )
             )
-        )
-        # the write was the last consumer — release the deferred caches.
-        # NOT for in_memory destinations: their "write" is cache+view
-        # registration with no action (the caller reads the view later),
-        # and the result DataFrame here IS the object the destination
-        # just cached — unpersisting it would make every later read
-        # recompute the pipeline the cache exists to avoid.
-        from .config.model import InMemoryDestination
+            # the write was the last consumer of every deferred cache.  NOT
+            # for in_memory destinations: their "write" is cache+view
+            # registration with no action (the caller reads the view
+            # later), and the result DataFrame here IS the object the
+            # destination just cached — unpersisting it would make every
+            # later read recompute the pipeline the cache exists to avoid.
+            from .config.model import InMemoryDestination
 
-        if not isinstance(dest, InMemoryDestination):
-            for name in list(cached):
-                stage_dfs[name].unpersist()
-                cached.discard(name)
+            written = not isinstance(dest, InMemoryDestination)
+    finally:
+        # Release caches, blocking, so block removal is charged to this
+        # run and not to the next job: after a write, all of them; else
+        # (in_memory, no destination, a failed run) only the stages whose
+        # views the TTL dropped — no caller can name those any more —
+        # while stages whose views stay registered keep theirs.
+        for name in sorted(cached if written else cached & _views_dropped):
+            stage_dfs[name].unpersist(blocking=True)
 
     tracker.on_progress(ProgressEvent("completed"))
     return PipelineResult(spark, result)

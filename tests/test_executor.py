@@ -391,3 +391,27 @@ destination:
             spark.catalog.dropTempView(v)
         except Exception:
             pass
+
+
+def test_back_to_back_runs_leave_no_caches(server, spark, sf_dir, tmp_path):
+    """Runs in the executor's long-lived session release every cache
+    they make, including a TTL-dropped stage's and an eager stage's:
+    the parquet write is their last reader."""
+    from test_pipeline_e2e import _cache_entries, _ttl_pipeline
+
+    yml = _ttl_pipeline(
+        sf_dir,
+        "exc_",
+        "destination: {type: file, name: exc_out, format: {type: parquet}, location: ${out}}",
+    )
+    before = _cache_entries(spark)
+    for i in range(3):
+        out = tmp_path / f"exc_out{i}"
+        final = submit_pipeline(
+            "127.0.0.1", server["port"], yml, params={"out": str(out)}, api_key=KEY
+        )
+        assert final["type"] == "succeeded", final
+        assert spark.read.parquet(str(out)).count() == 5
+        assert _cache_entries(spark) == before
+    for v in ("nat", "eager", "a", "b", "final"):
+        spark.catalog.dropTempView("exc_" + v)

@@ -279,3 +279,27 @@ def test_hybrid_topk_registry_stage(spark, sf_dir):
     assert any(r.doc_id == 0 for r in rows)
     for v in ("hy_docs", "hy_emb"):
         spark.catalog.dropTempView(v)
+
+
+def test_ensure_parallelism_probes_only_plain_scans(spark, sf_dir):
+    """A one-file scan is spread over the cluster's slots, and probing
+    its partitions runs no job; a frame behind an exchange or a cache
+    passes through untouched, without adaptive execution running its
+    shuffle or building its cache while the caller builds a plan."""
+    from aqueducts_spark.operators.dedup import ensure_parallelism
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    grouped = docs.groupBy("lang").count()
+    cached = docs.select("doc_id").cache()
+    sc.setJobGroup("ensure_parallelism_probe", "ensure_parallelism probe")
+    try:
+        spread = ensure_parallelism(docs)
+        assert ensure_parallelism(grouped) is grouped
+        assert ensure_parallelism(cached) is cached
+        jobs = sc.statusTracker().getJobIdsForGroup("ensure_parallelism_probe")
+    finally:
+        sc.setJobGroup("", "")
+        cached.unpersist(blocking=True)
+    assert jobs == []
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism

@@ -509,3 +509,130 @@ destination:
     run_pipeline(spark, load_pipeline_str(yml), CollectingTracker())
     back = spark.read.parquet(f"{tmp_path}/keep_out")
     assert back.count() == 5 and set(back.columns) == {"r", "n", "d"}
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's CacheManager, materialized or not."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def _next_sql_exec_id(spark) -> int:
+    """Id the next SQL execution gets.  Not ``executionsCount()``: the
+    store keeps only the newest executions, and ids are dense."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() + 1 if n else 0
+
+
+def _sql_execs_since(spark, first: int) -> list:
+    store = spark._jsparkSession.sharedState().statusStore()
+    found, out = store.execution(first), []
+    while found.isDefined():
+        out.append(found.get())
+        found = store.execution(first + len(out))
+    return out
+
+
+def _files_read(spark, execs) -> int:
+    """Files the run's file scans read, one count per scan node: each
+    accumulator is counted once, though adaptive execution lists a
+    node's metrics once per plan version."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    total, seen = 0, set()
+    for ex in execs:
+        values = store.executionMetrics(ex.executionId())
+        metrics = ex.metrics()
+        for k in range(metrics.size()):
+            m = metrics.apply(k)
+            value = values.get(m.accumulatorId())
+            if m.name() == "number of files read" and m.accumulatorId() not in seen and value.isDefined():
+                seen.add(m.accumulatorId())
+                total += int(value.get().replace(",", ""))
+    return total
+
+
+def _ttl_pipeline(sf_dir: str, prefix: str, destination: str, eager: bool = True) -> str:
+    """``{prefix}base`` has two consumers in the middle group, so it is
+    cached and its view's TTL ends before the last group, which joins
+    both consumers (and, with ``eager``, the eager stage
+    ``{prefix}eager``, whose view stays registered to the end)."""
+    eager_stage = f"""
+    - name: {prefix}eager
+      query: SELECT count(*) AS m FROM {prefix}nat
+      eager: true""" if eager else ""
+    eager_join = f" CROSS JOIN {prefix}eager" if eager else ""
+    return f"""
+sources:
+  - type: file
+    name: {prefix}nat
+    format: {{type: parquet}}
+    location: {sf_dir}/nation.parquet
+stages:
+  - - name: {prefix}base
+      query: SELECT n_nationkey AS id, n_regionkey AS r FROM {prefix}nat WHERE n_nationkey >= 0{eager_stage}
+  - - name: {prefix}a
+      query: SELECT r, count(*) AS n FROM {prefix}base GROUP BY r
+    - name: {prefix}b
+      query: SELECT count(DISTINCT id) AS d FROM {prefix}base
+  - - name: {prefix}final
+      query: SELECT a.r, a.n, b.d FROM {prefix}a a CROSS JOIN {prefix}b b{eager_join}
+{destination}
+"""
+
+
+def test_ttl_dropped_stage_cache_serves_the_write(spark, sf_dir, tmp_path):
+    """Dropping a cached stage's view at its last textual use must not
+    drop its cache: the consumers are lazy, so the destination write is
+    what reads it.  The write's executed plan scans the cache, and the
+    source file is read once in the whole run."""
+    out = tmp_path / "ttlcache_out"
+    yml = _ttl_pipeline(
+        sf_dir,
+        "ttlcache_",
+        f"destination: {{type: file, name: o, format: {{type: parquet}}, location: {out}}}",
+        eager=False,
+    )
+    first = _next_sql_exec_id(spark)
+    run_pipeline(spark, load_pipeline_str(yml), CollectingTracker())
+    execs = _sql_execs_since(spark, first)
+    writes = [ex for ex in execs if "InsertIntoHadoopFsRelationCommand" in ex.physicalPlanDescription()]
+    assert len(writes) == 1
+    assert "InMemoryTableScan" in writes[0].physicalPlanDescription()
+    assert _files_read(spark, execs) == 1
+    back = spark.read.parquet(str(out))
+    assert back.count() == 5 and {r.d for r in back.collect()} == {25}
+    for v in ("ttlcache_nat", "ttlcache_a", "ttlcache_b", "ttlcache_final"):
+        spark.catalog.dropTempView(v)
+
+
+def test_run_releases_the_caches_it_made(spark, sf_dir, tmp_path):
+    """A written run leaves no cache behind; an in_memory run keeps only
+    the result's cache and those of stages whose views stay registered
+    (the TTL-dropped stage's cache goes, as nothing can name it)."""
+    before = _cache_entries(spark)
+    out = tmp_path / "leak_out"
+    yml = _ttl_pipeline(
+        sf_dir,
+        "leakw_",
+        f"destination: {{type: file, name: o, format: {{type: parquet}}, location: {out}}}",
+    )
+    run_pipeline(spark, load_pipeline_str(yml), CollectingTracker())
+    assert _cache_entries(spark) == before
+    assert not spark.table("leakw_eager").storageLevel.useMemory
+
+    yml = _ttl_pipeline(sf_dir, "leakm_", "destination: {type: in_memory, name: leakm_out}")
+    run_pipeline(spark, load_pipeline_str(yml), CollectingTracker())
+    assert _cache_entries(spark) == before + 2
+    assert spark.table("leakm_out").storageLevel.useMemory
+    assert spark.table("leakm_eager").storageLevel.useMemory
+    assert spark.table("leakm_out").count() == 5
+    for v in ("leakm_out", "leakm_eager"):
+        spark.table(v).unpersist(blocking=True)
+    assert _cache_entries(spark) == before
+    for p in ("leakw_", "leakm_"):
+        for v in ("nat", "eager", "a", "b", "final"):
+            spark.catalog.dropTempView(p + v)
+    spark.catalog.dropTempView("leakm_out")
