@@ -17,10 +17,13 @@ with tolerances (same caveat as Spark's native stddev/corr).
 UDF objects are built lazily inside :func:`register_udafs`:
 ``pandas_udf`` parses its DDL return type, which needs an active
 SparkSession — a module-level decorator would break plain imports.
+The ``pd.Series -> float`` type hints select GROUPED_AGG, so ``pd``
+is imported at module level where ``get_type_hints`` resolves it.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 __all__ = ["make_udafs", "register_udafs"]
@@ -34,13 +37,10 @@ def make_udafs() -> dict:
         return _CACHE
 
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG functionType: the typehint-inference path
-    # cannot resolve stringified annotations under
-    # `from __future__ import annotations`
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geometric_mean(v):
+    @pandas_udf("double")
+    def geometric_mean(v: pd.Series) -> float:
         """exp(mean(ln(x))) over positive values; NULL if none."""
         x = v.dropna().astype("float64")
         x = x[x > 0]
@@ -48,8 +48,8 @@ def make_udafs() -> dict:
             return None
         return float(np.exp(np.log(x).mean()))
 
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def harmonic_mean(v):
+    @pandas_udf("double")
+    def harmonic_mean(v: pd.Series) -> float:
         """n / sum(1/x) over nonzero values; NULL if none — or when the
         reciprocals cancel (mixed-sign input), where the textbook
         formula degenerates to n/0 and numpy would emit Infinity."""

@@ -26,9 +26,6 @@ training-data operator per the build plan, SURVEY.md §7.2.7).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,37 +46,15 @@ __all__ = [
 ]
 
 
-@contextmanager
-def _bench_ids_checked(benchmark: DataFrame, bench_id_col: str, check):
-    """Validate the benchmark ids around the ``with`` body.
-
-    The eager validation aggregate runs on a second driver thread
-    (guide §2.6, overlap independent jobs): the tiny benchmark-side agg
-    is independent of the corpus-side candidate / gram materialization
-    in the body, so its job back-fills cores while the heavy pass runs.
-    ``check`` receives the one-row result ``(n, nn, nd)`` and raises on
-    a bad id set.  It runs on EVERY exit: when the body raises too
-    (a misspelt corpus column, or a banding pass killed by the invalid
-    benchmark), the contract error surfaces first, the old eager
-    ordering, and no error is left unread in the thread.
-    """
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(
-        lambda: benchmark.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.col(bench_id_col)).alias("nn"),
-            F.countDistinct(F.col(bench_id_col)).alias("nd"),
-        ).collect()[0]
-    )
-    # the submitted task still runs to completion; nothing else is ever
-    # submitted, so the pool can start tearing down immediately
-    pool.shutdown(wait=False)
-    try:
-        yield
-    except Exception:
-        check(fut.result())
-        raise
-    check(fut.result())
+def _bench_id_counts(benchmark: DataFrame, bench_id_col: str):
+    """One small aggregate over the benchmark: rows ``n``, non-NULL ids
+    ``nn`` and distinct ids ``nd``.  Run inline before any corpus-side
+    work, so an invalid benchmark fails before the corpus is read."""
+    return benchmark.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.col(bench_id_col)).alias("nn"),
+        F.countDistinct(F.col(bench_id_col)).alias("nd"),
+    ).collect()[0]
 
 
 def benchmark_ngrams(
@@ -244,59 +219,57 @@ def minhash_overlap(
     sc = _fresh("__s")
     sza, szb, itc = _fresh("__size_a"), _fresh("__size_b"), _fresh("__inter")
     # eager benchmark-id validation: one tiny aggregate over the small
-    # side (the corpus is never touched), overlapping the candidate
-    # materialization below and checked on every exit path
-    def _check_bench_ids(chk) -> None:
-        if chk["nn"] != chk["n"]:
-            raise ValueError(
-                f"minhash_overlap: benchmark has {chk['n'] - chk['nn']} NULL "
-                f"{bench_id_col!r} ids — NULL ids silently pool documents "
-                "into one signature; assign unique ids first"
-            )
-        if chk["nd"] != chk["nn"]:
-            raise ValueError(
-                f"minhash_overlap: benchmark {bench_id_col!r} ids are not "
-                "unique — duplicate ids pool documents into one signature; "
-                "deduplicate or re-key the benchmark first"
-            )
+    # side, before the banding pass touches the corpus
+    chk = _bench_id_counts(benchmark, bench_id_col)
+    if chk["nn"] != chk["n"]:
+        raise ValueError(
+            f"minhash_overlap: benchmark has {chk['n'] - chk['nn']} NULL "
+            f"{bench_id_col!r} ids — NULL ids silently pool documents "
+            "into one signature; assign unique ids first"
+        )
+    if chk["nd"] != chk["nn"]:
+        raise ValueError(
+            f"minhash_overlap: benchmark {bench_id_col!r} ids are not "
+            "unique — duplicate ids pool documents into one signature; "
+            "deduplicate or re-key the benchmark first"
+        )
 
     from .materialize import materialize
 
-    with _bench_ids_checked(benchmark, bench_id_col, _check_bench_ids):
-        bench = benchmark.select(
-            F.col(bench_id_col).alias(bid),
-            F.col(bench_text_col).alias("__btext"),
+    bench = benchmark.select(
+        F.col(bench_id_col).alias(bid),
+        F.col(bench_text_col).alias("__btext"),
+    )
+    dup_tag = None
+    corpus_in = corpus
+    if validate_ids:
+        # per-ROW tag (unique within this computation); the
+        # signature groupBy counts distinct tags per id — >1 means
+        # pooled rows
+        dup_tag = _fresh("__mo_rowtag")
+        corpus_in = corpus.withColumn(
+            dup_tag, F.monotonically_increasing_id()
         )
-        dup_tag = None
-        corpus_in = corpus
-        if validate_ids:
-            # per-ROW tag (unique within this computation); the
-            # signature groupBy counts distinct tags per id — >1 means
-            # pooled rows
-            dup_tag = _fresh("__mo_rowtag")
-            corpus_in = corpus.withColumn(
-                dup_tag, F.monotonically_increasing_id()
-            )
-        cb = minhash_bands(
-            corpus_in, id_col, text_col, num_hashes, bands, shingle_n,
-            hash_fn, dup_check_col=dup_tag,
-        )
-        bb = minhash_bands(
-            bench, bid, "__btext", num_hashes, bands, shingle_n, hash_fn
-        )
-        cand = (
-            cb.join(F.broadcast(bb), ["band", "band_hash"])
-            .select(id_col, bid)
-            .distinct()
-        )
-        # eagerly materialize the candidate pairs (bounded by banding
-        # collisions — contamination-scale, never corpus-scale): they
-        # feed the corpus semi-filter AND the verification's pair filter,
-        # and AQE never reuses a shared exchange across consumers —
-        # without this each consumer re-ran the full MinHash banding pass
-        # (the r8 scan audit measured 10 corpus scans in
-        # fuzzy_decontaminate's executed plan; 3 after)
-        cand = materialize(cand)
+    cb = minhash_bands(
+        corpus_in, id_col, text_col, num_hashes, bands, shingle_n,
+        hash_fn, dup_check_col=dup_tag,
+    )
+    bb = minhash_bands(
+        bench, bid, "__btext", num_hashes, bands, shingle_n, hash_fn
+    )
+    cand = (
+        cb.join(F.broadcast(bb), ["band", "band_hash"])
+        .select(id_col, bid)
+        .distinct()
+    )
+    # eagerly materialize the candidate pairs (bounded by banding
+    # collisions — contamination-scale, never corpus-scale): they
+    # feed the corpus semi-filter AND the verification's pair filter,
+    # and AQE never reuses a shared exchange across consumers —
+    # without this each consumer re-ran the full MinHash banding pass
+    # (the r8 scan audit measured 10 corpus scans in
+    # fuzzy_decontaminate's executed plan; 3 after)
+    cand = materialize(cand)
     # exact verification of the candidates only: restrict the corpus to
     # candidate docs (broadcast semi join — the candidate id list is
     # bounded by banding collisions), then count shared DISTINCT
@@ -564,36 +537,32 @@ def contamination_report(
             "output column name — rename the corpus id column first"
         )
     bench_text_col = bench_text_col if bench_text_col is not None else text_col
-    def _check_bench_ids(chk) -> None:
-        if chk["nn"] != chk["n"] or chk["nd"] != chk["nn"]:
-            raise ValueError(
-                "contamination_report: benchmark ids must be unique and "
-                "non-NULL — a per-item report is meaningless under pooled ids"
-            )
+    # eager id validation on the small side, before any gram work
+    chk = _bench_id_counts(benchmark, bench_id_col)
+    if chk["nn"] != chk["n"] or chk["nd"] != chk["nn"]:
+        raise ValueError(
+            "contamination_report: benchmark ids must be unique and "
+            "non-NULL — a per-item report is meaningless under pooled ids"
+        )
 
     from .materialize import materialize
 
-    # eager id validation, overlapped with the gram materialization
-    # below (guide §2.6) and checked on every exit path
-    with _bench_ids_checked(benchmark, bench_id_col, _check_bench_ids):
-        base = benchmark.select(F.col(bench_id_col).alias("bench_id"))
-        # benchmark-sized and consumed twice (per-item gram counts + the
-        # broadcast into the corpus join) — materialize so neither
-        # consumer re-tokenizes the benchmark source (AQE shares no
-        # subtree across consumers on the write path)
-        bg = materialize(
-            benchmark.select(
-                F.col(bench_id_col).alias("bench_id"),
-                normalized_tokens(F.col(bench_text_col)).alias("__btoks"),
-            )
-            .select(
-                F.col("bench_id"),
-                F.explode(
-                    word_shingles_col("__btoks", n)
-                ).alias("shingle"),
-            )
-            .where(F.col("shingle") != "")
+    base = benchmark.select(F.col(bench_id_col).alias("bench_id"))
+    # benchmark-sized and consumed twice (per-item gram counts + the
+    # broadcast into the corpus join) — materialize so neither
+    # consumer re-tokenizes the benchmark source (AQE shares no
+    # subtree across consumers on the write path)
+    bg = materialize(
+        benchmark.select(
+            F.col(bench_id_col).alias("bench_id"),
+            normalized_tokens(F.col(bench_text_col)).alias("__btoks"),
         )
+        .select(
+            F.col("bench_id"),
+            F.explode(word_shingles_col("__btoks", n)).alias("shingle"),
+        )
+        .where(F.col("shingle") != "")
+    )
     sizes = bg.groupBy("bench_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )

@@ -30,6 +30,7 @@ import math
 from typing import Optional
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -220,7 +221,6 @@ def _exact_scan_candidates(
     beats a silently engine-specific ranking (the broadcast-join form
     still serves such corpora).
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     qn = _seq_norms(Q)
@@ -545,12 +545,11 @@ def _centroid_scorer(centroids: list[list[float]], nprobe: int):
     Returns top-``nprobe`` centroid ids per vector (``nprobe=1`` ==
     assignment).
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)  # rows pre-normalized
 
-    def topn(vs):
+    def topn(vs: pd.Series) -> pd.Series:
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
         idx = _assign_topn_block(X, C, nprobe)
         return pd.Series([row.tolist() for row in idx])
@@ -1040,7 +1039,6 @@ def pq_encode(
     (:func:`train_pq_residual`).  Same zero-shuffle Arrow pass — the
     subtraction is one vectorized index+subtract per batch.
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     if (coarse_centroids is None) != (cid_col is None):
@@ -1079,7 +1077,7 @@ def pq_encode(
 
     if Coarse is None:
 
-        def encode(vs):
+        def encode(vs: pd.Series) -> pd.Series:
             return _codes(
                 np.stack([np.asarray(v, dtype=np.float64) for v in vs])
             )
@@ -1089,7 +1087,7 @@ def pq_encode(
             out_col, udf(F.col(vec_col))
         )
 
-    def encode_residual(vs, cids):
+    def encode_residual(vs: pd.Series, cids: pd.Series) -> pd.Series:
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
         c = cids.to_numpy(dtype=np.int64)
         if (c < 0).any() or (c >= len(Coarse)).any():
@@ -1305,7 +1303,6 @@ def _adc_search(
     dots, centroid norms, and the (NC, M, K) centroid-sub-dot table),
     still zero extra corpus IO.  The third table is the price of
     residual mode: its size is validated loudly below."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     M, K, dsub = C.shape

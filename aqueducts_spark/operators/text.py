@@ -9,6 +9,7 @@ dominated by the parquet scan itself.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1356,9 +1357,7 @@ def tokens_to_ids(
 
         from pyspark.sql.functions import pandas_udf
 
-        import pandas as pd
-
-        def _to_ids(toks):
+        def _to_ids(toks: pd.Series) -> pd.Series:
             out = []
             for ts in toks:
                 row = []

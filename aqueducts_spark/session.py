@@ -32,11 +32,19 @@ DEFAULT_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # long pipelines generate many whole-stage-codegen methods; the JDK
     # default 240MB code cache overflows and churns recompilation
-    # (measured 3-4x slowdowns on late stages). Only effective at JVM
+    # (measured 3-4x slowdowns on late stages; part of that class churn
+    # was the codegen cache below thrashing). Only effective at JVM
     # launch — a no-op when attaching to an existing session.
     "spark.driver.extraJavaOptions": (
         "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     ),
+    # one text_curation run needs ~156 distinct generated sources; at
+    # Spark's default of 100 entries the cyclic access defeats the LRU
+    # and every warm run recompiled ~137 of them (Janino, then the JIT).
+    # 1000 holds a whole pipeline's working set, so a long-lived
+    # executor compiles each class once.  A static conf: only the JVM's
+    # first session sets it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -262,3 +262,34 @@ stages:
     rows, second = _function_ddls(fresh, lambda: run(fresh, "pack_second"))
     assert [(r.g, r.u) for r in rows] == [(6, ["1", '"a"'])]
     assert second == 0
+
+
+def test_pandas_udfs_carry_type_hints(spark, monkeypatch):
+    """Registering the function pack and building and running the
+    package's pandas UDFs raise no UserWarning: each function's type
+    hints pick its eval type (pyspark's SPARK-28264 warning fires on an
+    explicit ``PandasUDFType``), and the eval types are unchanged."""
+    import warnings
+
+    from pyspark.util import PythonEvalType
+
+    from aqueducts_spark.functions import udafs
+    from aqueducts_spark.operators.similarity import _centroid_scorer
+    from aqueducts_spark.operators.text import tokens_to_ids
+
+    monkeypatch.setattr(udafs, "_CACHE", {})  # build the UDAFs afresh
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        register_udfs(spark)
+        udafs.register_udafs(spark)
+        df = spark.createDataFrame(
+            [(1, ["a", "zz"]), (2, None)], "doc_id long, tokens array<string>"
+        )
+        vocab = spark.createDataFrame([("a", 0)], "token string, token_id int")
+        got = tokens_to_ids(df, vocab, method="udf", unk_id=-1).collect()
+        scorer = _centroid_scorer([[1.0, 0.0], [0.0, 1.0]], 1)
+    assert {r.doc_id: r.token_ids for r in got} == {1: [0, -1], 2: []}
+    assert {u.evalType for u in udafs.make_udafs().values()} == {
+        PythonEvalType.SQL_GROUPED_AGG_PANDAS_UDF
+    }
+    assert scorer.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF

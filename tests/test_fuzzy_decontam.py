@@ -137,9 +137,9 @@ def test_validation(spark):
 
 
 def test_bench_id_error_surfaces_before_a_corpus_error(spark):
-    """Duplicate benchmark ids are reported even when building the
-    corpus side fails first (here a misspelt corpus text column): the
-    background id check is read on every exit path."""
+    """Duplicate benchmark ids are reported even when the corpus side
+    is also broken (here a misspelt corpus text column): the id check
+    runs before any corpus-side work is built."""
     from aqueducts_spark.operators.decontam import contamination_report
 
     dup_bench = spark.createDataFrame(
@@ -151,6 +151,58 @@ def test_bench_id_error_surfaces_before_a_corpus_error(spark):
     with pytest.raises(ValueError, match="must be unique"):
         contamination_report(_corpus(spark), dup_bench, text_col="txet",
                              bench_id_col="bench_key", bench_text_col="nobody")
+
+
+@pytest.mark.parametrize(
+    "op_name,bench_rows,match",
+    [
+        ("minhash_overlap", [(None, BASE), (7, "x")], "NULL"),
+        ("minhash_overlap", [(7, BASE), (7, "x")], "not unique"),
+        ("contamination_report", [(None, BASE), (7, "x")], "must be unique"),
+        ("contamination_report", [(7, BASE), (7, "x")], "must be unique"),
+    ],
+)
+def test_invalid_bench_ids_raise_before_any_corpus_job(
+    spark, op_name, bench_rows, match
+):
+    """A NULL/duplicate benchmark id fails on the benchmark's own small
+    id check: the only jobs the call runs are that check's, and the
+    corpus is never read (its text column counts every row evaluated)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from aqueducts_spark.operators import decontam
+
+    sc = spark.sparkContext
+    touched = sc.accumulator(0)
+
+    def _seen(t):
+        touched.add(1)
+        return t
+
+    corpus = _corpus(spark).withColumn("text", F.udf(_seen, "string")("text"))
+    bench = spark.createDataFrame(bench_rows, "bench_key long, body string")
+    op = getattr(decontam, op_name)
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex  # job groups keep their jobs for the session
+    call, alone = f"bench_ids_via_{tag}", f"bench_ids_alone_{tag}"
+    sc.setJobGroup(call, "bench id check, via the operator")
+    try:
+        with pytest.raises(ValueError, match=match):
+            op(corpus, bench, bench_id_col="bench_key", bench_text_col="body")
+        jobs = tracker.getJobIdsForGroup(call)
+        sc.setJobGroup(alone, "bench id check alone")
+        bench.agg(
+            F.count(F.lit(1)),
+            F.count("bench_key"),
+            F.countDistinct("bench_key"),
+        ).collect()
+        ref = tracker.getJobIdsForGroup(alone)
+    finally:
+        sc.setJobGroup("", "")
+    assert ref and len(jobs) == len(ref)
+    assert touched.value == 0
 
 
 def test_benchmark_side_joins_are_broadcast(spark):

@@ -7,8 +7,10 @@ use) with as many shuffle partitions, over $SPARK_GRAFT_SF_DIR.  Each
 line gives the best-of-3 Spark and DuckDB times, then ``rows=`` and
 ``sha=`` (sha256 of the rows canonicalized as tools/oracle_check.py
 does: columns by name, floats to 10 significant digits, rows sorted),
-the cpus and the SF directory.  Run it in two checkouts to check that a
-change keeps a gate's output hash for hash.
+``compiles=`` (generated classes Spark compiled during the last of the
+three Spark runs: nonzero means the codegen cache did not hold the
+gate's working set), the cpus and the SF directory.  Run it in two
+checkouts to check that a change keeps a gate's output hash for hash.
 """
 from __future__ import annotations
 
@@ -44,6 +46,8 @@ def main() -> None:
     entrymod._views(spark, SF_DIR)
     spark.table("region").count()
     qs = entrymod.queries()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compilations = codegen.METRIC_COMPILATION_TIME()
     oracles = entrymod.oracle_sql()
 
     import duckdb
@@ -63,10 +67,12 @@ def main() -> None:
     for name in GATES:
         best = float("inf")
         for _ in range(3):
+            c0 = compilations.getCount()
             t0 = time.monotonic()
             df = qs[name](spark, SF_DIR)
             df.write.mode("overwrite").format("noop").save()
             best = min(best, time.monotonic() - t0)
+            compiles = compilations.getCount() - c0
         obest = float("inf")
         if name in oracles:
             for _ in range(3):
@@ -78,7 +84,7 @@ def main() -> None:
         sha = hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
         print(
             f"{name}: spark={best:.2f}s duck={obest:.2f}s "
-            f"ratio={ratio:.1f}x rows={len(rows)} sha={sha} "
+            f"ratio={ratio:.1f}x rows={len(rows)} sha={sha} compiles={compiles} "
             f"cpus={CPUS} sf={SF_DIR}",
             flush=True,
         )
